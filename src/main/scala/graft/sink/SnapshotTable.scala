@@ -381,12 +381,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * The recorded row count is restated with one column-pruned semi-join
     * count over the applicable dirs (the only data touched; Iceberg
     * reports estimates here — we afford exactness because the count job
-    * reads key columns only). The count runs OUTSIDE the commit lock,
-    * against the optimistically-read base head: data dirs are immutable,
-    * so the count is stable for a given parent, and only the O(1)
-    * metadata swap is serialized — concurrent appends never queue behind
-    * an erasure's table scan. A conflict refreshes the base and
-    * recomputes (the same pattern [[commit]] uses for the data write).
+    * reads key columns only). The count is a per-attempt step of
+    * [[withCommitRetries]]: data dirs are immutable, so it is stable for
+    * a given base and concurrent appends never queue behind an
+    * erasure's table scan.
     */
   def deleteWhere(
       keys: DataFrame, keyCols: Seq[String],
@@ -401,9 +399,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val keyRows = keys.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
     keyRows.write.mode("overwrite").format(base.format).save(delDir)
 
-    var cur = base
-    var attempt = 0
-    while (true) {
+    withCommitRetries(numRetries, written = Seq(delDir)) { attempt =>
+      // a retry rebases onto the rival's head: its dirs enter the
+      // delete's scope (the delete commits after the rival)
+      val cur = if (attempt == 0) base else requireCurrent
       // restate the count unserialized: matching rows in the base head's
       // dirs, one key-columns-only job over that (immutable) merged view
       val removed =
@@ -417,44 +416,16 @@ final class SnapshotTable(val root: String, val fullName: String) {
             spark.read.format(base.format).load(delDir)), keyCols, "left_semi")
           .count()
       val total = if (cur.rowCount < 0 || removed < 0) -1L else cur.rowCount - removed
-      SnapshotTable.beforeSwapHook(this, attempt)
-      val res = SnapshotTable.commitLock(root).synchronized {
-        val prev = snapshots
-        val head = prev.filterNot(_.staged).lastOption
-        if (head.map(_.id) != Some(cur.id))
-          Left(CommitConflictException(fullName, Some(cur.id), head.map(_.id)))
-        else {
-          val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
-          // cur.copy: dirs, format, masks, SCHEMA and watermark all carry
-          val snap = cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
-            operation = "delete", rowCount = total, staged = false,
-            summary = SnapshotTable.carriedSummary(cur.summary),
-            deletes = cur.deletes :+
-              EqualityDelete(delDir, keyCols, cur.dataDirs, Some(base.format)),
-            parentId = Some(cur.id))
-          writeMetadata(prev :+ snap)
-          Audit.log("table_write", fullName, Map(
-            "operation" -> "equality_delete", "snapshot_id" -> id.toString))
-          Right(snap)
-        }
-      }
-      res match {
-        case Right(snap) => return snap
-        case Left(conflict) =>
-          if (attempt >= numRetries) {
-            deleteRecursively(new File(delDir))
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          }
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          // refresh the base: the next loop iteration recomputes the
-          // restated count against the rival's head (its dirs enter the
-          // delete's scope — the delete commits after the rival)
-          cur = conflict.actualParent.flatMap(id => snapshots.find(_.id == id))
-            .getOrElse(requireCurrent)
-          attempt += 1
-      }
+      Right(Swap(Some(cur.id), Map("operation" -> "equality_delete")) { (_, _, id) =>
+        // cur.copy: dirs, format, masks, SCHEMA and watermark all carry
+        cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
+          operation = "delete", rowCount = total, staged = false,
+          summary = SnapshotTable.carriedSummary(cur.summary),
+          deletes = cur.deletes :+
+            EqualityDelete(delDir, keyCols, cur.dataDirs, Some(base.format)),
+          parentId = Some(cur.id))
+      })
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Positional delete (Iceberg v2's second merge-on-read delete
@@ -491,76 +462,57 @@ final class SnapshotTable(val root: String, val fullName: String) {
       matcher: DataFrame => DataFrame,
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
     import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (true) {
+    withCommitRetries(numRetries) { _ =>
       val cur = requireCurrent
       require(cur.format == "parquet",
         s"positional deletes need parquet row identity (_metadata.row_index); " +
           s"$fullName is ${cur.format} — use deleteWhere or deleteRows")
-      if (cur.dataDirs.isEmpty) return cur
-      import org.apache.spark.sql.functions.lit
-      val probe = cur.dataDirs.map(d => readDirWithRowId(spark, cur, d)
-          .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
-        .reduce(_ unionByName _)
-      val matches = matcher(probe)
-        .select(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol),
-          col(SnapshotTable.RowIdDirCol))
-      // ONE probe scan: write the (tiny) positions file, then read the
-      // count AND the touched-dir scope back from it — never a second
-      // pass over the table just to count, and the delete scopes to
-      // exactly the dirs holding matched files, so every other dir
-      // keeps the zero-metadata-cost read path
-      val delDir = Paths.get(root,
-        s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
-      matches.write.mode("overwrite").format(cur.format).save(delDir)
-      val delFile = spark.read.format(cur.format).load(delDir)
-      val removed = delFile.count()
-      if (removed == 0L) {
-        deleteRecursively(new File(delDir))
-        return cur
-      }
-      val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
-        .distinct().collect().map(_.getString(0)).toSet
-      val applies = cur.dataDirs.filter(hitDirs.contains)
-      val total = if (cur.rowCount < 0) -1L else cur.rowCount - removed
-      SnapshotTable.beforeSwapHook(this, attempt)
-      // strict CAS against the probed head: positions denote rows of
-      // exactly that snapshot's files. A conflict — even a rival pure
-      // append — re-probes from scratch rather than re-scoping the file
-      // (scoping down after a rival REWRITE would silently skip the
-      // matching rows the rival moved into new dirs — Iceberg's
-      // conflicting-files validation exists for the same reason).
-      val res = SnapshotTable.commitLock(root).synchronized {
-        val prev = snapshots
-        val head = prev.filterNot(_.staged).lastOption
-        if (head.map(_.id) != Some(cur.id))
-          Left(CommitConflictException(fullName, Some(cur.id), head.map(_.id)))
-        else {
-          val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
-          val snap = cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
-            operation = "delete", rowCount = total, staged = false,
-            summary = SnapshotTable.carriedSummary(cur.summary),
-            deletes = cur.deletes :+ EqualityDelete(delDir,
-              Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
-              applies, Some(cur.format), positional = true),
-            parentId = Some(cur.id))
-          writeMetadata(prev :+ snap)
-          Audit.log("table_write", fullName, Map(
-            "operation" -> "positional_delete", "snapshot_id" -> id.toString))
-          Right(snap)
+      if (cur.dataDirs.isEmpty) Left(cur)
+      else {
+        import org.apache.spark.sql.functions.lit
+        val probe = cur.dataDirs.map(d => readDirWithRowId(spark, cur, d)
+            .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
+          .reduce(_ unionByName _)
+        val matches = matcher(probe)
+          .select(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol),
+            col(SnapshotTable.RowIdDirCol))
+        // ONE probe scan: write the (tiny) positions file, then read the
+        // count AND the touched-dir scope back from it — never a second
+        // pass over the table just to count, and the delete scopes to
+        // exactly the dirs holding matched files, so every other dir
+        // keeps the zero-metadata-cost read path
+        val delDir = Paths.get(root,
+          s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+        matches.write.mode("overwrite").format(cur.format).save(delDir)
+        val delFile = spark.read.format(cur.format).load(delDir)
+        val removed = delFile.count()
+        if (removed == 0L) {
+          deleteRecursively(new File(delDir))
+          Left(cur)
+        } else {
+          val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
+            .distinct().collect().map(_.getString(0)).toSet
+          val applies = cur.dataDirs.filter(hitDirs.contains)
+          val total = if (cur.rowCount < 0) -1L else cur.rowCount - removed
+          // strict CAS against the probed head: positions denote rows of
+          // exactly that snapshot's files. A conflict — even a rival pure
+          // append — re-probes from scratch rather than re-scoping the file
+          // (scoping down after a rival REWRITE would silently skip the
+          // matching rows the rival moved into new dirs — Iceberg's
+          // conflicting-files validation exists for the same reason).
+          Right(Swap(Some(cur.id), Map("operation" -> "positional_delete"),
+            dirs = Seq(delDir)) { (_, _, id) =>
+            cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
+              operation = "delete", rowCount = total, staged = false,
+              summary = SnapshotTable.carriedSummary(cur.summary),
+              deletes = cur.deletes :+ EqualityDelete(delDir,
+                Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
+                applies, Some(cur.format), positional = true),
+              parentId = Some(cur.id))
+          })
         }
       }
-      res match {
-        case Right(snap) => return snap
-        case Left(conflict) =>
-          deleteRecursively(new File(delDir))
-          if (attempt >= numRetries)
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
-      }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Consolidate the ACTIVE positional delete files into one (Iceberg's
@@ -578,52 +530,31 @@ final class SnapshotTable(val root: String, val fullName: String) {
     */
   def consolidatePositionalDeletes(
       spark: SparkSession,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    var attempt = 0
-    while (true) {
+      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
+    withCommitRetries(numRetries) { _ =>
       val cur = requireCurrent
       val (pos, eq) = cur.deletes.partition(_.positional)
-      if (pos.size < 2) return cur
-      val union = pos.map(d =>
-          spark.read.format(d.format.getOrElse(cur.format)).load(d.dir))
-        .reduce(_ unionByName _).distinct()
-      val delDir = Paths.get(root,
-        s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
-      union.write.mode("overwrite").format(cur.format).save(delDir)
-      val applies = pos.flatMap(_.applies).distinct.filter(cur.dataDirs.contains)
-      SnapshotTable.beforeSwapHook(this, attempt)
-      val res = SnapshotTable.commitLock(root).synchronized {
-        val prev = snapshots
-        val head = prev.filterNot(_.staged).lastOption
-        if (head.map(_.id) != Some(cur.id))
-          Left(CommitConflictException(fullName, Some(cur.id), head.map(_.id)))
-        else {
-          val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
-          val snap = cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
+      if (pos.size < 2) Left(cur)
+      else {
+        val union = pos.map(d =>
+            spark.read.format(d.format.getOrElse(cur.format)).load(d.dir))
+          .reduce(_ unionByName _).distinct()
+        val delDir = Paths.get(root,
+          s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+        union.write.mode("overwrite").format(cur.format).save(delDir)
+        val applies = pos.flatMap(_.applies).distinct.filter(cur.dataDirs.contains)
+        Right(Swap(Some(cur.id), Map("operation" -> "rewrite_position_deletes"),
+          dirs = Seq(delDir)) { (_, _, id) =>
+          cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
             operation = "replace", staged = false,
             summary = SnapshotTable.carriedSummary(cur.summary),
             deletes = eq :+ EqualityDelete(delDir,
               Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
               applies, Some(cur.format), positional = true),
             parentId = Some(cur.id))
-          writeMetadata(prev :+ snap)
-          Audit.log("table_write", fullName, Map(
-            "operation" -> "rewrite_position_deletes", "snapshot_id" -> id.toString))
-          Right(snap)
-        }
-      }
-      res match {
-        case Right(snap) => return snap
-        case Left(conflict) =>
-          deleteRecursively(new File(delDir))
-          if (attempt >= numRetries)
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
+        })
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Merge-on-read UPDATE (Iceberg's `write.update.mode=merge-on-read`
     * shape): instead of rewriting the files holding matched rows
@@ -632,11 +563,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * updated rows — O(matched rows) write cost, untouched files never
     * re-written, the sparse-update-of-a-huge-table sweet spot. The
     * riding delete scopes to the pre-commit dirs only, so the commit's
-    * own re-inserted rows survive it by construction. Commits CAS
-    * against the probed head (the positions are only meaningful there);
-    * a conflict re-probes from scratch — a rival's overlapping erasure
-    * or rewrite is re-observed, never silently overridden. Matching
-    * zero rows commits nothing.
+    * own re-inserted rows survive it by construction. Positions are
+    * only meaningful against the probed head, so every attempt
+    * re-probes — a rival's overlapping erasure or rewrite is
+    * re-observed, never silently overridden. Matching zero rows commits
+    * nothing.
     */
   def updatePositions(
       spark: SparkSession,
@@ -658,65 +589,54 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
     import org.apache.spark.sql.functions.col
     require(sets.nonEmpty, s"merge-on-read UPDATE on $fullName needs at least one assignment")
-    var attempt = 0
-    while (true) {
+    withCommitRetries(numRetries) { attempt =>
       val cur = requireCurrent
       require(cur.format == "parquet",
         s"merge-on-read UPDATE needs parquet row identity (_metadata.row_index); " +
           s"$fullName is ${cur.format} — use updateWhere")
-      if (cur.dataDirs.isEmpty) return cur
-      val schemaCols = snapshotSchema(spark, cur)
-      sets.keys.foreach(k => require(schemaCols.exists(_._1 == k),
-        s"UPDATE on $fullName assigns unknown column $k " +
-          s"(columns: ${schemaCols.map(_._1).mkString(", ")})"))
-      import org.apache.spark.sql.functions.lit
-      val probe = cur.dataDirs.map(d => readDirWithRowId(spark, cur, d)
-          .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
-        .reduce(_ unionByName _)
-      val matched = matcher(probe)
-      val positions = matched
-        .select(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol),
-          col(SnapshotTable.RowIdDirCol))
-      // write the positions file first, count + scope from the (tiny)
-      // file — the table-sized probe runs twice total (positions write,
-      // updated-rows write), never a third time for a count
-      val delDir = Paths.get(root,
-        s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
-      positions.write.mode("overwrite").format(cur.format).save(delDir)
-      val delFile = spark.read.format(cur.format).load(delDir)
-      val removed = delFile.count()
-      if (removed == 0L) {
-        deleteRecursively(new File(delDir))
-        return cur
-      }
-      val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
-        .distinct().collect().map(_.getString(0)).toSet
-      val applies = cur.dataDirs.filter(hitDirs.contains)
-      val updated = matched.select(schemaCols.map { case (n, t) =>
-        sets.get(n).map(_.cast(t).as(n)).getOrElse(col(n))
-      }: _*)
-      // keep the table's partition layout on the appended dir (when the
-      // partition columns are part of the schema) so pruning governs
-      // the updated rows too
-      val pcols = partitionColumns.filter(pc => schemaCols.exists(_._1 == pc))
-      try
-        return commit(updated, "update", carryPrevious = true,
-          partitionCols = pcols, sortCols = WriteSortOrder.sortCols(this),
-          format = cur.format, numRetries = 0,
-          expectedBase = Some(Some(cur.id)),
-          posDelete = Some((delDir, removed, applies)))
-      catch {
-        case e: CommitFailedException =>
-          // the commit cleaned up its own data dir; the delete file is
-          // ours to reclaim. Re-probe from the moved head — positions
-          // are only valid against the snapshot they were probed from.
+      if (cur.dataDirs.isEmpty) Left(cur)
+      else {
+        val schemaCols = snapshotSchema(spark, cur)
+        sets.keys.foreach(k => require(schemaCols.exists(_._1 == k),
+          s"UPDATE on $fullName assigns unknown column $k " +
+            s"(columns: ${schemaCols.map(_._1).mkString(", ")})"))
+        import org.apache.spark.sql.functions.lit
+        val probe = cur.dataDirs.map(d => readDirWithRowId(spark, cur, d)
+            .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
+          .reduce(_ unionByName _)
+        val matched = matcher(probe)
+        val positions = matched
+          .select(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol),
+            col(SnapshotTable.RowIdDirCol))
+        // write the positions file first, count + scope from the (tiny)
+        // file — the table-sized probe runs twice total (positions write,
+        // updated-rows write), never a third time for a count
+        val delDir = Paths.get(root,
+          s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+        positions.write.mode("overwrite").format(cur.format).save(delDir)
+        val delFile = spark.read.format(cur.format).load(delDir)
+        val removed = delFile.count()
+        if (removed == 0L) {
           deleteRecursively(new File(delDir))
-          if (attempt >= numRetries) throw e
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
+          Left(cur)
+        } else {
+          val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
+            .distinct().collect().map(_.getString(0)).toSet
+          val applies = cur.dataDirs.filter(hitDirs.contains)
+          val updated = matched.select(schemaCols.map { case (n, t) =>
+            sets.get(n).map(_.cast(t).as(n)).getOrElse(col(n))
+          }: _*)
+          // keep the table's partition layout on the appended dir (when the
+          // partition columns are part of the schema) so pruning governs
+          // the updated rows too
+          val pcols = partitionColumns.filter(pc => schemaCols.exists(_._1 == pc))
+          val w = writeDataDir(updated, pcols, WriteSortOrder.sortCols(this), cur.format)
+          Right(commitSwap(w, Some(cur.id), "update", carryPrevious = true, cur.format,
+            Map("operation" -> "update", "attempts" -> (attempt + 1).toString),
+            dirs = Seq(delDir, w.dir), posDelete = Some((delDir, removed, applies))))
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Predicate keeping rows OUTSIDE every masked partition rel-path.
@@ -746,10 +666,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * untouched, so the write cost is O(affected dirs), not O(table).
     * The rewritten dir bakes in the affected dirs' masks and equality
     * deletes (they are dropped from the new snapshot's scope for those
-    * dirs), row count is unchanged, and the commit is the same
-    * optimistic CAS every other write uses: detection + rewrite run
-    * unserialized against the base head, only the metadata swap locks,
-    * and a conflict re-detects against the rival head.
+    * dirs), and row count is unchanged; every attempt re-detects
+    * against the current head.
     *
     * `sets` values may reference any table column (by name) and are
     * cast to the column's declared type (Iceberg assignment-cast
@@ -763,32 +681,25 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
     import org.apache.spark.sql.functions.{col, when}
     require(sets.nonEmpty, s"UPDATE on $fullName needs at least one assignment")
-    var attempt = 0
-    while (true) {
+    withCommitRetries(numRetries) { _ =>
       val cur = requireCurrent
       val schemaCols = snapshotSchema(spark, cur)
       val names = schemaCols.map(_._1)
       sets.keys.foreach(k => require(names.contains(k),
         s"UPDATE on $fullName assigns unknown column $k (columns: ${names.mkString(", ")})"))
       val affected = affectedDirs(spark, cur, _.filter(cond))
-      if (affected.isEmpty) return cur
-      val (view, carryDirs) = splitForRewrite(spark, cur, affected, _.filter(cond))
-      val updated = view.select(schemaCols.map { case (n, t) =>
-        sets.get(n)
-          .map(v => when(cond, v.cast(t)).otherwise(col(n)).as(n))
-          .getOrElse(col(n))
-      }: _*)
-      rewriteDirs(spark, cur, affected, updated, "update",
-        newTotal = cur.rowCount, attempt = attempt, carryDirs = carryDirs) match {
-        case Right(snap) => return snap
-        case Left(conflict) =>
-          if (attempt >= numRetries)
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
+      if (affected.isEmpty) Left(cur)
+      else {
+        val (view, carryDirs) = splitForRewrite(spark, cur, affected, _.filter(cond))
+        val updated = view.select(schemaCols.map { case (n, t) =>
+          sets.get(n)
+            .map(v => when(cond, v.cast(t)).otherwise(col(n)).as(n))
+            .getOrElse(col(n))
+        }: _*)
+        Right(rewriteDirs(spark, cur, affected, updated, "update",
+          newTotal = cur.rowCount, carryDirs = carryDirs))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** [[updateWhere]] generalized to a row MATCHER for update row sets
@@ -807,34 +718,26 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
     import org.apache.spark.sql.functions.col
     require(sets.nonEmpty, s"UPDATE on $fullName needs at least one assignment")
-    var attempt = 0
-    while (true) {
+    withCommitRetries(numRetries) { _ =>
       val cur = requireCurrent
       val schemaCols = snapshotSchema(spark, cur)
       val names = schemaCols.map(_._1)
       sets.keys.foreach(k => require(names.contains(k),
         s"UPDATE on $fullName assigns unknown column $k (columns: ${names.mkString(", ")})"))
       val affected = affectedDirs(spark, cur, matcher)
-      if (affected.isEmpty) return cur
-      val (view, carryDirs) = splitForRewrite(spark, cur, affected, matcher)
-      val matched = matcher(view)
-      val rewritten = matched.select(schemaCols.map { case (n, t) =>
-        sets.get(n).map(_.cast(t).as(n)).getOrElse(col(n))
-      }: _*)
-      val untouched = view.exceptAll(matched)
-        .select(schemaCols.map { case (n, _) => col(n) }: _*)
-      rewriteDirs(spark, cur, affected, untouched.unionByName(rewritten),
-        "update", newTotal = cur.rowCount, attempt = attempt,
-        carryDirs = carryDirs) match {
-        case Right(snap) => return snap
-        case Left(conflict) =>
-          if (attempt >= numRetries)
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
+      if (affected.isEmpty) Left(cur)
+      else {
+        val (view, carryDirs) = splitForRewrite(spark, cur, affected, matcher)
+        val matched = matcher(view)
+        val rewritten = matched.select(schemaCols.map { case (n, t) =>
+          sets.get(n).map(_.cast(t).as(n)).getOrElse(col(n))
+        }: _*)
+        val untouched = view.exceptAll(matched)
+          .select(schemaCols.map { case (n, _) => col(n) }: _*)
+        Right(rewriteDirs(spark, cur, affected, untouched.unionByName(rewritten),
+          "update", newTotal = cur.rowCount, carryDirs = carryDirs))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Copy-on-write row DELETE for ARBITRARY predicates — the companion
@@ -873,48 +776,39 @@ final class SnapshotTable(val root: String, val fullName: String) {
       spark: SparkSession,
       matcher: DataFrame => DataFrame,
       keeper: Option[DataFrame => DataFrame] = None,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    var attempt = 0
-    while (true) {
+      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
+    withCommitRetries(numRetries) { _ =>
       val cur = requireCurrent
       val affected = affectedDirs(spark, cur, matcher)
-      if (affected.isEmpty) return cur
-      val (view, carryDirs) = splitForRewrite(spark, cur, affected, matcher)
-      // keeper path (plain-condition deletes): the affected-row count is
-      // OBSERVED during the rewrite write instead of a separate full
-      // pre-write pass over affected dirs (guide §1.2). The exceptAll
-      // path keeps the explicit count — its plan references `view`
-      // twice, so an embedded metric would double-count; either way the
-      // count is by-name, paid after (or instead of) nothing else.
-      val (kept, affectedRows: (() => Long)) = keeper match {
-        case Some(kf) if cur.rowCount >= 0 =>
-          val o = org.apache.spark.sql.Observation(
-            s"graft-affected-${java.util.UUID.randomUUID().toString.take(8)}")
-          val observed = view.observe(o, org.apache.spark.sql.functions
-            .count(org.apache.spark.sql.functions.lit(1)).as("__affected"))
-          (kf(observed), () => o.get.get("__affected") match {
-            case Some(l: Long) => l
-            case _ => -1L // metric lost: total degrades to "unknown"
-          })
-        case Some(kf) => (kf(view), () => -1L)
-        case None =>
-          (view.exceptAll(matcher(view)),
-            () => if (cur.rowCount < 0) -1L else view.count())
-      }
-      rewriteDirs(spark, cur, affected, kept, "delete",
-        newTotal = if (cur.rowCount < 0) -1L else -2L,
-        attempt = attempt, removedRows = affectedRows(),
-        carryDirs = carryDirs) match {
-        case Right(snap) => return snap
-        case Left(conflict) =>
-          if (attempt >= numRetries)
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
+      if (affected.isEmpty) Left(cur)
+      else {
+        val (view, carryDirs) = splitForRewrite(spark, cur, affected, matcher)
+        // keeper path (plain-condition deletes): the affected-row count is
+        // OBSERVED during the rewrite write instead of a separate full
+        // pre-write pass over affected dirs (guide §1.2). The exceptAll
+        // path keeps the explicit count — its plan references `view`
+        // twice, so an embedded metric would double-count; either way the
+        // count is by-name, paid after (or instead of) nothing else.
+        val (kept, affectedRows: (() => Long)) = keeper match {
+          case Some(kf) if cur.rowCount >= 0 =>
+            val o = org.apache.spark.sql.Observation(
+              s"graft-affected-${java.util.UUID.randomUUID().toString.take(8)}")
+            val observed = view.observe(o, org.apache.spark.sql.functions
+              .count(org.apache.spark.sql.functions.lit(1)).as("__affected"))
+            (kf(observed), () => o.get.get("__affected") match {
+              case Some(l: Long) => l
+              case _ => -1L // metric lost: total degrades to "unknown"
+            })
+          case Some(kf) => (kf(view), () => -1L)
+          case None =>
+            (view.exceptAll(matcher(view)),
+              () => if (cur.rowCount < 0) -1L else view.count())
+        }
+        Right(rewriteDirs(spark, cur, affected, kept, "delete",
+          newTotal = if (cur.rowCount < 0) -1L else -2L,
+          removedRows = affectedRows(), carryDirs = carryDirs))
       }
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** MERGE INTO (SQL MERGE / Iceberg copy-on-write merge): upsert
     * `source` into the table on equality `keys` (pairs of target-key ->
@@ -983,8 +877,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       .select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*)
     val hasDupKeys = dupKeys.limit(1).count() > 0L
 
-    var attempt = 0
-    while (true) {
+    withCommitRetries(numRetries) { _ =>
       val cur = requireCurrent
       val schemaCols = snapshotSchema(spark, cur)
       keys.foreach { case (tk, _) =>
@@ -1151,28 +1044,20 @@ final class SnapshotTable(val root: String, val fullName: String) {
         }
 
       (rewritten, inserts) match {
-        case (None, None) => return cur
+        case (None, None) => Left(cur)
         // a merge that touches no dir and inserts no row is a NO-OP —
         // committing would bloat history with an empty data dir (the
         // probe is one limit-1 job over the unmatched keys)
-        case (None, Some(ins)) if ins.isEmpty => return cur
+        case (None, Some(ins)) if ins.isEmpty => Left(cur)
         case _ =>
           val newData = (rewritten.toSeq ++ inserts.toSeq).reduce(_ unionByName _)
           val total = if (cur.rowCount < 0) -1L else -2L // -2: resolve from written rows below
-          rewriteDirs(spark, cur, affected, newData, "merge",
-            newTotal = total, attempt = attempt,
+          Right(rewriteDirs(spark, cur, affected, newData, "merge",
+            newTotal = total,
             removedRows = if (cur.rowCount < 0) -1L else affectedRows,
-            carryDirs = carryDirs) match {
-            case Right(snap) => return snap
-            case Left(conflict) =>
-              if (attempt >= numRetries)
-                throw CommitFailedException(fullName, attempt + 1, conflict)
-              Thread.sleep(SnapshotTable.backoffMs(attempt))
-              attempt += 1
-          }
+            carryDirs = carryDirs))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Merge-on-read MERGE (Iceberg's `write.merge.mode=merge-on-read`):
@@ -1185,8 +1070,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * never read twice or rewritten: O(touched + inserted) write cost,
     * the trickle-merge-into-a-huge-table shape. Detection stays
     * key-pruned (the same broadcast semi/anti dir probes as
-    * copy-on-write), commits CAS against the probed head, and a
-    * conflict re-probes from scratch.
+    * copy-on-write) and, as in [[updatePositions]], every attempt
+    * re-probes.
     */
   def mergeClausesMor(
       sourceIn: DataFrame,
@@ -1210,8 +1095,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       .select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*)
     val hasDupKeys = dupKeys.limit(1).count() > 0L
 
-    var attempt = 0
-    while (true) {
+    withCommitRetries(numRetries) { attempt =>
       val cur = requireCurrent
       require(cur.format == "parquet",
         s"merge-on-read MERGE needs parquet row identity (_metadata.row_index); " +
@@ -1363,28 +1247,20 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // a merge that touches no row and inserts none is a NO-OP — a dir
       // can pass the key-level detection while every clause condition
       // fails on its rows, and committing would bloat history
-      if (delInfo.isEmpty && inserts.forall(_.isEmpty)) return cur
-      val newData = (touched.map(_._2).toSeq ++ inserts.toSeq)
-        .reduce(_ unionByName _)
-      // keep the table's partition layout on the appended dir (when the
-      // partition columns are part of the schema) so pruning governs
-      // the rewritten + inserted rows too
-      val pcols = partitionColumns.filter(pc => schemaCols.exists(_._1 == pc))
-      try
-        return commit(newData, "merge", carryPrevious = true,
-          partitionCols = pcols, sortCols = WriteSortOrder.sortCols(this),
-          format = cur.format, numRetries = 0,
-          expectedBase = Some(Some(cur.id)), summary = summary,
-          posDelete = delInfo)
-      catch {
-        case e: CommitFailedException =>
-          delInfo.foreach(d => deleteRecursively(new File(d._1)))
-          if (attempt >= numRetries) throw e
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
+      if (delInfo.isEmpty && inserts.forall(_.isEmpty)) Left(cur)
+      else {
+        val newData = (touched.map(_._2).toSeq ++ inserts.toSeq)
+          .reduce(_ unionByName _)
+        // keep the table's partition layout on the appended dir (when the
+        // partition columns are part of the schema) so pruning governs
+        // the rewritten + inserted rows too
+        val pcols = partitionColumns.filter(pc => schemaCols.exists(_._1 == pc))
+        val w = writeDataDir(newData, pcols, WriteSortOrder.sortCols(this), cur.format)
+        Right(commitSwap(w, Some(cur.id), "merge", carryPrevious = true, cur.format,
+          Map("operation" -> "merge", "attempts" -> (attempt + 1).toString),
+          dirs = delInfo.map(_._1).toSeq :+ w.dir, summary = summary, posDelete = delInfo))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** The table schema as (name, Spark DataType) at `snap` — from the
@@ -1539,12 +1415,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
     (parts.map(_._1).reduce(_ unionByName _), parts.flatMap(_._2))
   }
 
-  /** One copy-on-write commit attempt cycle: write `replacement` as a
-    * new dir, then CAS a snapshot that drops `removedDirs` (and their
-    * masks / delete scopes — the rewrite baked them in) and appends the
-    * new dir. `newTotal` -2 means "recompute as rowCount - removedRows
-    * + written rows". Returns Left(conflict) after cleaning up the
-    * orphan dir so the caller can re-detect against the new head.
+  /** One copy-on-write commit attempt: write `replacement` as a new dir
+    * and return the [[Swap]] to a snapshot that drops `removedDirs` (and
+    * their masks / delete scopes — the rewrite baked them in) and
+    * appends the new dir. `newTotal` -2 means "recompute as rowCount -
+    * removedRows + written rows".
     */
   private def rewriteDirs(
       spark: SparkSession,
@@ -1553,7 +1428,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
       replacement: DataFrame,
       op: String,
       newTotal: Long,
-      attempt: Int,
       // BY-NAME: evaluated once, AFTER the rewrite write, and only when
       // the new total actually needs it — callers can hand an
       // Observation-backed count collected during the write itself
@@ -1561,8 +1435,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
       removedRows: => Long = 0L,
       // file-granular COW: already-realized carry dirs (hard-linked
       // sibling files of split dirs) that join the snapshot alongside
-      // the rewrite; cleaned up with the data dir on a lost CAS
-      carryDirs: Seq[String] = Nil): Either[CommitConflictException, Snapshot] = {
+      // the rewrite; cleaned up with the data dir on a lost swap
+      carryDirs: Seq[String] = Nil): Swap = {
     val pCols = partitionColumns
     val dataDir = Paths.get(root,
       s"snap-${java.util.UUID.randomUUID().toString.take(8)}").toString
@@ -1614,35 +1488,21 @@ final class SnapshotTable(val root: String, val fullName: String) {
           if (rr < 0) -1L else base.rowCount - rr + newRows
         }
       } else newTotal
-    SnapshotTable.beforeSwapHook(this, attempt)
-    SnapshotTable.commitLock(root).synchronized {
-      val prev = snapshots
-      val head = prev.filterNot(_.staged).lastOption
-      if (head.map(_.id) != Some(base.id)) {
-        deleteRecursively(new File(dataDir))
-        carryDirs.foreach(c => deleteRecursively(new File(c)))
-        Left(CommitConflictException(fullName, Some(base.id), head.map(_.id)))
-      } else {
-        val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
-        val removed = removedDirs.toSet
-        val keptDeletes = base.deletes
-          .map(d => d.copy(applies = d.applies.filterNot(removed)))
-          .filter(_.applies.nonEmpty)
-        val snap = base.copy(
-          id = id, committedAtMs = SnapshotTable.clockMs(), operation = op,
-          dataDirs = base.dataDirs.filterNot(removed) ++ carryDirs :+ dataDir,
-          rowCount = total,
-          maskedDirs = base.maskedDirs -- removed,
-          staged = false,
-          summary = SnapshotTable.carriedSummary(base.summary),
-          deletes = keptDeletes,
-          parentId = Some(base.id))
-        writeMetadata(prev :+ snap)
-        Audit.log("table_write", fullName, Map(
-          "operation" -> op, "snapshot_id" -> id.toString,
-          "rewritten_dirs" -> removedDirs.size.toString))
-        Right(snap)
-      }
+    Swap(Some(base.id), Map("operation" -> op, "rewritten_dirs" -> removedDirs.size.toString),
+      dirs = carryDirs :+ dataDir) { (_, _, id) =>
+      val removed = removedDirs.toSet
+      val keptDeletes = base.deletes
+        .map(d => d.copy(applies = d.applies.filterNot(removed)))
+        .filter(_.applies.nonEmpty)
+      base.copy(
+        id = id, committedAtMs = SnapshotTable.clockMs(), operation = op,
+        dataDirs = base.dataDirs.filterNot(removed) ++ carryDirs :+ dataDir,
+        rowCount = total,
+        maskedDirs = base.maskedDirs -- removed,
+        staged = false,
+        summary = SnapshotTable.carriedSummary(base.summary),
+        deletes = keptDeletes,
+        parentId = Some(base.id))
     }
   }
 
@@ -2109,31 +1969,16 @@ final class SnapshotTable(val root: String, val fullName: String) {
         graft.plans.RangeStats.writeEntries(dataDir, newRows,
           graft.plans.RangeStats.entriesFromMetrics(fields, metrics, partBounds))
       } catch { case scala.util.control.NonFatal(_) => () }
-      val writeSchema: Seq[(String, String)] =
-        spark.read.format(format).load(dataDir)
-          .schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
-      var expectedParent = currentSnapshot.map(_.id)
-      var attempt = 0
-      while (true) {
-        trySwap(expectedParent, dataDir, newRows, "append", carryPrevious = true,
-          format, Nil, stageOnly = false, writeSchema, None,
+      val written = WrittenDir(dataDir, newRows, spark.read.format(format).load(dataDir)
+        .schema.fields.toSeq.map(f => f.name -> f.dataType.sql))
+      withCommitRetries(numRetries) { _ =>
+        Right(commitSwap(written, currentSnapshot.map(_.id), "append", carryPrevious = true,
+          format, Map("operation" -> "add_files", "source" -> srcCanon,
+            "files" -> files.size.toString),
           summary = Map(
             "added-files-source" -> srcCanon,
-            "added-files" -> files.size.toString)) match {
-          case Right(snap) =>
-            Audit.log("table_write", fullName, Map(
-              "operation" -> "add_files", "snapshot_id" -> snap.id.toString,
-              "source" -> srcCanon, "files" -> files.size.toString))
-            return snap
-          case Left(conflict) =>
-            if (attempt >= numRetries)
-              throw CommitFailedException(fullName, attempt + 1, conflict)
-            Thread.sleep(SnapshotTable.backoffMs(attempt))
-            expectedParent = conflict.actualParent
-            attempt += 1
-        }
+            "added-files" -> files.size.toString)))
       }
-      throw new IllegalStateException("unreachable")
     } catch {
       case scala.util.control.NonFatal(e) =>
         deleteRecursively(new File(dataDir))
@@ -2358,12 +2203,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     readSnapshot(spark, r.snapshotId)
   }
 
-  /** Append onto a BRANCH head: same optimistic-commit cycle as
-    * [[append]], but the CAS base is the branch ref's target, the
-    * committed snapshot stays invisible to published reads (staged,
-    * like a WAP candidate), and the ref advances atomically with the
-    * metadata swap. Concurrent branch writers conflict-and-retry
-    * against the ref exactly as published writers do against the head.
+  /** Append onto a BRANCH head: like [[append]], but the commit base is
+    * the branch ref's target, the committed snapshot stays invisible to
+    * published reads (staged, like a WAP candidate), and the ref
+    * advances atomically with the metadata swap.
     */
   def appendToBranch(branch: String, df: DataFrame, partitionCols: Seq[String] = Nil, sortCols: Seq[org.apache.spark.sql.Column] = Nil, format: String = "parquet", numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
     commit(df, "append", carryPrevious = true, partitionCols, sortCols, format,
@@ -2584,27 +2427,16 @@ final class SnapshotTable(val root: String, val fullName: String) {
     */
   def rewriteDeletes(
       spark: SparkSession,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    var attempt = 0
-    while (true) {
+      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
+    withCommitRetries(numRetries) { _ =>
       val cur = requireCurrent
       val affected = cur.deletes.flatMap(_.applies).distinct
         .filter(cur.dataDirs.contains)
-      if (affected.isEmpty) return cur // no-op: nothing to pay down
+      if (affected.isEmpty) Left(cur) // no-op: nothing to pay down
       // the logical view of exactly those dirs (deletes + masks applied)
-      val view = readDirsView(spark, cur, affected)
-      rewriteDirs(spark, cur, affected, view, "rewrite_deletes",
-        newTotal = cur.rowCount, attempt = attempt) match {
-        case Right(snap) => return snap
-        case Left(conflict) =>
-          if (attempt >= numRetries)
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          attempt += 1
-      }
+      else Right(rewriteDirs(spark, cur, affected, readDirsView(spark, cur, affected),
+        "rewrite_deletes", newTotal = cur.rowCount))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Partition columns of the current snapshot's physical layout,
     * UNIONED across every referenced dir's stats sidecar (pure metadata
@@ -3022,24 +2854,132 @@ final class SnapshotTable(val root: String, val fullName: String) {
         "Create it first (Pipeline.ensureTable / DDL) before reading or writing - " +
         "the equivalent of the reference's 'run terraform apply' remediation."))
 
+  /** A metadata swap one commit attempt prepared for
+    * [[withCommitRetries]]: `base` is the published head (or the
+    * `branch` ref's target) the attempt was computed from, `dirs` are
+    * what the attempt wrote (deleted when it does not land), `audit` the
+    * operation's table_write fields besides the snapshot id, and `build`
+    * makes the new snapshot from (all snapshots, the base snapshot, the
+    * allocated id) under the lock.
+    */
+  private case class Swap(
+      base: Option[Long],
+      audit: Map[String, String],
+      dirs: Seq[String] = Nil,
+      branch: Option[String] = None)(
+      val build: (Seq[Snapshot], Option[Snapshot], Long) => Snapshot)
+
   /** Optimistic commit protocol, mirroring Iceberg's (reference:
     * per-table `commit_num_retries`, `table-templates/_schema.json:109-111`;
     * bounded exponential backoff as in the catalog-connect retry,
-    * `dagster/lakehouse/resources/iceberg.py:46`):
+    * `dagster/lakehouse/resources/iceberg.py:46`). Every retrying write
+    * of the table commits through here:
     *
-    *  1. read the table's current snapshot id (the commit BASE) — no lock;
-    *  2. write the data directory ONCE, to a unique immutable path — the
-    *     expensive O(delta) step runs unserialized, so concurrent writers
-    *     overlap on the cluster instead of queueing;
-    *  3. swap the metadata pointer under the per-table lock IF the base
-    *     is still current; a concurrent commit in the window makes the
-    *     swap fail, and only the O(1) swap is retried against the
-    *     refreshed base — never the data write;
+    *  1. `attemptOnce(attempt)` reads its base snapshot without the lock
+    *     and does the expensive work unserialized — probes, counts, data
+    *     and delete-file writes to unique immutable paths — so concurrent
+    *     writers overlap on the cluster instead of queueing. It returns
+    *     the [[Swap]] to make, or Left(snapshot) when there is nothing to
+    *     commit;
+    *  2. [[swap]] moves the metadata pointer under the per-table lock IF
+    *     the base is still current;
+    *  3. a concurrent commit in the window loses the swap: the attempt's
+    *     dirs are deleted and, after the [[SnapshotTable.backoffMs]]
+    *     wait, the next attempt re-reads the base and redoes its work.
+    *     Work done once before the loop (a [[commit]]'s data dir, an
+    *     equality-delete file) is passed as `written` and reused, so
+    *     for it only the O(1) swap is retried;
     *  4. after `numRetries` conflicts, raise CommitFailedException.
     *
-    * Readers always see a consistent table (the pointer swap is atomic).
-    * Cross-PROCESS writers would additionally need the compare-and-swap
-    * to live in a real catalog; parquet-mode scopes it to the JVM.
+    * Any failure — exhaustion, a swap-time reject, an error — deletes
+    * `written` and the failed attempt's dirs: an aborted commit leaves
+    * no unreferenced `snap-*` dir behind. Readers always see a
+    * consistent table (the pointer swap is atomic). Cross-PROCESS
+    * writers would additionally need the compare-and-swap to live in a
+    * real catalog; parquet-mode scopes it to the JVM.
+    */
+  private def withCommitRetries(numRetries: Int, written: Seq[String] = Nil)(
+      attemptOnce: Int => Either[Snapshot, Swap]): Snapshot = {
+    var attempt = 0
+    var inFlight = Seq.empty[String]
+    var result = Option.empty[Snapshot]
+    try {
+      while (result.isEmpty) attemptOnce(attempt) match {
+        case Left(unchanged) => result = Some(unchanged)
+        case Right(s) =>
+          inFlight = s.dirs
+          SnapshotTable.beforeSwapHook(this, attempt)
+          swap(s) match {
+            case Right(snap) => result = Some(snap)
+            case Left(conflict) =>
+              inFlight.foreach(d => deleteRecursively(new File(d)))
+              inFlight = Nil
+              if (attempt >= numRetries)
+                throw CommitFailedException(fullName, attempt + 1, conflict)
+              Thread.sleep(SnapshotTable.backoffMs(attempt))
+              attempt += 1
+          }
+      }
+      result.get
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        (written ++ inFlight).foreach(d => deleteRecursively(new File(d)))
+        throw e
+    }
+  }
+
+  /** The table's one compare-and-swap: under the per-table lock, check
+    * that `s.base` is still the published head (or the branch ref's
+    * target), allocate `max id + 1`, write the snapshot `s.build` makes,
+    * advance the branch ref and log the audit event. Left when a rival
+    * commit moved the base.
+    */
+  private def swap(s: Swap): Either[CommitConflictException, Snapshot] =
+    SnapshotTable.commitLock(root).synchronized {
+      val prev = snapshots
+      // commits CAS against (and carry from) the PUBLISHED head: staged
+      // snapshots are invisible to the table and must not parent rivals.
+      // Branch appends CAS against (and carry from) the branch ref's
+      // target instead — concurrent branch writers conflict on the REF.
+      val head = s.branch match {
+        case Some(b) =>
+          val r = requireRef(b, "branch")
+          Some(prev.find(_.id == r.snapshotId).getOrElse(
+            throw new IllegalStateException(
+              s"branch '$b' of $fullName references missing snapshot ${r.snapshotId}")))
+        case None => prev.filterNot(_.staged).lastOption
+      }
+      if (head.map(_.id) != s.base)
+        Left(CommitConflictException(fullName, s.base, head.map(_.id)))
+      else {
+        val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
+        val snap = s.build(prev, head, id)
+        writeMetadata(prev :+ snap)
+        // advance the branch ref atomically with the metadata swap
+        // (same lock): readers of the ref see old-head-or-new-head,
+        // never a dangling intermediate
+        s.branch.foreach { b =>
+          writeRefs(refs.map(r =>
+            if (r.name == b && r.kind == "branch") r.copy(snapshotId = id) else r))
+        }
+        Audit.log("table_write", fullName, s.audit + ("snapshot_id" -> id.toString))
+        Right(snap)
+      }
+    }
+
+  /** A batch [[writeDataDir]] wrote: its dir and row count, the written
+    * schema (name -> DDL type, resolved to field ids at swap time —
+    * the head may change across retries), whether it holds no rows
+    * (then the dir is already gone and no snapshot references it), and
+    * the partitions a dynamic overwrite replaces.
+    */
+  private case class WrittenDir(
+      dir: String, rows: Long, schema: Seq[(String, String)],
+      empty: Boolean = false, replaced: Seq[String] = Nil)
+
+  /** Write `df` once as a new data dir, then commit it through
+    * [[withCommitRetries]] retrying only the swap: a retried append
+    * carries the rival's data forward (Iceberg's fast-append semantics).
     */
   private def commit(
       df: DataFrame,
@@ -3057,14 +2997,32 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // Some(head) pins the commit base for CAS semantics (overwriteIf):
       // the caller computed its payload FROM that head, so pair it with
       // numRetries = 0 — a conflict must surface, not blind-retry
-      expectedBase: Option[Option[Long]] = None,
-      // (delete-file dir, rows it removes, dirs it scopes to): a
-      // POSITIONAL delete riding the same snapshot as the data write —
-      // the merge-on-read UPDATE/MERGE shape (delete old positions +
-      // append new rows, one atomic commit). The scope is the matched
-      // files' dirs only; callers must pair this with expectedBase CAS
-      // pinning (the positions were probed against exactly that head).
-      posDelete: Option[(String, Long, Seq[String])] = None): Snapshot = {
+      expectedBase: Option[Option[Long]] = None): Snapshot = {
+    // the commit BASE: the caller's CAS pin when given, else the branch
+    // ref's target for branch appends, else the published head
+    def currentBase = branch match {
+      case Some(b) => Some(requireRef(b, "branch").snapshotId)
+      case None => currentSnapshot.map(_.id)
+    }
+    val base = expectedBase.getOrElse(currentBase)
+    val w = writeDataDir(df, partitionCols, sortCols, format, micro, dynamicReplace)
+    withCommitRetries(numRetries, written = Seq(w.dir)) { attempt =>
+      Right(commitSwap(w, if (attempt == 0) base else currentBase, op, carryPrevious,
+        format, Map("operation" -> op, "attempts" -> (attempt + 1).toString),
+        stageOnly = stageOnly, branch = branch, summary = summary))
+    }
+  }
+
+  /** Write `df` as a new data dir with its stats sidecars — the
+    * unserialized O(delta) step of a commit.
+    */
+  private def writeDataDir(
+      df: DataFrame,
+      partitionCols: Seq[String],
+      sortCols: Seq[org.apache.spark.sql.Column],
+      format: String,
+      micro: Boolean = false,
+      dynamicReplace: Boolean = false): WrittenDir = {
     // dispatch per the template vocabulary (parquet|orc|avro,
     // `table-templates/_schema.json:100-103`). avro is served by
     // graft.source.GraftAvroFileFormat (avro-core-backed; this
@@ -3072,13 +3030,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     require(SnapshotTable.SupportedFormats.contains(format),
       s"Unknown write_format '$format' for $fullName " +
         s"(supported: ${SnapshotTable.SupportedFormats.mkString(", ")})")
-    // the commit BASE: the caller's CAS pin when given, else the branch
-    // ref's target for branch appends, else the published head
-    val base = expectedBase.getOrElse(branch match {
-      case Some(b) => Some(requireRef(b, "branch").snapshotId)
-      case None => currentSnapshot.map(_.id)
-    })
-    // unique dir per attempt: the final snapshot id is unknown until the
+    // unique dir per write: the final snapshot id is unknown until the
     // swap wins, and two optimistic writers must never share a path
     val dataDir = Paths.get(root,
       s"snap-${java.util.UUID.randomUUID().toString.take(8)}").toString
@@ -3126,8 +3078,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // row count of the NEW dir, recorded into snapshot metadata so
     // history listings never rescan data. Normally free (observed during
     // the write); the fallback footer count is O(files), not O(rows).
-    // Computed once, outside the swap loop: the dir is immutable across
-    // retries.
+    // Computed once: the dir is immutable across swap retries.
     val filesWritten = listDataFiles(new File(dataDir)).nonEmpty
     val newRows =
       if (!filesWritten) 0L
@@ -3199,225 +3150,169 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (dynamicReplace && wroteFiles)
         readPartitionSidecar(dataDir).map(_._1).filter(_.nonEmpty)
       else Nil
-
-    // the written schema (name -> DDL type), the input to field-id
-    // resolution at swap time (the head may change across retries)
-    val writeSchema: Seq[(String, String)] =
-      df.schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
-
-    var expectedParent = base
-    var attempt = 0
-    while (true) {
-      SnapshotTable.beforeSwapHook(this, attempt)
-      trySwap(expectedParent, dataDir, newRows, op, carryPrevious, format, replaced,
-        stageOnly, writeSchema, branch, summary, emptyWrite = !wroteFiles,
-        posDelete = posDelete) match {
-        case Right(snap) =>
-          // the file-less dir of an empty batch is not referenced by the
-          // snapshot — remove it rather than leaving _SUCCESS litter
-          if (!wroteFiles) deleteRecursively(new File(dataDir))
-          Audit.log("table_write", fullName, Map(
-            "operation" -> op, "snapshot_id" -> snap.id.toString,
-            "attempts" -> (attempt + 1).toString))
-          return snap
-        case Left(conflict) =>
-          if (attempt >= numRetries) {
-            // the data dir was written but will never be referenced by any
-            // snapshot — delete it now, or every exhausted commit would
-            // permanently orphan a snapshot-sized directory on disk
-            deleteRecursively(new File(dataDir))
-            throw CommitFailedException(fullName, attempt + 1, conflict)
-          }
-          Thread.sleep(SnapshotTable.backoffMs(attempt))
-          expectedParent = conflict.actualParent
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    // the file-less dir of an empty batch is never referenced — remove
+    // it now rather than leaving _SUCCESS litter
+    if (!wroteFiles) deleteRecursively(new File(dataDir))
+    WrittenDir(dataDir, newRows, df.schema.fields.toSeq.map(f => f.name -> f.dataType.sql),
+      empty = !wroteFiles, replaced = replaced)
   }
 
-  /** One compare-and-swap attempt: inside the per-table lock, verify the
-    * base snapshot is still current, then append the new snapshot to the
-    * metadata. Append carry-forward and format compatibility are resolved
-    * against the CURRENT state (a retried append carries the concurrent
-    * writer's data forward — Iceberg's fast-append semantics).
+  /** The [[Swap]] that adds written batch `w` to the table. Carry-forward,
+    * format compatibility and the schema resolve against the head at
+    * swap time, so a retried append carries a rival's data forward.
     */
-  private def trySwap(
-      expectedParent: Option[Long],
-      dataDir: String,
-      newRows: Long,
+  private def commitSwap(
+      w: WrittenDir,
+      base: Option[Long],
       op: String,
       carryPrevious: Boolean,
       format: String,
-      replaced: Seq[String],
-      stageOnly: Boolean,
-      writeSchema: Seq[(String, String)],
+      audit: Map[String, String],
+      dirs: Seq[String] = Nil,
+      stageOnly: Boolean = false,
       branch: Option[String] = None,
       summary: Map[String, String] = Map.empty,
-      emptyWrite: Boolean = false,
-      posDelete: Option[(String, Long, Seq[String])] = None): Either[CommitConflictException, Snapshot] =
-    SnapshotTable.commitLock(root).synchronized {
-      val prev = snapshots
-      // commits CAS against (and carry from) the PUBLISHED head: staged
-      // snapshots are invisible to the table and must not parent rivals.
-      // Branch appends CAS against (and carry from) the branch ref's
-      // target instead — concurrent branch writers conflict on the REF.
-      val head = branch match {
-        case Some(b) =>
-          val r = requireRef(b, "branch")
-          Some(prev.find(_.id == r.snapshotId).getOrElse(
-            throw new IllegalStateException(
-              s"branch '$b' of $fullName references missing snapshot ${r.snapshotId}")))
-        case None => prev.filterNot(_.staged).lastOption
+      // (delete-file dir, rows it removes, dirs it scopes to): a
+      // POSITIONAL delete riding the same snapshot as the data write —
+      // the merge-on-read UPDATE/MERGE shape (delete old positions +
+      // append new rows, one atomic commit). The scope is the matched
+      // files' dirs only; `base` must be the head the positions were
+      // probed against.
+      posDelete: Option[(String, Long, Seq[String])] = None): Swap =
+    Swap(base, audit, dirs, branch) { (prev, head, id) =>
+      head.filter(_.dataDirs.nonEmpty).foreach { last =>
+        if (carryPrevious)
+          require(last.format == format,
+            s"Append format '$format' differs from table format '${last.format}' for " +
+              s"$fullName; carried snapshot dirs must stay one format")
       }
-      val actualParent = head.map(_.id)
-      if (actualParent != expectedParent)
-        Left(CommitConflictException(fullName, expectedParent, actualParent))
-      else {
-        head.filter(_.dataDirs.nonEmpty).foreach { last =>
-          if (carryPrevious)
-            require(last.format == format,
-              s"Append format '$format' differs from table format '${last.format}' for " +
-                s"$fullName; carried snapshot dirs must stay one format")
-        }
-        val carryForward =
-          if (carryPrevious) head.map(_.dataDirs).getOrElse(Nil) else Nil
-        val prevMasks =
-          if (carryPrevious) head.map(_.maskedDirs).getOrElse(Map.empty)
-          else Map.empty[String, Seq[String]]
-        // a plain append carries masks forward untouched; a dynamic
-        // overwrite additionally masks the replaced partitions on every
-        // carried dir (resolved against the CURRENT state, like the dirs)
-        val masks =
-          if (replaced.isEmpty) prevMasks
-          else carryForward.map { d =>
-            d -> (prevMasks.getOrElse(d, Nil) ++ replaced).distinct
-          }.toMap
-        // carried total resolves against the CURRENT state (a retried
-        // append counts the rival's rows too); an unknown (-1) carried
-        // count stays unknown rather than inventing a number. A dynamic
-        // overwrite subtracts the newly masked rows, resolved from the
-        // carried dirs' stats sidecars (pure metadata).
-        val carriedRows =
-          if (carryPrevious) head.map(_.rowCount).getOrElse(0L) else 0L
-        val carriedDeletes0 =
-          if (carryPrevious) head.map(_.deletes).getOrElse(Nil) else Nil
-        val removedRows: Long =
-          if (replaced.isEmpty || carriedRows < 0) 0L
-          else {
-            val perDir = carryForward.map { d =>
-              val already = prevMasks.getOrElse(d, Nil).toSet
-              val newMask = replaced.filterNot(already)
-              if (newMask.isEmpty) 0L
-              // sidecar counts are commit-time PHYSICAL counts; rows an
-              // equality delete later removed are still in them, and the
-              // carried total was already restated after the delete —
-              // subtracting the raw sidecar count would double-count
-              // those rows. Unknown beats understated (the $snapshots
-              // listing and volume sensor consume this number).
-              else if (carriedDeletes0.exists(_.applies.contains(d))) -1L
-              else {
-                val byPart = readPartitionSidecar(d).map(e => e._1 -> e._3).toMap
-                val rows = newMask.map(p => byPart.getOrElse(p, 0L))
-                if (rows.exists(_ < 0)) -1L else rows.sum
-              }
+      val carryForward =
+        if (carryPrevious) head.map(_.dataDirs).getOrElse(Nil) else Nil
+      val prevMasks =
+        if (carryPrevious) head.map(_.maskedDirs).getOrElse(Map.empty)
+        else Map.empty[String, Seq[String]]
+      // a plain append carries masks forward untouched; a dynamic
+      // overwrite additionally masks the replaced partitions on every
+      // carried dir (resolved against the CURRENT state, like the dirs)
+      val masks =
+        if (w.replaced.isEmpty) prevMasks
+        else carryForward.map { d =>
+          d -> (prevMasks.getOrElse(d, Nil) ++ w.replaced).distinct
+        }.toMap
+      // carried total resolves against the CURRENT state (a retried
+      // append counts the rival's rows too); an unknown (-1) carried
+      // count stays unknown rather than inventing a number. A dynamic
+      // overwrite subtracts the newly masked rows, resolved from the
+      // carried dirs' stats sidecars (pure metadata).
+      val carriedRows =
+        if (carryPrevious) head.map(_.rowCount).getOrElse(0L) else 0L
+      val carriedDeletes0 =
+        if (carryPrevious) head.map(_.deletes).getOrElse(Nil) else Nil
+      val removedRows: Long =
+        if (w.replaced.isEmpty || carriedRows < 0) 0L
+        else {
+          val perDir = carryForward.map { d =>
+            val already = prevMasks.getOrElse(d, Nil).toSet
+            val newMask = w.replaced.filterNot(already)
+            if (newMask.isEmpty) 0L
+            // sidecar counts are commit-time PHYSICAL counts; rows an
+            // equality delete later removed are still in them, and the
+            // carried total was already restated after the delete —
+            // subtracting the raw sidecar count would double-count
+            // those rows. Unknown beats understated (the $snapshots
+            // listing and volume sensor consume this number).
+            else if (carriedDeletes0.exists(_.applies.contains(d))) -1L
+            else {
+              val byPart = readPartitionSidecar(d).map(e => e._1 -> e._3).toMap
+              val rows = newMask.map(p => byPart.getOrElse(p, 0L))
+              if (rows.exists(_ < 0)) -1L else rows.sum
             }
-            if (perDir.exists(_ < 0)) -1L else perDir.sum
           }
-        val posRemoved = posDelete.map(_._2).getOrElse(0L)
-        val total =
-          if (carriedRows < 0 || removedRows < 0 || posRemoved < 0) -1L
-          else carriedRows - removedRows - posRemoved + newRows
-        val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
-        // schema continuity (Iceberg field ids): columns resolve ids by
-        // NAME against the head; genuinely new columns draw fresh ids
-        // from the never-reused watermark. An append MERGES the head
-        // schema with the batch's (new columns evolve in, columns the
-        // batch omits stay — old dirs backfill null either way) and
-        // REQUIRES same-name batch columns to conform to the table type
-        // (equal, or an Iceberg-legal narrower type that upcasts
-        // losslessly on read — int into a promoted long column); a wider
-        // batch is rejected (promote the column first via
-        // updateColumnType, or the read path would silently truncate).
-        // An overwrite/replace adopts the batch's schema outright, ids
-        // kept stable for surviving names.
-        val headCols = head.map(_.cols).getOrElse(Nil)
-        val watermark0 = (Seq(head.map(_.lastColumnId).getOrElse(0)) ++
-          prev.flatMap(_.cols.map(_.id))).max
-        var nextId = watermark0
-        val byName = headCols.map(c => c.name -> c).toMap
-        val dfCols: Seq[TableColumn] = writeSchema.map { case (n, t) =>
-          byName.get(n) match {
-            case Some(c) if carryPrevious =>
-              val batchT = org.apache.spark.sql.types.DataType.fromDDL(t)
-              val colT = org.apache.spark.sql.types.DataType.fromDDL(c.dataType)
-              require(batchT == colT || SnapshotTable.isSafePromotion(batchT, colT),
-                s"append to $fullName: column $n is ${c.dataType} but the batch " +
-                  s"writes $t — a lossy read-time cast; widen the column first " +
-                  "(updateColumnType) or conform the batch")
-              TableColumn(c.id, n, c.dataType)
-            case Some(c) =>
-              // overwrite adopts the batch's type; the id survives by name
-              TableColumn(c.id, n, t)
-            case None => nextId += 1; TableColumn(nextId, n, t)
-          }
+          if (perDir.exists(_ < 0)) -1L else perDir.sum
         }
-        val cols =
-          if (!carryPrevious || headCols.isEmpty) dfCols
-          else headCols ++ dfCols.filterNot(c => byName.contains(c.name))
-        // the dir's sidecar records what was PHYSICALLY written: the
-        // batch's columns (and the batch's TYPES — which can lag the
-        // table type after a promotion) under the ids just resolved.
-        // An empty write references no dir, so there is none to annotate.
-        if (!emptyWrite)
-          writeColumnsSidecar(dataDir,
-            dfCols.zip(writeSchema).map { case (c, (_, t)) => TableColumn(c.id, c.name, t) })
-        // deletes carry forward with their dirs: dropping one on append
-        // would resurrect erased rows. The new dir is NOT in any delete's
-        // applies set — appended data is out of the deletes' scope (a
-        // riding positional delete scopes to the HEAD's dirs only, so a
-        // merge-on-read UPDATE's own re-inserted rows survive it).
-        val snap = Snapshot(id, SnapshotTable.clockMs(), op,
-          if (emptyWrite) carryForward else carryForward :+ dataDir, format, total, masks,
-          // branch commits stay invisible to published reads until
-          // fastForward flips them — the same mechanism as a WAP stage
-          staged = stageOnly || branch.isDefined,
-          deletes = carriedDeletes0 ++ posDelete.map { case (delDir, _, scope) =>
-            EqualityDelete(delDir,
-              Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
-              applies = scope.filter(
-                head.map(_.dataDirs).getOrElse(Nil).contains), Some(format),
-              positional = true)
-          },
-          parentId = Some(actualParent.getOrElse(0L)),
-          cols = cols,
-          lastColumnId = math.max(watermark0, nextId),
-          // every new head carries the UNION of its parent's per-query
-          // streaming watermarks (as durable prefix keys) under this
-          // commit's own annotations — so compaction and expiry can
-          // collapse history to one snapshot without ever regressing
-          // the exactly-once guarantee. Per-query max wins on conflict.
-          summary = {
-            val inherited = head.map(SnapshotTable.watermarksOf).getOrElse(Map.empty)
-            val ownMarks = SnapshotTable.watermarksOf(
-              Snapshot(0L, 0L, "probe", Nil, summary = summary))
-            val merged = (inherited.keySet ++ ownMarks.keySet).map { q =>
-              s"${SnapshotTable.SummaryBatchPrefix}$q" ->
-                math.max(inherited.getOrElse(q, Long.MinValue),
-                  ownMarks.getOrElse(q, Long.MinValue)).toString
-            }.toMap
-            summary ++ merged
-          })
-        writeMetadata(prev :+ snap)
-        // advance the branch ref atomically with the metadata swap
-        // (same lock): readers of the ref see old-head-or-new-head,
-        // never a dangling intermediate
-        branch.foreach { b =>
-          writeRefs(refs.map(r =>
-            if (r.name == b && r.kind == "branch") r.copy(snapshotId = id) else r))
+      val posRemoved = posDelete.map(_._2).getOrElse(0L)
+      val total =
+        if (carriedRows < 0 || removedRows < 0 || posRemoved < 0) -1L
+        else carriedRows - removedRows - posRemoved + w.rows
+      // schema continuity (Iceberg field ids): columns resolve ids by
+      // NAME against the head; genuinely new columns draw fresh ids
+      // from the never-reused watermark. An append MERGES the head
+      // schema with the batch's (new columns evolve in, columns the
+      // batch omits stay — old dirs backfill null either way) and
+      // REQUIRES same-name batch columns to conform to the table type
+      // (equal, or an Iceberg-legal narrower type that upcasts
+      // losslessly on read — int into a promoted long column); a wider
+      // batch is rejected (promote the column first via
+      // updateColumnType, or the read path would silently truncate).
+      // An overwrite/replace adopts the batch's schema outright, ids
+      // kept stable for surviving names.
+      val headCols = head.map(_.cols).getOrElse(Nil)
+      val watermark0 = (Seq(head.map(_.lastColumnId).getOrElse(0)) ++
+        prev.flatMap(_.cols.map(_.id))).max
+      var nextId = watermark0
+      val byName = headCols.map(c => c.name -> c).toMap
+      val dfCols: Seq[TableColumn] = w.schema.map { case (n, t) =>
+        byName.get(n) match {
+          case Some(c) if carryPrevious =>
+            val batchT = org.apache.spark.sql.types.DataType.fromDDL(t)
+            val colT = org.apache.spark.sql.types.DataType.fromDDL(c.dataType)
+            require(batchT == colT || SnapshotTable.isSafePromotion(batchT, colT),
+              s"append to $fullName: column $n is ${c.dataType} but the batch " +
+                s"writes $t — a lossy read-time cast; widen the column first " +
+                "(updateColumnType) or conform the batch")
+            TableColumn(c.id, n, c.dataType)
+          case Some(c) =>
+            // overwrite adopts the batch's type; the id survives by name
+            TableColumn(c.id, n, t)
+          case None => nextId += 1; TableColumn(nextId, n, t)
         }
-        Right(snap)
       }
+      val cols =
+        if (!carryPrevious || headCols.isEmpty) dfCols
+        else headCols ++ dfCols.filterNot(c => byName.contains(c.name))
+      // the dir's sidecar records what was PHYSICALLY written: the
+      // batch's columns (and the batch's TYPES — which can lag the
+      // table type after a promotion) under the ids just resolved.
+      // An empty write references no dir, so there is none to annotate.
+      if (!w.empty)
+        writeColumnsSidecar(w.dir,
+          dfCols.zip(w.schema).map { case (c, (_, t)) => TableColumn(c.id, c.name, t) })
+      // deletes carry forward with their dirs: dropping one on append
+      // would resurrect erased rows. The new dir is NOT in any delete's
+      // applies set — appended data is out of the deletes' scope (a
+      // riding positional delete scopes to the HEAD's dirs only, so a
+      // merge-on-read UPDATE's own re-inserted rows survive it).
+      Snapshot(id, SnapshotTable.clockMs(), op,
+        if (w.empty) carryForward else carryForward :+ w.dir, format, total, masks,
+        // branch commits stay invisible to published reads until
+        // fastForward flips them — the same mechanism as a WAP stage
+        staged = stageOnly || branch.isDefined,
+        deletes = carriedDeletes0 ++ posDelete.map { case (delDir, _, scope) =>
+          EqualityDelete(delDir,
+            Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
+            applies = scope.filter(
+              head.map(_.dataDirs).getOrElse(Nil).contains), Some(format),
+            positional = true)
+        },
+        parentId = Some(head.map(_.id).getOrElse(0L)),
+        cols = cols,
+        lastColumnId = math.max(watermark0, nextId),
+        // every new head carries the UNION of its parent's per-query
+        // streaming watermarks (as durable prefix keys) under this
+        // commit's own annotations — so compaction and expiry can
+        // collapse history to one snapshot without ever regressing
+        // the exactly-once guarantee. Per-query max wins on conflict.
+        summary = {
+          val inherited = head.map(SnapshotTable.watermarksOf).getOrElse(Map.empty)
+          val ownMarks = SnapshotTable.watermarksOf(
+            Snapshot(0L, 0L, "probe", Nil, summary = summary))
+          val merged = (inherited.keySet ++ ownMarks.keySet).map { q =>
+            s"${SnapshotTable.SummaryBatchPrefix}$q" ->
+              math.max(inherited.getOrElse(q, Long.MinValue),
+                ownMarks.getOrElse(q, Long.MinValue)).toString
+          }.toMap
+          summary ++ merged
+        })
     }
 
   /** Partition-spec EVOLUTION (Iceberg `updateSpec().commit()`):
@@ -4022,7 +3917,7 @@ object SnapshotTable {
   /** Snapshot-summary keys of the exactly-once streaming watermark.
     * The per-query key (`SummaryBatchPrefix` + queryId) is the DURABLE
     * watermark: every new published head carries the union of its
-    * parent's per-query watermarks forward (trySwap; head-copying
+    * parent's per-query watermarks forward (commitSwap; head-copying
     * commits inherit via `copy`), so maintenance that collapses history
     * — compaction + expiry down to one snapshot — can never regress the
     * exactly-once guarantee. The query-id/batch-id pair is display
@@ -4078,7 +3973,7 @@ object SnapshotTable {
     * the durable per-query watermark prefix keys carry forward, but the
     * source's OWN display pair (which microbatch THAT commit was) does
     * not — an ADD COLUMN or rollback is not a streaming microbatch, and
-    * reporting it as one in `$snapshots` misleads. Mirrors what trySwap
+    * reporting it as one in `$snapshots` misleads. Mirrors what commitSwap
     * does for fresh commits.
     */
   private[graft] def carriedSummary(summary: Map[String, String]): Map[String, String] =
@@ -4138,13 +4033,6 @@ object SnapshotTable {
     */
   @volatile private[sink] var backoffBaseMs: Long = 1000L
 
-  /** Wait before swap attempt `attempt+1` — tenacity
-    * wait_exponential(multiplier=1, max=10) shape, scaled by the
-    * test-tunable base. The shift is clamped: `commit_num_retries` is
-    * template-controlled and unbounded, and `base << 53+` overflows Long
-    * into a negative Thread.sleep argument; min(base<<4, base*10) =
-    * base*10, so the clamp never changes an in-range wait.
-    */
   /** Count of footer opens — the spec's evidence that the `$files`
     * SERVING path is sidecar-only (footer reads happen at commit time
     * and in legacy fallback, never when listing a sidecar-backed table).
@@ -4234,6 +4122,13 @@ object SnapshotTable {
       try r.getRecordCount finally r.close()
     } catch { case scala.util.control.NonFatal(_) => -1L }
 
+  /** Wait before swap attempt `attempt+1` — tenacity
+    * wait_exponential(multiplier=1, max=10) shape, scaled by the
+    * test-tunable base. The shift is clamped: `commit_num_retries` is
+    * template-controlled and unbounded, and `base << 53+` overflows Long
+    * into a negative Thread.sleep argument; min(base<<4, base*10) =
+    * base*10, so the clamp never changes an in-range wait.
+    */
   private[sink] def backoffMs(attempt: Int): Long =
     math.min(backoffBaseMs << math.min(attempt, 4), backoffBaseMs * 10)
 
@@ -4244,7 +4139,7 @@ object SnapshotTable {
     */
   @volatile private[sink] var orphanSafetyAgeMs: Long = 24L * 3600 * 1000
 
-  /** Test seam: invoked at the start of every swap attempt (table,
+  /** Test seam: invoked immediately before every swap attempt (table,
     * attempt index) so specs can inject a concurrent commit into the
     * conflict window deterministically. No-op in production.
     */

@@ -87,26 +87,12 @@ class PositionalDeleteSpec extends SparkSpec {
     // dir is rewritten, so the probed positions denote dead files. The
     // delete must re-probe against the compacted layout — scoping the
     // stale file down instead would silently skip every matching row.
-    val injecting = new java.lang.ThreadLocal[Boolean] {
-      override def initialValue(): Boolean = false
+    val snap = ConflictInjection.withInjectedConflicts(t, conflicts = 1)(t.compact(spark)) {
+      t.deletePositions(spark, col("id") % 4 === 0L)
     }
-    SnapshotTable.backoffBaseMs = 1L
-    SnapshotTable.beforeSwapHook = (table, attempt) =>
-      if ((table eq t) && attempt == 0 && !injecting.get() &&
-          table.currentSnapshot.exists(_.operation != "replace")) {
-        injecting.set(true)
-        try t.compact(spark): Unit
-        finally injecting.set(false)
-      }
-    try {
-      val snap = t.deletePositions(spark, col("id") % 4 === 0L)
-      assert(snap.operation == "delete")
-      assert(t.read(spark).count() == 30L, "all 10 matching rows must still erase")
-      assert(t.read(spark).filter(col("id") % 4 === 0L).count() == 0L)
-    } finally {
-      SnapshotTable.beforeSwapHook = (_, _) => ()
-      SnapshotTable.backoffBaseMs = 1000L
-    }
+    assert(snap.operation == "delete")
+    assert(t.read(spark).count() == 30L, "all 10 matching rows must still erase")
+    assert(t.read(spark).filter(col("id") % 4 === 0L).count() == 0L)
   }
 
   test("time travel to the pre-delete snapshot shows the erased rows") {

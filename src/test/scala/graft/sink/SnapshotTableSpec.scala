@@ -127,28 +127,12 @@ class SnapshotTableSpec extends SparkSpec {
     assert(!t.exists) // nothing was committed
   }
 
-  /** Run `body` with the swap hook injecting a competing append on the
-    * first `conflicts` attempts (the optimistic-commit conflict window),
-    * fast backoff, and guaranteed hook restore.
+  /** Run `body` with a competing append injected into the swap window
+    * of the first `conflicts` attempts (see [[ConflictInjection]]).
     */
-  private def withInjectedConflicts[A](t: SnapshotTable, conflicts: Int)(body: => A): A = {
-    val injecting = new java.lang.ThreadLocal[Boolean] {
-      override def initialValue(): Boolean = false
-    }
-    SnapshotTable.backoffBaseMs = 1L
-    SnapshotTable.beforeSwapHook = (table, attempt) =>
-      // guard: the injected append must not re-trigger injection
-      if ((table eq t) && attempt < conflicts && !injecting.get()) {
-        injecting.set(true)
-        try t.append(Seq(-1).toDF("v"), numRetries = 0)
-        finally injecting.set(false)
-      }
-    try body
-    finally {
-      SnapshotTable.beforeSwapHook = (_, _) => ()
-      SnapshotTable.backoffBaseMs = 1000L
-    }
-  }
+  private def withInjectedConflicts[A](t: SnapshotTable, conflicts: Int)(body: => A): A =
+    ConflictInjection.withInjectedConflicts(t, conflicts)(
+      t.append(Seq(-1).toDF("v"), numRetries = 0))(body)
 
   test("optimistic commit retries the metadata swap on conflict and carries the rival's data") {
     val t = freshTable()
@@ -346,23 +330,17 @@ class SnapshotTableSpec extends SparkSpec {
   test("compact conflicts with a concurrent append instead of dropping its rows") {
     val t = freshTable()
     t.overwrite(Seq(1, 2, 3).toDF("v").repartition(3))
-    SnapshotTable.backoffBaseMs = 1L
-    try {
-      // inject a rival append into compaction's write-to-swap window; the
-      // CAS must fail, refresh, and the retried swap then conflicts again
-      // on content: compaction re-reads nothing, so it must EXHAUST rather
-      // than commit a snapshot that silently drops the rival's rows
-      var injected = false
-      SnapshotTable.beforeSwapHook = (table, _) =>
-        if (!injected && table.root == t.root) { injected = true; t.append(Seq(4).toDF("v")): Unit }
-      val e = intercept[CommitFailedException](t.compact(spark, numRetries = 0))
-      assert(e.attempts == 1)
-      // the table still holds every row, including the rival append's
-      assert(t.read(spark).as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
-    } finally {
-      SnapshotTable.beforeSwapHook = (_, _) => ()
-      SnapshotTable.backoffBaseMs = 1000L
-    }
+    // inject a rival append into compaction's write-to-swap window; the
+    // CAS must fail, refresh, and the retried swap then conflicts again
+    // on content: compaction re-reads nothing, so it must EXHAUST rather
+    // than commit a snapshot that silently drops the rival's rows
+    val e = intercept[CommitFailedException](
+      ConflictInjection.withInjectedConflicts(t, conflicts = 1)(t.append(Seq(4).toDF("v"))) {
+        t.compact(spark, numRetries = 0)
+      })
+    assert(e.attempts == 1)
+    // the table still holds every row, including the rival append's
+    assert(t.read(spark).as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
   }
 
   test("partitionStats merges commit-time sidecars across dirs without scanning data") {
@@ -641,29 +619,20 @@ class SnapshotTableSpec extends SparkSpec {
   test("deleteWhere counts outside the lock; a conflicting append is recounted, not lost") {
     val t = freshTable()
     t.overwrite(Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "u"))
-    SnapshotTable.backoffBaseMs = 1L
     // the hook fires AFTER the unserialized count job, BEFORE the swap:
     // inject a rival append (with a matching key!) into exactly that
     // window — the CAS must fail, the count must be recomputed against
     // the new head (whose dirs enter the delete's scope), and the final
     // restated count must reflect both the rival's row and its deletion
-    var injected = false
-    SnapshotTable.beforeSwapHook = (table, _) =>
-      if (!injected && (table eq t)) {
-        injected = true
-        t.append(Seq((9L, "a"), (10L, "c")).toDF("id", "u")): Unit
-      }
-    try {
-      val snap = t.deleteWhere(Seq("a").toDF("u"), Seq("u"), numRetries = 2)
-      // base had 3 rows +2 appended = 5; keys 'a' remove ids 1, 3 AND the
-      // rival's 9 (the delete committed after the append, so the rival's
-      // dir is in scope — Iceberg sequence ordering)
-      assert(snap.rowCount == 2)
-      assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq == Seq(2L, 10L))
-    } finally {
-      SnapshotTable.beforeSwapHook = (_, _) => ()
-      SnapshotTable.backoffBaseMs = 1000L
+    val snap = ConflictInjection.withInjectedConflicts(t, conflicts = 1)(
+        t.append(Seq((9L, "a"), (10L, "c")).toDF("id", "u"))) {
+      t.deleteWhere(Seq("a").toDF("u"), Seq("u"), numRetries = 2)
     }
+    // base had 3 rows +2 appended = 5; keys 'a' remove ids 1, 3 AND the
+    // rival's 9 (the delete committed after the append, so the rival's
+    // dir is in scope — Iceberg sequence ordering)
+    assert(snap.rowCount == 2)
+    assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq == Seq(2L, 10L))
   }
 
   test("dynamic overwrite over delete-restated dirs records unknown, not understated, counts") {

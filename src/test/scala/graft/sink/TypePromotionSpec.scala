@@ -62,6 +62,9 @@ class TypePromotionSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       t.append(Seq((5000000000L, "b")).toDF("v", "name")))
     assert(e.getMessage.contains("updateColumnType"))
+    // the rejected append's written dir is cleaned up, not orphaned
+    assert(ConflictInjection.unreferencedDirs(t).isEmpty,
+      s"orphaned dirs: ${ConflictInjection.unreferencedDirs(t)}")
     // after promoting, the same append lands
     t.updateColumnType(spark, "v", "BIGINT")
     t.append(Seq((5000000000L, "b")).toDF("v", "name"))
@@ -116,26 +119,16 @@ class TypePromotionSpec extends SparkSpec {
     t.overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "name"))
     // rival: a format-changing overwrite lands between the delete's base
     // read and its swap (injected on the first attempt only)
-    val savedHook = SnapshotTable.backoffBaseMs
-    SnapshotTable.backoffBaseMs = 1L
-    var injected = false
-    SnapshotTable.beforeSwapHook = (table, _) =>
-      if (!injected && table.root == t.root) {
-        injected = true
+    ConflictInjection.withInjectedConflicts(t, conflicts = 1)(
         new SnapshotTable(t.root, t.fullName)
-          .overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), format = "orc")
-      }
-    try {
+          .overwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), format = "orc")) {
       t.deleteWhere(Seq(Tuple1(1L)).toDF("id"), Seq("id"))
-      val del = t.currentSnapshot.get.deletes.head
-      assert(del.format.contains("parquet"),
-        "the delete must record the format its FILE was written in")
-      // the read applies the parquet delete file over the orc table
-      assert(t.read(spark).select("id").as[Long].collect().toSeq == Seq(2L))
-    } finally {
-      SnapshotTable.beforeSwapHook = (_, _) => ()
-      SnapshotTable.backoffBaseMs = savedHook
     }
+    val del = t.currentSnapshot.get.deletes.head
+    assert(del.format.contains("parquet"),
+      "the delete must record the format its FILE was written in")
+    // the read applies the parquet delete file over the orc table
+    assert(t.read(spark).select("id").as[Long].collect().toSeq == Seq(2L))
   }
 
   test("many same-schema appends coalesce into ONE multi-path scan; epochs split") {
