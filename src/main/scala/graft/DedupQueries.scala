@@ -1203,11 +1203,11 @@ object DedupQueries {
         val cleaned = Dedup.substringApply(docs, "text", w = 12)
           .filter(col("kept_tokens") < col("n_tokens")) // affected docs only
           .select(col("doc_id"), col("clean_text"))
-        val snap = table.mergeClausesMor(cleaned, Seq("doc_id" -> "doc_id"),
-          matchedClauses = Seq(graft.sink.Merge.WhenMatched(
+        val snap = table.merge(cleaned, Seq("doc_id" -> "doc_id"),
+          matched = Seq(graft.sink.Merge.WhenMatched(
             graft.sink.Merge.Update(Map(
               "text" -> graft.sink.Merge.s("clean_text"))))),
-          notMatchedClauses = Nil)
+          notMatched = Nil, mode = graft.sink.WriteMode.MergeOnRead)
         require(snap.operation == "merge" &&
           origDirs.forall(snap.dataDirs.contains) &&
           snap.rowCount == before && snap.deletes.exists(_.positional),

@@ -500,8 +500,8 @@ object ExtQueries {
           keys = Seq("event_id"), outPath = out, checkpoint = s"$wh/_ckpt")
         try {
           q.processAllAvailable() // batch 0: the seeded state as inserts
-          table.updatePositions(s, col("event_type") === "purchase",
-            Map("value" -> (col("value") + lit(1000.0)))): Unit
+          table.update(s, graft.sink.Rows.Where(col("event_type") === "purchase"),
+            Map("value" -> (col("value") + lit(1000.0))), graft.sink.WriteMode.MergeOnRead): Unit
           q.processAllAvailable() // batch 1: the MOR commit -> update pairs
         } finally q.stop()
         s.read.parquet(out)

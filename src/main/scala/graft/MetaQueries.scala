@@ -1052,7 +1052,7 @@ object MetaQueries {
             .select(col("event_id"), date_format(col("ts"), "yyyy-MM-dd").as("ts_day"))
           seed.overwrite(ev.filter(col("event_id") % 2 === 0), partitionCols = Seq("ts_day")): Unit
           seed.append(ev.filter(col("event_id") % 2 === 1), partitionCols = Seq("ts_day")): Unit
-          seed.deleteRows(s, col("event_id") % 4 === 1): Unit
+          seed.delete(s, graft.sink.Rows.Where(col("event_id") % 4 === 1)): Unit
         }
         val table = SnapshotTable(wh, "testdata", "events_entries")
         val footersBefore = SnapshotTable.footerReadsOnThread
@@ -1708,7 +1708,7 @@ object MetaQueries {
     "sql_update" -> QueryDef(
       (s, dir) => {
         // Row-level UPDATE through SQL, lowered onto copy-on-write at
-        // FILE granularity (GraftDmlRule -> SnapshotTable.updateWhere):
+        // FILE granularity (GraftDmlRule -> SnapshotTable.update):
         // the table is ONE dir of four key-range files; the update's
         // key predicate physically touches only the low-range file(s),
         // and the requires pin the Iceberg COW-at-file-granularity
@@ -2152,7 +2152,7 @@ object MetaQueries {
         // DELETE with an ARBITRARY predicate (`value * 2 > 500` — the
         // DSv2 filter API cannot translate arithmetic): GraftDmlRule
         // routes it onto the file-granular COW delete
-        // (SnapshotTable.deleteRows) instead of dying at planning.
+        // (SnapshotTable.delete) instead of dying at planning.
         // Rows where the predicate is NULL survive (SQL DELETE removes
         // only where TRUE — the oracle's COALESCE pins it).
         val t = TemplateLoader.get(TemplatesDir, "events")

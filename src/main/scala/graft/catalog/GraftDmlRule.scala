@@ -1,6 +1,6 @@
 package graft.catalog
 
-import graft.sink.{Merge, SnapshotTable}
+import graft.sink.{Merge, Rows, SnapshotTable, WriteMode}
 import org.apache.spark.sql.{Column, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, EqualTo, Expression}
@@ -11,11 +11,11 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.lit
 
 /** Analyzer rule (installed by [[graft.GraftExtensions]]) that lowers
-  * SQL row-level DML on graft-catalog tables — `UPDATE` and
-  * `MERGE INTO` — onto the engine's copy-on-write primitives
-  * ([[SnapshotTable.updateWhere]] / [[SnapshotTable.mergeInto]]).
-  * DELETE needs no lowering: it goes through the DSv2 `SupportsDelete`
-  * push-down onto merge-on-read equality deletes.
+  * SQL row-level DML on graft-catalog tables — `UPDATE`, `MERGE INTO`
+  * and the DELETEs the DSv2 `SupportsDelete` push-down (merge-on-read
+  * equality deletes) cannot carry — onto [[SnapshotTable.update]],
+  * [[SnapshotTable.merge]] and [[SnapshotTable.delete]], in the
+  * [[WriteMode]] the verb's `write.<verb>.mode` property declares.
   *
   * Spark's own row-level machinery requires `SupportsRowLevelOperations`
   * (a full group-based rewrite protocol); this rule intercepts the
@@ -97,18 +97,19 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // run-time null-mask decomposition as the DELETE twin; matched
         // rows update through the COW/MOR matcher seam
         case Some((NotInMultiArm, keys, srcPlan, rest)) =>
-          GraftNotInMultiUpdateCommand(t.snapTable, srcPlan, keys,
-            sets = assignments.map(a => topLevelName(a.key, "UPDATE") ->
-              xlate(a.value, tSet, AttributeSet.empty)).toMap,
+          GraftNotInMultiCommand(t.snapTable, srcPlan, keys,
+            sets = Some(assignments.map(a => topLevelName(a.key, "UPDATE") ->
+              xlate(a.value, tSet, AttributeSet.empty)).toMap),
             plainCond = rest.map(xlate(_, tSet, AttributeSet.empty)),
             modeProperty = "write.update.mode")
         case None =>
           lowerCorrScalarUpdate(t, assignments, condition, tSet).getOrElse(
-            GraftUpdateCommand(
+            GraftRowLevelCommand(
               t.snapTable,
               condition.map(xlate(_, tSet, AttributeSet.empty)),
-              assignments.map(a =>
-                topLevelName(a.key, "UPDATE") -> xlate(a.value, tSet, AttributeSet.empty)).toMap))
+              Some(assignments.map(a =>
+                topLevelName(a.key, "UPDATE") -> xlate(a.value, tSet, AttributeSet.empty)).toMap),
+              "write.update.mode"))
       }
 
     // DELETE FROM t with a condition the DSv2 SupportsDelete filter API
@@ -118,9 +119,9 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     // A pure IN-delete keeps the SAME merge-on-read contract (the
     // subquery's distinct keys become the equality-delete file —
     // O(|keys|), no data file rewritten); IN plus residual conjuncts
-    // lowers onto the COW merge path as WHEN MATCHED AND <rest> THEN
-    // DELETE; everything else onto the file-granular COW delete
-    // (deleteRows). A predicate our conservative translatability check
+    // lowers onto the merge path as WHEN MATCHED AND <rest> THEN
+    // DELETE; everything else onto the row-level delete
+    // (SnapshotTable.delete). A predicate our conservative translatability check
     // misjudges as non-pushable still deletes CORRECTLY — it just pays
     // the COW write instead of the O(keys) delete file.
     case d @ DeleteFromTable(target, condition)
@@ -170,7 +171,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // multi-column null-aware semantics via run-time null-mask
         // decomposition into equi anti-joins (see the command's doc)
         case Some((NotInMultiArm, keys, srcPlan, rest)) =>
-          GraftNotInMultiDeleteCommand(t.snapTable, srcPlan, keys,
+          GraftNotInMultiCommand(t.snapTable, srcPlan, keys, sets = None,
             plainCond = rest.map(xlate(_, tSet, AttributeSet.empty)),
             modeProperty = "write.delete.mode")
         case None => extractThetaExistsArm(condition, tSet) match {
@@ -186,10 +187,10 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case None =>
             // scalar/EXISTS-only subquery conditions: evaluate statement-
             // level via the deferred machinery on the UPDATE-free engine
-            // delete path (deleteRows below translates through xlate and
-            // rejects the unsupported forms with the actionable message)
-            GraftDeleteWhereCommand(t.snapTable,
-              xlate(condition, tSet, AttributeSet.empty))
+            // delete path (xlate rejects the unsupported forms with the
+            // actionable message)
+            GraftRowLevelCommand(t.snapTable,
+              Some(xlate(condition, tSet, AttributeSet.empty)), None, "write.delete.mode")
         }
       }
 
@@ -345,7 +346,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           Distinct(Project(Seq(aliased), lq.plan)), rest))
       // uncorrelated MULTI-column NOT IN: the same null-aware contract,
       // decomposed by null masks at RUN time into pure equi anti-joins
-      // (GraftNotInMultiDeleteCommand) — never a nested-loop join
+      // (GraftNotInMultiCommand) — never a nested-loop join
       case Not(InSubquery(values, lq: ListQuery))
           if values.size > 1 && lq.outerAttrs.isEmpty && lq.plan.resolved &&
             values.forall(targetAttr) && lq.plan.output.size == values.size =>
@@ -827,7 +828,7 @@ case object NotInArm extends ArmKind
   * tuple: a source row that is NULL in one column can still be
   * definitely-different on another, so the single-column three-branch
   * classification does not carry over. Lowers to
-  * [[GraftNotInMultiDeleteCommand]]'s null-mask decomposition.
+  * [[GraftNotInMultiCommand]]'s null-mask decomposition.
   */
 case object NotInMultiArm extends ArmKind
 
@@ -876,29 +877,43 @@ final case class DeferredExistsSubquery(
   override def nullable: Boolean = false
 }
 
-/** Executable lowering of `UPDATE graft.ns.t SET ... WHERE ...`. The
-  * write shape follows Iceberg's `write.update.mode` table property:
-  * `copy-on-write` (the default) rewrites only the files holding
-  * matched rows; `merge-on-read` pairs a positional delete with an
-  * append of the updated rows in one atomic commit — O(matched rows),
-  * no file rewritten.
+/** The row-level write every lowered DML command ends in: the write
+  * access check, and the [[WriteMode]] the statement's
+  * `write.<verb>.mode` property declares, read at run time.
   */
-final case class GraftUpdateCommand(
-    @transient table: SnapshotTable,
-    cond: Option[Column],
-    sets: Map[String, Column]) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    // row-level DML is a WRITE under the per-team table matrix — the
-    // analysis-time loadTable only established read access
+private[catalog] object RowWrite {
+  /** Row-level DML is a WRITE under the per-team table matrix — the
+    * analysis-time loadTable only established read access.
+    */
+  def authorize(spark: SparkSession, table: SnapshotTable): Unit =
     graft.governance.AccessControl.checkTableAccess(spark,
       table.fullName.split("\\.", 2).last, table.fullName, "write")
+
+  /** UPDATE `rows` with `sets`, or DELETE them when there are none. */
+  def apply(spark: SparkSession, table: SnapshotTable, rows: Rows,
+      sets: Option[Map[String, Column]], modeProperty: String): Unit = {
+    val mode = WriteMode.of(table, modeProperty)
+    sets.fold(table.delete(spark, rows, mode))(table.update(spark, rows, _, mode)): Unit
+  }
+}
+
+/** Executable lowering of `UPDATE graft.ns.t SET ... [WHERE ...]`
+  * (`sets` defined) and of `DELETE FROM graft.ns.t WHERE <cond>` whose
+  * condition cannot ride the DSv2 filter push-down (deferred scalar/
+  * EXISTS subqueries, arbitrary expressions): statement-level subqueries
+  * materialize to literals at run time, then the rows the condition
+  * holds on are written in `modeProperty`'s [[WriteMode]].
+  */
+final case class GraftRowLevelCommand(
+    @transient table: SnapshotTable,
+    cond: Option[Column],
+    sets: Option[Map[String, Column]],
+    modeProperty: String) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    RowWrite.authorize(spark, table)
     def m(c: Column) = DeferredScalarSubquery.materialize(spark, c)
-    if (table.properties.get("write.update.mode").contains("merge-on-read"))
-      table.updatePositions(spark, cond.map(m).getOrElse(lit(true)),
-        sets.map { case (k, v) => k -> m(v) })
-    else
-      table.updateWhere(spark, cond.map(m).getOrElse(lit(true)),
-        sets.map { case (k, v) => k -> m(v) })
+    RowWrite(spark, table, Rows.Where(cond.map(m).getOrElse(lit(true))),
+      sets.map(_.map { case (k, v) => k -> m(v) }), modeProperty)
     Nil
   }
 }
@@ -916,37 +931,12 @@ final case class GraftDeleteInCommand(
     @transient keysPlan: LogicalPlan,
     keys: Seq[(String, String)]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.governance.AccessControl.checkTableAccess(spark,
-      table.fullName.split("\\.", 2).last, table.fullName, "write")
+    RowWrite.authorize(spark, table)
     val keyFrame = GraftSqlShim.ofRows(spark, keysPlan)
       .select(keys.map { case (tk, sk) =>
         org.apache.spark.sql.functions.col(sk).as(tk)
       }: _*)
     table.deleteWhere(keyFrame, keys.map(_._1))
-    Nil
-  }
-}
-
-/** Executable lowering of `DELETE FROM graft.ns.t WHERE <cond>` whose
-  * condition cannot ride the DSv2 filter push-down (deferred scalar/
-  * EXISTS subqueries, arbitrary expressions): statement-level
-  * subqueries materialize to literals at run time, then the write shape
-  * follows Iceberg's `write.delete.mode` table property —
-  * `copy-on-write` (the default) rewrites only the files holding
-  * matching rows; `merge-on-read` writes a POSITIONAL delete file
-  * instead (O(matched rows), zero data files rewritten — the
-  * delete-often/read-rarely shape).
-  */
-final case class GraftDeleteWhereCommand(
-    @transient table: SnapshotTable,
-    cond: Column) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    graft.governance.AccessControl.checkTableAccess(spark,
-      table.fullName.split("\\.", 2).last, table.fullName, "write")
-    val c = DeferredScalarSubquery.materialize(spark, cond)
-    if (table.properties.get("write.delete.mode").contains("merge-on-read"))
-      table.deletePositions(spark, c)
-    else table.deleteRows(spark, c)
     Nil
   }
 }
@@ -975,10 +965,8 @@ final case class GraftNotInCommand(
     plainSets: Option[Map[String, Column]],
     modeProperty: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.governance.AccessControl.checkTableAccess(spark,
-      table.fullName.split("\\.", 2).last, table.fullName, "write")
+    RowWrite.authorize(spark, table)
     import org.apache.spark.sql.functions.col
-    def m(c: Column) = DeferredScalarSubquery.materialize(spark, c)
     // ONE evaluation of the subquery key frame feeds the NULL probe,
     // the empty probe, AND the merge source: a non-deterministic
     // subquery must not be classified by one evaluation and applied
@@ -996,20 +984,9 @@ final case class GraftNotInCommand(
       org.apache.spark.sql.functions.count(lit(1)).as("n"),
       org.apache.spark.sql.functions.count(col(kCol)).as("nn")).head()
     if (probe.getLong(0) > probe.getLong(1)) return Nil // a NULL key: no-op
-    if (probe.getLong(0) == 0L) {
-      val mor = table.properties.get(modeProperty).contains("merge-on-read")
-      plainSets match {
-        case Some(sets) =>
-          val c = plainCond.map(m).getOrElse(lit(true))
-          val s2 = sets.map { case (k, v) => k -> m(v) }
-          if (mor) table.updatePositions(spark, c, s2)
-          else table.updateWhere(spark, c, s2)
-        case None =>
-          val c = plainCond.map(m).getOrElse(lit(true))
-          if (mor) table.deletePositions(spark, c)
-          else table.deleteRows(spark, c)
-      }
-    } else {
+    if (probe.getLong(0) == 0L)
+      GraftRowLevelCommand(table, plainCond, plainSets, modeProperty).run(spark)
+    else {
       // the merge consumes the SAME (possibly checkpointed) frame the
       // probes classified — never a fresh evaluation of keysPlan
       GraftMergeCommand(table, src.queryExecution.analyzed, keys,
@@ -1021,15 +998,16 @@ final case class GraftNotInCommand(
   }
 }
 
-/** Executable lowering of `DELETE FROM graft.ns.t WHERE (a, b, ...) NOT
-  * IN (SELECT x, y, ... FROM s)` — EXACT SQL null-aware semantics for
-  * the multi-column form, which is null-aware per COLUMN: a target row
-  * deletes iff EVERY source row is definitely different, i.e. differs
-  * on at least one column where both sides are non-NULL. The naive
-  * lowering is a non-equi anti-join (`(a<=>x OR a IS NULL OR x IS
-  * NULL) AND ...`) that Spark can only execute as a nested-loop join —
-  * O(target × source), forbidden engine-wide. Instead the row set
-  * decomposes by NULL MASK:
+/** Executable lowering of `UPDATE ... SET ...` (`sets` defined) or
+  * `DELETE FROM graft.ns.t WHERE (a, b, ...) NOT IN (SELECT x, y, ...
+  * FROM s)` — EXACT SQL null-aware semantics for the multi-column form,
+  * which is null-aware per COLUMN: a target row is touched iff EVERY
+  * source row is definitely different, i.e. differs on at least one
+  * column where both sides are non-NULL. The naive lowering is a
+  * non-equi anti-join (`(a<=>x OR a IS NULL OR x IS NULL) AND ...`)
+  * that Spark can only execute as a nested-loop join — O(target ×
+  * source), forbidden engine-wide. Instead the row set decomposes by
+  * NULL MASK:
   *
   *  - a target row with null-mask Q is "possibly equal" to a source row
   *    with null-mask P iff they agree on the columns where BOTH are
@@ -1038,7 +1016,7 @@ final case class GraftNotInCommand(
   *    key count, tiny), and in the overwhelmingly common all-non-null
   *    case there is exactly ONE (P, Q) pair — a single struct-shaped
   *    broadcast anti-join;
-  *  - deleted = for each Q: target[Q] anti-joined against each source
+  *  - touched = for each Q: target[Q] anti-joined against each source
   *    mask's distinct `comp(P|Q)` projection in turn; a pair with NO
   *    both-non-null column means every source row of that mask blocks
   *    every target row of Q (equality never FALSE) — the piece empties.
@@ -1046,70 +1024,21 @@ final case class GraftNotInCommand(
   * Statement-level short-circuits mirror the single-column command: an
   * empty subquery makes NOT IN TRUE everywhere (the residual condition
   * alone decides), and an all-NULL source tuple blocks every row (one
-  * metadata-cheap mask probe, then no-op). The write shape follows
-  * `write.delete.mode`: COW rewrites only affected dirs (kept rows =
-  * exact multiset complement), merge-on-read writes one positional
-  * delete file — both through the matcher seam, never a table rewrite.
+  * metadata-cheap mask probe, then no-op). The touched rows are written
+  * as a [[Rows.Matching]] selection in `modeProperty`'s [[WriteMode]].
   */
-final case class GraftNotInMultiDeleteCommand(
+final case class GraftNotInMultiCommand(
     @transient table: SnapshotTable,
     @transient keysPlan: LogicalPlan,
     keys: Seq[(String, String)],
+    sets: Option[Map[String, Column]],
     plainCond: Option[Column],
     modeProperty: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.governance.AccessControl.checkTableAccess(spark,
-      table.fullName.split("\\.", 2).last, table.fullName, "write")
-    import org.apache.spark.sql.functions.lit
-    val mor = table.properties.get(modeProperty).contains("merge-on-read")
-    val rest = plainCond.map(DeferredScalarSubquery.materialize(spark, _))
-    NotInMultiRuntime.classify(spark, keysPlan, keys, rest) match {
-      case NotInMultiRuntime.NoOp => ()
-      case NotInMultiRuntime.EverywhereTrue =>
-        // empty subquery: NOT IN is TRUE for every row (null keys too)
-        val c = rest.getOrElse(lit(true))
-        if (mor) table.deletePositions(spark, c) else table.deleteRows(spark, c)
-      case NotInMultiRuntime.Matched(matcher) =>
-        if (mor) table.deletePositionsMatching(spark, matcher)
-        else table.deleteRowsMatching(spark, matcher)
-    }
-    Nil
-  }
-}
-
-/** Executable lowering of `UPDATE ... SET ... WHERE (a, b, ...) NOT IN
-  * (SELECT …)` — the UPDATE twin of [[GraftNotInMultiDeleteCommand]]:
-  * identical run-time null-mask classification (no-op on an all-NULL
-  * source tuple, plain update on an empty subquery, the per-mask
-  * equi-anti-join matcher otherwise); the matched row set updates
-  * through the matcher seam — COW dir rewrite or MOR positional delete
-  * + append per `write.update.mode`.
-  */
-final case class GraftNotInMultiUpdateCommand(
-    @transient table: SnapshotTable,
-    @transient keysPlan: LogicalPlan,
-    keys: Seq[(String, String)],
-    sets: Map[String, Column],
-    plainCond: Option[Column],
-    modeProperty: String) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    graft.governance.AccessControl.checkTableAccess(spark,
-      table.fullName.split("\\.", 2).last, table.fullName, "write")
-    import org.apache.spark.sql.functions.lit
-    val mor = table.properties.get(modeProperty).contains("merge-on-read")
+    RowWrite.authorize(spark, table)
     def m(c: Column) = DeferredScalarSubquery.materialize(spark, c)
-    val rest = plainCond.map(m)
-    val matSets = sets.map { case (k2, v) => k2 -> m(v) }
-    NotInMultiRuntime.classify(spark, keysPlan, keys, rest) match {
-      case NotInMultiRuntime.NoOp => ()
-      case NotInMultiRuntime.EverywhereTrue =>
-        val c = rest.getOrElse(lit(true))
-        if (mor) table.updatePositions(spark, c, matSets)
-        else table.updateWhere(spark, c, matSets)
-      case NotInMultiRuntime.Matched(matcher) =>
-        if (mor) table.updatePositionsMatching(spark, matcher, matSets)
-        else table.updateRowsMatching(spark, matcher, matSets)
-    }
+    NotInMultiRuntime.classify(spark, keysPlan, keys, plainCond.map(m)).foreach(rows =>
+      RowWrite(spark, table, rows, sets.map(_.map { case (k, v) => k -> m(v) }), modeProperty))
     Nil
   }
 }
@@ -1145,22 +1074,15 @@ private[catalog] object SourcePin {
   * per COLUMN: distinct source null masks (≤2^k, data-driven) each pair
   * with every target null mask into a pure equi anti-join over the
   * both-non-null columns — never a nested-loop join. An all-NULL source
-  * tuple makes the statement a no-op; an empty subquery makes NOT IN
-  * TRUE everywhere (the caller falls back to its plain predicate path).
+  * tuple makes the statement a no-op (None); an empty subquery makes NOT
+  * IN TRUE everywhere (the residual condition alone selects).
   */
 private[catalog] object NotInMultiRuntime {
-  sealed trait Plan
-  case object NoOp extends Plan
-  case object EverywhereTrue extends Plan
-  final case class Matched(
-      matcher: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-    extends Plan
-
   def classify(
       spark: SparkSession,
       keysPlan: LogicalPlan,
       keys: Seq[(String, String)],
-      rest: Option[Column]): Plan = {
+      rest: Option[Column]): Option[Rows] = {
     import org.apache.spark.sql.functions.{broadcast, col, lit, when}
     val k = keys.size
     // same one-evaluation discipline as GraftNotInCommand: the mask
@@ -1173,8 +1095,8 @@ private[catalog] object NotInMultiRuntime {
     val srcMask = maskOf(keys.map { case (_, sk) => col(sk) })
     val srcMasks = src.select(srcMask.as("__gmask")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    if (srcMasks.isEmpty) return EverywhereTrue
-    if (srcMasks.contains((1 << k) - 1)) return NoOp // all-NULL source tuple
+    if (srcMasks.isEmpty) return Some(Rows.Where(rest.getOrElse(lit(true))))
+    if (srcMasks.contains((1 << k) - 1)) return None // all-NULL source tuple
     // target pieces: the matcher closure re-applies against a NEWER
     // probe after a commit-retry conflict, so the mask set must derive
     // from the frame IN HAND, never a scan taken here that a rival
@@ -1193,7 +1115,7 @@ private[catalog] object NotInMultiRuntime {
       else df => df
         .select(maskOf(keys.map { case (tk, _) => col(tk) }).as("__gmask"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    Matched { df =>
+    Some(Rows.Matching { df =>
       val tgtMasks = tgtMasksOf(df)
       val pieces = tgtMasks.map { q =>
         val qCond = keys.map(_._1).zipWithIndex.map { case (c, i) =>
@@ -1218,7 +1140,7 @@ private[catalog] object NotInMultiRuntime {
       }
       val candidates = pieces.reduce(_ unionByName _)
       rest.map(candidates.filter).getOrElse(candidates)
-    }
+    })
   }
 }
 
@@ -1229,9 +1151,8 @@ private[catalog] object NotInMultiRuntime {
   * (NOT EXISTS) join; the thetas are extra conditions ON that join, so
   * the plan stays an equi-join (sort-merge or broadcast-hash under
   * Catalyst's sizing), never a nested loop. The matched row set then
-  * deletes through the matcher seam: COW rewrites only the affected
-  * dirs (multiset complement), merge-on-read writes one positional
-  * delete file. EXISTS row-multiplicity semantics make the undistinct'd
+  * deletes as a [[Rows.Matching]] selection in `modeProperty`'s
+  * [[WriteMode]]. EXISTS row-multiplicity semantics make the undistinct'd
   * source safe: a target row joins at most once into a semi/anti join
   * regardless of how many source rows satisfy the condition.
   */
@@ -1244,8 +1165,7 @@ final case class GraftThetaExistsDeleteCommand(
     plainCond: Option[Column],
     modeProperty: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.governance.AccessControl.checkTableAccess(spark,
-      table.fullName.split("\\.", 2).last, table.fullName, "write")
+    RowWrite.authorize(spark, table)
     import org.apache.spark.sql.functions.col
     // one-evaluation discipline (as NotInMultiRuntime): the matcher is
     // applied several times (affected-dir detection, the rewrite split,
@@ -1253,16 +1173,10 @@ final case class GraftThetaExistsDeleteCommand(
     // the SAME rows in each, or the COW rewrite corrupts
     val src = SourcePin.pin(spark, srcPlan).alias("__s")
     val rest = plainCond.map(DeferredScalarSubquery.materialize(spark, _))
-    val matcher: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = { df =>
-      val pre = rest.map(df.filter).getOrElse(df)
-      val joinCond = (keys.map { case (tk, sk) =>
-        col(s"__t.$tk") === col(s"__s.$sk") } :+ theta).reduce(_ && _)
-      pre.alias("__t").join(src, joinCond,
-        if (negated) "left_anti" else "left_semi")
-    }
-    if (table.properties.get(modeProperty).contains("merge-on-read"))
-      table.deletePositionsMatching(spark, matcher)
-    else table.deleteRowsMatching(spark, matcher)
+    val joinCond = (keys.map { case (tk, sk) =>
+      col(s"__t.$tk") === col(s"__s.$sk") } :+ theta).reduce(_ && _)
+    RowWrite(spark, table, Rows.Matching(df => rest.map(df.filter).getOrElse(df).alias("__t")
+      .join(src, joinCond, if (negated) "left_anti" else "left_semi")), None, modeProperty)
     Nil
   }
 }
@@ -1286,38 +1200,20 @@ final case class GraftMergeCommand(
     modeProperty: String = "write.merge.mode")
   extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    graft.governance.AccessControl.checkTableAccess(spark,
-      table.fullName.split("\\.", 2).last, table.fullName, "write")
+    RowWrite.authorize(spark, table)
     def m(c: Column) = DeferredScalarSubquery.materialize(spark, c)
-    // Iceberg's write.merge.mode: merge-on-read pairs a positional
-    // delete of touched rows with the rewritten/inserted append in one
-    // commit; copy-on-write (default) rewrites the touched files
-    val engine: (org.apache.spark.sql.DataFrame, Seq[(String, String)],
-        Seq[Merge.WhenMatched], Seq[Merge.WhenNotMatched],
-        Seq[Merge.WhenNotMatchedBySource]) => Any =
-      if (table.properties.get(modeProperty).contains("merge-on-read"))
-        table.mergeClausesMor(_, _, _, _, _)
-      else table.mergeClauses(_, _, _, _, _)
-    engine(
-      GraftSqlShim.ofRows(spark, sourcePlan), keys,
-      matchedClauses.map(c => c.copy(
-        action = c.action match {
-          case Merge.Update(sets) => Merge.Update(sets.map { case (k, v) => k -> m(v) })
-          case other => other
-        },
-        cond = c.cond.map(m))),
-      notMatchedClauses.map(c => c.copy(
-        action = c.action match {
-          case Merge.Insert(sets) => Merge.Insert(sets.map { case (k, v) => k -> m(v) })
-          case other => other
-        },
-        cond = c.cond.map(m))),
-      notMatchedBySourceClauses.map(c => c.copy(
-        action = c.action match {
-          case Merge.Update(sets) => Merge.Update(sets.map { case (k, v) => k -> m(v) })
-          case other => other
-        },
-        cond = c.cond.map(m))))
+    def act(a: Merge.Matched): Merge.Matched = a match {
+      case Merge.Update(sets) => Merge.Update(sets.map { case (k, v) => k -> m(v) })
+      case other => other
+    }
+    table.merge(GraftSqlShim.ofRows(spark, sourcePlan), keys,
+      matchedClauses.map(c => Merge.WhenMatched(act(c.action), c.cond.map(m))),
+      notMatchedClauses.map(c => Merge.WhenNotMatched(c.action match {
+        case Merge.Insert(sets) => Merge.Insert(sets.map { case (k, v) => k -> m(v) })
+        case other => other
+      }, c.cond.map(m))),
+      notMatchedBySourceClauses.map(c => Merge.WhenNotMatchedBySource(act(c.action), c.cond.map(m))),
+      WriteMode.of(table, modeProperty))
     Nil
   }
 }

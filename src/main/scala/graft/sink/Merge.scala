@@ -3,7 +3,7 @@ package graft.sink
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.col
 
-/** Action vocabulary for [[SnapshotTable.mergeInto]] — the SQL MERGE
+/** Action vocabulary for [[SnapshotTable.merge]] — the SQL MERGE
   * clause shapes (WHEN MATCHED THEN UPDATE/DELETE, WHEN NOT MATCHED
   * THEN INSERT), decoupled from the parser so the Scala API and the
   * SQL front door (`catalog.GraftDmlRule`) lower to the same engine

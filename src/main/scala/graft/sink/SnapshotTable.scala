@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.governance.Audit
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Parquet-mode snapshot table: the Iceberg-semantics subset the engine
   * needs when no Iceberg catalog is available (this image carries no
@@ -394,12 +394,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
       s"delete keys frame must carry ${keyCols.mkString(", ")} (has: ${keys.columns.mkString(", ")})")
     val spark = keys.sparkSession
     val base = requireCurrent
-    val delDir = Paths.get(root,
-      s"snap-del-${java.util.UUID.randomUUID().toString.take(8)}").toString
+    val delDir = freshDir("snap-del-")
     val keyRows = keys.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
     keyRows.write.mode("overwrite").format(base.format).save(delDir)
 
     withCommitRetries(numRetries, written = Seq(delDir)) { attempt =>
+      val audit = Map("operation" -> "equality_delete", "mode" -> WriteMode.MergeOnRead.name,
+        "attempts" -> (attempt + 1).toString)
       // a retry rebases onto the rival's head: its dirs enter the
       // delete's scope (the delete commits after the rival)
       val cur = if (attempt == 0) base else requireCurrent
@@ -416,7 +417,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
             spark.read.format(base.format).load(delDir)), keyCols, "left_semi")
           .count()
       val total = if (cur.rowCount < 0 || removed < 0) -1L else cur.rowCount - removed
-      Right(Swap(Some(cur.id), Map("operation" -> "equality_delete")) { (_, _, id) =>
+      Right(Swap(Some(cur.id), audit) { (_, _, id) =>
         // cur.copy: dirs, format, masks, SCHEMA and watermark all carry
         cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
           operation = "delete", rowCount = total, staged = false,
@@ -425,93 +426,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
             EqualityDelete(delDir, keyCols, cur.dataDirs, Some(base.format)),
           parentId = Some(cur.id))
       })
-    }
-  }
-
-  /** Positional delete (Iceberg v2's second merge-on-read delete
-    * flavor) — the arbitrary-predicate point delete: erase every row
-    * `cond` matches, in O(matched rows) write cost, without key
-    * semantics and without rewriting a single data file. One probe job
-    * over the logical view (masks and existing deletes applied, so an
-    * already-erased row can never re-match) carries the parquet
-    * physical row identity (`_metadata.file_path`, `_metadata.
-    * row_index`); the matched (file, position) pairs are written as a
-    * delete file that reads anti-join (broadcast — positional files
-    * are small by construction). Scope is the probed data dirs, so
-    * rows APPENDED after the delete — even ones matching `cond` —
-    * survive, the Iceberg sequence-number contract at dir granularity.
-    * Complements [[deleteWhere]] (key equality, O(|keys|) with no
-    * probe) and [[deleteRows]] (copy-on-write — the right shape when
-    * the match is dense and rewriting beats carrying delete files).
-    * [[compact]] / [[rewriteDeletes]] pay the merge-on-read debt and
-    * drop the file. Matching zero rows commits nothing.
-    */
-  def deletePositions(
-      spark: SparkSession,
-      cond: org.apache.spark.sql.Column,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
-    deletePositionsMatching(spark, _.filter(cond), numRetries)
-
-  /** Merge-on-read flavor of [[deleteRowsMatching]]: `matcher` selects
-    * the row set to delete (row-preserving ops only, row-id columns
-    * carried through), and the matched positions become ONE positional
-    * delete file — O(matched rows), zero data files rewritten.
-    */
-  def deletePositionsMatching(
-      spark: SparkSession,
-      matcher: DataFrame => DataFrame,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    import org.apache.spark.sql.functions.col
-    withCommitRetries(numRetries) { _ =>
-      val cur = requireCurrent
-      require(cur.format == "parquet",
-        s"positional deletes need parquet row identity (_metadata.row_index); " +
-          s"$fullName is ${cur.format} — use deleteWhere or deleteRows")
-      if (cur.dataDirs.isEmpty) Left(cur)
-      else {
-        import org.apache.spark.sql.functions.lit
-        val probe = cur.dataDirs.map(d => readDirWithRowId(spark, cur, d)
-            .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
-          .reduce(_ unionByName _)
-        val matches = matcher(probe)
-          .select(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol),
-            col(SnapshotTable.RowIdDirCol))
-        // ONE probe scan: write the (tiny) positions file, then read the
-        // count AND the touched-dir scope back from it — never a second
-        // pass over the table just to count, and the delete scopes to
-        // exactly the dirs holding matched files, so every other dir
-        // keeps the zero-metadata-cost read path
-        val delDir = Paths.get(root,
-          s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
-        matches.write.mode("overwrite").format(cur.format).save(delDir)
-        val delFile = spark.read.format(cur.format).load(delDir)
-        val removed = delFile.count()
-        if (removed == 0L) {
-          deleteRecursively(new File(delDir))
-          Left(cur)
-        } else {
-          val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
-            .distinct().collect().map(_.getString(0)).toSet
-          val applies = cur.dataDirs.filter(hitDirs.contains)
-          val total = if (cur.rowCount < 0) -1L else cur.rowCount - removed
-          // strict CAS against the probed head: positions denote rows of
-          // exactly that snapshot's files. A conflict — even a rival pure
-          // append — re-probes from scratch rather than re-scoping the file
-          // (scoping down after a rival REWRITE would silently skip the
-          // matching rows the rival moved into new dirs — Iceberg's
-          // conflicting-files validation exists for the same reason).
-          Right(Swap(Some(cur.id), Map("operation" -> "positional_delete"),
-            dirs = Seq(delDir)) { (_, _, id) =>
-            cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
-              operation = "delete", rowCount = total, staged = false,
-              summary = SnapshotTable.carriedSummary(cur.summary),
-              deletes = cur.deletes :+ EqualityDelete(delDir,
-                Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
-                applies, Some(cur.format), positional = true),
-              parentId = Some(cur.id))
-          })
-        }
-      }
     }
   }
 
@@ -539,8 +453,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         val union = pos.map(d =>
             spark.read.format(d.format.getOrElse(cur.format)).load(d.dir))
           .reduce(_ unionByName _).distinct()
-        val delDir = Paths.get(root,
-          s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
+        val delDir = freshDir("snap-posdel-")
         union.write.mode("overwrite").format(cur.format).save(delDir)
         val applies = pos.flatMap(_.applies).distinct.filter(cur.dataDirs.contains)
         Right(Swap(Some(cur.id), Map("operation" -> "rewrite_position_deletes"),
@@ -548,96 +461,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
           cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
             operation = "replace", staged = false,
             summary = SnapshotTable.carriedSummary(cur.summary),
-            deletes = eq :+ EqualityDelete(delDir,
-              Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
-              applies, Some(cur.format), positional = true),
+            deletes = eq :+ positionalDelete(delDir, applies, cur.format),
             parentId = Some(cur.id))
         })
       }
     }
-
-  /** Merge-on-read UPDATE (Iceberg's `write.update.mode=merge-on-read`
-    * shape): instead of rewriting the files holding matched rows
-    * ([[updateWhere]], copy-on-write), ONE atomic commit pairs a
-    * positional delete of the old row versions with an append of the
-    * updated rows — O(matched rows) write cost, untouched files never
-    * re-written, the sparse-update-of-a-huge-table sweet spot. The
-    * riding delete scopes to the pre-commit dirs only, so the commit's
-    * own re-inserted rows survive it by construction. Positions are
-    * only meaningful against the probed head, so every attempt
-    * re-probes — a rival's overlapping erasure or rewrite is
-    * re-observed, never silently overridden. Matching zero rows commits
-    * nothing.
-    */
-  def updatePositions(
-      spark: SparkSession,
-      cond: org.apache.spark.sql.Column,
-      sets: Map[String, org.apache.spark.sql.Column],
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
-    updatePositionsMatching(spark, _.filter(cond), sets, numRetries)
-
-  /** [[updatePositions]] generalized to a row MATCHER (a transform of
-    * the probe frame to its to-update subset) for update sets no single
-    * predicate can express — e.g. the null-mask anti-join pieces of a
-    * multi-column NOT IN. Same contract: one positional delete file +
-    * one append of the rewritten rows, no data file rewritten.
-    */
-  def updatePositionsMatching(
-      spark: SparkSession,
-      matcher: DataFrame => DataFrame,
-      sets: Map[String, org.apache.spark.sql.Column],
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    import org.apache.spark.sql.functions.col
-    require(sets.nonEmpty, s"merge-on-read UPDATE on $fullName needs at least one assignment")
-    withCommitRetries(numRetries) { attempt =>
-      val cur = requireCurrent
-      require(cur.format == "parquet",
-        s"merge-on-read UPDATE needs parquet row identity (_metadata.row_index); " +
-          s"$fullName is ${cur.format} — use updateWhere")
-      if (cur.dataDirs.isEmpty) Left(cur)
-      else {
-        val schemaCols = snapshotSchema(spark, cur)
-        sets.keys.foreach(k => require(schemaCols.exists(_._1 == k),
-          s"UPDATE on $fullName assigns unknown column $k " +
-            s"(columns: ${schemaCols.map(_._1).mkString(", ")})"))
-        import org.apache.spark.sql.functions.lit
-        val probe = cur.dataDirs.map(d => readDirWithRowId(spark, cur, d)
-            .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
-          .reduce(_ unionByName _)
-        val matched = matcher(probe)
-        val positions = matched
-          .select(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol),
-            col(SnapshotTable.RowIdDirCol))
-        // write the positions file first, count + scope from the (tiny)
-        // file — the table-sized probe runs twice total (positions write,
-        // updated-rows write), never a third time for a count
-        val delDir = Paths.get(root,
-          s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
-        positions.write.mode("overwrite").format(cur.format).save(delDir)
-        val delFile = spark.read.format(cur.format).load(delDir)
-        val removed = delFile.count()
-        if (removed == 0L) {
-          deleteRecursively(new File(delDir))
-          Left(cur)
-        } else {
-          val hitDirs = delFile.select(SnapshotTable.RowIdDirCol)
-            .distinct().collect().map(_.getString(0)).toSet
-          val applies = cur.dataDirs.filter(hitDirs.contains)
-          val updated = matched.select(schemaCols.map { case (n, t) =>
-            sets.get(n).map(_.cast(t).as(n)).getOrElse(col(n))
-          }: _*)
-          // keep the table's partition layout on the appended dir (when the
-          // partition columns are part of the schema) so pruning governs
-          // the updated rows too
-          val pcols = partitionColumns.filter(pc => schemaCols.exists(_._1 == pc))
-          val w = writeDataDir(updated, pcols, WriteSortOrder.sortCols(this), cur.format)
-          Right(commitSwap(w, Some(cur.id), "update", carryPrevious = true, cur.format,
-            Map("operation" -> "update", "attempts" -> (attempt + 1).toString),
-            dirs = Seq(delDir, w.dir), posDelete = Some((delDir, removed, applies))))
-        }
-      }
-    }
-  }
 
   /** Predicate keeping rows OUTSIDE every masked partition rel-path.
     * References only partition columns, so Catalyst evaluates it against
@@ -656,171 +484,197 @@ final class SnapshotTable(val root: String, val fullName: String) {
   }
 
   // ------------------------------------------------------------------
-  // row-level UPDATE / MERGE (Iceberg copy-on-write at dir granularity)
+  // row-level DELETE / UPDATE / MERGE: three verbs, one executor per
+  // WriteMode
   // ------------------------------------------------------------------
 
-  /** Row-level UPDATE — Iceberg's copy-on-write strategy at dir
-    * granularity: ONLY the dirs that physically hold matching rows are
-    * rewritten (detected with one column-pruned scan, which the range
-    * sidecars additionally dir-skip); every other dir carries forward
-    * untouched, so the write cost is O(affected dirs), not O(table).
-    * The rewritten dir bakes in the affected dirs' masks and equality
-    * deletes (they are dropped from the new snapshot's scope for those
-    * dirs), and row count is unchanged; every attempt re-detects
-    * against the current head.
-    *
-    * `sets` values may reference any table column (by name) and are
-    * cast to the column's declared type (Iceberg assignment-cast
-    * semantics). Matching zero rows returns the current snapshot
-    * without committing — SQL UPDATE semantics, no empty snapshot spam.
+  /** Row-level DELETE of the `rows` selection in the `mode` shape (see
+    * [[WriteMode]]): SQL DELETE removes the rows where the condition is
+    * TRUE. The companion of [[deleteWhere]], which stays the right tool
+    * for key equality (O(|keys|), no probe).
     */
-  def updateWhere(
+  def delete(
       spark: SparkSession,
-      cond: org.apache.spark.sql.Column,
-      sets: Map[String, org.apache.spark.sql.Column],
+      rows: Rows,
+      mode: WriteMode = WriteMode.CopyOnWrite,
+      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    rowLevel(spark, "delete", mode, numRetries) { cur =>
+      RowLevel(probeDirs(spark, cur, mode, rows), rows,
+        rewrite = rows match {
+          // a condition's closed-form complement; otherwise the exact
+          // multiset complement — null- and NaN-safe, duplicate-exact
+          case Rows.Where(cond) => _.filter(not(coalesce(cond, lit(false))))
+          case _ => v => v.exceptAll(rows(v))
+        },
+        revise = v => (rowIds(rows(v)), None),
+        observable = rows.isInstanceOf[Rows.Where])
+    }
+  }
+
+  /** Row-level UPDATE of the `rows` selection in the `mode` shape (see
+    * [[WriteMode]]). `sets` values may reference any table column (by
+    * name) and are cast to the column's declared type (Iceberg
+    * assignment-cast semantics).
+    */
+  def update(
+      spark: SparkSession,
+      rows: Rows,
+      sets: Map[String, Column],
+      mode: WriteMode = WriteMode.CopyOnWrite,
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
     import org.apache.spark.sql.functions.{col, when}
     require(sets.nonEmpty, s"UPDATE on $fullName needs at least one assignment")
-    withCommitRetries(numRetries) { _ =>
-      val cur = requireCurrent
+    rowLevel(spark, "update", mode, numRetries) { cur =>
       val schemaCols = snapshotSchema(spark, cur)
       val names = schemaCols.map(_._1)
       sets.keys.foreach(k => require(names.contains(k),
         s"UPDATE on $fullName assigns unknown column $k (columns: ${names.mkString(", ")})"))
-      val affected = affectedDirs(spark, cur, _.filter(cond))
-      if (affected.isEmpty) Left(cur)
-      else {
-        val (view, carryDirs) = splitForRewrite(spark, cur, affected, _.filter(cond))
-        val updated = view.select(schemaCols.map { case (n, t) =>
-          sets.get(n)
-            .map(v => when(cond, v.cast(t)).otherwise(col(n)).as(n))
-            .getOrElse(col(n))
-        }: _*)
-        Right(rewriteDirs(spark, cur, affected, updated, "update",
-          newTotal = cur.rowCount, carryDirs = carryDirs))
+      // every column, assigned where `hit` holds (everywhere for None)
+      def assigned(hit: Option[Column]): Seq[Column] = schemaCols.map { case (n, t) =>
+        sets.get(n).map(v => hit.fold(v.cast(t))(when(_, v.cast(t)).otherwise(col(n))).as(n))
+          .getOrElse(col(n))
       }
+      RowLevel(probeDirs(spark, cur, mode, rows), rows,
+        rewrite = rows match {
+          case Rows.Where(cond) => _.select(assigned(Some(cond)): _*)
+          case _ => v =>
+            val matched = rows(v)
+            v.exceptAll(matched).select(names.map(col): _*)
+              .unionByName(matched.select(assigned(None): _*))
+        },
+        revise = v => {
+          val matched = rows(v)
+          (rowIds(matched), Some(matched.select(assigned(None): _*)))
+        },
+        keepsRowCount = true)
     }
   }
 
-  /** [[updateWhere]] generalized to a row MATCHER for update row sets
-    * no single predicate can express (the multi-column NOT IN pieces).
-    * Copy-on-write at dir granularity like updateWhere: affected dirs
-    * detected through the matcher, rewritten as (unmatched rows
-    * verbatim) ∪ (matched rows with `sets` applied); untouched dirs
-    * carry forward byte-identical. The multiset split (`exceptAll`)
-    * matches the delete seam's contract: a matcher decides per row
-    * CONTENT, so duplicate rows either all match or none do.
+  /** MERGE INTO (SQL MERGE) in the `mode` shape (see [[WriteMode]]):
+    * `source` joins the table on equality `keys` (target-key ->
+    * source-key column pairs) and ordered `WHEN MATCHED [AND cond]` /
+    * `WHEN NOT MATCHED [AND cond]` / `WHEN NOT MATCHED BY SOURCE [AND
+    * cond]` clauses apply, each list first-true-wins per row (SQL
+    * semantics). The SQL cardinality rule is enforced before any write.
+    * Dir detection is a key-pruned broadcast join — a semi-join for
+    * matched clauses, an anti-join plus the clauses' target-only
+    * conditions for BY SOURCE ones — and conservative under clause
+    * conditions: copy-on-write rewrites a detected dir whose rows all
+    * fail every condition byte-identical rather than run the full source
+    * join per dir up front. Cost is O(affected dirs + source).
     */
-  def updateRowsMatching(
-      spark: SparkSession,
-      matcher: DataFrame => DataFrame,
-      sets: Map[String, org.apache.spark.sql.Column],
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    import org.apache.spark.sql.functions.col
-    require(sets.nonEmpty, s"UPDATE on $fullName needs at least one assignment")
-    withCommitRetries(numRetries) { _ =>
-      val cur = requireCurrent
+  def merge(
+      sourceIn: DataFrame,
+      keys: Seq[(String, String)],
+      matched: Seq[Merge.WhenMatched],
+      notMatched: Seq[Merge.WhenNotMatched],
+      notMatchedBySource: Seq[Merge.WhenNotMatchedBySource] = Nil,
+      mode: WriteMode = WriteMode.CopyOnWrite,
+      numRetries: Int = SnapshotTable.DefaultCommitRetries,
+      summary: Map[String, String] = Map.empty): Snapshot = {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
+    val source = materializeSource(sourceIn)
+    val spark = source.sparkSession
+    require(keys.nonEmpty, s"MERGE into $fullName needs at least one key pair")
+    keys.foreach { case (_, sk) =>
+      require(source.columns.contains(sk),
+        s"MERGE source lacks key column $sk (has: ${source.columns.mkString(", ")})")
+    }
+    val keyNames = keys.map(_._1)
+    // duplicated source keys — an error only if one of them MATCHES a
+    // target row (the SQL cardinality rule: no target row may be
+    // updated/deleted twice). Duplicate keys among not-matched rows are
+    // legal — they all insert. Checked per attempt against the current
+    // head; the common no-dups case costs one source-side job and never
+    // touches the table.
+    val dupKeys = source.groupBy(keys.map { case (_, sk) => col(sk) }: _*).count()
+      .filter(col("count") > 1)
+      .select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*)
+    val hasDupKeys = dupKeys.limit(1).count() > 0L
+
+    rowLevel(spark, "merge", mode, numRetries, summary) { cur =>
       val schemaCols = snapshotSchema(spark, cur)
-      val names = schemaCols.map(_._1)
-      sets.keys.foreach(k => require(names.contains(k),
-        s"UPDATE on $fullName assigns unknown column $k (columns: ${names.mkString(", ")})"))
-      val affected = affectedDirs(spark, cur, matcher)
-      if (affected.isEmpty) Left(cur)
-      else {
-        val (view, carryDirs) = splitForRewrite(spark, cur, affected, matcher)
-        val matched = matcher(view)
-        val rewritten = matched.select(schemaCols.map { case (n, t) =>
-          sets.get(n).map(_.cast(t).as(n)).getOrElse(col(n))
-        }: _*)
-        val untouched = view.exceptAll(matched)
-          .select(schemaCols.map { case (n, _) => col(n) }: _*)
-        Right(rewriteDirs(spark, cur, affected, untouched.unionByName(rewritten),
-          "update", newTotal = cur.rowCount, carryDirs = carryDirs))
+      keyNames.foreach(tk => require(schemaCols.exists(_._1 == tk),
+        s"MERGE into $fullName keys on unknown column $tk"))
+      // the target's distinct key tuples: one column-pruned scan,
+      // reused by the cardinality check and the insert anti-join
+      lazy val tableKeys = readSnapshot(spark, cur.id).select(keyNames.map(col): _*).distinct()
+      if (hasDupKeys)
+        require(dupKeys.join(tableKeys, keyNames, "left_semi").limit(1).count() == 0L,
+          s"MERGE into $fullName: multiple source rows share a key that matches a " +
+            "target row — the SQL cardinality rule forbids updating one target row " +
+            "twice (dedupe the source)")
+      // touched-row shapes: matched clauses touch the key semi-join, BY
+      // SOURCE clauses the anti-join rows some clause condition admits —
+      // a delivery covering every key leaves untouched dirs untouched
+      val srcKeys = broadcast(
+        source.select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*).distinct())
+      val bySourceCond = notMatchedBySource
+        .map(c => coalesce(c.cond.getOrElse(lit(true)), lit(false))).reduceOption(_ || _)
+      val shapes: Seq[DataFrame => DataFrame] =
+        Option.when(matched.nonEmpty)((v: DataFrame) => v.join(srcKeys, keyNames, "left_semi")).toSeq ++
+          bySourceCond.map(c => (v: DataFrame) =>
+            v.join(srcKeys, keyNames, "left_anti").alias("__t").filter(c))
+      val affected = shapes.flatMap(affectedDirs(spark, cur, _)).toSet
+
+      val src = source.withColumn("__s_present", lit(true)).alias("__s")
+      val joinCond = keys.map { case (tk, sk) => col(s"__t.$tk") === col(s"__s.$sk") }.reduce(_ && _)
+      def joined(v: DataFrame) = v.alias("__t").join(src, joinCond, "left_outer")
+      // matched clauses chain off the match predicate, BY SOURCE clauses
+      // off its negation — two first-true-wins lists over disjoint rows
+      val matchedCol = col("__s.__s_present").isNotNull
+      val clauses = clausePreds(matchedCol, matched.map(_.cond)).zip(matched.map(_.action)) ++
+        clausePreds(!matchedCol, notMatchedBySource.map(_.cond)).zip(notMatchedBySource.map(_.action))
+      clauses.foreach {
+        case (_, Merge.Update(sets)) => sets.keys.foreach(k => require(
+          schemaCols.exists(_._1 == k), s"MERGE into $fullName assigns unknown column $k"))
+        case _ => ()
       }
+      val deleted = clauses.collect { case (p, Merge.Delete) => p }.reduceOption(_ || _)
+        .getOrElse(lit(false))
+      val revised = schemaCols.map { case (n, t) =>
+        val keep = col(s"__t.$n")
+        firstTrue(clauses.flatMap { case (p, action) =>
+          (action match {
+            case Merge.UpdateAll => Option.when(source.columns.contains(n))(col(s"__s.$n").cast(t))
+            case Merge.Update(sets) => sets.get(n).map(_.cast(t))
+            case _ => None // deleted rows are filtered out
+          }).map(p -> _)
+        }).map(_.otherwise(keep)).getOrElse(keep).as(n)
+      }
+      // unmatched source rows table-wide: an anti-join against the key
+      // columns only (a column-pruned scan of the table)
+      val inserts = Option.when(notMatched.nonEmpty) {
+        val preds = clausePreds(lit(true), notMatched.map(_.cond))
+        source.alias("__s").join(tableKeys.alias("__t"), joinCond, "left_anti")
+          .filter(preds.reduce(_ || _))
+          .select(schemaCols.map { case (n, t) =>
+            // every surviving row satisfies some pred; the otherwise is
+            // unreachable but keeps the column total
+            firstTrue(preds.zip(notMatched.map(_.action match {
+              case Merge.InsertAll =>
+                keys.find(_._1 == n).map(_._2).orElse(Some(n).filter(source.columns.contains))
+                  .map(sn => col(s"__s.$sn").cast(t)).getOrElse(lit(null).cast(t))
+              case Merge.Insert(sets) => sets.get(n).map(_.cast(t)).getOrElse(lit(null).cast(t))
+            }))).get.otherwise(lit(null).cast(t)).as(n)
+          }: _*)
+      }
+      RowLevel(cur.dataDirs.filter(affected),
+        Rows.Matching(v => shapes.map(_(v)).reduce(_ unionByName _)),
+        rewrite = joined(_).filter(!deleted).select(revised: _*),
+        revise = v => {
+          val hit = joined(v).filter(clauses.map(_._1).reduce(_ || _))
+          (rowIds(hit, "__t."), Some(hit.filter(!deleted).select(revised: _*)))
+        },
+        inserts = inserts)
     }
   }
 
-  /** Copy-on-write row DELETE for ARBITRARY predicates — the companion
-    * to [[deleteWhere]] (which stays the right tool for key equality:
-    * O(|keys|), merge-on-read, no rewrite). Dirs holding matching rows
-    * are detected with one pruned scan; only those rewrite, keeping
-    * exactly the rows where `cond` is false or NULL (SQL DELETE removes
-    * rows where the predicate is TRUE); untouched dirs carry forward
-    * byte-identical. Matching zero rows commits nothing. This is the
-    * Iceberg copy-on-write delete shape: O(affected dirs), never
-    * O(table).
-    */
-  def deleteRows(
-      spark: SparkSession,
-      cond: org.apache.spark.sql.Column,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    import org.apache.spark.sql.functions.{coalesce, lit, not}
-    deleteRowsMatching(spark, _.filter(cond),
-      keeper = Some(df => df.filter(not(coalesce(cond, lit(false))))),
-      numRetries = numRetries)
-  }
-
-  /** COW delete of an arbitrary matched-row SET: `matcher` maps any
-    * frame of table rows to the subset to delete using row-preserving
-    * ops only (filters, anti/semi joins — never projections), so it
-    * composes with the dir-affinity probe and the file-granular split
-    * exactly like a plain condition. `keeper` computes the complement
-    * when a cheap closed form exists (a boolean condition's negation);
-    * otherwise the kept rows are the exact multiset complement
-    * (`exceptAll`) — null- and NaN-safe, duplicate-exact. This is the
-    * seam join-shaped DML (multi-column NOT IN) lowers onto: the
-    * matched set is defined by joins against another frame, which no
-    * single `Column` can express.
-    */
-  def deleteRowsMatching(
-      spark: SparkSession,
-      matcher: DataFrame => DataFrame,
-      keeper: Option[DataFrame => DataFrame] = None,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
-    withCommitRetries(numRetries) { _ =>
-      val cur = requireCurrent
-      val affected = affectedDirs(spark, cur, matcher)
-      if (affected.isEmpty) Left(cur)
-      else {
-        val (view, carryDirs) = splitForRewrite(spark, cur, affected, matcher)
-        // keeper path (plain-condition deletes): the affected-row count is
-        // OBSERVED during the rewrite write instead of a separate full
-        // pre-write pass over affected dirs (guide §1.2). The exceptAll
-        // path keeps the explicit count — its plan references `view`
-        // twice, so an embedded metric would double-count; either way the
-        // count is by-name, paid after (or instead of) nothing else.
-        val (kept, affectedRows: (() => Long)) = keeper match {
-          case Some(kf) if cur.rowCount >= 0 =>
-            val o = org.apache.spark.sql.Observation(
-              s"graft-affected-${java.util.UUID.randomUUID().toString.take(8)}")
-            val observed = view.observe(o, org.apache.spark.sql.functions
-              .count(org.apache.spark.sql.functions.lit(1)).as("__affected"))
-            (kf(observed), () => o.get.get("__affected") match {
-              case Some(l: Long) => l
-              case _ => -1L // metric lost: total degrades to "unknown"
-            })
-          case Some(kf) => (kf(view), () => -1L)
-          case None =>
-            (view.exceptAll(matcher(view)),
-              () => if (cur.rowCount < 0) -1L else view.count())
-        }
-        Right(rewriteDirs(spark, cur, affected, kept, "delete",
-          newTotal = if (cur.rowCount < 0) -1L else -2L,
-          removedRows = affectedRows(), carryDirs = carryDirs))
-      }
-    }
-
-  /** MERGE INTO (SQL MERGE / Iceberg copy-on-write merge): upsert
-    * `source` into the table on equality `keys` (pairs of target-key ->
-    * source-key column names). Matched target rows are updated (from
-    * the source row or explicit assignments) or deleted; unmatched
-    * source rows are inserted. The SQL cardinality rule is enforced —
-    * a source with duplicate keys is rejected before any write.
-    *
-    * Scale shape: affected dirs are detected with one key-columns-only
-    * semi-join (broadcastable source keys), only those dirs rewrite;
-    * the insert anti-join reads key columns of the table only. Cost is
-    * O(affected dirs + source), never O(table rewrite).
+  /** [[merge]] with at most one unconditional clause per side — the
+    * single-action upsert shape: matched target rows update (from the
+    * source row or explicit assignments) or delete, unmatched source
+    * rows insert.
     */
   def mergeInto(
       source: DataFrame,
@@ -828,440 +682,177 @@ final class SnapshotTable(val root: String, val fullName: String) {
       matched: Merge.Matched,
       notMatched: Merge.NotMatched,
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
-    mergeClauses(source, keys,
-      matched match {
-        case Merge.KeepMatched => Nil
-        case m => Seq(Merge.WhenMatched(m))
-      },
-      notMatched match {
-        case Merge.Ignore => Nil
-        case nm => Seq(Merge.WhenNotMatched(nm))
-      },
+    merge(source, keys,
+      Seq(matched).filter(_ != Merge.KeepMatched).map(Merge.WhenMatched(_)),
+      Seq(notMatched).filter(_ != Merge.Ignore).map(Merge.WhenNotMatched(_)),
       numRetries = numRetries)
 
-  /** Full multi-clause MERGE: ordered `WHEN MATCHED [AND cond]` /
-    * `WHEN NOT MATCHED [AND cond]` / `WHEN NOT MATCHED BY SOURCE
-    * [AND cond]` clauses, each list first-true-wins per row (SQL
-    * semantics). Dir detection stays a key-pruned broadcast join —
-    * semi-join for matched clauses, ANTI-join (plus the clauses'
-    * target-only conditions) for BY SOURCE ones — and conservative
-    * under clause conditions: a dir whose candidate rows all fail every
-    * condition is rewritten byte-identical rather than detected as
-    * untouched (detecting that would need the full source join per dir
-    * up front; the rewrite itself applies conditions exactly).
+  /** One attempt's row-level statement against its base snapshot, in the
+    * terms both executors of [[rowLevel]] share: `dirs` may hold touched
+    * rows and `touched` selects those rows from a frame of table rows.
+    * Copy-on-write replaces every row of the touched files by `rewrite`
+    * (untouched rows verbatim, deleted rows dropped); merge-on-read maps
+    * a row-id probe of `dirs` by `revise` to the touched rows' ids and
+    * their surviving new versions. `inserts` are new rows. Unless the
+    * statement `keepsRowCount` (UPDATE), copy-on-write counts the rows it
+    * replaces by an Observation on the rewrite write when `rewrite` reads
+    * its frame once (`observable`), else by one count job.
     */
-  def mergeClauses(
-      sourceIn: DataFrame,
-      keys: Seq[(String, String)],
-      matchedClauses: Seq[Merge.WhenMatched],
-      notMatchedClauses: Seq[Merge.WhenNotMatched],
-      notMatchedBySourceClauses: Seq[Merge.WhenNotMatchedBySource] = Nil,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val source = materializeSource(sourceIn)
-    val spark = source.sparkSession
-    require(keys.nonEmpty, s"MERGE into $fullName needs at least one key pair")
-    keys.foreach { case (_, sk) =>
-      require(source.columns.contains(sk),
-        s"MERGE source lacks key column $sk (has: ${source.columns.mkString(", ")})")
-    }
-    // duplicated source keys — an error only if one of them MATCHES a
-    // target row (the SQL cardinality rule: no target row may be
-    // updated/deleted twice). Duplicate keys among not-matched rows are
-    // legal — they all insert. Checked per attempt against the current
-    // head; the common no-dups case costs one source-side job and never
-    // touches the table.
-    val srcKeyCols = keys.map { case (_, sk) => col(sk) }
-    val dupKeys = source.groupBy(srcKeyCols: _*).count()
-      .filter(col("count") > 1)
-      .select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*)
-    val hasDupKeys = dupKeys.limit(1).count() > 0L
+  private case class RowLevel(
+      dirs: Seq[String],
+      touched: Rows,
+      rewrite: DataFrame => DataFrame,
+      revise: DataFrame => (DataFrame, Option[DataFrame]),
+      inserts: Option[DataFrame] = None,
+      keepsRowCount: Boolean = false,
+      observable: Boolean = true)
 
-    withCommitRetries(numRetries) { _ =>
-      val cur = requireCurrent
-      val schemaCols = snapshotSchema(spark, cur)
-      keys.foreach { case (tk, _) =>
-        require(schemaCols.exists(_._1 == tk),
-          s"MERGE into $fullName keys on unknown column $tk")
-      }
-      // the target's distinct key tuples: one column-pruned scan,
-      // reused by the cardinality check and the insert anti-join
-      lazy val tableKeys = readSnapshot(spark, cur.id)
-        .select(keys.map { case (tk, _) => col(tk) }: _*).distinct()
-      if (hasDupKeys) {
-        val dupMatched = dupKeys
-          .join(tableKeys, keys.map(_._1), "left_semi").limit(1).count()
-        require(dupMatched == 0L,
-          s"MERGE into $fullName: multiple source rows share a key that matches a " +
-            "target row — the SQL cardinality rule forbids updating one target row " +
-            "twice (dedupe the source)")
-      }
-      // dirs holding matched target rows: key-pruned semi-join. BY SOURCE
-      // clauses invert the detection — a dir is affected when it holds
-      // target rows with NO source match that satisfy some clause's
-      // target-only condition (the anti-join of the same broadcast keys).
-      // A fully-matched dir therefore still rewrites byte-identical only
-      // if a matched clause also targets it; a delivery covering every
-      // key leaves untouched dirs untouched.
-      val srcKeys = source.select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*).distinct()
-      val matchedAffected =
-        if (matchedClauses.isEmpty) Nil // matched rows stay byte-identical
-        else affectedDirs(spark, cur, v =>
-          v.join(org.apache.spark.sql.functions.broadcast(srcKeys),
-            keys.map(_._1), "left_semi"))
-      val bySourceAffected =
-        if (notMatchedBySourceClauses.isEmpty) Nil
-        else affectedDirs(spark, cur, v => {
-          val anyCond = notMatchedBySourceClauses
-            .map(c => coalesce(c.cond.getOrElse(lit(true)), lit(false)))
-            .reduce(_ || _)
-          v.join(org.apache.spark.sql.functions.broadcast(srcKeys),
-              keys.map(_._1), "left_anti")
-            .alias("__t").filter(anyCond)
-        })
-      val affected = cur.dataDirs.filter(
-        (matchedAffected ++ bySourceAffected).toSet.contains)
-      // the combined per-row touch predicate (matched-shape ∪ by-source
-      // shape) drives the FILE-granular split: files of an affected dir
-      // holding no touched row carry byte-identical instead of rewriting
-      val mergeShape: DataFrame => DataFrame = v => {
-        val m =
-          if (matchedClauses.isEmpty) None
-          else Some(v.join(org.apache.spark.sql.functions.broadcast(srcKeys),
-            keys.map(_._1), "left_semi"))
-        val bs =
-          if (notMatchedBySourceClauses.isEmpty) None
-          else {
-            val anyCond = notMatchedBySourceClauses
-              .map(c => coalesce(c.cond.getOrElse(lit(true)), lit(false)))
-              .reduce(_ || _)
-            Some(v.join(org.apache.spark.sql.functions.broadcast(srcKeys),
-                keys.map(_._1), "left_anti")
-              .alias("__t").filter(anyCond))
-          }
-        (m.toSeq ++ bs.toSeq).reduce(_ unionByName _)
-      }
-      // affected-row count OBSERVED during the rewrite write (guide §1.2
-      // "don't compute things you throw away": the former standalone
-      // view.count() re-ran the affected-dir scan + broadcast probe as a
-      // full extra pass, O(affected dirs) at scale); rewriteDirs fetches
-      // it by-name strictly after the write job that populates it
-      val (view, carryDirs, affectedObs) =
-        if (affected.isEmpty) (None, Nil, None)
-        else {
-          val (v, cds) = splitForRewrite(spark, cur, affected, mergeShape)
-          val o = org.apache.spark.sql.Observation(
-            s"graft-affected-${java.util.UUID.randomUUID().toString.take(8)}")
-          (Some(v.observe(o, org.apache.spark.sql.functions
-            .count(lit(1)).as("__affected"))), cds, Some(o))
-        }
-      def affectedRows: Long = affectedObs.map(_.get.get("__affected") match {
-        case Some(l: Long) => l
-        case _ => -1L // metric lost: total degrades to "unknown", never wrong
-      }).getOrElse(0L)
-
-      val src = source.withColumn("__s_present", lit(true)).alias("__s")
-      val joinCond = keys.map { case (tk, sk) =>
-        col(s"__t.$tk") === col(s"__s.$sk")
-      }.reduce(_ && _)
-      val matchedCol = col("__s.__s_present").isNotNull
-
-      // first-true-wins clause predicates: pred_i = base && !c_0 && ...
-      // && !c_{i-1} && c_i, with a NULL condition treated as
-      // not-applied-but-keep-looking (coalesce to false)
-      def clausePreds[A](base: org.apache.spark.sql.Column, conds: Seq[Option[org.apache.spark.sql.Column]])
-        : Seq[org.apache.spark.sql.Column] = {
-        var remaining = base
-        conds.map { c =>
-          val cTrue = coalesce(c.getOrElse(lit(true)), lit(false))
-          val p = remaining && cTrue
-          remaining = remaining && !cTrue
-          p
-        }
-      }
-
-      val rewritten: Option[DataFrame] = view.map { v =>
-        val joined = v.alias("__t").join(src, joinCond, "left_outer")
-        // matched clauses chain off the match predicate; BY SOURCE
-        // clauses chain off its negation — two independent first-true-
-        // wins lists over disjoint row sets, exactly SQL's contract
-        val preds = clausePreds(matchedCol, matchedClauses.map(_.cond)) ++
-          clausePreds(!matchedCol, notMatchedBySourceClauses.map(_.cond))
-        val withPred = preds.zip(
-          matchedClauses.map(_.action) ++ notMatchedBySourceClauses.map(_.action))
-        withPred.foreach {
-          case (_, Merge.Update(sets)) =>
-            sets.keys.foreach(k => require(schemaCols.exists(_._1 == k),
-              s"MERGE into $fullName assigns unknown column $k"))
-          case _ => ()
-        }
-        val deletePred = withPred.collect { case (p, Merge.Delete) => p }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        joined.filter(!deletePred).select(schemaCols.map { case (n, t) =>
-          val keep = col(s"__t.$n")
-          val chain = withPred.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-            case (acc, (p, action)) =>
-              val value = action match {
-                case Merge.UpdateAll =>
-                  if (source.columns.contains(n)) Some(col(s"__s.$n").cast(t)) else None
-                case Merge.Update(sets) => sets.get(n).map(_.cast(t))
-                case _ => None // Delete rows are already filtered out
-              }
-              value.map(v0 => acc.map(_.when(p, v0)).getOrElse(when(p, v0))).orElse(acc)
-          }
-          chain.map(_.otherwise(keep).as(n)).getOrElse(keep.as(n))
-        }: _*)
-      }
-
-      val inserts: Option[DataFrame] =
-        if (notMatchedClauses.isEmpty) None
-        else {
-          // table-wide unmatched source rows: anti-join against the key
-          // columns only (column-pruned scan of the table)
-          val unmatched = source.alias("__s").join(
-            tableKeys.alias("__t"), joinCond, "left_anti")
-          val preds = clausePreds(lit(true), notMatchedClauses.map(_.cond))
-          val withPred = preds.zip(notMatchedClauses.map(_.action))
-          val applicable = unmatched.filter(withPred.map(_._1).reduce(_ || _))
-          Some(applicable.select(schemaCols.map { case (n, t) =>
-            val chain = withPred.map { case (p, action) =>
-              val value = action match {
-                case Merge.InsertAll =>
-                  val fromKey = keys.find(_._1 == n).map(_._2)
-                  val src0 = fromKey.orElse(Some(n).filter(source.columns.contains))
-                  src0.map(sn => col(s"__s.$sn").cast(t)).getOrElse(lit(null).cast(t))
-                case Merge.Insert(sets) =>
-                  sets.get(n).map(_.cast(t)).getOrElse(lit(null).cast(t))
-              }
-              (p, value)
-            }.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-              case (acc, (p, v0)) => Some(acc.map(_.when(p, v0)).getOrElse(when(p, v0)))
-            }
-            // every surviving row satisfies some pred; the otherwise is
-            // unreachable but keeps the column total
-            chain.get.otherwise(lit(null).cast(t)).as(n)
-          }: _*))
-        }
-
-      (rewritten, inserts) match {
-        case (None, None) => Left(cur)
-        // a merge that touches no dir and inserts no row is a NO-OP —
-        // committing would bloat history with an empty data dir (the
-        // probe is one limit-1 job over the unmatched keys)
-        case (None, Some(ins)) if ins.isEmpty => Left(cur)
-        case _ =>
-          val newData = (rewritten.toSeq ++ inserts.toSeq).reduce(_ unionByName _)
-          val total = if (cur.rowCount < 0) -1L else -2L // -2: resolve from written rows below
-          Right(rewriteDirs(spark, cur, affected, newData, "merge",
-            newTotal = total,
-            removedRows = if (cur.rowCount < 0) -1L else affectedRows,
-            carryDirs = carryDirs))
-      }
-    }
-  }
-
-  /** Merge-on-read MERGE (Iceberg's `write.merge.mode=merge-on-read`):
-    * the same ordered-clause semantics as [[mergeClauses]] — SQL
-    * cardinality rule, first-true-wins matched / not-matched /
-    * not-matched-by-source chains — but instead of rewriting the files
-    * holding touched rows, ONE atomic commit pairs a positional delete
-    * of exactly the touched row versions with an append of the
-    * rewritten + inserted rows. Untouched rows of touched files are
-    * never read twice or rewritten: O(touched + inserted) write cost,
-    * the trickle-merge-into-a-huge-table shape. Detection stays
-    * key-pruned (the same broadcast semi/anti dir probes as
-    * copy-on-write) and, as in [[updatePositions]], every attempt
-    * re-probes.
+  /** The one row-level commit path: every attempt of
+    * [[withCommitRetries]] compiles the statement against the current
+    * head (so a retry re-probes; positions denote rows of exactly that
+    * snapshot's files, and a rival's rewrite must be re-observed, never
+    * re-scoped) and runs the `mode`'s executor. Each commit logs its
+    * operation, mode and attempt count.
     */
-  def mergeClausesMor(
-      sourceIn: DataFrame,
-      keys: Seq[(String, String)],
-      matchedClauses: Seq[Merge.WhenMatched],
-      notMatchedClauses: Seq[Merge.WhenNotMatched],
-      notMatchedBySourceClauses: Seq[Merge.WhenNotMatchedBySource] = Nil,
-      numRetries: Int = SnapshotTable.DefaultCommitRetries,
-      summary: Map[String, String] = Map.empty): Snapshot = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    val source = materializeSource(sourceIn)
-    val spark = source.sparkSession
-    require(keys.nonEmpty, s"MERGE into $fullName needs at least one key pair")
-    keys.foreach { case (_, sk) =>
-      require(source.columns.contains(sk),
-        s"MERGE source lacks key column $sk (has: ${source.columns.mkString(", ")})")
-    }
-    val srcKeyCols = keys.map { case (_, sk) => col(sk) }
-    val dupKeys = source.groupBy(srcKeyCols: _*).count()
-      .filter(col("count") > 1)
-      .select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*)
-    val hasDupKeys = dupKeys.limit(1).count() > 0L
-
+  private def rowLevel(
+      spark: SparkSession, op: String, mode: WriteMode, numRetries: Int,
+      summary: Map[String, String] = Map.empty)(compile: Snapshot => RowLevel): Snapshot =
     withCommitRetries(numRetries) { attempt =>
       val cur = requireCurrent
-      require(cur.format == "parquet",
-        s"merge-on-read MERGE needs parquet row identity (_metadata.row_index); " +
-          s"$fullName is ${cur.format} — use mergeClauses")
-      val schemaCols = snapshotSchema(spark, cur)
-      keys.foreach { case (tk, _) =>
-        require(schemaCols.exists(_._1 == tk),
-          s"MERGE into $fullName keys on unknown column $tk")
-      }
-      lazy val tableKeys = readSnapshot(spark, cur.id)
-        .select(keys.map { case (tk, _) => col(tk) }: _*).distinct()
-      if (hasDupKeys) {
-        val dupMatched = dupKeys
-          .join(tableKeys, keys.map(_._1), "left_semi").limit(1).count()
-        require(dupMatched == 0L,
-          s"MERGE into $fullName: multiple source rows share a key that matches a " +
-            "target row — the SQL cardinality rule forbids updating one target row " +
-            "twice (dedupe the source)")
-      }
-      val srcKeys = source.select(keys.map { case (tk, sk) => col(sk).as(tk) }: _*).distinct()
-      val matchedAffected =
-        if (matchedClauses.isEmpty) Nil
-        else affectedDirs(spark, cur, v =>
-          v.join(org.apache.spark.sql.functions.broadcast(srcKeys),
-            keys.map(_._1), "left_semi"))
-      val bySourceAffected =
-        if (notMatchedBySourceClauses.isEmpty) Nil
-        else affectedDirs(spark, cur, v => {
-          val anyCond = notMatchedBySourceClauses
-            .map(c => coalesce(c.cond.getOrElse(lit(true)), lit(false)))
-            .reduce(_ || _)
-          v.join(org.apache.spark.sql.functions.broadcast(srcKeys),
-              keys.map(_._1), "left_anti")
-            .alias("__t").filter(anyCond)
-        })
-      val affected = cur.dataDirs.filter(
-        (matchedAffected ++ bySourceAffected).toSet.contains)
+      require(mode == WriteMode.CopyOnWrite || cur.format == "parquet",
+        s"${mode.name} ${op.toUpperCase} needs parquet row identity (_metadata.row_index); " +
+          s"$fullName is ${cur.format} — use WriteMode.CopyOnWrite")
+      val p = compile(cur)
+      val audit = Map("operation" -> op, "mode" -> mode.name, "attempts" -> (attempt + 1).toString)
+      // a statement that touches no dir and inserts no row is a NO-OP —
+      // committing would bloat history (the probe is one limit-1 job)
+      lazy val noInserts = p.inserts.forall(_.isEmpty)
+      if (p.dirs.isEmpty && noInserts) Left(cur)
+      else if (mode == WriteMode.CopyOnWrite) Right(copyOnWrite(spark, cur, op, p, audit))
+      else mergeOnRead(spark, cur, op, p, audit, summary, noInserts)
+    }
 
-      val src = source.withColumn("__s_present", lit(true)).alias("__s")
-      val joinCond = keys.map { case (tk, sk) =>
-        col(s"__t.$tk") === col(s"__s.$sk")
-      }.reduce(_ && _)
-      val matchedCol = col("__s.__s_present").isNotNull
-      def clausePreds(base: org.apache.spark.sql.Column, conds: Seq[Option[org.apache.spark.sql.Column]])
-        : Seq[org.apache.spark.sql.Column] = {
-        var remaining = base
-        conds.map { c =>
-          val cTrue = coalesce(c.getOrElse(lit(true)), lit(false))
-          val p = remaining && cTrue
-          remaining = remaining && !cTrue
-          p
-        }
-      }
-
-      // touched rows only: the probe carries row identity; a row where
-      // some clause fires contributes its position to the delete file
-      // and (unless the winning action is DELETE) its rewritten version
-      // to the append — rows of the same file no clause touches are
-      // never rewritten
-      val touched: Option[(DataFrame, DataFrame)] =
-        if (affected.isEmpty) None
-        else {
-          val v = affected.map(d => readDirWithRowId(spark, cur, d)
-              .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
-            .reduce(_ unionByName _)
-          val joined = v.alias("__t").join(src, joinCond, "left_outer")
-          val preds = clausePreds(matchedCol, matchedClauses.map(_.cond)) ++
-            clausePreds(!matchedCol, notMatchedBySourceClauses.map(_.cond))
-          val withPred = preds.zip(
-            matchedClauses.map(_.action) ++ notMatchedBySourceClauses.map(_.action))
-          withPred.foreach {
-            case (_, Merge.Update(sets)) =>
-              sets.keys.foreach(k => require(schemaCols.exists(_._1 == k),
-                s"MERGE into $fullName assigns unknown column $k"))
-            case _ => ()
-          }
-          val hit = joined.filter(withPred.map(_._1).reduce(_ || _))
-          val positions = hit.select(
-            col(s"__t.${SnapshotTable.RowIdFileCol}").as(SnapshotTable.RowIdFileCol),
-            col(s"__t.${SnapshotTable.RowIdPosCol}").as(SnapshotTable.RowIdPosCol),
-            col(s"__t.${SnapshotTable.RowIdDirCol}").as(SnapshotTable.RowIdDirCol))
-          val deletePred = withPred.collect { case (p, Merge.Delete) => p }
-            .reduceOption(_ || _).getOrElse(lit(false))
-          val rewritten = hit.filter(!deletePred).select(schemaCols.map { case (n, t) =>
-            val keep = col(s"__t.$n")
-            val chain = withPred.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-              case (acc, (p, action)) =>
-                val value = action match {
-                  case Merge.UpdateAll =>
-                    if (source.columns.contains(n)) Some(col(s"__s.$n").cast(t)) else None
-                  case Merge.Update(sets) => sets.get(n).map(_.cast(t))
-                  case _ => None // Delete rows are already filtered out
-                }
-                value.map(v0 => acc.map(_.when(p, v0)).getOrElse(when(p, v0))).orElse(acc)
-            }
-            chain.map(_.otherwise(keep).as(n)).getOrElse(keep.as(n))
-          }: _*)
-          Some((positions, rewritten))
-        }
-
-      val inserts: Option[DataFrame] =
-        if (notMatchedClauses.isEmpty) None
-        else {
-          val unmatched = source.alias("__s").join(
-            tableKeys.alias("__t"), joinCond, "left_anti")
-          val preds = clausePreds(lit(true), notMatchedClauses.map(_.cond))
-          val withPred = preds.zip(notMatchedClauses.map(_.action))
-          val applicable = unmatched.filter(withPred.map(_._1).reduce(_ || _))
-          Some(applicable.select(schemaCols.map { case (n, t) =>
-            val chain = withPred.map { case (p, action) =>
-              val value = action match {
-                case Merge.InsertAll =>
-                  val fromKey = keys.find(_._1 == n).map(_._2)
-                  val src0 = fromKey.orElse(Some(n).filter(source.columns.contains))
-                  src0.map(sn => col(s"__s.$sn").cast(t)).getOrElse(lit(null).cast(t))
-                case Merge.Insert(sets) =>
-                  sets.get(n).map(_.cast(t)).getOrElse(lit(null).cast(t))
-              }
-              (p, value)
-            }.foldLeft(Option.empty[org.apache.spark.sql.Column]) {
-              case (acc, (p, v0)) => Some(acc.map(_.when(p, v0)).getOrElse(when(p, v0)))
-            }
-            chain.get.otherwise(lit(null).cast(t)).as(n)
-          }: _*))
-        }
-
-      // write the (tiny) positions file first; the count and the dir
-      // scope come from IT, so the probe join runs twice total
-      // (positions write, rewritten-rows write) — never a third pass
-      // over the table just to count
-      val delInfo: Option[(String, Long, Seq[String])] = touched.flatMap {
-        case (positions, _) =>
-          val dd = Paths.get(root,
-            s"snap-posdel-${java.util.UUID.randomUUID().toString.take(8)}").toString
-          positions.write.mode("overwrite").format(cur.format).save(dd)
-          // one job over the (tiny) positions file yields BOTH the
-          // removed count and the hit-dir set (formerly a count job
-          // plus a distinct+collect job)
-          val hits = spark.read.format(cur.format).load(dd)
-            .groupBy(col(SnapshotTable.RowIdDirCol)).count().collect()
-          val removed = hits.map(_.getLong(1)).sum
-          if (removed == 0L) {
-            deleteRecursively(new File(dd)); None
-          } else {
-            val hit = hits.map(_.getString(0)).toSet
-            Some((dd, removed, cur.dataDirs.filter(hit.contains)))
-          }
-      }
-      // a merge that touches no row and inserts none is a NO-OP — a dir
-      // can pass the key-level detection while every clause condition
-      // fails on its rows, and committing would bloat history
-      if (delInfo.isEmpty && inserts.forall(_.isEmpty)) Left(cur)
+  /** Copy-on-write: split the touched dirs file by file, write the
+    * touched files' rows (rewritten) plus the inserts as one new dir, and
+    * swap them for the touched files.
+    */
+  private def copyOnWrite(
+      spark: SparkSession, cur: Snapshot, op: String, p: RowLevel,
+      audit: Map[String, String]): Swap = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val (view, carryDirs) =
+      if (p.dirs.isEmpty) (None, Nil)
       else {
-        val newData = (touched.map(_._2).toSeq ++ inserts.toSeq)
-          .reduce(_ unionByName _)
-        // keep the table's partition layout on the appended dir (when the
-        // partition columns are part of the schema) so pruning governs
-        // the rewritten + inserted rows too
-        val pcols = partitionColumns.filter(pc => schemaCols.exists(_._1 == pc))
-        val w = writeDataDir(newData, pcols, WriteSortOrder.sortCols(this), cur.format)
-        Right(commitSwap(w, Some(cur.id), "merge", carryPrevious = true, cur.format,
-          Map("operation" -> "merge", "attempts" -> (attempt + 1).toString),
-          dirs = delInfo.map(_._1).toSeq :+ w.dir, summary = summary, posDelete = delInfo))
+        val (v, cds) = splitForRewrite(spark, cur, p.dirs, p.touched(_))
+        (Some(v), cds)
       }
+    // the replaced-row count rides the rewrite write, never a separate
+    // pass over the touched dirs; a lost metric reads -1
+    val obs = Option.when(!p.keepsRowCount && p.observable && cur.rowCount >= 0)(
+      org.apache.spark.sql.Observation(s"graft-affected-${java.util.UUID.randomUUID().toString.take(8)}"))
+    val rewritten = view.map(v => p.rewrite(obs.fold(v)(v.observe(_, count(lit(1)).as("__affected")))))
+    def replaced: Long = view.fold(0L)(v => obs.fold(v.count())(_.get.get("__affected") match {
+      case Some(l: Long) => l
+      case _ => -1L
+    }))
+    rewriteDirs(cur, p.dirs, (rewritten.toSeq ++ p.inserts).reduce(_ unionByName _), op, audit,
+      carryDirs) { written =>
+      if (p.keepsRowCount) cur.rowCount
+      else if (cur.rowCount < 0) -1L
+      else { val r = replaced; if (r < 0) -1L else cur.rowCount - r + written }
     }
   }
+
+  /** Merge-on-read: probe `p.dirs` with row identity, write the touched
+    * rows' positions as one delete file, and append their surviving new
+    * versions plus the inserts in the same commit.
+    */
+  private def mergeOnRead(
+      spark: SparkSession, cur: Snapshot, op: String, p: RowLevel,
+      audit: Map[String, String], summary: Map[String, String],
+      noInserts: => Boolean): Either[Snapshot, Swap] = {
+    import org.apache.spark.sql.functions.lit
+    val touched = Option.when(p.dirs.nonEmpty)(p.revise(p.dirs
+      .map(d => readDirWithRowId(spark, cur, d).withColumn(SnapshotTable.RowIdDirCol, lit(d)))
+      .reduce(_ unionByName _)))
+    val del = touched.flatMap { case (ids, _) => writePositions(spark, cur, ids) }
+    if (del.isEmpty && noInserts) Left(cur)
+    else (touched.flatMap(_._2).toSeq ++ p.inserts).reduceOption(_ unionByName _) match {
+      case None =>
+        val (delDir, removed, applies) = del.get
+        Right(Swap(Some(cur.id), audit, dirs = Seq(delDir)) { (_, _, id) =>
+          cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
+            operation = op, rowCount = if (cur.rowCount < 0) -1L else cur.rowCount - removed,
+            staged = false, summary = SnapshotTable.carriedSummary(cur.summary),
+            deletes = cur.deletes :+ positionalDelete(delDir, applies, cur.format),
+            parentId = Some(cur.id))
+        })
+      case Some(rows) =>
+        // the appended dir keeps the table's partition layout, so pruning
+        // governs the revised and inserted rows too
+        val w = writeDataDir(rows, partitionColumns.filter(rows.columns.contains),
+          WriteSortOrder.sortCols(this), cur.format)
+        Right(commitSwap(w, Some(cur.id), op, carryPrevious = true, cur.format, audit,
+          dirs = del.map(_._1).toSeq :+ w.dir, summary = summary, posDelete = del))
+    }
+  }
+
+  /** Write touched rows' (file, position, dir) ids as one positional
+    * delete file. One job over that small file yields both the removed
+    * count and the dirs it scopes to, so the table-sized probe never runs
+    * again just to count. None, with the file removed, if nothing matched.
+    */
+  private def writePositions(
+      spark: SparkSession, cur: Snapshot, ids: DataFrame): Option[(String, Long, Seq[String])] = {
+    val dir = freshDir("snap-posdel-")
+    ids.write.mode("overwrite").format(cur.format).save(dir)
+    val hits = spark.read.format(cur.format).load(dir)
+      .groupBy(SnapshotTable.RowIdDirCol).count().collect()
+    val removed = hits.map(_.getLong(1)).sum
+    if (removed == 0L) { deleteRecursively(new File(dir)); None }
+    else Some((dir, removed, cur.dataDirs.filter(hits.map(_.getString(0)).toSet.contains)))
+  }
+
+  /** The positional delete entry for delete file `dir`, scoped to `applies`. */
+  private def positionalDelete(dir: String, applies: Seq[String], format: String) =
+    EqualityDelete(dir, Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
+      applies, Some(format), positional = true)
+
+  /** The row ids of a frame derived from a row-id probe; `q` qualifies
+    * them inside a join.
+    */
+  private def rowIds(df: DataFrame, q: String = ""): DataFrame =
+    df.select(Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol, SnapshotTable.RowIdDirCol)
+      .map(c => org.apache.spark.sql.functions.col(q + c).as(c)): _*)
+
+  /** The dirs a DELETE/UPDATE considers: every dir for the merge-on-read
+    * probe (one scan finds the rows), the detected ones for copy-on-write.
+    */
+  private def probeDirs(spark: SparkSession, cur: Snapshot, mode: WriteMode, rows: Rows): Seq[String] =
+    if (mode == WriteMode.MergeOnRead) cur.dataDirs else affectedDirs(spark, cur, rows(_))
+
+  /** First-true-wins clause predicates: pred_i = base && !c_0 && ... &&
+    * !c_{i-1} && c_i, with a NULL condition treated as
+    * not-applied-but-keep-looking (coalesce to false).
+    */
+  private def clausePreds(base: Column, conds: Seq[Option[Column]]): Seq[Column] = {
+    import org.apache.spark.sql.functions.{coalesce, lit}
+    var remaining = base
+    conds.map { c =>
+      val cTrue = coalesce(c.getOrElse(lit(true)), lit(false))
+      val p = remaining && cTrue
+      remaining = remaining && !cTrue
+      p
+    }
+  }
+
+  /** `CASE WHEN p_0 THEN v_0 WHEN p_1 THEN v_1 ...` over `cases`; None
+    * when there are none.
+    */
+  private def firstTrue(cases: Seq[(Column, Column)]): Option[Column] =
+    cases.foldLeft(Option.empty[Column]) { case (acc, (p, v)) =>
+      Some(acc.fold(org.apache.spark.sql.functions.when(p, v))(_.when(p, v)))
+    }
 
   /** The table schema as (name, Spark DataType) at `snap` — from the
     * tracked snapshot schema, or one footer read for legacy tables.
@@ -1416,92 +1007,37 @@ final class SnapshotTable(val root: String, val fullName: String) {
   }
 
   /** One copy-on-write commit attempt: write `replacement` as a new dir
-    * and return the [[Swap]] to a snapshot that drops `removedDirs` (and
-    * their masks / delete scopes — the rewrite baked them in) and
-    * appends the new dir. `newTotal` -2 means "recompute as rowCount -
-    * removedRows + written rows".
+    * through [[writeDataDir]] (the table's partition layout, bloom
+    * filters and write distribution hold) and return the [[Swap]] to a
+    * snapshot that drops `removedDirs` (and their masks / delete scopes —
+    * the rewrite baked them in) and adds `carryDirs` (hard-linked sibling
+    * files of split dirs) and the new dir, unless it holds no row.
+    * `total` maps the written row count to the new snapshot's.
     */
   private def rewriteDirs(
-      spark: SparkSession,
       base: Snapshot,
       removedDirs: Seq[String],
       replacement: DataFrame,
       op: String,
-      newTotal: Long,
-      // BY-NAME: evaluated once, AFTER the rewrite write, and only when
-      // the new total actually needs it — callers can hand an
-      // Observation-backed count collected during the write itself
-      // instead of paying a separate pre-write pass over affected dirs
-      removedRows: => Long = 0L,
-      // file-granular COW: already-realized carry dirs (hard-linked
-      // sibling files of split dirs) that join the snapshot alongside
-      // the rewrite; cleaned up with the data dir on a lost swap
-      carryDirs: Seq[String] = Nil): Swap = {
-    val pCols = partitionColumns
-    val dataDir = Paths.get(root,
-      s"snap-${java.util.UUID.randomUUID().toString.take(8)}").toString
-    val clustered0 =
-      if (pCols.nonEmpty)
-        replacement.repartition(pCols.map(org.apache.spark.sql.functions.col): _*)
-      else replacement
-    // a declared write.sort.order holds through DML rewrites too: the
-    // dirs an UPDATE/MERGE/delete-paydown touches must come back
-    // internally sorted, or row-level mutation would quietly erode the
-    // sorted-file contract (tight range stats, cheap merge consumers)
-    val declaredSorts = WriteSortOrder.sortCols(this)
-    val clustered =
-      if (declaredSorts.nonEmpty) clustered0.sortWithinPartitions(declaredSorts: _*)
-      else clustered0
-    // same single-pass stats collection as [[commit]]: row count +
-    // column ranges observed during the write, partition rows + bounds
-    // from one column-pruned job
-    val fields = clustered.schema.fields.toSeq
-    val obs = org.apache.spark.sql.Observation(
-      s"graft-stats-${java.util.UUID.randomUUID().toString.take(8)}")
-    val statAggs = org.apache.spark.sql.functions
-      .count(org.apache.spark.sql.functions.lit(1)).as("__rows") +:
-      graft.plans.RangeStats.rangeAggs(fields)
-    clustered.observe(obs, statAggs.head, statAggs.tail: _*)
-      .write.mode("overwrite").format(base.format).save(dataDir)
-    val metrics: Map[String, Any] =
-      try obs.get catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val newRows = metrics.get("__rows") match {
-      case Some(l: Long) => l
-      case _ => spark.read.format(base.format).load(dataDir).count()
-    }
-    val (rowsByPart, partBounds) = partitionJobStats(spark, dataDir, pCols, base.format)
-    writePartitionSidecar(dataDir, pCols, rowsByPart, newRows, base.format)
-    if (base.cols.nonEmpty)
-      writeColumnsSidecar(dataDir, base.cols.map(c =>
-        TableColumn(c.id, c.name, c.dataType)))
-    try
-      if (metrics.nonEmpty)
-        graft.plans.RangeStats.writeEntries(dataDir, newRows,
-          graft.plans.RangeStats.entriesFromMetrics(fields, metrics, partBounds))
-      else graft.plans.RangeStats.writeSidecar(spark, dataDir, base.format, newRows)
-    catch { case scala.util.control.NonFatal(_) => () }
-    val total =
-      if (newTotal == -2L) {
-        if (base.rowCount < 0) -1L
-        else {
-          val rr = removedRows // by-name: force exactly once, post-write
-          if (rr < 0) -1L else base.rowCount - rr + newRows
-        }
-      } else newTotal
-    Swap(Some(base.id), Map("operation" -> op, "rewritten_dirs" -> removedDirs.size.toString),
-      dirs = carryDirs :+ dataDir) { (_, _, id) =>
+      audit: Map[String, String],
+      carryDirs: Seq[String] = Nil)(total: Long => Long): Swap = {
+    val w = writeDataDir(replacement, partitionColumns.filter(replacement.columns.contains),
+      WriteSortOrder.sortCols(this), base.format)
+    if (!w.empty && base.cols.nonEmpty) writeColumnsSidecar(w.dir, base.cols)
+    val newTotal = total(w.rows)
+    Swap(Some(base.id), audit + ("rewritten_dirs" -> removedDirs.size.toString),
+      dirs = carryDirs :+ w.dir) { (_, _, id) =>
       val removed = removedDirs.toSet
-      val keptDeletes = base.deletes
-        .map(d => d.copy(applies = d.applies.filterNot(removed)))
-        .filter(_.applies.nonEmpty)
       base.copy(
         id = id, committedAtMs = SnapshotTable.clockMs(), operation = op,
-        dataDirs = base.dataDirs.filterNot(removed) ++ carryDirs :+ dataDir,
-        rowCount = total,
+        dataDirs = base.dataDirs.filterNot(removed) ++ carryDirs ++ Seq(w.dir).filterNot(_ => w.empty),
+        rowCount = newTotal,
         maskedDirs = base.maskedDirs -- removed,
         staged = false,
         summary = SnapshotTable.carriedSummary(base.summary),
-        deletes = keptDeletes,
+        deletes = base.deletes
+          .map(d => d.copy(applies = d.applies.filterNot(removed)))
+          .filter(_.applies.nonEmpty),
         parentId = Some(base.id))
     }
   }
@@ -1785,7 +1321,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         // later head, so it survives compaction + expiry
         s"${SnapshotTable.SummaryBatchPrefix}$queryId" -> batchId.toString)))
 
-  /** [[mergeClausesMor]] hardened against foreachBatch's at-least-once
+  /** A merge-on-read [[merge]] hardened against foreachBatch's at-least-once
     * delivery — the streaming CDC upsert commit. The (queryId, batchId)
     * watermark stamps into the merge's own snapshot summary atomically
     * with the rows, so a batch re-delivered after a crash between
@@ -1803,8 +1339,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
       notMatchedBySourceClauses: Seq[Merge.WhenNotMatchedBySource] = Nil,
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Option[Snapshot] =
     if (lastCommittedBatch(queryId).exists(_ >= batchId)) None
-    else Some(mergeClausesMor(source, keys, matchedClauses, notMatchedClauses,
-      notMatchedBySourceClauses, numRetries, summary = Map(
+    else Some(merge(source, keys, matchedClauses, notMatchedClauses,
+      notMatchedBySourceClauses, WriteMode.MergeOnRead, numRetries, summary = Map(
         SnapshotTable.SummaryQueryId -> queryId,
         SnapshotTable.SummaryBatchId -> batchId.toString,
         s"${SnapshotTable.SummaryBatchPrefix}$queryId" -> batchId.toString)))
@@ -2350,9 +1886,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * tiny row groups defeat the vectorized reader). Compaction rewrites
     * the CURRENT snapshot's rows into ~`targetFileBytes` output files and
     * commits the result as a new `replace` snapshot: same rows, fresh
-    * physical layout. It goes through the same optimistic CAS as any
-    * commit, so a concurrent append conflicts rather than being silently
-    * dropped; history is preserved (pre-compaction snapshots stay
+    * physical layout. Each commit attempt reads and rewrites the head it
+    * swaps against, so a concurrent append is recompacted on retry rather
+    * than silently dropped; history is preserved (pre-compaction snapshots stay
     * time-travelable until expiry, and expiry then reclaims the
     * small-file dirs).
     *
@@ -2370,49 +1906,54 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries: Int = SnapshotTable.DefaultCommitRetries,
       clusterBy: Seq[org.apache.spark.sql.Column] = Nil): Snapshot = {
     require(targetFileBytes > 0, s"targetFileBytes must be positive, got $targetFileBytes")
-    val snap = requireCurrent
-    // derive the partition layout from the table itself when the caller
-    // does not re-declare it: compacting a partitioned table must not
-    // silently rewrite it as one unpartitioned dir (rows would survive
-    // but partition pruning — the layout's whole point — would be lost).
-    // A table with a DECLARED transform spec compacts under the CURRENT
-    // spec, re-deriving every directory column from its source — this
-    // is what migrates old partition epochs into the evolved layout
-    // (Iceberg's rewrite_data_files after updateSpec does the same);
-    // physical layouts without a declaration keep their established
-    // columns.
-    val declared = DeclaredPartitionSpec.read(root)
-    val pCols =
-      if (partitionCols.nonEmpty) partitionCols
-      else if (declared.nonEmpty) declared.map(DeclaredPartitionSpec.derivedName)
-      else partitionColumns
-    val nOut = math.max(1L, (dataBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val df0 = read(spark)
-    val df =
-      if (partitionCols.isEmpty && declared.nonEmpty)
-        declared.map(TableSink.transformColumn).foldLeft(df0) {
-          case (d, (nm, c)) => d.withColumn(nm, c)
-        }
-      else df0
-    // clustered rewrite (Iceberg sort/zorder strategy): range-partition on
-    // the cluster key so each output file covers a contiguous key range —
-    // with a z-value key (functions.ZOrder) that is a compact region in
-    // EVERY clustered dimension, the layout that makes file/row-group
-    // stat skipping work for predicates on any of them. One range
-    // exchange, the price of re-clustering; plain bin-packing stays
-    // shuffle-free via coalesce.
-    val packed =
-      if (clusterBy.nonEmpty) df.repartitionByRange(nOut, clusterBy: _*)
-      else if (pCols.nonEmpty) df
-      else df.coalesce(nOut)
-    // a declared write.sort.order governs ANY rewrite of the table's
-    // files: compaction must not undo the sorted-file contract (tight
-    // range stats, cheap merge consumers) the property promises. An
-    // explicit clusterBy wins — the caller asked for that layout.
-    val sorts =
-      if (clusterBy.nonEmpty) clusterBy else WriteSortOrder.sortCols(this)
-    commit(packed, "replace", carryPrevious = false, pCols,
-      sorts, snap.format, numRetries)
+    // read and rewrite once per attempt: a retry recompacts the rival's
+    // head, so a concurrent append's rows are never dropped
+    withCommitRetries(numRetries) { attempt =>
+      val snap = requireCurrent
+      // derive the partition layout from the table itself when the caller
+      // does not re-declare it: compacting a partitioned table must not
+      // silently rewrite it as one unpartitioned dir (rows would survive
+      // but partition pruning — the layout's whole point — would be lost).
+      // A table with a DECLARED transform spec compacts under the CURRENT
+      // spec, re-deriving every directory column from its source — this
+      // is what migrates old partition epochs into the evolved layout
+      // (Iceberg's rewrite_data_files after updateSpec does the same);
+      // physical layouts without a declaration keep their established
+      // columns.
+      val declared = DeclaredPartitionSpec.read(root)
+      val pCols =
+        if (partitionCols.nonEmpty) partitionCols
+        else if (declared.nonEmpty) declared.map(DeclaredPartitionSpec.derivedName)
+        else partitionColumns
+      val nOut = math.max(1L, (dataBytes + targetFileBytes - 1) / targetFileBytes).toInt
+      val df0 = readSnapshot(spark, snap.id)
+      val df =
+        if (partitionCols.isEmpty && declared.nonEmpty)
+          declared.map(TableSink.transformColumn).foldLeft(df0) {
+            case (d, (nm, c)) => d.withColumn(nm, c)
+          }
+        else df0
+      // clustered rewrite (Iceberg sort/zorder strategy): range-partition on
+      // the cluster key so each output file covers a contiguous key range —
+      // with a z-value key (functions.ZOrder) that is a compact region in
+      // EVERY clustered dimension, the layout that makes file/row-group
+      // stat skipping work for predicates on any of them. One range
+      // exchange, the price of re-clustering; plain bin-packing stays
+      // shuffle-free via coalesce.
+      val packed =
+        if (clusterBy.nonEmpty) df.repartitionByRange(nOut, clusterBy: _*)
+        else if (pCols.nonEmpty) df
+        else df.coalesce(nOut)
+      // a declared write.sort.order governs ANY rewrite of the table's
+      // files: compaction must not undo the sorted-file contract (tight
+      // range stats, cheap merge consumers) the property promises. An
+      // explicit clusterBy wins — the caller asked for that layout.
+      val sorts =
+        if (clusterBy.nonEmpty) clusterBy else WriteSortOrder.sortCols(this)
+      val w = writeDataDir(packed, pCols, sorts, snap.format)
+      Right(commitSwap(w, Some(snap.id), "replace", carryPrevious = false, snap.format,
+        Map("operation" -> "replace", "attempts" -> (attempt + 1).toString), dirs = Seq(w.dir)))
+    }
   }
 
   /** Pay down merge-on-read debt WITHOUT a full compaction — the
@@ -2428,14 +1969,16 @@ final class SnapshotTable(val root: String, val fullName: String) {
   def rewriteDeletes(
       spark: SparkSession,
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
-    withCommitRetries(numRetries) { _ =>
+    withCommitRetries(numRetries) { attempt =>
       val cur = requireCurrent
       val affected = cur.deletes.flatMap(_.applies).distinct
         .filter(cur.dataDirs.contains)
       if (affected.isEmpty) Left(cur) // no-op: nothing to pay down
       // the logical view of exactly those dirs (deletes + masks applied)
-      else Right(rewriteDirs(spark, cur, affected, readDirsView(spark, cur, affected),
-        "rewrite_deletes", newTotal = cur.rowCount))
+      else Right(rewriteDirs(cur, affected, readDirsView(spark, cur, affected),
+        "rewrite_deletes", Map("operation" -> "rewrite_deletes",
+          "mode" -> WriteMode.CopyOnWrite.name, "attempts" -> (attempt + 1).toString))(
+        _ => cur.rowCount))
     }
 
   /** Partition columns of the current snapshot's physical layout,
@@ -2848,6 +2391,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
       removed
     }
 
+  /** A fresh unique dir path under the table root: the final snapshot id
+    * is unknown until the swap wins, and two optimistic writers must never
+    * share a path.
+    */
+  private def freshDir(prefix: String): String =
+    Paths.get(root, s"$prefix${java.util.UUID.randomUUID().toString.take(8)}").toString
+
   private def requireCurrent: Snapshot = currentSnapshot.getOrElse(
     throw new RuntimeException(
       s"Table $fullName is not registered in the warehouse. " +
@@ -3030,10 +2580,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     require(SnapshotTable.SupportedFormats.contains(format),
       s"Unknown write_format '$format' for $fullName " +
         s"(supported: ${SnapshotTable.SupportedFormats.mkString(", ")})")
-    // unique dir per write: the final snapshot id is unknown until the
-    // swap wins, and two optimistic writers must never share a path
-    val dataDir = Paths.get(root,
-      s"snap-${java.util.UUID.randomUUID().toString.take(8)}").toString
+    val dataDir = freshDir("snap-")
     // cluster rows per the declared write.distribution-mode before a
     // partitioned write (default hash-by-partition-key: without it every
     // task writes a file into every partition directory — tasks x
@@ -3288,11 +2835,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         // fastForward flips them — the same mechanism as a WAP stage
         staged = stageOnly || branch.isDefined,
         deletes = carriedDeletes0 ++ posDelete.map { case (delDir, _, scope) =>
-          EqualityDelete(delDir,
-            Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
-            applies = scope.filter(
-              head.map(_.dataDirs).getOrElse(Nil).contains), Some(format),
-            positional = true)
+          positionalDelete(delDir, scope.filter(head.map(_.dataDirs).getOrElse(Nil).contains), format)
         },
         parentId = Some(head.map(_.id).getOrElse(0L)),
         cols = cols,

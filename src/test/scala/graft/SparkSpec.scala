@@ -6,6 +6,32 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM, one session). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs started while `f` runs, counted by a SCOPED listener
+    * (monotonic, so immune to the shared session's status-store
+    * eviction — the tracker's getJobIdsForGroup count can go DOWN when
+    * the suite run's cumulative job total crosses the retention limit).
+    * Listener delivery is async, so the count is polled until it
+    * stabilizes.
+    */
+  def jobsDuring(f: => Any): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      f
+      var prev = -1
+      val deadline = System.currentTimeMillis() + 10000
+      while (System.currentTimeMillis() < deadline && n.get() != prev) {
+        prev = n.get(); Thread.sleep(250)
+      }
+    } finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
 }
 
 object SparkSpec {

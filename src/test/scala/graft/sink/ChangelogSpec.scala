@@ -50,7 +50,7 @@ class ChangelogSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite(Seq((1L, "x"), (2L, "x")).toDF("id", "v"))
     t.append(Seq((3L, "x")).toDF("id", "v"))
-    t.updateWhere(spark, col("id") === 1L, Map("v" -> lit("y")))
+    t.update(spark, Rows.Where(col("id") === 1L), Map("v" -> lit("y")))
     val got = t.readChangelog(spark, 2, 3)
       .select("id", "v", "_change_type").as[(Long, String, String)].collect().sorted.toSeq
     // only the FIRST dir rewrote: its rows delete + re-insert (id=1
@@ -86,7 +86,7 @@ class ChangelogSpec extends SparkSpec {
     t.overwrite(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")) // snap 1
     // MOR update: erase exactly id=2's old version + append the new one
     // in ONE commit — the pairing's home case
-    t.updatePositions(spark, col("id") === 2L, Map("v" -> lit("B"))) // snap 2
+    t.update(spark, Rows.Where(col("id") === 2L), Map("v" -> lit("B")), WriteMode.MergeOnRead) // snap 2
     t.append(Seq((4L, "d")).toDF("id", "v")) // snap 3 — pure insert
     t.deleteWhere(Seq(1L).toDF("id"), Seq("id")) // snap 4 — pure delete
     val got = t.readChangelogUpdates(spark, 1L, 4L, keyCols = Seq("id"))
@@ -116,7 +116,7 @@ class ChangelogSpec extends SparkSpec {
     // two rows share key 7 — a COW rewrite of their file would emit two
     // deletes + two inserts for the same (commit, key): unpairable
     t.overwrite(Seq((7L, "x"), (7L, "y"), (8L, "z")).toDF("id", "v"))
-    t.updateWhere(spark, col("id") === 8L, Map("v" -> lit("Z"))) // COW: rewrites the file
+    t.update(spark, Rows.Where(col("id") === 8L), Map("v" -> lit("Z"))) // COW: rewrites the file
     // the check rides IN-PLAN (assert_true on the same window pass that
     // pairs — one execution of the slice, not a separate validation
     // scan), so it surfaces at the consuming ACTION, task-wrapped

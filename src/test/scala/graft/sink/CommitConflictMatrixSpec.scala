@@ -47,39 +47,39 @@ class CommitConflictMatrixSpec extends SparkSpec {
       (t, n) => t.deleteWhere(Seq(1L).toDF("id"), Seq("id"), numRetries = n),
       _ - 1L),
     Case("deletePositionsMatching", "delete",
-      (t, n) => t.deletePositionsMatching(spark, _.filter(col("id") === 2L), n),
+      (t, n) => t.delete(spark, Rows.Matching(_.filter(col("id") === 2L)), WriteMode.MergeOnRead, numRetries = n),
       _ - 2L),
     Case("consolidatePositionalDeletes", "replace",
       (t, n) => t.consolidatePositionalDeletes(spark, n),
       identity,
       setup = t => {
-        t.deletePositions(spark, col("id") === 3L): Unit
-        t.deletePositions(spark, col("id") === 4L): Unit
+        t.delete(spark, Rows.Where(col("id") === 3L), WriteMode.MergeOnRead): Unit
+        t.delete(spark, Rows.Where(col("id") === 4L), WriteMode.MergeOnRead): Unit
       },
       layout = _.deletes.count(_.positional) == 1),
     Case("updatePositionsMatching", "update",
-      (t, n) => t.updatePositionsMatching(spark, _.filter(col("id") === 5L),
-        Map("v" -> lit(-5.0)), n),
+      (t, n) => t.update(spark, Rows.Matching(_.filter(col("id") === 5L)),
+        Map("v" -> lit(-5.0)), WriteMode.MergeOnRead, numRetries = n),
       _ + (5L -> -5.0)),
     Case("updateWhere", "update",
-      (t, n) => t.updateWhere(spark, col("id") === 6L, Map("v" -> lit(-6.0)), n),
+      (t, n) => t.update(spark, Rows.Where(col("id") === 6L), Map("v" -> lit(-6.0)), numRetries = n),
       _ + (6L -> -6.0)),
     Case("updateRowsMatching", "update",
-      (t, n) => t.updateRowsMatching(spark, _.filter(col("id") === 7L),
-        Map("v" -> lit(-7.0)), n),
+      (t, n) => t.update(spark, Rows.Matching(_.filter(col("id") === 7L)),
+        Map("v" -> lit(-7.0)), numRetries = n),
       _ + (7L -> -7.0)),
     Case("deleteRowsMatching", "delete",
-      (t, n) => t.deleteRowsMatching(spark, _.filter(col("id") === 8L), numRetries = n),
+      (t, n) => t.delete(spark, Rows.Matching(_.filter(col("id") === 8L)), numRetries = n),
       _ - 8L),
     Case("mergeClauses", "merge",
-      (t, n) => t.mergeClauses(Seq((9L, -9.0), (700L, 7.0)).toDF("id", "v"),
+      (t, n) => t.merge(Seq((9L, -9.0), (700L, 7.0)).toDF("id", "v"),
         Seq("id" -> "id"), Seq(Merge.WhenMatched(Merge.UpdateAll)),
         Seq(Merge.WhenNotMatched(Merge.InsertAll)), numRetries = n),
       _ + (9L -> -9.0) + (700L -> 7.0)),
     Case("mergeClausesMor", "merge",
-      (t, n) => t.mergeClausesMor(Seq((10L, -10.0), (800L, 8.0)).toDF("id", "v"),
+      (t, n) => t.merge(Seq((10L, -10.0), (800L, 8.0)).toDF("id", "v"),
         Seq("id" -> "id"), Seq(Merge.WhenMatched(Merge.UpdateAll)),
-        Seq(Merge.WhenNotMatched(Merge.InsertAll)), numRetries = n),
+        Seq(Merge.WhenNotMatched(Merge.InsertAll)), numRetries = n, mode = WriteMode.MergeOnRead),
       _ + (10L -> -10.0) + (800L -> 8.0)),
     Case("addFiles", "append",
       (t, n) => t.addFiles(spark, importSource, n),

@@ -24,7 +24,7 @@ class PositionalDeleteSpec extends SparkSpec {
     val filesBefore = t.dataFileCount
     val dirsBefore = t.currentSnapshot.get.dataDirs
     // arithmetic predicate — not key-shaped, not pushable
-    val snap = t.deletePositions(spark, col("v") * 2 > 1500.0)
+    val snap = t.delete(spark, Rows.Where(col("v") * 2 > 1500.0), WriteMode.MergeOnRead)
     assert(snap.operation == "delete")
     assert(snap.dataDirs == dirsBefore, "no data dir may be rewritten")
     assert(t.dataFileCount == filesBefore, "no data file may be rewritten")
@@ -39,7 +39,7 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite(Seq((1L, Some(10.0)), (2L, None), (3L, Some(300.0)))
       .toDF("id", "v"))
-    t.deletePositions(spark, col("v") > 100.0)
+    t.delete(spark, Rows.Where(col("v") > 100.0), WriteMode.MergeOnRead)
     assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L),
       "the NULL-v row must survive")
   }
@@ -48,14 +48,14 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite((1L to 10L).toDF("id"))
     val before = t.snapshots.size
-    t.deletePositions(spark, col("id") > 999L)
+    t.delete(spark, Rows.Where(col("id") > 999L), WriteMode.MergeOnRead)
     assert(t.snapshots.size == before)
   }
 
   test("dir-scoped: rows appended after the delete survive, even matching ones") {
     val t = freshTable()
     t.overwrite((1L to 50L).toDF("id"))
-    t.deletePositions(spark, col("id") % 5 === 0L)
+    t.delete(spark, Rows.Where(col("id") % 5 === 0L), WriteMode.MergeOnRead)
     assert(t.read(spark).count() == 40L)
     t.append((51L to 60L).toDF("id"))
     // appended multiples of 5 (55, 60) are OUT of the delete's scope
@@ -70,12 +70,12 @@ class PositionalDeleteSpec extends SparkSpec {
     assert(s1.rowCount == 3L)
     // the predicate also matches the equality-deleted row 2 — the probe
     // must not re-count it (rowCount stays exact)
-    val s2 = t.deletePositions(spark, col("v") >= 20.0)
+    val s2 = t.delete(spark, Rows.Where(col("v") >= 20.0), WriteMode.MergeOnRead)
     assert(s2.rowCount == 1L)
     assert(t.read(spark).select("id").as[Long].collect().toSeq == Seq(1L))
     // and a second identical positional delete matches nothing: no commit
     val before = t.snapshots.size
-    t.deletePositions(spark, col("v") >= 20.0)
+    t.delete(spark, Rows.Where(col("v") >= 20.0), WriteMode.MergeOnRead)
     assert(t.snapshots.size == before)
   }
 
@@ -88,7 +88,7 @@ class PositionalDeleteSpec extends SparkSpec {
     // delete must re-probe against the compacted layout — scoping the
     // stale file down instead would silently skip every matching row.
     val snap = ConflictInjection.withInjectedConflicts(t, conflicts = 1)(t.compact(spark)) {
-      t.deletePositions(spark, col("id") % 4 === 0L)
+      t.delete(spark, Rows.Where(col("id") % 4 === 0L), WriteMode.MergeOnRead)
     }
     assert(snap.operation == "delete")
     assert(t.read(spark).count() == 30L, "all 10 matching rows must still erase")
@@ -99,7 +99,7 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite((1L to 20L).toDF("id"))
     val preId = t.currentSnapshot.get.id
-    t.deletePositions(spark, col("id") <= 10L)
+    t.delete(spark, Rows.Where(col("id") <= 10L), WriteMode.MergeOnRead)
     assert(t.read(spark).count() == 10L)
     assert(t.readSnapshot(spark, preId).count() == 20L)
   }
@@ -109,9 +109,9 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = SnapshotTable(wh, "ns", "cons")
     t.overwrite((1L to 30L).toDF("id"))
     // three trickle commits → three positional delete files
-    t.deletePositions(spark, col("id") === 1L)
-    t.deletePositions(spark, col("id") === 2L)
-    t.updatePositions(spark, col("id") === 3L, Map("id" -> lit(300L)))
+    t.delete(spark, Rows.Where(col("id") === 1L), WriteMode.MergeOnRead)
+    t.delete(spark, Rows.Where(col("id") === 2L), WriteMode.MergeOnRead)
+    t.update(spark, Rows.Where(col("id") === 3L), Map("id" -> lit(300L)), WriteMode.MergeOnRead)
     assert(t.currentSnapshot.get.deletes.count(_.positional) == 3)
     val dataDirs = t.currentSnapshot.get.dataDirs
     val preConsolidation = t.currentSnapshot.get.id
@@ -136,7 +136,7 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite((1L to 30L).toDF("id"))
     t.append((31L to 60L).toDF("id"))
-    t.deletePositions(spark, col("id") % 3 === 0L)
+    t.delete(spark, Rows.Where(col("id") % 3 === 0L), WriteMode.MergeOnRead)
     assert(t.currentSnapshot.get.deletes.exists(_.positional))
     val compacted = t.compact(spark)
     assert(compacted.deletes.isEmpty, "compaction must pay the merge-on-read debt")
@@ -147,7 +147,7 @@ class PositionalDeleteSpec extends SparkSpec {
   test("reads of dirs without a positional delete in scope plan no row-id metadata") {
     val t = freshTable()
     t.overwrite((1L to 10L).toDF("id"))
-    t.deletePositions(spark, col("id") === 1L)
+    t.delete(spark, Rows.Where(col("id") === 1L), WriteMode.MergeOnRead)
     t.append((11L to 20L).toDF("id"))
     val plan = t.read(spark).queryExecution.optimizedPlan.toString
     // exactly one scan branch (the scoped dir) carries the row identity
@@ -162,8 +162,8 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite(Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("id", "v"))
     val s0 = t.currentSnapshot.get.id
-    t.deletePositions(spark, col("id") === 2L)
-    t.updatePositions(spark, col("id") === 3L, Map("v" -> lit(33.0)))
+    t.delete(spark, Rows.Where(col("id") === 2L), WriteMode.MergeOnRead)
+    t.update(spark, Rows.Where(col("id") === 3L), Map("v" -> lit(33.0)), WriteMode.MergeOnRead)
     val cl = t.readChangelog(spark, s0, t.currentSnapshot.get.id)
       .select("id", "v", "_change_type")
       .as[(Long, Double, String)].collect().sortBy(r => (r._1, r._3))
@@ -179,7 +179,7 @@ class PositionalDeleteSpec extends SparkSpec {
     t.overwrite(
       Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "a", 3.0)).toDF("id", "p", "v"),
       partitionCols = Seq("p"))
-    val snap = t.updatePositions(spark, col("id") === 1L, Map("v" -> lit(10.0)))
+    val snap = t.update(spark, Rows.Where(col("id") === 1L), Map("v" -> lit(10.0)), WriteMode.MergeOnRead)
     val newDir = snap.dataDirs.last
     assert(new java.io.File(newDir).listFiles().exists(f =>
       f.isDirectory && f.getName.startsWith("p=")),
@@ -191,7 +191,7 @@ class PositionalDeleteSpec extends SparkSpec {
   test("rewriteDeletes pays down positional files too, scoped dirs only") {
     val t = freshTable()
     t.overwrite((1L to 10L).toDF("id"))
-    t.deletePositions(spark, col("id") % 2 === 0L)
+    t.delete(spark, Rows.Where(col("id") % 2 === 0L), WriteMode.MergeOnRead)
     t.append((11L to 20L).toDF("id")) // out of the delete's scope
     val dirC = t.currentSnapshot.get.dataDirs.last
     val snap = t.rewriteDeletes(spark)
@@ -220,7 +220,7 @@ class PositionalDeleteSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
     assert(spark.sql("SELECT * FROM graft.ns.pmeta.position_deletes").count() == 0L)
-    t.deletePositions(spark, col("v") >= 2.0)
+    t.delete(spark, Rows.Where(col("v") >= 2.0), WriteMode.MergeOnRead)
     val pairs = spark.sql(
       "SELECT file_path, pos, delete_file FROM graft.ns.pmeta.position_deletes")
       .as[(String, Long, String)].collect()
@@ -237,7 +237,7 @@ class PositionalDeleteSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
     assert(spark.sql("SELECT * FROM graft.ns.mdel.deletes").count() == 0L)
     t.deleteWhere(Seq(1L).toDF("id"), Seq("id"))
-    t.deletePositions(spark, col("v") > 2.5)
+    t.delete(spark, Rows.Where(col("v") > 2.5), WriteMode.MergeOnRead)
     val rows = spark.sql(
       "SELECT kind, key_columns, applies_dir_count FROM graft.ns.mdel.deletes")
       .as[(String, Seq[String], Int)].collect().sortBy(_._1)
@@ -255,7 +255,7 @@ class PositionalDeleteSpec extends SparkSpec {
     t.append((51L to 100L).toDF("id"))
     val dirs = t.currentSnapshot.get.dataDirs
     // matches rows of the SECOND dir only
-    val snap = t.deletePositions(spark, col("id") > 90L)
+    val snap = t.delete(spark, Rows.Where(col("id") > 90L), WriteMode.MergeOnRead)
     val del = snap.deletes.find(_.positional).get
     assert(del.applies == Seq(dirs.last),
       s"scope must be the hit dir only, got ${del.applies}")
@@ -272,9 +272,9 @@ class PositionalDeleteSpec extends SparkSpec {
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       t.read(spark).schema)): Unit // empty table, dataDirs = Nil
     assert(t.currentSnapshot.get.dataDirs.isEmpty)
-    val snap = t.mergeClausesMor(Seq((5L, 50.0)).toDF("id", "v"), Seq("id" -> "id"),
-      matchedClauses = Seq(Merge.WhenMatched(Merge.UpdateAll)),
-      notMatchedClauses = Seq(Merge.WhenNotMatched(Merge.InsertAll)))
+    val snap = t.merge(Seq((5L, 50.0)).toDF("id", "v"), Seq("id" -> "id"),
+      matched = Seq(Merge.WhenMatched(Merge.UpdateAll)),
+      notMatched = Seq(Merge.WhenNotMatched(Merge.InsertAll)), mode = WriteMode.MergeOnRead)
     assert(snap.operation == "merge")
     assert(t.read(spark).as[(Long, Double)].collect().toSeq == Seq((5L, 50.0)),
       "the CDC bootstrap into an empty table must insert")
@@ -303,9 +303,9 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = SnapshotTable(wh, "ns", "ptf")
     t.overwrite((1L to 5L).toDF("id"), format = "orc")
     val e = intercept[IllegalArgumentException](
-      t.deletePositions(spark, col("id") === 1L))
+      t.delete(spark, Rows.Where(col("id") === 1L), WriteMode.MergeOnRead))
     assert(e.getMessage.contains("parquet"))
-    assert(e.getMessage.contains("deleteRows"))
+    assert(e.getMessage.contains("CopyOnWrite"))
   }
 
   test("updatePositions: one atomic commit = positional delete + updated-rows append") {
@@ -313,7 +313,7 @@ class PositionalDeleteSpec extends SparkSpec {
     t.overwrite((1L to 100L).toDF("id").withColumn("v", lit(1.0)))
     val origDirs = t.currentSnapshot.get.dataDirs
     val snapsBefore = t.snapshots.size
-    val snap = t.updatePositions(spark, col("id") <= 10L, Map("v" -> (col("v") + 100.0)))
+    val snap = t.update(spark, Rows.Where(col("id") <= 10L), Map("v" -> (col("v") + 100.0)), WriteMode.MergeOnRead)
     assert(snap.operation == "update")
     assert(t.snapshots.size == snapsBefore + 1, "delete + append must be ONE commit")
     assert(origDirs.forall(snap.dataDirs.contains), "original dirs carried, not rewritten")
@@ -327,7 +327,7 @@ class PositionalDeleteSpec extends SparkSpec {
     assert(out.filter(col("v") === 101.0).count() == 10L)
     assert(out.filter(col("v") === 1.0).count() == 90L)
     // a second update can hit the first update's re-inserted rows
-    t.updatePositions(spark, col("v") === 101.0, Map("v" -> lit(7.0)))
+    t.update(spark, Rows.Where(col("v") === 101.0), Map("v" -> lit(7.0)), WriteMode.MergeOnRead)
     assert(t.read(spark).filter(col("v") === 7.0).count() == 10L)
     assert(t.read(spark).count() == 100L)
   }
@@ -336,10 +336,10 @@ class PositionalDeleteSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
     val before = t.snapshots.size
-    t.updatePositions(spark, col("id") > 99L, Map("v" -> lit(0.0)))
+    t.update(spark, Rows.Where(col("id") > 99L), Map("v" -> lit(0.0)), WriteMode.MergeOnRead)
     assert(t.snapshots.size == before)
     val preId = t.currentSnapshot.get.id
-    t.updatePositions(spark, col("id") === 1L, Map("v" -> lit(9.0)))
+    t.update(spark, Rows.Where(col("id") === 1L), Map("v" -> lit(9.0)), WriteMode.MergeOnRead)
     assert(t.readSnapshot(spark, preId).filter(col("id") === 1L)
       .select("v").as[Double].head() == 1.0)
     assert(t.read(spark).filter(col("id") === 1L).select("v").as[Double].head() == 9.0)
@@ -368,10 +368,10 @@ class PositionalDeleteSpec extends SparkSpec {
     val origDirs = t.currentSnapshot.get.dataDirs
     val snapsBefore = t.snapshots.size
     val src = Seq((50L, 5.0), (60L, 6.0), (200L, 2.0)).toDF("id", "nv")
-    val snap = t.mergeClausesMor(src, Seq("id" -> "id"),
-      matchedClauses = Seq(Merge.WhenMatched(Merge.Update(Map("v" -> col("nv"))))),
-      notMatchedClauses = Seq(Merge.WhenNotMatched(
-        Merge.Insert(Map("id" -> col("id"), "v" -> col("nv"))))))
+    val snap = t.merge(src, Seq("id" -> "id"),
+      matched = Seq(Merge.WhenMatched(Merge.Update(Map("v" -> col("nv"))))),
+      notMatched = Seq(Merge.WhenNotMatched(
+        Merge.Insert(Map("id" -> col("id"), "v" -> col("nv"))))), mode = WriteMode.MergeOnRead)
     assert(snap.operation == "merge")
     assert(t.snapshots.size == snapsBefore + 1, "delete + append must be ONE commit")
     assert(origDirs.forall(snap.dataDirs.contains), "touched files never rewrite")
@@ -389,13 +389,13 @@ class PositionalDeleteSpec extends SparkSpec {
     t.overwrite(Seq((1L, 10.0), (2L, -5.0), (3L, 30.0), (4L, 40.0)).toDF("id", "v"))
     val src = Seq((1L, 100.0), (2L, 200.0)).toDF("id", "nv")
     // matched: negative balances retire, others restate; absent rows flag
-    t.mergeClausesMor(src, Seq("id" -> "id"),
-      matchedClauses = Seq(
+    t.merge(src, Seq("id" -> "id"),
+      matched = Seq(
         Merge.WhenMatched(Merge.Delete, Some(Merge.t("v") < 0)),
         Merge.WhenMatched(Merge.Update(Map("v" -> col("nv"))))),
-      notMatchedClauses = Nil,
-      notMatchedBySourceClauses = Seq(
-        Merge.WhenNotMatchedBySource(Merge.Update(Map("v" -> (Merge.t("v") + 0.5))))))
+      notMatched = Nil,
+      notMatchedBySource = Seq(
+        Merge.WhenNotMatchedBySource(Merge.Update(Map("v" -> (Merge.t("v") + 0.5))))), mode = WriteMode.MergeOnRead)
     val out = t.read(spark).orderBy("id").as[(Long, Double)].collect().toSeq
     assert(out == Seq((1L, 100.0), (3L, 30.5), (4L, 40.5)),
       s"delete id=2 (negative), update id=1 from source, flag absent 3 and 4: $out")
@@ -407,9 +407,9 @@ class PositionalDeleteSpec extends SparkSpec {
     t.overwrite(Seq((1L, 1.0)).toDF("id", "v"))
     val dup = Seq((1L, 2.0), (1L, 3.0)).toDF("id", "nv")
     val e = intercept[IllegalArgumentException](
-      t.mergeClausesMor(dup, Seq("id" -> "id"),
-        matchedClauses = Seq(Merge.WhenMatched(Merge.Update(Map("v" -> col("nv"))))),
-        notMatchedClauses = Nil))
+      t.merge(dup, Seq("id" -> "id"),
+        matched = Seq(Merge.WhenMatched(Merge.Update(Map("v" -> col("nv"))))),
+        notMatched = Nil, mode = WriteMode.MergeOnRead))
     assert(e.getMessage.contains("cardinality"))
   }
 

@@ -21,7 +21,7 @@ class RowLevelSpec extends SparkSpec {
     t.overwrite((1L to 100L).toDF("id").withColumn("v", lit("a")))
     t.append((101L to 200L).toDF("id").withColumn("v", lit("a")))
     val untouched = t.currentSnapshot.get.dataDirs.last
-    val snap = t.updateWhere(spark, col("id") <= 50L, Map("v" -> lit("b")))
+    val snap = t.update(spark, Rows.Where(col("id") <= 50L), Map("v" -> lit("b")))
     assert(snap.operation == "update")
     assert(snap.dataDirs.contains(untouched)) // second dir carried forward
     assert(!snap.dataDirs.contains(t.snapshots.head.dataDirs.head))
@@ -35,7 +35,7 @@ class RowLevelSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite((1L to 10L).toDF("id").withColumn("v", lit(1)))
     val before = t.currentSnapshot.get.id
-    val snap = t.updateWhere(spark, col("id") > 999L, Map("v" -> lit(2)))
+    val snap = t.update(spark, Rows.Where(col("id") > 999L), Map("v" -> lit(2)))
     assert(snap.id == before)
     assert(t.snapshots.size == 1)
   }
@@ -43,12 +43,12 @@ class RowLevelSpec extends SparkSpec {
   test("updateWhere casts assignments to the column type and can self-reference") {
     val t = freshTable()
     t.overwrite(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"))
-    t.updateWhere(spark, col("id") === 2L, Map("v" -> (col("v") + 5)))
+    t.update(spark, Rows.Where(col("id") === 2L), Map("v" -> (col("v") + 5)))
     assert(t.read(spark).orderBy("id").as[(Long, Long)].collect().toSeq ==
       Seq((1L, 10L), (2L, 25L)))
     // unknown column rejected
     val e = intercept[IllegalArgumentException](
-      t.updateWhere(spark, lit(true), Map("nope" -> lit(1))))
+      t.update(spark, Rows.Where(lit(true)), Map("nope" -> lit(1))))
     assert(e.getMessage.contains("unknown column"))
   }
 
@@ -57,7 +57,7 @@ class RowLevelSpec extends SparkSpec {
     t.overwrite((1L to 100L).toDF("id").withColumn("v", lit("x")))
     t.deleteWhere(Seq(7L).toDF("id"), Seq("id"))
     assert(t.currentSnapshot.get.deletes.nonEmpty)
-    t.updateWhere(spark, col("id") <= 100L, Map("v" -> lit("y")))
+    t.update(spark, Rows.Where(col("id") <= 100L), Map("v" -> lit("y")))
     val snap = t.currentSnapshot.get
     // the rewritten dir replaced the delete's entire scope -> delete gone
     assert(snap.deletes.isEmpty)
@@ -149,7 +149,7 @@ class RowLevelSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite(Seq((1L, 10.0), (2L, -5.0), (3L, 30.0), (4L, 40.0)).toDF("id", "bal"))
     val src = Seq((1L, 100.0), (2L, 200.0), (3L, -1.0)).toDF("id", "newBal")
-    val snap = t.mergeClauses(src, Seq("id" -> "id"),
+    val snap = t.merge(src, Seq("id" -> "id"),
       Seq(
         // clause 1: delete matched rows whose SOURCE value is negative
         Merge.WhenMatched(Merge.Delete, Some(Merge.s("newBal") < 0)),
@@ -167,7 +167,7 @@ class RowLevelSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite(Seq((1L, "old", 0.0)).toDF("id", "tag", "bal"))
     val src = Seq((2L, 1500.0), (3L, 10.0), (4L, 2000.0)).toDF("id", "amount")
-    t.mergeClauses(src, Seq("id" -> "id"),
+    t.merge(src, Seq("id" -> "id"),
       Nil,
       Seq(
         Merge.WhenNotMatched(
@@ -189,7 +189,7 @@ class RowLevelSpec extends SparkSpec {
     // balances retire, the rest are flagged stale — while the delivered
     // rows upsert in the same statement
     val src = Seq((1L, 100.0), (5L, 50.0)).toDF("id", "amount")
-    val snap = t.mergeClauses(src, Seq("id" -> "id"),
+    val snap = t.merge(src, Seq("id" -> "id"),
       Seq(Merge.WhenMatched(Merge.Update(Map("bal" -> Merge.s("amount"))))),
       Seq(Merge.WhenNotMatched(Merge.Insert(Map(
         "id" -> Merge.s("id"), "name" -> lit("new"), "bal" -> Merge.s("amount"))))),
@@ -212,7 +212,7 @@ class RowLevelSpec extends SparkSpec {
     t.append((101L to 200L).toDF("id").withColumn("v", lit("a")))
     val dirs = t.currentSnapshot.get.dataDirs
     val src = (1L to 100L).toDF("id")
-    val snap = t.mergeClauses(src, Seq("id" -> "id"),
+    val snap = t.merge(src, Seq("id" -> "id"),
       Nil, Nil,
       Seq(Merge.WhenNotMatchedBySource(Merge.Delete, Some(Merge.t("id") > 500L))))
     // nothing matched the condition: both dirs survive byte-identical
@@ -309,7 +309,7 @@ class RowLevelSpec extends SparkSpec {
     val origFiles = new java.io.File(origDir).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => f.getName -> f).toMap
     assert(origFiles.size == 4, s"fixture needs 4 files, got ${origFiles.size}")
-    val snap = t.updateWhere(spark, col("id") <= 10L, Map("v" -> lit("b")))
+    val snap = t.update(spark, Rows.Where(col("id") <= 10L), Map("v" -> lit("b")))
     assert(snap.operation == "update" && snap.rowCount == 100L)
     // the untouched files carried into a -carry dir as hard links —
     // byte-identical, zero data I/O
@@ -362,7 +362,7 @@ class RowLevelSpec extends SparkSpec {
     t2.overwrite((1L to 100L).toDF("id").withColumn("v", lit("x"))
       .repartitionByRange(4, col("id")))
     t2.deleteWhere(Seq(50L).toDF("id"), Seq("id"))
-    t2.updateWhere(spark, col("id") === 1L, Map("v" -> lit("y")))
+    t2.update(spark, Rows.Where(col("id") === 1L), Map("v" -> lit("y")))
     val s2 = t2.currentSnapshot.get
     assert(!s2.dataDirs.exists(_.endsWith("-carry")),
       "delete-scoped dirs must take the whole-dir rewrite (file carry would resurrect)")
@@ -900,5 +900,16 @@ class RowLevelSpec extends SparkSpec {
     // partition pruning still fires on the rewritten layout
     val pruned = t.read(spark).filter(col("day") === "d2")
     assert(pruned.count() == 1L)
+    // every referenced dir keeps the day=<v> layout on disk
+    t.currentSnapshot.get.dataDirs.foreach { d =>
+      val subdirs = new java.io.File(d).listFiles().filter(_.isDirectory).map(_.getName)
+      assert(subdirs.nonEmpty && subdirs.forall(_.startsWith("day=")),
+        s"$d lost the partition layout: ${subdirs.mkString(", ")}")
+    }
+    // no phantom unpartitioned entry, no partition with rows but no file
+    val stats = t.partitionStats(spark).as[(String, Long, Long)].collect().toSeq
+    assert(stats.sorted == Seq(("day=d1", 1L, 1L), ("day=d2", 1L, 1L)), s"got $stats")
+    assert(t.fileStats(spark).select("partition_path").as[String].collect()
+      .forall(_.startsWith("day=")))
   }
 }

@@ -331,9 +331,8 @@ class SnapshotTableSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite(Seq(1, 2, 3).toDF("v").repartition(3))
     // inject a rival append into compaction's write-to-swap window; the
-    // CAS must fail, refresh, and the retried swap then conflicts again
-    // on content: compaction re-reads nothing, so it must EXHAUST rather
-    // than commit a snapshot that silently drops the rival's rows
+    // CAS must fail, and with no retry left compaction must EXHAUST
+    // rather than commit a snapshot that silently drops the rival's rows
     val e = intercept[CommitFailedException](
       ConflictInjection.withInjectedConflicts(t, conflicts = 1)(t.append(Seq(4).toDF("v"))) {
         t.compact(spark, numRetries = 0)
@@ -341,6 +340,22 @@ class SnapshotTableSpec extends SparkSpec {
     assert(e.attempts == 1)
     // the table still holds every row, including the rival append's
     assert(t.read(spark).as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
+  }
+
+  test("compact with a retry left recompacts on top of a concurrent append") {
+    val t = freshTable()
+    t.overwrite(Seq(1, 2, 3).toDF("v").repartition(3))
+    val snap = ConflictInjection.withInjectedConflicts(t, conflicts = 1)(
+      t.append(Seq(4).toDF("v"))) {
+      t.compact(spark, numRetries = 1)
+    }
+    assert(snap.operation == "replace")
+    assert(t.currentSnapshot.map(_.id).contains(snap.id))
+    // the retry re-read the rival's head: its row is compacted, not lost
+    assert(t.read(spark).as[Int].collect().sorted.toSeq == Seq(1, 2, 3, 4))
+    assert(snap.rowCount == 4L)
+    assert(snap.dataDirs.size == 1, "one compacted dir")
+    assert(ConflictInjection.unreferencedDirs(t).isEmpty)
   }
 
   test("partitionStats merges commit-time sidecars across dirs without scanning data") {
@@ -801,31 +816,6 @@ class SnapshotTableSpec extends SparkSpec {
     val t = freshTable()
     t.overwrite((1 to 50).map(i => (i.toLong, s"d${i % 2}")).toDF("id", "part"),
       partitionCols = Seq("part"))
-    // jobs observed through a SCOPED listener counter (monotonic, so
-    // immune to the shared session's status-store eviction — the
-    // tracker's getJobIdsForGroup count can go DOWN when the suite run's
-    // cumulative job total crosses the retention limit, which made this
-    // assertion flaky); listener delivery is async, so poll until the
-    // count stabilizes
-    def jobsDuring(f: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          n.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        f
-        var prev = -1
-        val deadline = System.currentTimeMillis() + 10000
-        while (System.currentTimeMillis() < deadline && n.get() != prev) {
-          prev = n.get(); Thread.sleep(250)
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      n.get()
-    }
     val batch = (51 to 70).map(i => (i.toLong, s"d${i % 2}")).toDF("id", "part")
     val fullJobs = jobsDuring(t.append(batch, partitionCols = Seq("part")))
     val microJobs = jobsDuring(
