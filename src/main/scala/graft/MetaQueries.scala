@@ -1958,8 +1958,8 @@ object MetaQueries {
       (s, dir) => {
         // DELETE ... WHERE k NOT IN (SELECT ...) — SQL's null-aware
         // NOT IN (retire every user the retention query did NOT keep).
-        // GraftDmlRule lowers it onto GraftNotInCommand: two limit-1
-        // probes of the distinct key frame classify the statement
+        // GraftDmlRule lowers it onto GraftNotInCommand: one aggregate
+        // job over the distinct key frame classifies the statement
         // (NULL key → statement no-op; empty → delete-all; else the
         // anti-join = MERGE's third arm over non-NULL target keys).
         // Here the subquery is non-empty and NULL-free, so the require
@@ -2030,7 +2030,7 @@ object MetaQueries {
         // null-aware form, which is null-aware per COLUMN (a source row
         // NULL in one column still blocks/passes on the other), so the
         // single-column three-branch shortcut cannot apply. GraftDmlRule
-        // lowers it onto GraftNotInMultiDeleteCommand: run-time null-mask
+        // lowers it onto GraftNotInMultiCommand: run-time null-mask
         // decomposition into pure equi anti-joins (never a nested-loop
         // join). The fixture plants NULLs on BOTH sides and in BOTH
         // columns, so all mask pairs — including the

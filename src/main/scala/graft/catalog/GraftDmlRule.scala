@@ -3,7 +3,9 @@ package graft.catalog
 import graft.sink.{Merge, Rows, SnapshotTable, WriteMode}
 import org.apache.spark.sql.{Column, GraftSqlShim, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet}
+import org.apache.spark.sql.catalyst.expressions.{EqualTo, Exists, Expression, InSubquery, ListQuery}
+import org.apache.spark.sql.catalyst.expressions.{Not, OuterReference, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -22,8 +24,10 @@ import org.apache.spark.sql.functions.lit
   * RESOLVED-but-unrewritten commands first — the same pattern Delta's
   * DeltaAnalysis uses for its V1 execution core. Supported surface, by
   * construction of the engine path:
-  *  - `UPDATE t SET c = expr, ... [WHERE cond]` — arbitrary expressions
-  *    over the target row;
+  *  - `UPDATE t SET c = expr, ... [WHERE cond]` and `DELETE FROM t WHERE
+  *    cond` — arbitrary expressions over the target row, uncorrelated
+  *    scalar and EXISTS subqueries (evaluated once per statement), and
+  *    one subquery conjunct [[lowerRowLevel]] lowers onto a join;
   *  - `MERGE INTO t USING s ON` equality conjunctions of target and
   *    source columns, with any number of ordered `WHEN MATCHED
   *    [AND cond] THEN UPDATE SET ... | UPDATE SET * | DELETE`,
@@ -31,171 +35,104 @@ import org.apache.spark.sql.functions.lit
   *    `WHEN NOT MATCHED BY SOURCE [AND cond] THEN UPDATE SET ... |
   *    DELETE` clauses (each list first-true-wins per row, SQL
   *    clause-order semantics).
-  * Everything else (non-equality ON, subqueries in conditions/
-  * assignments, schema-evolving MERGE) raises a clear unsupported error
-  * instead of a rewrite that silently diverges from SQL semantics.
+  * Everything else (non-equality ON, the subquery shapes [[xlate]]'s
+  * error lists as unsupported, schema-evolving MERGE) raises a clear
+  * unsupported error instead of a rewrite that silently diverges from
+  * SQL semantics.
   */
 final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperators {
     case u @ UpdateTable(target, assignments, condition)
         if u.resolved && graftRel(target).isDefined =>
-      val t = graftTable(target, "UPDATE")
-      val tSet = target.outputSet
-      condition.flatMap(extractSubqueryArm(_, tSet)) match {
-        // UPDATE ... WHERE k IN (SELECT ...) / WHERE EXISTS (corr):
-        // lower onto the MERGE engine path — the subquery's distinct
-        // keys become the merge source, the IN / correlation equalities
-        // become the key semi-join the COW detection already runs
-        // broadcast + key-pruned, and residual conjuncts ride as the
-        // matched clause's condition. Never a driver-side key collect:
-        // at 100 TB the subquery result stays distributed.
-        case Some((SemiArm, keys, srcPlan, rest)) =>
-          val sSet = srcPlan.outputSet
-          GraftMergeCommand(t.snapTable, srcPlan, keys,
-            matchedClauses = Seq(Merge.WhenMatched(
-              Merge.Update(assignments.map(a =>
-                topLevelName(a.key, "UPDATE") -> xlate(a.value, tSet, sSet)).toMap),
-              rest.map(xlate(_, tSet, sSet)))),
-            notMatchedClauses = Nil, modeProperty = "write.update.mode")
-        // UPDATE ... WHERE NOT EXISTS (corr): the inverted detection —
-        // exactly MERGE's third arm (WHEN NOT MATCHED BY SOURCE), an
-        // anti-join of the broadcast subquery keys. NULL-keyed target
-        // rows correctly update: no inner row can equal NULL, so NOT
-        // EXISTS is true for them, and the anti-join keeps them too.
-        case Some((AntiArm, keys, srcPlan, rest)) =>
-          val sSet = srcPlan.outputSet
-          GraftMergeCommand(t.snapTable, srcPlan, keys,
-            matchedClauses = Nil, notMatchedClauses = Nil,
-            notMatchedBySourceClauses = Seq(Merge.WhenNotMatchedBySource(
-              Merge.Update(assignments.map(a =>
-                topLevelName(a.key, "UPDATE") -> xlate(a.value, tSet, sSet)).toMap),
-              rest.map(xlate(_, tSet, sSet)))),
-            modeProperty = "write.update.mode")
-        // UPDATE ... WHERE k NOT IN (SELECT ...): null-aware semantics
-        // branch at RUN time (a NULL in the subquery makes NOT IN never
-        // TRUE; an empty subquery makes it TRUE everywhere; otherwise
-        // it is the anti-join — MERGE's third arm — restricted to
-        // non-NULL target keys, because `NULL NOT IN (non-empty)` is
-        // UNKNOWN, and an anti-join alone would wrongly touch those rows)
-        case Some((NotInArm, keys, srcPlan, rest)) =>
-          val sSet = srcPlan.outputSet
-          val keyAttr = target.output.find(_.name == keys.head._1).get
-          val antiCond = rest
-            .map(And(org.apache.spark.sql.catalyst.expressions.IsNotNull(keyAttr), _))
-            .getOrElse(org.apache.spark.sql.catalyst.expressions.IsNotNull(keyAttr))
-          GraftNotInCommand(t.snapTable, srcPlan, keys,
-            bySourceClause = Merge.WhenNotMatchedBySource(
-              Merge.Update(assignments.map(a =>
-                topLevelName(a.key, "UPDATE") -> xlate(a.value, tSet, sSet)).toMap),
-              Some(xlate(antiCond, tSet, sSet))),
-            plainCond = rest.map(xlate(_, tSet, AttributeSet.empty)),
-            plainSets = Some(assignments.map(a =>
-              topLevelName(a.key, "UPDATE") -> xlate(a.value, tSet, AttributeSet.empty)).toMap),
-            modeProperty = "write.update.mode")
-        // UPDATE ... WHERE (a, b, ...) NOT IN (SELECT ...): the same
-        // run-time null-mask decomposition as the DELETE twin; matched
-        // rows update through the COW/MOR matcher seam
-        case Some((NotInMultiArm, keys, srcPlan, rest)) =>
-          GraftNotInMultiCommand(t.snapTable, srcPlan, keys,
-            sets = Some(assignments.map(a => topLevelName(a.key, "UPDATE") ->
-              xlate(a.value, tSet, AttributeSet.empty)).toMap),
-            plainCond = rest.map(xlate(_, tSet, AttributeSet.empty)),
-            modeProperty = "write.update.mode")
-        case None =>
-          lowerCorrScalarUpdate(t, assignments, condition, tSet).getOrElse(
-            GraftRowLevelCommand(
-              t.snapTable,
-              condition.map(xlate(_, tSet, AttributeSet.empty)),
-              Some(assignments.map(a =>
-                topLevelName(a.key, "UPDATE") -> xlate(a.value, tSet, AttributeSet.empty)).toMap),
-              "write.update.mode"))
-      }
+      lowerRowLevel(target, condition, Some(assignments))
 
     // DELETE FROM t with a condition the DSv2 SupportsDelete filter API
     // cannot carry: a subquery, or a non-source-translatable predicate
     // (`value * 2 > 500`, function calls, …). Simple attribute/literal
     // predicates stay on the push-down (merge-on-read equality delete).
-    // A pure IN-delete keeps the SAME merge-on-read contract (the
-    // subquery's distinct keys become the equality-delete file —
-    // O(|keys|), no data file rewritten); IN plus residual conjuncts
-    // lowers onto the merge path as WHEN MATCHED AND <rest> THEN
-    // DELETE; everything else onto the row-level delete
-    // (SnapshotTable.delete). A predicate our conservative translatability check
-    // misjudges as non-pushable still deletes CORRECTLY — it just pays
-    // the COW write instead of the O(keys) delete file.
+    // A predicate our conservative translatability check misjudges as
+    // non-pushable still deletes CORRECTLY — it just pays the COW write
+    // instead of the O(keys) delete file.
     case d @ DeleteFromTable(target, condition)
         if d.resolved && graftRel(target).isDefined &&
-          (condition.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]) ||
+          (condition.exists(_.isInstanceOf[SubqueryExpression]) ||
             !pushableDelete(condition)) =>
-      val t = graftTable(target, "DELETE")
-      val tSet = target.outputSet
-      extractSubqueryArm(condition, tSet) match {
-        // pure key-membership delete (uncorrelated IN, or correlated
-        // EXISTS whose correlation is the whole condition): the SAME
-        // merge-on-read contract a literal key list gets — the distinct
-        // keys become the equality-delete file, no data file rewritten
-        case Some((SemiArm, keys, srcPlan, None)) =>
-          GraftDeleteInCommand(t.snapTable, srcPlan, keys)
-        case Some((SemiArm, keys, srcPlan, rest)) =>
-          val sSet = srcPlan.outputSet
-          GraftMergeCommand(t.snapTable, srcPlan, keys,
-            matchedClauses = Seq(Merge.WhenMatched(
-              Merge.Delete, rest.map(xlate(_, tSet, sSet)))),
-            notMatchedClauses = Nil, modeProperty = "write.delete.mode")
-        // DELETE ... WHERE NOT EXISTS (corr): retire target rows with
-        // no matching subquery row — MERGE's third arm (anti-join of
-        // the broadcast keys), the full-sync retirement shape
-        case Some((AntiArm, keys, srcPlan, rest)) =>
-          val sSet = srcPlan.outputSet
-          GraftMergeCommand(t.snapTable, srcPlan, keys,
-            matchedClauses = Nil, notMatchedClauses = Nil,
-            notMatchedBySourceClauses = Seq(Merge.WhenNotMatchedBySource(
-              Merge.Delete, rest.map(xlate(_, tSet, sSet)))),
-            modeProperty = "write.delete.mode")
-        // DELETE ... WHERE k NOT IN (SELECT ...): same run-time
-        // null-aware branching as the UPDATE form above
-        case Some((NotInArm, keys, srcPlan, rest)) =>
-          val sSet = srcPlan.outputSet
-          val keyAttr = target.output.find(_.name == keys.head._1).get
-          val antiCond = rest
-            .map(And(org.apache.spark.sql.catalyst.expressions.IsNotNull(keyAttr), _))
-            .getOrElse(org.apache.spark.sql.catalyst.expressions.IsNotNull(keyAttr))
-          GraftNotInCommand(t.snapTable, srcPlan, keys,
-            bySourceClause = Merge.WhenNotMatchedBySource(
-              Merge.Delete, Some(xlate(antiCond, tSet, sSet))),
-            plainCond = rest.map(xlate(_, tSet, AttributeSet.empty)),
-            plainSets = None,
-            modeProperty = "write.delete.mode")
-        // DELETE ... WHERE (a, b, ...) NOT IN (SELECT ...): exact
-        // multi-column null-aware semantics via run-time null-mask
-        // decomposition into equi anti-joins (see the command's doc)
-        case Some((NotInMultiArm, keys, srcPlan, rest)) =>
-          GraftNotInMultiCommand(t.snapTable, srcPlan, keys, sets = None,
-            plainCond = rest.map(xlate(_, tSet, AttributeSet.empty)),
-            modeProperty = "write.delete.mode")
-        case None => extractThetaExistsArm(condition, tSet) match {
-          // correlated [NOT] EXISTS with theta residuals alongside its
-          // equality correlation: the equalities key a real semi/anti
-          // join (never a nested loop), the thetas ride it as extra
-          // join conditions, and the matched ROW SET deletes through
-          // the matcher seam (COW complement or one positional file)
-          case Some((negated, srcPlan, keys, theta, rest)) =>
-            GraftThetaExistsDeleteCommand(t.snapTable, srcPlan, keys, theta,
-              negated, rest.map(xlate(_, tSet, AttributeSet.empty)),
-              modeProperty = "write.delete.mode")
-          case None =>
-            // scalar/EXISTS-only subquery conditions: evaluate statement-
-            // level via the deferred machinery on the UPDATE-free engine
-            // delete path (xlate rejects the unsupported forms with the
-            // actionable message)
-            GraftRowLevelCommand(t.snapTable,
-              Some(xlate(condition, tSet, AttributeSet.empty)), None, "write.delete.mode")
-        }
-      }
+      lowerRowLevel(target, Some(condition), None)
 
     case m: MergeIntoTable if m.resolved && graftRel(m.targetTable).isDefined =>
       lowerMerge(m)
+  }
+
+  /** The one lowering of UPDATE (`assignments` defined) and DELETE (none):
+    * the verb only picks the action — `Merge.Update(sets)` or
+    * `Merge.Delete` — and the `write.<verb>.mode` property, and every
+    * subquery arm ([[extractSubqueryArm]]) lowers the same way for both.
+    * Never a driver-side key collect: at 100 TB the subquery result stays
+    * distributed. Verb-specific are only a DELETE of pure key membership
+    * (an equality delete) and each verb's fallback when the key arms
+    * decline: theta-EXISTS for DELETE, a correlated scalar assignment for
+    * UPDATE. Anything left evaluates its statement-level subqueries at
+    * run time; [[xlate]] rejects the forms it cannot lift.
+    */
+  private def lowerRowLevel(
+      target: LogicalPlan,
+      condition: Option[Expression],
+      assignments: Option[Seq[Assignment]]): LogicalPlan = {
+    val verb = if (assignments.isDefined) "UPDATE" else "DELETE"
+    val t = graftTable(target, verb)
+    val tSet = target.outputSet
+    val modeProperty = s"write.${verb.toLowerCase}.mode"
+    // the action and a condition over the merge frame (target `__t`,
+    // source `sSet`), or over the plain target frame when sSet is empty
+    def action(sSet: AttributeSet): Merge.Matched =
+      assignments.fold[Merge.Matched](Merge.Delete)(as => Merge.Update(sets(as, verb, tSet, sSet)))
+    def where(c: Option[Expression], sSet: AttributeSet) = c.map(xlate(_, tSet, sSet))
+    val plain = AttributeSet.empty
+    condition.flatMap(extractSubqueryArm(_, tSet)) match {
+      // DELETE of pure key membership (IN, or correlated EXISTS whose
+      // correlation is the whole condition): the SAME merge-on-read
+      // contract a literal key list gets — the distinct keys become the
+      // equality-delete file, no data file rewritten
+      case Some((SemiArm, keys, srcPlan, None)) if assignments.isEmpty =>
+        GraftDeleteInCommand(t.snapTable, srcPlan, keys)
+      // IN / correlated EXISTS: the subquery's distinct keys become the
+      // merge source, the IN / correlation equalities the key semi-join
+      // the detection runs broadcast + key-pruned, and residual conjuncts
+      // ride as the matched clause's condition
+      case Some((SemiArm, keys, srcPlan, rest)) =>
+        val sSet = srcPlan.outputSet
+        GraftMergeCommand(t.snapTable, srcPlan, keys,
+          Seq(Merge.WhenMatched(action(sSet), where(rest, sSet))), Nil,
+          modeProperty = modeProperty)
+      // correlated NOT EXISTS: the inverted detection — exactly MERGE's
+      // third arm (WHEN NOT MATCHED BY SOURCE), an anti-join of the
+      // broadcast keys. NULL-keyed target rows are touched: no inner row
+      // can equal NULL, so NOT EXISTS is true for them, and the anti-join
+      // keeps them too
+      case Some((AntiArm, keys, srcPlan, rest)) =>
+        val sSet = srcPlan.outputSet
+        GraftMergeCommand(t.snapTable, srcPlan, keys, Nil, Nil,
+          Seq(Merge.WhenNotMatchedBySource(action(sSet), where(rest, sSet))), modeProperty)
+      // uncorrelated NOT IN: null-aware semantics branch at RUN time, so
+      // the action and residual stay over the plain target frame, which
+      // both the row-level write and the merge (whose source holds only
+      // `__gkeyN` columns) resolve
+      case Some((NotInArm, keys, srcPlan, rest)) =>
+        GraftNotInCommand(t.snapTable, srcPlan, keys, action(plain), where(rest, plain),
+          modeProperty)
+      case Some((NotInMultiArm, keys, srcPlan, rest)) =>
+        GraftNotInMultiCommand(t.snapTable, srcPlan, keys, action(plain), where(rest, plain),
+          modeProperty)
+      // the key arms declined: each verb tries its own join shape first
+      case None =>
+        val lowered = assignments match {
+          case Some(as) => lowerCorrScalarUpdate(t, as, condition, tSet, modeProperty)
+          case None => condition.flatMap(lowerThetaExistsDelete(t, _, tSet, modeProperty))
+        }
+        lowered.getOrElse(
+          GraftRowLevelCommand(t.snapTable, where(condition, plain), action(plain), modeProperty))
+    }
   }
 
   /** Conservative mirror of Spark's V2 filter translatability: the
@@ -256,108 +193,99 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Decompose a DML condition's conjunction: if exactly one arm is a
-    * multi-row subquery the engine can lower as a JOIN — an
-    * uncorrelated `IN (SELECT ...)` over plain target columns, a
-    * correlated `IN`, or a correlated `[NOT] EXISTS` whose correlation
-    * predicates are plain target-column = inner-column equalities —
-    * return (semi/anti kind, target-key -> source-key pairs, DISTINCT'd
-    * decorrelated subquery plan, the remaining conjuncts recombined).
-    * The DISTINCT makes the join keys unique, which both matches
-    * IN/EXISTS semantics exactly and satisfies the MERGE cardinality
-    * rule (every key pair equates a target column, so a target row
-    * matches at most ONE distinct source tuple). Multiple subquery
-    * arms, NOT IN, or non-equality correlation all fall through to
-    * [[xlate]]'s explicit unsupported error.
+  /** The one conjunct of `cond` a join could lower — a `[NOT] IN
+    * (SELECT ...)` or a correlated `[NOT] EXISTS` — and the other
+    * conjuncts recombined; None unless there is exactly one. Scalar and
+    * uncorrelated-EXISTS conjuncts are not counted: they stay in the rest
+    * and defer through [[xlate]]'s run-time-literal machinery.
     */
-  private def extractSubqueryArm(
-      cond: Expression, tSet: AttributeSet)
-      : Option[(ArmKind, Seq[(String, String)], LogicalPlan, Option[Expression])] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Exists, InSubquery, ListQuery, Not}
+  private def subqueryConjunct(cond: Expression): Option[(Expression, Option[Expression])] = {
     val arms = splitConj(cond)
-    // arms this extractor could lower (scalar / uncorrelated-EXISTS
-    // arms are NOT counted — they stay in `rest` and defer through
-    // xlate's run-time-literal machinery)
     def lowerable(e: Expression): Boolean = e.exists {
       case _: ListQuery => true
       case ex: Exists => ex.outerAttrs.nonEmpty
       case _ => false
     }
-    val subArms = arms.filter(lowerable)
-    if (subArms.size != 1) return None
-    val arm = subArms.head
-    val rest = arms.filterNot(_ eq arm).reduceOption(And)
-    def targetAttr(e: Expression): Boolean = e match {
-      case a: AttributeReference => tSet.contains(a)
-      case _ => false
-    }
-    // alias every key column to a fresh stable name: inner attrs from
-    // different relations may collide on name, and the merge path maps
-    // keys by NAME across the source frame
-    def build(kind: ArmKind, pairs: Seq[(AttributeReference, AttributeReference)],
-        child: LogicalPlan): Option[(ArmKind, Seq[(String, String)], LogicalPlan, Option[Expression])] = {
-      val aliased = pairs.map(_._2).zipWithIndex.map {
-        case (a, i) => Alias(a, s"__gkey$i")()
-      }
-      Some((kind, pairs.map(_._1.name).zip(aliased.map(_.name)),
-        Distinct(Project(aliased, child)), rest))
-    }
-    arm match {
-      // uncorrelated IN over plain target columns
-      case InSubquery(values, lq: ListQuery)
-          if lq.outerAttrs.isEmpty && lq.plan.resolved &&
-            values.forall(targetAttr) && values.size == lq.plan.output.size =>
-        val keys = values.map(_.asInstanceOf[AttributeReference].name)
-          .zip(lq.plan.output.map(_.name))
-        Some((SemiArm, keys, Distinct(lq.plan), rest))
-      // correlated IN: `t.k IN (SELECT x FROM s WHERE s.g = t.g ...)`
-      // — the IN-match columns and the correlation equalities combine
-      // into one semi-join key set
-      case InSubquery(values, lq: ListQuery)
-          if lq.outerAttrs.nonEmpty && lq.plan.resolved &&
-            values.forall(targetAttr) && values.size == lq.plan.output.size =>
-        for {
-          (corr, child) <- decorrelate(lq.plan, tSet)
-          inAttrs <- resolveThrough(lq.plan, lq.plan.output, child)
-          r <- build(SemiArm,
-            values.map(_.asInstanceOf[AttributeReference]).zip(inAttrs) ++ corr,
-            child)
-        } yield r
-      // correlated EXISTS → semi-join on the correlation equalities
-      case ex: Exists if ex.outerAttrs.nonEmpty && ex.plan.resolved =>
-        decorrelate(ex.plan, tSet).flatMap { case (corr, child) =>
-          build(SemiArm, corr, child)
-        }
-      // correlated NOT EXISTS → anti-join on the correlation equalities
-      case Not(ex: Exists) if ex.outerAttrs.nonEmpty && ex.plan.resolved =>
-        decorrelate(ex.plan, tSet).flatMap { case (corr, child) =>
-          build(AntiArm, corr, child)
-        }
-      // uncorrelated single-column NOT IN: the null-aware shape. The
-      // extractor only pairs the key columns; the caller owns the
-      // three-way run-time semantics (NULL-in-subquery no-op / empty-
-      // subquery TRUE / anti-join over non-NULL target keys)
-      case Not(InSubquery(Seq(value), lq: ListQuery))
-          if lq.outerAttrs.isEmpty && lq.plan.resolved &&
-            targetAttr(value) && lq.plan.output.size == 1 =>
-        val keyName = value.asInstanceOf[AttributeReference].name
-        val aliased = Alias(lq.plan.output.head, "__gkey0")()
-        Some((NotInArm, Seq(keyName -> "__gkey0"),
-          Distinct(Project(Seq(aliased), lq.plan)), rest))
-      // uncorrelated MULTI-column NOT IN: the same null-aware contract,
-      // decomposed by null masks at RUN time into pure equi anti-joins
-      // (GraftNotInMultiCommand) — never a nested-loop join
-      case Not(InSubquery(values, lq: ListQuery))
-          if values.size > 1 && lq.outerAttrs.isEmpty && lq.plan.resolved &&
-            values.forall(targetAttr) && lq.plan.output.size == values.size =>
-        val names = values.map(_.asInstanceOf[AttributeReference].name)
-        val aliased = lq.plan.output.zipWithIndex.map {
-          case (o, i) => Alias(o, s"__gkey$i")()
-        }
-        Some((NotInMultiArm, names.zip(aliased.map(_.name)),
-          Distinct(Project(aliased, lq.plan)), rest))
+    arms.filter(lowerable) match {
+      case Seq(arm) => Some((arm, arms.filterNot(_ eq arm).reduceOption(And)))
       case _ => None
     }
+  }
+
+  /** Decompose a DML condition's conjunction: if its one subquery
+    * conjunct ([[subqueryConjunct]]) lowers as a key JOIN — an `IN
+    * (SELECT ...)` over plain target columns (correlated or not), an
+    * uncorrelated `NOT IN (SELECT ...)` over plain target columns, or a
+    * correlated `[NOT] EXISTS` whose correlation predicates are plain
+    * target-column = inner-column equalities — return (arm kind,
+    * target-key -> source-key pairs, DISTINCT'd decorrelated key plan,
+    * the remaining conjuncts recombined). The DISTINCT makes the join
+    * keys unique, which both matches IN/EXISTS semantics exactly and
+    * satisfies the MERGE cardinality rule (every key pair equates a
+    * target column, so a target row matches at most ONE distinct source
+    * tuple). Several subquery conjuncts, or correlation that is not all
+    * equalities, decline (None): the verb's fallback in
+    * [[lowerRowLevel]] then tries its own shape, and [[xlate]] rejects
+    * the rest with the unsupported error.
+    */
+  private def extractSubqueryArm(
+      cond: Expression, tSet: AttributeSet)
+      : Option[(ArmKind, Seq[(String, String)], LogicalPlan, Option[Expression])] =
+    subqueryConjunct(cond).flatMap { case (arm, rest) =>
+      def targetAttrs(values: Seq[Expression], width: Int): Boolean =
+        values.size == width && values.forall {
+          case a: AttributeReference => tSet.contains(a)
+          case _ => false
+        }
+      def attrs(values: Seq[Expression]) = values.map(_.asInstanceOf[Attribute])
+      // alias every key column to a fresh stable name: inner attrs from
+      // different relations (or one relation joined to itself) may
+      // collide on name, and the engine maps keys by NAME across the
+      // source frame
+      def build(kind: ArmKind, pairs: Seq[(Attribute, Expression)], child: LogicalPlan) = {
+        val (keys, aliased) = keyAliases(pairs)
+        (kind, keys, Distinct(Project(aliased, child)), rest)
+      }
+      arm match {
+        // IN: uncorrelated, or correlated — `t.k IN (SELECT x FROM s
+        // WHERE s.g = t.g ...)`, where the IN-match columns and the
+        // correlation equalities combine into one semi-join key set
+        case InSubquery(values, lq: ListQuery)
+            if lq.plan.resolved && targetAttrs(values, lq.plan.output.size) =>
+          if (lq.outerAttrs.isEmpty)
+            Some(build(SemiArm, attrs(values).zip(lq.plan.output), lq.plan))
+          else for {
+            (corr, child) <- equiDecorrelate(lq.plan, tSet)
+            inAttrs <- resolveThrough(lq.plan, lq.plan.output, child)
+          } yield build(SemiArm, attrs(values).zip(inAttrs) ++ corr, child)
+        // uncorrelated NOT IN: the null-aware shape. The extractor only
+        // pairs the key columns; the command owns the run-time semantics
+        // (single column: GraftNotInCommand's three-way branch; several:
+        // GraftNotInMultiCommand's null-mask decomposition into equi
+        // anti-joins — never a nested-loop join)
+        case Not(InSubquery(values, lq: ListQuery))
+            if lq.outerAttrs.isEmpty && lq.plan.resolved &&
+              targetAttrs(values, lq.plan.output.size) =>
+          Some(build(if (values.size == 1) NotInArm else NotInMultiArm,
+            attrs(values).zip(lq.plan.output), lq.plan))
+        // correlated EXISTS → semi-join on the correlation equalities
+        case ex: Exists if ex.outerAttrs.nonEmpty && ex.plan.resolved =>
+          equiDecorrelate(ex.plan, tSet).map { case (corr, child) => build(SemiArm, corr, child) }
+        // correlated NOT EXISTS → anti-join on the correlation equalities
+        case Not(ex: Exists) if ex.outerAttrs.nonEmpty && ex.plan.resolved =>
+          equiDecorrelate(ex.plan, tSet).map { case (corr, child) => build(AntiArm, corr, child) }
+        case _ => None
+      }
+    }
+
+  /** Each (target column, inner key) pair's inner key aliased to the
+    * source key name `__gkey0`, `__gkey1`, ...; returns the target ->
+    * source key names and the aliases.
+    */
+  private def keyAliases(pairs: Seq[(Attribute, Expression)])
+      : (Seq[(String, String)], Seq[Alias]) = {
+    val aliased = pairs.zipWithIndex.map { case ((_, a), i) => Alias(a, s"__gkey$i")() }
+    (pairs.map(_._1.name).zip(aliased.map(_.name)), aliased)
   }
 
   /** `UPDATE t SET x = (SELECT agg(...) FROM s WHERE s.k = t.k) ...` —
@@ -380,8 +308,9 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       t: GraftSparkTable,
       assignments: Seq[Assignment],
       condition: Option[Expression],
-      tSet: AttributeSet): Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal, OuterReference, ScalarSubquery}
+      tSet: AttributeSet,
+      modeProperty: String): Option[LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, ScalarSubquery}
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Average, AggregateExpression, Count, Max, Min, Sum}
     val subs = assignments.flatMap(_.value.collect {
       case s: ScalarSubquery if s.outerAttrs.nonEmpty => s
@@ -391,8 +320,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // the WHERE must carry no subquery of its own: combining a
           // lowered condition arm with a lowered assignment would need
           // two different merge sources
-          condition.forall(!_.exists(
-            _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression])) =>
+          condition.forall(!_.exists(_.isInstanceOf[SubqueryExpression])) =>
         def strip(p: LogicalPlan): LogicalPlan = p match {
           case SubqueryAlias(_, c) => strip(c)
           case other => other
@@ -406,8 +334,8 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
             // substitution would then be silently wrong for keyless rows
             // (the count-bug's general form)
             def bare(e: Expression): Expression = e match {
-              case org.apache.spark.sql.catalyst.expressions.Alias(c, _) => bare(c)
-              case c: org.apache.spark.sql.catalyst.expressions.Cast => bare(c.child)
+              case Alias(c, _) => bare(c)
+              case c: Cast => bare(c.child)
               case other => other
             }
             // the value the keyless (empty-group) arm substitutes for
@@ -433,30 +361,22 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
             }
             if (emptyGroupValue.isEmpty ||
               outExpr.exists(_.isInstanceOf[OuterReference])) None
-            else decorrelate(aggChild, tSet).flatMap { case (pairs, child) =>
-              val keyAls = pairs.map(_._2).zipWithIndex.map {
-                case (a, i) => Alias(a, s"__gkey$i")()
-              }
+            else equiDecorrelate(aggChild, tSet).map { case (pairs, child) =>
+              val (keys, keyAls) = keyAliases(pairs)
               val valAl = outExpr match {
                 case Alias(c, _) => Alias(c, "__gval")()
                 case other => Alias(other, "__gval")()
               }
               val srcPlan = Aggregate(pairs.map(_._2), keyAls :+ valAl, child, None)
-              val keys = pairs.map(_._1.name).zip(keyAls.map(_.name))
               val sSet = srcPlan.outputSet
-              def sets(repl: Expression): Map[String, Column] =
-                assignments.map(a => topLevelName(a.key, "UPDATE") ->
-                  xlate(a.value.transform {
-                    case s2: ScalarSubquery if s2 == sub => repl
-                  }, tSet, sSet)).toMap
+              def update(repl: Expression) = Merge.Update(sets(assignments.map(a =>
+                a.copy(value = a.value.transform { case s2: ScalarSubquery if s2 == sub => repl })),
+                "UPDATE", tSet, sSet))
               val cond = condition.map(xlate(_, tSet, sSet))
-              Some(GraftMergeCommand(t.snapTable, srcPlan, keys,
-                matchedClauses = Seq(Merge.WhenMatched(
-                  Merge.Update(sets(valAl.toAttribute)), cond)),
-                notMatchedClauses = Nil,
-                notMatchedBySourceClauses = Seq(Merge.WhenNotMatchedBySource(
-                  Merge.Update(sets(emptyGroupValue.get)), cond)),
-                modeProperty = "write.update.mode"))
+              GraftMergeCommand(t.snapTable, srcPlan, keys,
+                Seq(Merge.WhenMatched(update(valAl.toAttribute), cond)), Nil,
+                Seq(Merge.WhenNotMatchedBySource(update(emptyGroupValue.get), cond)),
+                modeProperty)
             }
           case _ => None
         }
@@ -464,33 +384,27 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** Decorrelate an equality-correlated subquery plan: exactly one
-    * Filter carries every outer reference; each of its outer-referencing
-    * conjuncts must be a plain `inner-attr = outer(target-attr)`
-    * equality (either order); every node ABOVE that Filter must be
+  /** Decorrelate a correlated subquery plan: exactly one Filter carries
+    * every outer reference; every node ABOVE that Filter must be
     * row-set-preserving (Project / SubqueryAlias / Distinct — so
     * discarding them cannot change which key tuples exist); no nested
-    * subquery anywhere (an outer reference hiding inside one would
-    * escape the audit). Returns (target-attr -> inner-attr correlation
-    * pairs, the Filter's child re-filtered by the inner-only conjuncts)
-    * — i.e. exactly the relation a semi/anti join needs.
+    * subquery anywhere (an outer reference hiding inside one would escape
+    * the audit). The Filter's outer-referencing conjuncts split into
+    * plain `inner-attr = outer(target-attr)` equalities (either order)
+    * and THETA conjuncts (`s.ts < t.ts`, `s.v > t.bal / 2`, ...), each of
+    * which must be closed over the two relations: outer references wrap
+    * plain target attributes, every other attribute belongs to the
+    * subquery child. Returns (target-attr -> inner-attr equality pairs,
+    * theta conjuncts, the Filter's child re-filtered by the inner-only
+    * conjuncts) — exactly the relation a semi/anti join needs.
     */
   private def decorrelate(plan: LogicalPlan, tSet: AttributeSet)
-      : Option[(Seq[(AttributeReference, AttributeReference)], LogicalPlan)] = {
-    import org.apache.spark.sql.catalyst.expressions.{OuterReference, SubqueryExpression}
-    def outerCount(e: Expression): Int = {
-      var n = 0
-      e.foreach { case _: OuterReference => n += 1; case _ => () }
-      n
-    }
+      : Option[(Seq[(AttributeReference, AttributeReference)], Seq[Expression], LogicalPlan)] = {
+    def outerCount(e: Expression): Int = e.collect { case o: OuterReference => o }.size
     if (plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression]))))
       return None
-    val planOuter = plan.collect { case n => n }
-      .map(_.expressions.map(outerCount).sum).sum
-    val corrFilters = plan.collect {
-      case f: Filter if outerCount(f.condition) > 0 => f
-    }
-    corrFilters match {
+    val planOuter = plan.collect { case n => n.expressions.map(outerCount).sum }.sum
+    plan.collect { case f: Filter if outerCount(f.condition) > 0 => f } match {
       case Seq(f) if outerCount(f.condition) == planOuter =>
         // every node above the filter must preserve the key-tuple set
         def pathOk(p: LogicalPlan): Boolean = p match {
@@ -500,121 +414,61 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case Distinct(child) => pathOk(child)
           case _ => false
         }
-        if (!pathOk(plan)) return None
+        def inner(a: AttributeReference) = f.child.outputSet.contains(a)
+        def closed(e: Expression): Boolean = e match {
+          case OuterReference(o: AttributeReference) => tSet.contains(o)
+          case _: OuterReference => false
+          case a: AttributeReference => inner(a)
+          case other => other.children.forall(closed)
+        }
         val (corrArms, innerArms) = splitConj(f.condition).partition(outerCount(_) > 0)
-        val pairs = corrArms.map {
+        val (pairs, thetas) = corrArms.partitionMap {
           case EqualTo(a: AttributeReference, OuterReference(o: AttributeReference))
-              if tSet.contains(o) && f.child.outputSet.contains(a) => Some(o -> a)
+              if tSet.contains(o) && inner(a) => Left(o -> a)
           case EqualTo(OuterReference(o: AttributeReference), a: AttributeReference)
-              if tSet.contains(o) && f.child.outputSet.contains(a) => Some(o -> a)
-          case _ => None
+              if tSet.contains(o) && inner(a) => Left(o -> a)
+          case e => Right(e)
         }
-        if (pairs.exists(_.isEmpty)) None
-        else Some((pairs.flatten,
-          innerArms.reduceOption(And).map(Filter(_, f.child)).getOrElse(f.child)))
-      case _ => None
-    }
-  }
-
-  /** [[decorrelate]]'s relaxation for EXISTS semantics: the correlated
-    * Filter's outer-referencing conjuncts split into plain equalities
-    * (the join KEYS — at least one is required, so the lowered join is
-    * always equi-keyed, never a nested loop) and arbitrary THETA
-    * residuals (`s.ts < t.ts`, `s.v > t.bal / 2`, ...), which ride the
-    * same join as extra conditions. Safe for [NOT] EXISTS only: row
-    * multiplicity is irrelevant there, so duplicate key tuples across
-    * distinct theta values cannot change the answer the way they would
-    * break a MERGE-cardinality lowering. Each theta conjunct must be
-    * closed over the two relations: outer references wrap plain target
-    * attributes, every other attribute belongs to the subquery child.
-    * Returns (equality pairs, theta conjuncts, inner-filtered child).
-    */
-  private def decorrelateTheta(plan: LogicalPlan, tSet: AttributeSet)
-      : Option[(Seq[(AttributeReference, AttributeReference)],
-          Seq[Expression], LogicalPlan)] = {
-    import org.apache.spark.sql.catalyst.expressions.{OuterReference, SubqueryExpression}
-    def outerCount(e: Expression): Int = {
-      var n = 0
-      e.foreach { case _: OuterReference => n += 1; case _ => () }
-      n
-    }
-    if (plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[SubqueryExpression]))))
-      return None
-    val planOuter = plan.collect { case n => n }
-      .map(_.expressions.map(outerCount).sum).sum
-    val corrFilters = plan.collect {
-      case f: Filter if outerCount(f.condition) > 0 => f
-    }
-    corrFilters match {
-      case Seq(f) if outerCount(f.condition) == planOuter =>
-        def pathOk(p: LogicalPlan): Boolean = p match {
-          case x if x eq f => true
-          case Project(_, child) => pathOk(child)
-          case SubqueryAlias(_, child) => pathOk(child)
-          case Distinct(child) => pathOk(child)
-          case _ => false
-        }
-        if (!pathOk(plan)) return None
-        val (corrArms, innerArms) = splitConj(f.condition).partition(outerCount(_) > 0)
-        def asPair(e: Expression): Option[(AttributeReference, AttributeReference)] =
-          e match {
-            case EqualTo(a: AttributeReference, OuterReference(o: AttributeReference))
-                if tSet.contains(o) && f.child.outputSet.contains(a) => Some(o -> a)
-            case EqualTo(OuterReference(o: AttributeReference), a: AttributeReference)
-                if tSet.contains(o) && f.child.outputSet.contains(a) => Some(o -> a)
-            case _ => None
-          }
-        def closedTheta(e: Expression): Boolean = {
-          var ok = true
-          def walk(x: Expression): Unit = x match {
-            case OuterReference(o: AttributeReference) =>
-              if (!tSet.contains(o)) ok = false
-            case _: OuterReference => ok = false
-            case a: AttributeReference =>
-              if (!f.child.outputSet.contains(a)) ok = false
-            case other => other.children.foreach(walk)
-          }
-          walk(e); ok
-        }
-        val (pairs, thetas) = corrArms.partitionMap(e =>
-          asPair(e).toLeft(e))
-        if (pairs.isEmpty || thetas.isEmpty || !thetas.forall(closedTheta)) None
+        if (!pathOk(plan) || !thetas.forall(closed)) None
         else Some((pairs, thetas,
           innerArms.reduceOption(And).map(Filter(_, f.child)).getOrElse(f.child)))
       case _ => None
     }
   }
 
-  /** DELETE-only companion to [[extractSubqueryArm]], tried after it
-    * declines: exactly ONE conjunct is a correlated `[NOT] EXISTS` whose
-    * correlation mixes plain equalities with theta residuals
-    * ([[decorrelateTheta]]). Returns (negated, source plan projecting
-    * `__gkeyN` key + `__gresN` theta columns, target-col -> key-col
-    * pairs, the theta join condition over `__t`/`__s` frames, remaining
-    * plain conjuncts). UPDATE keeps the refusal: its MERGE lowering
-    * needs key-unique sources, which theta duplicates would break.
+  /** [[decorrelate]] for the key joins: equality correlation only. */
+  private def equiDecorrelate(plan: LogicalPlan, tSet: AttributeSet)
+      : Option[(Seq[(AttributeReference, AttributeReference)], LogicalPlan)] =
+    decorrelate(plan, tSet).collect { case (pairs, Seq(), child) => (pairs, child) }
+
+  /** DELETE's fallback when [[extractSubqueryArm]] declines: the one
+    * subquery conjunct is a correlated `[NOT] EXISTS` whose correlation
+    * mixes plain equalities (the join KEYS — at least one is required,
+    * so the lowered join is always equi-keyed, never a nested loop) with
+    * theta residuals ([[decorrelate]]), which ride the same join as extra
+    * conditions. Safe for [NOT] EXISTS only: row multiplicity is
+    * irrelevant there, so duplicate key tuples across distinct theta
+    * values cannot change the answer. The source projects `__gkeyN` key
+    * and `__gresN` theta columns; the thetas become one join condition
+    * over the `__t`/`__s` frames. UPDATE keeps the refusal: its MERGE
+    * lowering needs key-unique sources, which theta duplicates would break.
     */
-  private def extractThetaExistsArm(cond: Expression, tSet: AttributeSet)
-      : Option[(Boolean, LogicalPlan, Seq[(String, String)], Column, Option[Expression])] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Exists, ListQuery, Not, OuterReference}
-    val arms = splitConj(cond)
-    def lowerable(e: Expression): Boolean = e.exists {
-      case _: ListQuery => true
-      case ex: Exists => ex.outerAttrs.nonEmpty
-      case _ => false
-    }
-    val subArms = arms.filter(lowerable)
-    if (subArms.size != 1) return None
-    val rest = arms.filterNot(_ eq subArms.head).reduceOption(And)
-    val (negated, ex) = subArms.head match {
-      case Not(e: Exists) if e.outerAttrs.nonEmpty && e.plan.resolved => (true, e)
-      case e: Exists if e.outerAttrs.nonEmpty && e.plan.resolved => (false, e)
-      case _ => return None
-    }
-    decorrelateTheta(ex.plan, tSet).map { case (pairs, thetas, child) =>
-      val keyAls = pairs.map(_._2).zipWithIndex.map {
-        case (a, i) => Alias(a, s"__gkey$i")()
+  private def lowerThetaExistsDelete(
+      t: GraftSparkTable,
+      cond: Expression,
+      tSet: AttributeSet,
+      modeProperty: String): Option[LogicalPlan] =
+    for {
+      (arm, rest) <- subqueryConjunct(cond)
+      (negated, ex) <- arm match {
+        case Not(e: Exists) if e.outerAttrs.nonEmpty && e.plan.resolved => Some((true, e))
+        case e: Exists if e.outerAttrs.nonEmpty && e.plan.resolved => Some((false, e))
+        case _ => None
       }
+      (pairs, thetas, child) <- decorrelate(ex.plan, tSet)
+      if pairs.nonEmpty && thetas.nonEmpty
+    } yield {
+      val (keys, keyAls) = keyAliases(pairs)
       // inner attributes the thetas reference (NOT the ones inside
       // OuterReference wrappers — those are target-side), aliased into
       // the source frame under collision-free names
@@ -628,19 +482,17 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         case (a, i) => Alias(a, s"__gres$i")()
       }
       val resMap = resAttrs.map(_.exprId).zip(resAls.map(_.name)).toMap
-      // no Distinct: semi/anti joins are duplicate-insensitive, and a
-      // distinct over keys+thetas would buy one extra shuffle for nothing
-      val srcPlan = Project(keyAls ++ resAls, child)
       val theta = GraftSqlShim.column(thetas.map(_.transform {
         case OuterReference(a: AttributeReference) =>
           UnresolvedAttribute(Seq("__t", a.name))
         case a: AttributeReference if resMap.contains(a.exprId) =>
           UnresolvedAttribute(Seq("__s", resMap(a.exprId)))
       }).reduce(And))
-      (negated, srcPlan: LogicalPlan,
-        pairs.map(_._1.name).zip(keyAls.map(_.name)), theta, rest)
+      // no Distinct: semi/anti joins are duplicate-insensitive, and a
+      // distinct over keys+thetas would buy one extra shuffle for nothing
+      GraftThetaExistsDeleteCommand(t.snapTable, Project(keyAls ++ resAls, child), keys,
+        theta, negated, rest.map(xlate(_, tSet, AttributeSet.empty)), modeProperty)
     }
-  }
 
   /** Trace `attrs` (output attributes of `plan`) down through the
     * row-preserving nodes to attributes available at `stop`'s level
@@ -649,12 +501,9 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     */
   private def resolveThrough(
       plan: LogicalPlan,
-      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      attrs: Seq[Attribute],
       stop: LogicalPlan): Option[Seq[AttributeReference]] = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    def walk(p: LogicalPlan,
-        cur: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
-        : Option[Seq[AttributeReference]] = p match {
+    def walk(p: LogicalPlan, cur: Seq[Attribute]): Option[Seq[AttributeReference]] = p match {
       case _ if cur.forall(a => stop.outputSet.contains(a)) =>
         Some(cur.map(_.asInstanceOf[AttributeReference]))
       case Project(list, child) =>
@@ -688,7 +537,9 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   /** Lift a resolved expression out of the command into a Column over
     * the engine's rewrite frames: target refs become `__t.<name>`
-    * (plain `<name>` for single-table UPDATE), source refs `__s.<name>`.
+    * (plain `<name>` when `sSet` is empty: the single-table frame of
+    * [[SnapshotTable.update]] / [[SnapshotTable.delete]]), source refs
+    * `__s.<name>`.
     *
     * UNCORRELATED SCALAR subqueries are supported: SQL evaluates them
     * once per statement, so they lift as a [[DeferredScalarSubquery]]
@@ -705,13 +556,13 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case s: org.apache.spark.sql.catalyst.expressions.ScalarSubquery
           if s.outerAttrs.isEmpty && s.plan.resolved =>
         DeferredScalarSubquery(s.plan)
-      case ex: org.apache.spark.sql.catalyst.expressions.Exists
+      case ex: Exists
           if ex.outerAttrs.isEmpty && ex.plan.resolved =>
         // uncorrelated EXISTS is a statement-level boolean (SQL
         // evaluates it once): defer to run time like scalar subqueries
         DeferredExistsSubquery(ex.plan)
     }
-    if (prepared.exists(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.SubqueryExpression]))
+    if (prepared.exists(_.isInstanceOf[SubqueryExpression]))
       throw new UnsupportedOperationException(
         s"unsupported subquery shape in DML ($e): supported are uncorrelated " +
           "SCALAR and EXISTS subqueries anywhere in UPDATE/MERGE conditions " +
@@ -735,11 +586,16 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
     })
   }
 
-  private def topLevelName(key: Expression, verb: String): String = key match {
-    case a: AttributeReference => a.name
-    case other => throw new UnsupportedOperationException(
-      s"$verb assigns to a nested field ($other); only top-level columns are supported")
-  }
+  /** `assignments` as column name -> value over the frame [[xlate]] maps
+    * `tSet` / `sSet` to; `verb` names the statement in the refusal of an
+    * assignment to a nested field.
+    */
+  private def sets(assignments: Seq[Assignment], verb: String, tSet: AttributeSet,
+      sSet: AttributeSet): Map[String, Column] = assignments.map {
+    case Assignment(a: AttributeReference, value) => a.name -> xlate(value, tSet, sSet)
+    case a => throw new UnsupportedOperationException(
+      s"$verb assigns to a nested field (${a.key}); only top-level columns are supported")
+  }.toMap
 
   private def splitConj(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConj(l) ++ splitConj(r)
@@ -771,9 +627,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case da: DeleteAction =>
         Merge.WhenMatched(Merge.Delete, da.condition.map(xlate(_, tSet, sSet)))
       case ua: UpdateAction =>
-        Merge.WhenMatched(
-          Merge.Update(ua.assignments.map(a =>
-            topLevelName(a.key, "MERGE UPDATE") -> xlate(a.value, tSet, sSet)).toMap),
+        Merge.WhenMatched(Merge.Update(sets(ua.assignments, "MERGE UPDATE", tSet, sSet)),
           ua.condition.map(xlate(_, tSet, sSet)))
       case other => throw new UnsupportedOperationException(
         s"unsupported WHEN MATCHED action: $other")
@@ -783,9 +637,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case is: InsertStarAction =>
         Merge.WhenNotMatched(Merge.InsertAll, is.condition.map(xlate(_, tSet, sSet)))
       case ia: InsertAction =>
-        Merge.WhenNotMatched(
-          Merge.Insert(ia.assignments.map(a =>
-            topLevelName(a.key, "MERGE INSERT") -> xlate(a.value, tSet, sSet)).toMap),
+        Merge.WhenNotMatched(Merge.Insert(sets(ia.assignments, "MERGE INSERT", tSet, sSet)),
           ia.condition.map(xlate(_, tSet, sSet)))
       case other => throw new UnsupportedOperationException(
         s"unsupported WHEN NOT MATCHED action: $other")
@@ -800,8 +652,7 @@ final class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
           Merge.WhenNotMatchedBySource(Merge.Delete, da.condition.map(xlate(_, tSet, sSet)))
         case ua: UpdateAction =>
           Merge.WhenNotMatchedBySource(
-            Merge.Update(ua.assignments.map(a =>
-              topLevelName(a.key, "MERGE UPDATE") -> xlate(a.value, tSet, sSet)).toMap),
+            Merge.Update(sets(ua.assignments, "MERGE UPDATE", tSet, sSet)),
             ua.condition.map(xlate(_, tSet, sSet)))
         case other => throw new UnsupportedOperationException(
           s"unsupported WHEN NOT MATCHED BY SOURCE action: $other")
@@ -862,6 +713,12 @@ object DeferredScalarSubquery {
           GraftSqlShim.ofRows(spark, p).limit(1).collect().nonEmpty,
           org.apache.spark.sql.types.BooleanType)
     })
+
+  /** [[materialize]] every value an UPDATE action assigns. */
+  def materialize(spark: SparkSession, a: Merge.Matched): Merge.Matched = a match {
+    case Merge.Update(sets) => Merge.Update(sets.map { case (k, v) => k -> materialize(spark, v) })
+    case other => other
+  }
 }
 
 /** Placeholder carrying an uncorrelated EXISTS subquery's resolved plan
@@ -889,31 +746,38 @@ private[catalog] object RowWrite {
     graft.governance.AccessControl.checkTableAccess(spark,
       table.fullName.split("\\.", 2).last, table.fullName, "write")
 
-  /** UPDATE `rows` with `sets`, or DELETE them when there are none. */
+  /** UPDATE or DELETE `rows` as `action` says, its deferred subqueries
+    * materialized.
+    */
   def apply(spark: SparkSession, table: SnapshotTable, rows: Rows,
-      sets: Option[Map[String, Column]], modeProperty: String): Unit = {
+      action: Merge.Matched, modeProperty: String): Unit = {
     val mode = WriteMode.of(table, modeProperty)
-    sets.fold(table.delete(spark, rows, mode))(table.update(spark, rows, _, mode)): Unit
+    DeferredScalarSubquery.materialize(spark, action) match {
+      case Merge.Update(sets) => table.update(spark, rows, sets, mode): Unit
+      case Merge.Delete => table.delete(spark, rows, mode): Unit
+      case other => throw new IllegalArgumentException(s"not a row-level action: $other")
+    }
   }
 }
 
 /** Executable lowering of `UPDATE graft.ns.t SET ... [WHERE ...]`
-  * (`sets` defined) and of `DELETE FROM graft.ns.t WHERE <cond>` whose
-  * condition cannot ride the DSv2 filter push-down (deferred scalar/
-  * EXISTS subqueries, arbitrary expressions): statement-level subqueries
-  * materialize to literals at run time, then the rows the condition
-  * holds on are written in `modeProperty`'s [[WriteMode]].
+  * (`action` = `Merge.Update`) and of `DELETE FROM graft.ns.t WHERE
+  * <cond>` whose condition cannot ride the DSv2 filter push-down
+  * (deferred scalar/EXISTS subqueries, arbitrary expressions):
+  * statement-level subqueries materialize to literals at run time, then
+  * the rows the condition holds on are written in `modeProperty`'s
+  * [[WriteMode]].
   */
 final case class GraftRowLevelCommand(
     @transient table: SnapshotTable,
     cond: Option[Column],
-    sets: Option[Map[String, Column]],
+    action: Merge.Matched,
     modeProperty: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     RowWrite.authorize(spark, table)
-    def m(c: Column) = DeferredScalarSubquery.materialize(spark, c)
-    RowWrite(spark, table, Rows.Where(cond.map(m).getOrElse(lit(true))),
-      sets.map(_.map { case (k, v) => k -> m(v) }), modeProperty)
+    RowWrite(spark, table, Rows.Where(
+      cond.map(DeferredScalarSubquery.materialize(spark, _)).getOrElse(lit(true))),
+      action, modeProperty)
     Nil
   }
 }
@@ -942,27 +806,28 @@ final case class GraftDeleteInCommand(
 }
 
 /** Executable lowering of `UPDATE/DELETE ... WHERE k NOT IN (SELECT …)`
-  * — SQL's null-aware NOT IN, branched at RUN time with two limit-1
-  * probes of the (DISTINCT'd) subquery keys:
+  * — SQL's null-aware NOT IN, branched at RUN time by one aggregate job
+  * over the (DISTINCT'd) subquery keys, `count(*)` against `count(k)`:
   *  - any NULL key → `k <> NULL` is UNKNOWN for every row, so NOT IN is
   *    never TRUE: the whole statement is a no-op;
   *  - empty subquery → NOT IN is TRUE for EVERY row (NULL target keys
   *    included): run the plain engine update/delete with the residual
-  *    condition only;
+  *    condition `cond` only;
   *  - otherwise → MERGE's third arm (WHEN NOT MATCHED BY SOURCE), an
   *    anti-join of the key frame, with `k IS NOT NULL` folded into the
   *    clause condition (a NULL target key against a non-empty list is
   *    UNKNOWN — the anti-join alone would wrongly touch those rows).
-  * The key frame stays a distributed plan; nothing but the two one-row
-  * probes ever reaches the driver.
+  * `action` and `cond` are over the plain target frame, which both
+  * paths resolve: the merge source holds only the `__gkey0` column.
+  * The key frame stays a distributed plan; nothing but the one-row
+  * probe ever reaches the driver.
   */
 final case class GraftNotInCommand(
     @transient table: SnapshotTable,
     @transient keysPlan: LogicalPlan,
     keys: Seq[(String, String)],
-    bySourceClause: Merge.WhenNotMatchedBySource,
-    plainCond: Option[Column],
-    plainSets: Option[Map[String, Column]],
+    action: Merge.Matched,
+    cond: Option[Column],
     modeProperty: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     RowWrite.authorize(spark, table)
@@ -985,20 +850,19 @@ final case class GraftNotInCommand(
       org.apache.spark.sql.functions.count(col(kCol)).as("nn")).head()
     if (probe.getLong(0) > probe.getLong(1)) return Nil // a NULL key: no-op
     if (probe.getLong(0) == 0L)
-      GraftRowLevelCommand(table, plainCond, plainSets, modeProperty).run(spark)
+      GraftRowLevelCommand(table, cond, action, modeProperty).run(spark)
     else {
       // the merge consumes the SAME (possibly checkpointed) frame the
-      // probes classified — never a fresh evaluation of keysPlan
-      GraftMergeCommand(table, src.queryExecution.analyzed, keys,
-        matchedClauses = Nil, notMatchedClauses = Nil,
-        notMatchedBySourceClauses = Seq(bySourceClause),
-        modeProperty = modeProperty).run(spark)
+      // probe classified — never a fresh evaluation of keysPlan
+      val antiCond = cond.foldLeft(col(keys.head._1).isNotNull)(_ && _)
+      GraftMergeCommand(table, src.queryExecution.analyzed, keys, Nil, Nil,
+        Seq(Merge.WhenNotMatchedBySource(action, Some(antiCond))), modeProperty).run(spark)
     }
     Nil
   }
 }
 
-/** Executable lowering of `UPDATE ... SET ...` (`sets` defined) or
+/** Executable lowering of `UPDATE ... SET ...` (`action` = `Merge.Update`) or
   * `DELETE FROM graft.ns.t WHERE (a, b, ...) NOT IN (SELECT x, y, ...
   * FROM s)` — EXACT SQL null-aware semantics for the multi-column form,
   * which is null-aware per COLUMN: a target row is touched iff EVERY
@@ -1031,14 +895,14 @@ final case class GraftNotInMultiCommand(
     @transient table: SnapshotTable,
     @transient keysPlan: LogicalPlan,
     keys: Seq[(String, String)],
-    sets: Option[Map[String, Column]],
-    plainCond: Option[Column],
+    action: Merge.Matched,
+    cond: Option[Column],
     modeProperty: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     RowWrite.authorize(spark, table)
-    def m(c: Column) = DeferredScalarSubquery.materialize(spark, c)
-    NotInMultiRuntime.classify(spark, keysPlan, keys, plainCond.map(m)).foreach(rows =>
-      RowWrite(spark, table, rows, sets.map(_.map { case (k, v) => k -> m(v) }), modeProperty))
+    NotInMultiRuntime.classify(spark, keysPlan, keys,
+      cond.map(DeferredScalarSubquery.materialize(spark, _)))
+      .foreach(RowWrite(spark, table, _, action, modeProperty))
     Nil
   }
 }
@@ -1162,7 +1026,7 @@ final case class GraftThetaExistsDeleteCommand(
     keys: Seq[(String, String)],
     theta: Column,
     negated: Boolean,
-    plainCond: Option[Column],
+    cond: Option[Column],
     modeProperty: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     RowWrite.authorize(spark, table)
@@ -1172,11 +1036,11 @@ final case class GraftThetaExistsDeleteCommand(
     // the kept-rows complement) — a nondeterministic source must see
     // the SAME rows in each, or the COW rewrite corrupts
     val src = SourcePin.pin(spark, srcPlan).alias("__s")
-    val rest = plainCond.map(DeferredScalarSubquery.materialize(spark, _))
+    val rest = cond.map(DeferredScalarSubquery.materialize(spark, _))
     val joinCond = (keys.map { case (tk, sk) =>
       col(s"__t.$tk") === col(s"__s.$sk") } :+ theta).reduce(_ && _)
     RowWrite(spark, table, Rows.Matching(df => rest.map(df.filter).getOrElse(df).alias("__t")
-      .join(src, joinCond, if (negated) "left_anti" else "left_semi")), None, modeProperty)
+      .join(src, joinCond, if (negated) "left_anti" else "left_semi")), Merge.Delete, modeProperty)
     Nil
   }
 }
@@ -1201,18 +1065,17 @@ final case class GraftMergeCommand(
   extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     RowWrite.authorize(spark, table)
-    def m(c: Column) = DeferredScalarSubquery.materialize(spark, c)
-    def act(a: Merge.Matched): Merge.Matched = a match {
-      case Merge.Update(sets) => Merge.Update(sets.map { case (k, v) => k -> m(v) })
-      case other => other
-    }
+    import DeferredScalarSubquery.materialize
+    def cond(c: Option[Column]) = c.map(materialize(spark, _))
     table.merge(GraftSqlShim.ofRows(spark, sourcePlan), keys,
-      matchedClauses.map(c => Merge.WhenMatched(act(c.action), c.cond.map(m))),
+      matchedClauses.map(c => Merge.WhenMatched(materialize(spark, c.action), cond(c.cond))),
       notMatchedClauses.map(c => Merge.WhenNotMatched(c.action match {
-        case Merge.Insert(sets) => Merge.Insert(sets.map { case (k, v) => k -> m(v) })
+        case Merge.Insert(sets) =>
+          Merge.Insert(sets.map { case (k, v) => k -> materialize(spark, v) })
         case other => other
-      }, c.cond.map(m))),
-      notMatchedBySourceClauses.map(c => Merge.WhenNotMatchedBySource(act(c.action), c.cond.map(m))),
+      }, cond(c.cond))),
+      notMatchedBySourceClauses.map(c =>
+        Merge.WhenNotMatchedBySource(materialize(spark, c.action), cond(c.cond))),
       WriteMode.of(table, modeProperty))
     Nil
   }

@@ -408,7 +408,8 @@ class RowLevelSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
     // arithmetic cannot cross the DSv2 filter API; the rule must route
-    // to deleteRows instead of AnalysisException at planning
+    // to the row-level delete (SnapshotTable.delete) instead of an
+    // AnalysisException at planning
     spark.sql("DELETE FROM graft.ns.predt WHERE v * 2 > 500")
     assert(t.currentSnapshot.get.operation == "delete")
     assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq == Seq(1L),
@@ -438,7 +439,7 @@ class RowLevelSpec extends SparkSpec {
     spark.sql("""UPDATE graft.ns.ext SET bal = 0
                 |WHERE NOT EXISTS (SELECT 1 FROM rl_ex_keys WHERE k > 99) AND id = 2""".stripMargin)
     assert(t.read(spark).filter(col("id") === 2L).as[(Long, Double)].head()._2 == 0.0)
-    // DELETE with an EXISTS-gated predicate: COW deleteRows path
+    // DELETE with an EXISTS-gated predicate: the COW row-level delete
     spark.sql("""DELETE FROM graft.ns.ext
                 |WHERE EXISTS (SELECT 1 FROM rl_ex_keys) AND bal = 0.0""".stripMargin)
     assert(t.read(spark).select("id").as[Long].collect().toSeq == Seq(1L))
