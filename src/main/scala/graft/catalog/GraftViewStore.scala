@@ -1,10 +1,11 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import graft.sink.MetadataJson
+import graft.sink.MetadataJson.{JStr, obj, strObj, strs}
 import org.apache.spark.sql.connector.catalog.{Identifier, View}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -18,11 +19,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *
   * Layout: one JSON file per view at `warehouse/_views/<ns>.<name>.json`
   * (tables own `warehouse/<ns>.<name>/` directories — the `_views` dir
-  * can never collide with a table root). Writes are temp-file +
-  * ATOMIC_MOVE, same crash-safety discipline as the snapshot commit
-  * protocol. A view is TEXT, not data: reads re-expand the stored SQL
-  * against the current table state (the stored schema records the
-  * creation-time shape for listings and column aliasing).
+  * can never collide with a table root). Writes go through
+  * [[MetadataJson.write]], the same crash-safe temp-file publish as
+  * the snapshot commit protocol. A view is TEXT, not data: reads
+  * re-expand the stored SQL against the current table state (the stored
+  * schema records the creation-time shape for listings and column
+  * aliasing).
   */
 object GraftViewStore {
 
@@ -85,57 +87,38 @@ object GraftViewStore {
   def exists(warehouse: String, ident: Identifier): Boolean =
     ident.namespace.length == 1 && Files.exists(fileOf(warehouse, ident))
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
-  private def jArr(xs: Seq[String]): String =
-    xs.map(x => "\"" + esc(x) + "\"").mkString("[", ",", "]")
-
   def write(warehouse: String, v: StoredView): Unit = {
-    val json =
-      s"""{"namespace":"${esc(v.namespace)}","name":"${esc(v.name)}",
-         |"sql":"${esc(v.sql)}",
-         |"current_catalog":"${esc(v.currentCatalog)}",
-         |"current_namespace":${jArr(v.currentNamespace)},
-         |"schema":"${esc(v.schemaJson)}",
-         |"query_column_names":${jArr(v.queryColumnNames)},
-         |"column_aliases":${jArr(v.columnAliases)},
-         |"properties":{${v.properties.toSeq.sortBy(_._1)
-            .map { case (k, p) => s""""${esc(k)}":"${esc(p)}"""" }.mkString(",")}}}""".stripMargin
     val target = fileOf(warehouse, Identifier.of(Array(v.namespace), v.name))
     Files.createDirectories(target.getParent)
-    val tmp = target.getParent.resolve(s".${target.getFileName}.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING): Unit
+    MetadataJson.write(target, obj(
+      "namespace" -> JStr(v.namespace),
+      "name" -> JStr(v.name),
+      "sql" -> JStr(v.sql),
+      "current_catalog" -> JStr(v.currentCatalog),
+      "current_namespace" -> strs(v.currentNamespace),
+      "schema" -> JStr(v.schemaJson),
+      "query_column_names" -> strs(v.queryColumnNames),
+      "column_aliases" -> strs(v.columnAliases),
+      "properties" -> strObj(v.properties)))
   }
 
-  def read(warehouse: String, ident: Identifier): Option[StoredView] = {
-    if (ident.namespace.length != 1) return None
-    val f = fileOf(warehouse, ident)
-    val json =
-      try Files.readString(f)
-      catch { case _: java.io.IOException => return None } // racing drop: absent
-    val o = MetadataJson.parse(json).asObj
-    def arr(k: String): Seq[String] = o(k).asArr.map(_.asStr)
-    Some(StoredView(
-      namespace = o("namespace").asStr,
-      name = o("name").asStr,
-      sql = o("sql").asStr,
-      currentCatalog = o("current_catalog").asStr,
-      currentNamespace = arr("current_namespace"),
-      schemaJson = o("schema").asStr,
-      queryColumnNames = arr("query_column_names"),
-      columnAliases = arr("column_aliases"),
-      properties = o("properties").asObj.map { case (k, p) => k -> p.asStr }))
-  }
+  def read(warehouse: String, ident: Identifier): Option[StoredView] =
+    if (ident.namespace.length != 1) None
+    // a racing drop reads as absent
+    else MetadataJson.read(fileOf(warehouse, ident)).map { json =>
+      val o = json.asObj
+      def arr(k: String): Seq[String] = o(k).asArr.map(_.asStr)
+      StoredView(
+        namespace = o("namespace").asStr,
+        name = o("name").asStr,
+        sql = o("sql").asStr,
+        currentCatalog = o("current_catalog").asStr,
+        currentNamespace = arr("current_namespace"),
+        schemaJson = o("schema").asStr,
+        queryColumnNames = arr("query_column_names"),
+        columnAliases = arr("column_aliases"),
+        properties = o("properties").asObj.map { case (k, p) => k -> p.asStr })
+    }
 
   def list(warehouse: String, namespace: String): Seq[Identifier] = {
     val dir = viewsDir(warehouse)

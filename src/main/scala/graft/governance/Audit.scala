@@ -5,6 +5,7 @@ import java.time.format.DateTimeFormatter
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
+import graft.sink.MetadataJson.quote
 import org.slf4j.LoggerFactory
 
 /** Structured JSON audit events — same five-event taxonomy as the reference
@@ -25,10 +26,9 @@ object Audit {
       details: Map[String, String]
   ) {
     def toJson: String = {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
       val det = details.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ", ", "}")
-      s"""{"event": ${q(event)}, "table": ${q(table)}, "timestamp": ${q(timestamp)}, "details": $det}"""
+        .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ", ", "}")
+      s"""{"event": ${quote(event)}, "table": ${quote(table)}, "timestamp": ${quote(timestamp)}, "details": $det}"""
     }
   }
 

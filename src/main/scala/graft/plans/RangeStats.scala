@@ -1,9 +1,10 @@
 package graft.plans
 
 import java.io.File
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.sink.MetadataJson
+import graft.sink.MetadataJson.{JArr, JStr, num, obj}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
@@ -136,14 +137,12 @@ object RangeStats {
     }
 
   /** Persist a dir's range sidecar from already-collected entries. */
-  def writeEntries(dataDir: String, rows: Long, entries: Seq[(String, ColRange)]): Unit = {
-    val json = s"""{"rows":$rows,"cols":[""" + entries.map { case (n, c) =>
-      val mn = c.min.map(v => s""","min":"${jsonEscape(v)}"""").getOrElse("")
-      val mx = c.max.map(v => s""","max":"${jsonEscape(v)}"""").getOrElse("")
-      s"""{"name":"${jsonEscape(n)}","nulls":${c.nulls}$mn$mx}"""
-    }.mkString(",") + "]}"
-    Files.write(sidecarPath(dataDir), json.getBytes(StandardCharsets.UTF_8)): Unit
-  }
+  def writeEntries(dataDir: String, rows: Long, entries: Seq[(String, ColRange)]): Unit =
+    MetadataJson.write(sidecarPath(dataDir), obj("rows" -> num(rows), "cols" -> JArr(entries.map {
+      case (n, c) =>
+        obj(Seq("name" -> JStr(n), "nulls" -> num(c.nulls)) ++
+          c.min.map("min" -> JStr(_)) ++ c.max.map("max" -> JStr(_)): _*)
+    })))
 
   /** Collect and persist the range sidecar for an existing dir with one
     * read-back aggregation job. The fallback path — the commit hot path
@@ -209,14 +208,14 @@ object RangeStats {
   def read(dataDir: String): Option[DirStats] = {
     val p = sidecarPath(dataDir)
     if (!Files.exists(p)) None
-    else Option(cache.computeIfAbsent(dataDir, _ => {
+    else Option(cache.computeIfAbsent(dataDir, _ =>
       // stats are an optimization, never a correctness input: malformed
       // sidecar content degrades to "no stats, dir unskippable" rather
       // than failing the read (unlike table METADATA, where corruption
-      // must fail loudly — see SnapshotTable.parse)
-      val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      try {
-        val o = graft.sink.MetadataJson.parse(json).asObj
+      // must fail loudly — see SnapshotTable.parse); a sidecar gone
+      // since the check is a miss (null: nothing cached)
+      try MetadataJson.read(p).map { json =>
+        val o = json.asObj
         val rows = o.get("rows").map(_.asLong).getOrElse(-1L)
         val cols = o.get("cols").map(_.asArr.map { cv =>
           val c = cv.asObj
@@ -224,10 +223,10 @@ object RangeStats {
             c.get("min").map(_.asStr), c.get("max").map(_.asStr))
         }.toMap).getOrElse(Map.empty[String, ColRange])
         DirStats(rows, cols)
-      } catch {
-        case _: graft.sink.MetadataJson.ParseException => DirStats(-1L, Map.empty)
-      }
-    }))
+      }.orNull
+      catch {
+        case _: MetadataJson.ParseException => DirStats(-1L, Map.empty)
+      }))
   }
 
   /** True when `stats` PROVE no row of the dir can satisfy `cond`:
@@ -381,17 +380,6 @@ object RangeStats {
         }
       case _ => None
     } catch { case _: NumberFormatException => None }
-
-  // -- tiny JSON helpers (same escaping contract as the snapshot sidecars) --
-
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '\\' => "\\\\"
-    case '"'  => "\\\""
-    case c @ ('[' | ']' | '{' | '}') => f"\\u${c.toInt}%04x"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
 }
 
 /** Optimizer rule: prune file-scan root directories whose range

@@ -1,8 +1,8 @@
 package graft.sink
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import graft.sink.MetadataJson.{JArr, JStr, num, obj}
 import graft.template.PartitionField
 
 /** The declared partition TRANSFORM spec of a table — `day(ts)`,
@@ -55,8 +55,7 @@ object DeclaredPartitionSpec {
     if (!Files.exists(path)) {
       spec.foreach(p => derivedName(p): Unit) // validate transforms early
       Files.createDirectories(path.getParent)
-      Files.write(path,
-        spec.map(fieldJson).mkString("[", ",", "]").getBytes(StandardCharsets.UTF_8)): Unit
+      MetadataJson.write(path, specJson(spec))
     } else evolve(tableRoot, spec)
   }
 
@@ -77,12 +76,9 @@ object DeclaredPartitionSpec {
     if (current == newSpec) return
     newSpec.foreach(p => derivedName(p): Unit) // validate transforms early
     val history = (parseFile(tableRoot, HistoryFileName) ++ current).distinct
-    val json = history.map(fieldJson).mkString("[", ",", "]")
     Files.createDirectories(Paths.get(tableRoot))
-    Files.write(Paths.get(tableRoot, HistoryFileName),
-      json.getBytes(StandardCharsets.UTF_8)): Unit
-    Files.write(Paths.get(tableRoot, FileName),
-      newSpec.map(fieldJson).mkString("[", ",", "]").getBytes(StandardCharsets.UTF_8)): Unit
+    MetadataJson.write(Paths.get(tableRoot, HistoryFileName), specJson(history))
+    MetadataJson.write(Paths.get(tableRoot, FileName), specJson(newSpec))
   }
 
   /** Current spec + every superseded spec's fields (deduplicated) — the
@@ -92,18 +88,12 @@ object DeclaredPartitionSpec {
   def readAll(tableRoot: String): Seq[PartitionField] =
     (read(tableRoot) ++ parseFile(tableRoot, HistoryFileName)).distinct
 
-  private def fieldJson(p: PartitionField): String =
-    s"""{"column":"${p.column}","transform":"${p.transform}","n":${p.n}}"""
+  private def specJson(spec: Seq[PartitionField]): JArr = JArr(spec.map(p =>
+    obj("column" -> JStr(p.column), "transform" -> JStr(p.transform), "n" -> num(p.n.toLong))))
 
-  private def parseFile(tableRoot: String, name: String): Seq[PartitionField] = {
-    val p = Paths.get(tableRoot, name)
-    if (!Files.exists(p)) Nil
-    else {
-      val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      MetadataJson.parse(json).asArr.map { v =>
-        val o = v.asObj
-        PartitionField(o("column").asStr, o("transform").asStr, o("n").asLong.toInt)
-      }
-    }
-  }
+  private def parseFile(tableRoot: String, name: String): Seq[PartitionField] =
+    MetadataJson.read(Paths.get(tableRoot, name)).map(_.asArr.map { v =>
+      val o = v.asObj
+      PartitionField(o("column").asStr, o("transform").asStr, o("n").asLong.toInt)
+    }).getOrElse(Nil)
 }

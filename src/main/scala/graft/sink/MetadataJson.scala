@@ -1,19 +1,28 @@
 package graft.sink
 
-/** Minimal recursive-descent JSON parser for the engine's own metadata
-  * sidecars (snapshots, refs, partition/file stats). Replaces the
-  * earlier regex-shape parsers: a regex anchored on structural
-  * characters is only correct while every writer escapes those
-  * characters perfectly — a real tokenizer makes the reader correct for
-  * ALL legal JSON, so writer and reader no longer have to agree on an
-  * escaping convention beyond the JSON standard itself.
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, NoSuchFileException, Path, StandardCopyOption}
+
+import scala.collection.immutable.VectorMap
+
+/** The JSON format of every metadata file the engine writes — snapshots,
+  * refs, properties, manifests, the per-dir sidecars, partition specs,
+  * saved views — and the one place that reads, renders and publishes it.
   *
-  * Deliberately tiny (no dependency, no reflection): objects, arrays,
-  * strings with full escape handling (including \uXXXX), numbers kept
-  * as raw text (callers choose Long vs Double — ids and timestamps must
-  * not round-trip through floating point), booleans, null. Throws
-  * [[MetadataJson.ParseException]] with the byte offset on malformed
-  * input — corrupted metadata must fail loudly, never half-parse.
+  * Reading is a minimal recursive-descent parser, not shape regexes: a
+  * regex anchored on structural characters is only correct while every
+  * writer escapes those characters perfectly, while a real tokenizer is
+  * correct for ALL legal JSON. Deliberately tiny (no dependency, no
+  * reflection): objects, arrays, strings with full escape handling
+  * (including \uXXXX), numbers kept as raw text (callers choose Long vs
+  * Double — ids and timestamps must not round-trip through floating
+  * point), booleans, null. Throws [[MetadataJson.ParseException]] with
+  * the byte offset on malformed input — corrupted metadata must fail
+  * loudly, never half-parse.
+  *
+  * Writing is [[render]] (compact, object fields in insertion order,
+  * strings through [[quote]]) and [[write]], the temp-file +
+  * ATOMIC_MOVE publish every metadata file goes through.
   */
 object MetadataJson {
 
@@ -50,6 +59,69 @@ object MetadataJson {
     extends RuntimeException(
       if (offset >= 0) s"metadata JSON parse error at offset $offset: $msg"
       else s"metadata JSON error: $msg")
+
+  /** An object whose fields render in the given order. */
+  def obj(fields: (String, JValue)*): JObj = JObj(VectorMap.from(fields))
+
+  /** A string-valued object with its keys sorted (properties, summaries). */
+  def strObj(m: Map[String, String]): JObj =
+    obj(m.toSeq.sortBy(_._1).map { case (k, v) => k -> JStr(v) }: _*)
+
+  def num(n: Long): JNum = JNum(n.toString)
+
+  def strs(xs: Seq[String]): JArr = JArr(xs.map(JStr))
+
+  /** The one JSON string escape, with the surrounding quotes. Besides
+    * `"`, `\` and control characters it writes `[ ] { }` as \u escapes:
+    * files written before the tokenizer carried them so, and the columns
+    * sidecar's raw bytes are the scan coalescer's schema key across old
+    * and new dirs, so the output must stay byte-identical.
+    */
+  def quote(s: String): String = {
+    val b = new java.lang.StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '\\' => b.append("\\\\")
+      case '"' => b.append("\\\"")
+      case c if c < ' ' || "[]{}".indexOf(c) >= 0 => b.append(f"\\u${c.toInt}%04x")
+      case c => b.append(c)
+    }
+    b.append('"').toString
+  }
+
+  /** Compact JSON: no whitespace, object fields in their map's order,
+    * numbers as their raw text.
+    */
+  def render(v: JValue): String = v match {
+    case JObj(fields) =>
+      fields.map { case (k, fv) => quote(k) + ":" + render(fv) }.mkString("{", ",", "}")
+    case JArr(values) => values.map(render).mkString("[", ",", "]")
+    case JStr(s) => quote(s)
+    case JNum(raw) => raw
+    case JBool(b) => b.toString
+    case JNull => "null"
+  }
+
+  /** Publish `v` as the whole content of `path`. */
+  def write(path: Path, v: JValue): Unit = write(path, render(v).getBytes(UTF_8))
+
+  /** Publish `bytes` as the whole content of `path`: written to a unique
+    * temp file beside it, then moved over it with ATOMIC_MOVE, so a
+    * reader sees the old file or the new one, never a partial write, and
+    * two writers never share a temp file. The temp name starts with `.`,
+    * so a leftover from a crash never reads as data.
+    */
+  def write(path: Path, bytes: Array[Byte]): Unit = {
+    val tmp = path.resolveSibling(s".${path.getFileName}.tmp-${java.util.UUID.randomUUID()}")
+    Files.write(tmp, bytes)
+    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
+  }
+
+  /** Parse the file at `path`; None when it does not exist, including
+    * when it is deleted between the existence check and the read.
+    */
+  def read(path: Path): Option[JValue] =
+    try Option.when(Files.exists(path))(parse(new String(Files.readAllBytes(path), UTF_8)))
+    catch { case _: NoSuchFileException => None }
 
   def parse(s: String): JValue = {
     val p = new Parser(s)

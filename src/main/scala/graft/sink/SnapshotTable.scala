@@ -2,9 +2,10 @@ package graft.sink
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import graft.governance.Audit
+import graft.sink.MetadataJson.{JArr, JBool, JStr, JValue, num, obj, strObj, strs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Parquet-mode snapshot table: the Iceberg-semantics subset the engine
@@ -187,9 +188,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     */
   def existsVisible: Boolean = snapshots.exists(s => !s.staged)
 
-  def snapshots: Seq[Snapshot] =
-    if (!exists) Nil
-    else parse(new String(Files.readAllBytes(metadataPath), StandardCharsets.UTF_8))
+  def snapshots: Seq[Snapshot] = MetadataJson.read(metadataPath).map(parse).getOrElse(Nil)
 
   /** The table's published state: staged (write-audit-publish) snapshots
     * are invisible until published.
@@ -1466,11 +1465,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // portable design artifact: an object-store port, where symlinks
       // don't exist, realizes the import by reading this listing.
       Files.createDirectories(Paths.get(dataDir))
-      val manifestJson = srcList.sortBy(_._2).map { case (abs, rel) =>
-        s"""{"path":"${jsonEscape(abs)}","rel":"${jsonEscape(rel)}","rows":${relRows(rel)}}"""
-      }.mkString("[", ",", "]")
-      Files.write(Paths.get(dataDir, SnapshotTable.ImportManifestName),
-        manifestJson.getBytes(StandardCharsets.UTF_8)): Unit
+      MetadataJson.write(Paths.get(dataDir, SnapshotTable.ImportManifestName),
+        JArr(srcList.sortBy(_._2).map { case (abs, rel) =>
+          obj("path" -> JStr(abs), "rel" -> JStr(rel), "rows" -> num(relRows(rel)))
+        }))
       // local-FS realization of the manifest: one symlink per imported
       // file (metadata-only syscalls — no data I/O), partition subdirs
       // recreated as real directories so relative structure (and with
@@ -1587,21 +1585,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
   private def propertiesPath = Paths.get(root, ".graft-properties.json")
 
   def properties: Map[String, String] =
-    if (!Files.exists(propertiesPath)) Map.empty
-    else {
-      val json = new String(Files.readAllBytes(propertiesPath), StandardCharsets.UTF_8)
-      MetadataJson.parse(json).asObj.map { case (k, v) => k -> v.asStr }
-    }
+    MetadataJson.read(propertiesPath)
+      .map(_.asObj.map { case (k, v) => k -> v.asStr }).getOrElse(Map.empty)
 
-  private def writeProperties(props: Map[String, String]): Unit = {
-    val json = props.toSeq.sortBy(_._1).map { case (k, v) =>
-      s""""${jsonEscape(k)}":"${jsonEscape(v)}""""
-    }.mkString("{", ",", "}")
-    val tmp = Paths.get(root, s".graft-properties.json.tmp-${System.nanoTime()}")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, propertiesPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  private def writeProperties(props: Map[String, String]): Unit =
+    MetadataJson.write(propertiesPath, strObj(props))
 
   /** Set (upsert) table properties — `ALTER TABLE ... SET TBLPROPERTIES`. */
   def setProperties(kv: Map[String, String]): Unit =
@@ -1634,32 +1622,23 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * and is never stored.
     */
   def refs: Seq[TableRef] =
-    if (!Files.exists(refsPath)) Nil
-    else {
-      val json = new String(Files.readAllBytes(refsPath), StandardCharsets.UTF_8)
-      MetadataJson.parse(json).asArr.map { v =>
-        val o = v.asObj
-        // retention fields are optional — refs written before the
-        // feature carry none and parse as policy-free
-        TableRef(o("name").asStr, o("type").asStr, o("snapshot_id").asLong,
-          maxRefAgeMs = o.get("max_ref_age_ms").map(_.asLong),
-          minSnapshotsToKeep = o.get("min_snapshots_to_keep").map(_.asLong.toInt),
-          maxSnapshotAgeMs = o.get("max_snapshot_age_ms").map(_.asLong))
-      }
-    }
+    MetadataJson.read(refsPath).map(_.asArr.map { v =>
+      val o = v.asObj
+      // retention fields are optional — refs written before the
+      // feature carry none and parse as policy-free
+      TableRef(o("name").asStr, o("type").asStr, o("snapshot_id").asLong,
+        maxRefAgeMs = o.get("max_ref_age_ms").map(_.asLong),
+        minSnapshotsToKeep = o.get("min_snapshots_to_keep").map(_.asLong.toInt),
+        maxSnapshotAgeMs = o.get("max_snapshot_age_ms").map(_.asLong))
+    }).getOrElse(Nil)
 
-  private def writeRefs(rs: Seq[TableRef]): Unit = {
-    val json = rs.map { r =>
-      val retention =
-        r.maxRefAgeMs.map(v => s""","max_ref_age_ms":$v""").getOrElse("") +
-          r.minSnapshotsToKeep.map(v => s""","min_snapshots_to_keep":$v""").getOrElse("") +
-          r.maxSnapshotAgeMs.map(v => s""","max_snapshot_age_ms":$v""").getOrElse("")
-      s"""{"name":"${jsonEscape(r.name)}","type":"${r.kind}","snapshot_id":${r.snapshotId}$retention}"""
-    }.mkString("[", ",", "]")
-    val tmp = Paths.get(root, s".refs.json.tmp-${System.nanoTime()}")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, refsPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+  private def writeRefs(rs: Seq[TableRef]): Unit =
+    MetadataJson.write(refsPath, JArr(rs.map { r =>
+      obj(Seq("name" -> JStr(r.name), "type" -> JStr(r.kind), "snapshot_id" -> num(r.snapshotId)) ++
+        r.maxRefAgeMs.map(v => "max_ref_age_ms" -> num(v)) ++
+        r.minSnapshotsToKeep.map(v => "min_snapshots_to_keep" -> num(v.toLong)) ++
+        r.maxSnapshotAgeMs.map(v => "max_snapshot_age_ms" -> num(v)): _*)
+    }))
 
   private def requireRef(name: String, kind: String): TableRef =
     refs.find(r => r.name == name && r.kind == kind).getOrElse(
@@ -2170,23 +2149,19 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * of one sidecar per dir. Paths are stored root-relative (the
     * object-store-portable form).
     */
-  private def readManifest(snapshotId: Long): Option[Seq[(String, String, String, Long, Long)]] = {
-    val p = manifestFilePath(snapshotId)
-    // read-then-catch, not exists-then-read: rewriteManifests deletes
-    // stale manifests under the commit lock, which readers don't take —
-    // a concurrent lister that loses that race falls back to the
-    // per-dir sidecars instead of surfacing NoSuchFileException
-    val json =
-      try new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      catch { case _: java.io.IOException => return None }
-    SnapshotTable.manifestReads.inc(root)
-    Some(MetadataJson.parse(json).asArr.map { v =>
-      val o = v.asObj
-      val dir = Paths.get(root, o("dir").asStr).toString
-      (new File(dir, o("file").asStr).getAbsolutePath,
-        dir, o("partition").asStr, o("bytes").asLong, o("rows").asLong)
-    })
-  }
+  private def readManifest(snapshotId: Long): Option[Seq[(String, String, String, Long, Long)]] =
+    // rewriteManifests deletes stale manifests under the commit lock,
+    // which readers don't take — a concurrent lister that loses that
+    // race reads None and falls back to the per-dir sidecars
+    MetadataJson.read(manifestFilePath(snapshotId)).map { json =>
+      SnapshotTable.manifestReads.inc(root)
+      json.asArr.map { v =>
+        val o = v.asObj
+        val dir = Paths.get(root, o("dir").asStr).toString
+        (new File(dir, o("file").asStr).getAbsolutePath,
+          dir, o("partition").asStr, o("bytes").asLong, o("rows").asLong)
+      }
+    }
 
   /** Iceberg's `rewrite_manifests`: consolidate the per-dir file
     * sidecars of the CURRENT snapshot into one root-level manifest
@@ -2207,17 +2182,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // paths, and relativize throws on mixed absolute/relative inputs
       // (a relative warehouse root is legal)
       val rootPath = Paths.get(root).toAbsolutePath
-      val json = entries.map { case (abs, d, part, bytes, rows) =>
-        val dirPath = Paths.get(d).toAbsolutePath
-        val relDir = rootPath.relativize(dirPath).toString
-        val relFile = dirPath.relativize(Paths.get(abs)).toString
-        s"""{"dir":"${jsonEscape(relDir)}","file":"${jsonEscape(relFile)}",""" +
-          s""""partition":"${jsonEscape(part)}","bytes":$bytes,"rows":$rows}"""
-      }.mkString("[", ",", "]")
-      val tmp = Paths.get(root, s".manifest.json.tmp-${System.nanoTime()}")
-      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, manifestFilePath(snap.id),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING): Unit
+      MetadataJson.write(manifestFilePath(snap.id), JArr(entries.map {
+        case (abs, d, part, bytes, rows) =>
+          val dirPath = Paths.get(d).toAbsolutePath
+          obj("dir" -> JStr(rootPath.relativize(dirPath).toString),
+            "file" -> JStr(dirPath.relativize(Paths.get(abs)).toString),
+            "partition" -> JStr(part), "bytes" -> num(bytes), "rows" -> num(rows))
+      }))
       Option(new File(root).listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.startsWith("manifest-") && f.getName.endsWith(".json") &&
           f.getName != s"manifest-${snap.id}.json")
@@ -3044,12 +3015,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * promotion it can be narrower than the table type, and the scan
     * coalescer must never merge dirs whose physical types differ.
     */
-  private def writeColumnsSidecar(dataDir: String, cols: Seq[TableColumn]): Unit = {
-    val json = cols.map(c =>
-      s"""{"id":${c.id},"name":"${jsonEscape(c.name)}","type":"${jsonEscape(c.dataType)}"}""")
-      .mkString("[", ",", "]")
-    Files.write(columnsSidecarPath(dataDir), json.getBytes(StandardCharsets.UTF_8)): Unit
-  }
+  private def writeColumnsSidecar(dataDir: String, cols: Seq[TableColumn]): Unit =
+    MetadataJson.write(columnsSidecarPath(dataDir), columnsJson(cols))
+
+  private def columnsJson(cols: Seq[TableColumn]): JArr = JArr(cols.map(c =>
+    obj("id" -> num(c.id.toLong), "name" -> JStr(c.name), "type" -> JStr(c.dataType))))
 
   /** Field-id -> physical-column-name mapping recorded when `dataDir`
     * was written; a dir predating the sidecar resolves every id by its
@@ -3058,14 +3028,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     */
   private def dirColumnMapping(dataDir: String, cols: Seq[TableColumn]): Map[Int, String] = {
     if (cols.isEmpty) return Map.empty
-    val p = columnsSidecarPath(dataDir)
-    if (Files.exists(p)) {
-      val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      MetadataJson.parse(json).asArr.map { v =>
-        val o = v.asObj
-        o("id").asLong.toInt -> o("name").asStr
-      }.toMap
-    } else cols.map(c => c.id -> c.name).toMap
+    MetadataJson.read(columnsSidecarPath(dataDir)).map(_.asArr.map { v =>
+      val o = v.asObj
+      o("id").asLong.toInt -> o("name").asStr
+    }.toMap).getOrElse(cols.map(c => c.id -> c.name).toMap)
   }
 
   /** Raw columns-sidecar content of a dir, used as the scan coalescer's
@@ -3231,10 +3197,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
         (filesByPart.keySet ++ rowsByPart.keySet).toSeq.sorted.map { p =>
           (p, filesByPart.getOrElse(p, 0L), rowsByPart.getOrElse(p, -1L))
         }
-    val json = stats.map { case (p, f, r) =>
-      s"""{"partition":"${jsonEscape(p)}","files":$f,"rows":$r}"""
-    }.mkString("[", ",", "]")
-    Files.write(sidecarPath(dataDir), json.getBytes(StandardCharsets.UTF_8)): Unit
+    MetadataJson.write(sidecarPath(dataDir), JArr(stats.map { case (p, f, r) =>
+      obj("partition" -> JStr(p), "files" -> num(f), "rows" -> num(r))
+    }))
     // per-FILE sidecar (the Iceberg manifest-entry role): path, size and
     // record count recorded AT COMMIT TIME for the just-written dir, so
     // the `$files` metadata table is a pure sidecar merge — zero data or
@@ -3250,12 +3215,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
           if (fs.size == 1 && knownRows.getOrElse(p, -1L) >= 0) knownRows(p)
           else if (format == "parquet") SnapshotTable.parquetRecordCount(f)
           else -1L)
-        val rel = base.toPath.relativize(f.toPath).toString
-        s"""{"file":"${jsonEscape(rel)}","partition":"${jsonEscape(p)}","bytes":${f.length()},"rows":$rows}"""
+        obj("file" -> JStr(base.toPath.relativize(f.toPath).toString),
+          "partition" -> JStr(p), "bytes" -> num(f.length()), "rows" -> num(rows))
       }
     }
-    Files.write(filesSidecarPath(dataDir),
-      fileEntries.mkString("[", ",", "]").getBytes(StandardCharsets.UTF_8)): Unit
+    MetadataJson.write(filesSidecarPath(dataDir), JArr(fileEntries))
   }
 
   private def filesSidecarPath(dataDir: String) =
@@ -3266,38 +3230,29 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * caller falls back to the legacy walk-and-footer path for that dir
     * only.
     */
-  private def readFilesSidecar(dataDir: String): Option[Seq[(String, String, Long, Long)]] = {
-    val p = filesSidecarPath(dataDir)
-    if (!Files.exists(p)) None
-    else {
+  private def readFilesSidecar(dataDir: String): Option[Seq[(String, String, Long, Long)]] =
+    MetadataJson.read(filesSidecarPath(dataDir)).map { json =>
       SnapshotTable.sidecarReads.inc(root)
-      val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      Some(MetadataJson.parse(json).asArr.map { v =>
+      json.asArr.map { v =>
         val o = v.asObj
         (new File(dataDir, o("file").asStr).getAbsolutePath,
           o("partition").asStr, o("bytes").asLong, o("rows").asLong)
-      })
+      }
     }
-  }
 
   /** Sidecar entries for one data dir; a dir written before the sidecar
     * existed falls back to walked file counts with unknown (-1) rows.
     */
-  private def readPartitionSidecar(dataDir: String): Seq[(String, Long, Long)] = {
-    val p = sidecarPath(dataDir)
-    if (Files.exists(p)) {
-      val json = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
-      MetadataJson.parse(json).asArr.map { v =>
-        val o = v.asObj
-        (o("partition").asStr, o("files").asLong, o("rows").asLong)
-      }
-    } else {
+  private def readPartitionSidecar(dataDir: String): Seq[(String, Long, Long)] =
+    MetadataJson.read(sidecarPath(dataDir)).map(_.asArr.map { v =>
+      val o = v.asObj
+      (o("partition").asStr, o("files").asLong, o("rows").asLong)
+    }).getOrElse {
       val base = new File(dataDir)
       listDataFiles(base).groupBy { f =>
         unescapePath(base.toPath.relativize(f.toPath.getParent).toString)
       }.map { case (k, v) => (k, v.size.toLong, -1L) }.toSeq
     }
-  }
 
   /** Reverse Hive-style %XX partition-dir escaping (dates, months, hours
     * and buckets never need it; string partition values with spaces or
@@ -3306,66 +3261,32 @@ final class SnapshotTable(val root: String, val fullName: String) {
   private def unescapePath(s: String): String =
     org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(s)
 
-  /** JSON string escape. Structural characters ([]{}）are emitted as
-    * \uXXXX escapes — legal JSON, and it keeps the regex parser's
-    * non-greedy array/object anchors exact even when a partition VALUE
-    * (which can be any string a column holds) contains brackets.
-    */
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '\\' => "\\\\"
-    case '"'  => "\\\""
-    case c @ ('[' | ']' | '{' | '}') => f"\\u${c.toInt}%04x"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private[sink] def writeMetadata(snaps: Seq[Snapshot]): Unit = {
     Files.createDirectories(Paths.get(root))
-    val json = snaps.map { s =>
-      val dirs = s.dataDirs.map(d => "\"" + jsonEscape(d) + "\"")
-        .mkString("[", ",", "]")
-      val masked =
-        if (s.maskedDirs.forall(_._2.isEmpty)) ""
-        else {
-          val entries = s.maskedDirs.toSeq.sortBy(_._1).collect {
-            case (d, ps) if ps.nonEmpty =>
-              "\"" + jsonEscape(d) + "\":" +
-                ps.map(p => "\"" + jsonEscape(p) + "\"").mkString("[", ",", "]")
-          }.mkString("{", ",", "}")
-          s""""masked_dirs":$entries,"""
-        }
-      val parent = s.parentId.map(p => s""""parent_id":$p,""").getOrElse("")
-      val lastCol =
-        if (s.lastColumnId > 0) s""""last_column_id":${s.lastColumnId},""" else ""
-      val colsJson =
-        if (s.cols.isEmpty) ""
-        else s.cols.map(c =>
-          s"""{"id":${c.id},"name":"${jsonEscape(c.name)}","type":"${jsonEscape(c.dataType)}"}""")
-          .mkString(""""cols":[""", ",", "],")
-      val staged = if (s.staged) """"staged":true,""" else ""
-      val summaryJson =
-        if (s.summary.isEmpty) ""
-        else s.summary.toSeq.sortBy(_._1).map { case (k, v) =>
-          "\"" + jsonEscape(k) + "\":\"" + jsonEscape(v) + "\""
-        }.mkString(""""summary":{""", ",", "},")
-      val dels =
-        if (s.deletes.isEmpty) ""
-        else {
-          val entries = s.deletes.map { d =>
-            val ks = d.keys.map(k => "\"" + jsonEscape(k) + "\"").mkString("[", ",", "]")
-            val as = d.applies.map(a => "\"" + jsonEscape(a) + "\"").mkString("[", ",", "]")
-            val fmt = d.format.map(f => s""","fmt":"${jsonEscape(f)}"""").getOrElse("")
-            val pos = if (d.positional) ""","pos":true""" else ""
-            s"""{"dir":"${jsonEscape(d.dir)}","keys":$ks,"applies":$as$fmt$pos}"""
-          }.mkString("[", ",", "]")
-          s""""deletes":$entries,"""
-        }
-      s"""{"id":${s.id},"committed_at_ms":${s.committedAtMs},"operation":"${s.operation}","format":"${s.format}","row_count":${s.rowCount},$parent$lastCol$colsJson$staged$summaryJson$masked$dels"data_dirs":$dirs}"""
-    }.mkString("[", ",", "]")
     // atomic metadata swap: temp file + atomic move, the commit point.
-    val tmp = Paths.get(root, s".metadata.json.tmp-${System.nanoTime()}")
-    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, metadataPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    MetadataJson.write(metadataPath, JArr(snaps.map { s =>
+      val masked = s.maskedDirs.toSeq.sortBy(_._1).filter(_._2.nonEmpty)
+      val fields: Seq[Option[(String, JValue)]] = Seq(
+        Some("id" -> num(s.id)),
+        Some("committed_at_ms" -> num(s.committedAtMs)),
+        Some("operation" -> JStr(s.operation)),
+        Some("format" -> JStr(s.format)),
+        Some("row_count" -> num(s.rowCount)),
+        s.parentId.map("parent_id" -> num(_)),
+        Option.when(s.lastColumnId > 0)("last_column_id" -> num(s.lastColumnId.toLong)),
+        Option.when(s.cols.nonEmpty)("cols" -> columnsJson(s.cols)),
+        Option.when(s.staged)("staged" -> JBool(true)),
+        Option.when(s.summary.nonEmpty)("summary" -> strObj(s.summary)),
+        Option.when(masked.nonEmpty)("masked_dirs" ->
+          obj(masked.map { case (d, ps) => d -> strs(ps) }: _*)),
+        Option.when(s.deletes.nonEmpty)("deletes" -> JArr(s.deletes.map { d =>
+          obj(Seq("dir" -> JStr(d.dir), "keys" -> strs(d.keys), "applies" -> strs(d.applies)) ++
+            d.format.map("fmt" -> JStr(_)) ++
+            Option.when(d.positional)("pos" -> JBool(true)): _*)
+        })),
+        Some("data_dirs" -> strs(s.dataDirs)))
+      obj(fields.flatten: _*)
+    }))
   }
 
   /** Parse the snapshots metadata through [[MetadataJson]] (a real
@@ -3375,8 +3296,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * optional on read: metadata written before each field existed
     * defaults to parquet / unknown (-1) / no masks.
     */
-  private[sink] def parse(json: String): Seq[Snapshot] =
-    MetadataJson.parse(json).asArr.map { v =>
+  private[sink] def parse(json: JValue): Seq[Snapshot] =
+    json.asArr.map { v =>
       val o = v.asObj
       def optLong(k: String) = o.get(k).map(_.asLong)
       val cols = o.get("cols").map(_.asArr.map { cv =>

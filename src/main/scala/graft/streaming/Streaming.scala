@@ -465,12 +465,9 @@ object Streaming {
     private def sidecar(id: Long) = dir.resolve(s"$id.bloom")
     private def writeSidecar(id: Long): Unit = {
       java.nio.file.Files.createDirectories(dir): Unit
-      val tmp = dir.resolve(s"$id.bloom.tmp-${System.nanoTime()}")
-      val os = java.nio.file.Files.newOutputStream(tmp)
-      try filter.writeTo(os) finally os.close()
-      java.nio.file.Files.move(tmp, sidecar(id),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+      val bytes = new java.io.ByteArrayOutputStream()
+      filter.writeTo(bytes)
+      graft.sink.MetadataJson.write(sidecar(id), bytes.toByteArray)
       val files = dir.toFile.listFiles()
       if (files != null) files.filter { f =>
         f.getName.endsWith(".bloom") &&

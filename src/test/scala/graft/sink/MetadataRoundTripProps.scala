@@ -2,13 +2,16 @@ package graft.sink
 
 import java.nio.file.Files
 
+import graft.plans.RangeStats
+import graft.template.PartitionField
 import org.scalacheck.{Gen, Prop, Properties}
 
-/** The snapshot metadata format is a hand-rolled fixed-shape JSON with
-  * three optional fields (staged, masked_dirs, deletes) parsed by anchored
-  * regexes — exactly the kind of code a round-trip property should guard:
-  * any writable snapshot list must parse back IDENTICALLY, including
-  * paths/partitions containing quotes, backslashes and unicode.
+/** Every metadata file the engine writes goes through [[MetadataJson]]'s
+  * writer and parser — exactly the kind of code a round-trip property
+  * should guard: any writable snapshot list, ref list, property map,
+  * range sidecar or partition spec must parse back IDENTICALLY, including
+  * paths/partitions/names containing quotes, backslashes, brackets,
+  * control characters and unicode.
   */
 object MetadataRoundTripProps extends Properties("SnapshotMetadata") {
 
@@ -82,5 +85,41 @@ object MetadataRoundTripProps extends Properties("SnapshotMetadata") {
       val back = t.refs
       Prop(back.map(r => (r.name, r.kind)) == rs.map(r => (r.name, r.kind))) :|
         s"expected:\n$rs\ngot:\n$back"
+    }
+
+  property("table properties round-trip, keys and values escaped") =
+    Prop.forAll(Gen.mapOf(Gen.zip(trickyStr.suchThat(_.nonEmpty), trickyStr))) { props =>
+      val root = Files.createTempDirectory("graft_props_prop").toString
+      val t = new SnapshotTable(root, "ns.prop")
+      t.setProperties(props)
+      val back = t.properties
+      Prop(back == props) :| s"expected:\n$props\ngot:\n$back"
+    }
+
+  property("range sidecar round-trips names and min/max bounds") =
+    Prop.forAll(Gen.choose(-1L, 1000000L), Gen.listOf(for {
+      name <- trickyStr
+      nulls <- Gen.choose(0L, 1000L)
+      mn <- Gen.option(trickyStr)
+      mx <- Gen.option(trickyStr)
+    } yield name -> RangeStats.ColRange(nulls, mn, mx)).map(_.toMap.toSeq.take(4))) {
+      (rows, entries) =>
+        // a fresh dir per case: read caches by dir path
+        val dir = Files.createTempDirectory("graft_ranges_prop").toString
+        RangeStats.writeEntries(dir, rows, entries)
+        val back = RangeStats.read(dir)
+        Prop(back.contains(RangeStats.DirStats(rows, entries.toMap))) :|
+          s"expected:\n$entries\ngot:\n$back"
+    }
+
+  property("partition spec round-trips column names") =
+    Prop.forAll(Gen.nonEmptyListOf(for {
+      column <- trickyStr.suchThat(_.nonEmpty)
+      (transform, n) <- Gen.oneOf(("identity", 0), ("day", 0), ("bucket", 16), ("truncate", 4))
+    } yield PartitionField(column, transform, n)).map(_.take(3))) { spec =>
+      val root = Files.createTempDirectory("graft_pspec_prop").toString
+      DeclaredPartitionSpec.write(root, spec)
+      val back = DeclaredPartitionSpec.read(root)
+      Prop(back == spec) :| s"expected:\n$spec\ngot:\n$back"
     }
 }
