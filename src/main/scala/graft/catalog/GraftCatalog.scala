@@ -661,6 +661,7 @@ final class GraftSparkTable(
           spark.read
             .format(d.format.getOrElse(
               snapTable.currentSnapshot.map(_.format).getOrElse("parquet")))
+            .schema(graft.sink.SnapshotTable.PositionalDeleteSchema)
             .load(d.dir)
             .select(
               col(graft.sink.SnapshotTable.RowIdFileCol).as("file_path"),

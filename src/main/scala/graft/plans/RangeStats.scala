@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.sink.MetadataJson
 import graft.sink.MetadataJson.{JArr, JStr, num, obj}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -145,12 +145,11 @@ object RangeStats {
     })))
 
   /** Collect and persist the range sidecar for an existing dir with one
-    * read-back aggregation job. The fallback path — the commit hot path
-    * collects the same stats during the write via [[rangeAggs]] +
-    * `observe` and never re-reads.
+    * read-back aggregation job over `df`, the dir as read by its table.
+    * The fallback path — the commit hot path collects the same stats
+    * during the write via [[rangeAggs]] + `observe` and never re-reads.
     */
-  def writeSidecar(spark: SparkSession, dataDir: String, format: String, rows: Long): Unit = {
-    val df = spark.read.format(format).load(dataDir)
+  def writeSidecar(df: DataFrame, dataDir: String, rows: Long): Unit = {
     val fields = df.schema.fields.toSeq
     val entries: Seq[(String, ColRange)] =
       if (fields.isEmpty || rows == 0L) fields.map(f => f.name -> ColRange(0L, None, None))

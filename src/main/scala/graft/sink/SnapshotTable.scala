@@ -1,7 +1,6 @@
 package graft.sink
 
 import java.io.File
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import graft.governance.Audit
@@ -101,7 +100,11 @@ final case class TableColumn(id: Int, name: String, dataType: String)
   * must always be read back as what it physically is. None = legacy
   * metadata predating the field (those files were written with their
   * snapshot's then-current format, which has never migrated — read
-  * with `snap.format`).
+  * with `snap.format`). Reads know the file's schema without opening
+  * it: an equality file's key types are recorded in a
+  * `.graft-columns.json` beside it (files written before that sidecar
+  * are inferred); a positional file has the fixed
+  * [[SnapshotTable.PositionalDeleteSchema]].
   */
 final case class EqualityDelete(
     dir: String, keys: Seq[String], applies: Seq[String], format: Option[String] = None,
@@ -212,17 +215,23 @@ final class SnapshotTable(val root: String, val fullName: String) {
     readSnapshot(spark, snap.id)
   }
 
-  /** Time travel: read the table as of a snapshot id. */
+  /** Time travel: read the table as of a snapshot id. Every scan takes
+    * its files' schema from the metadata — each dir's typed columns
+    * sidecar minus its partition columns, whose types stay inferred from
+    * the paths — so planning the read opens no footer and runs no Spark
+    * job, however long the history. A dir without a typed sidecar
+    * (written before the types were recorded) infers its schema.
+    */
   def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame = {
     val snap = snapshots.find(_.id == snapshotId).getOrElse(
       throw new NoSuchElementException(
         s"Table $fullName has no snapshot $snapshotId (available: ${snapshots.map(_.id).mkString(", ")})"))
     if (snap.dataDirs.isEmpty) emptyWithSchema(spark, snap)
-    else
+    else {
       // Plan growth is bounded to O(schema/layout epochs), not
       // O(#commits): consecutive dirs that are unmasked, delete-free
-      // and physically identical (byte-identical TYPED column sidecars,
-      // same partition layout) collapse into ONE multi-path scan — at
+      // and physically identical (equal TYPED column sidecars, same
+      // partition layout) collapse into ONE multi-path scan — at
       // production commit cadence (hourly appends x a year ~ 9k dirs)
       // a per-dir union would hold 9k relations and planning time /
       // driver memory would grow per commit. Everything else (masked
@@ -232,37 +241,43 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // partition mask gets a NOT-masked predicate on the partition
       // columns, which partition pruning resolves at planning — the
       // masked directories are skipped, not scanned-and-filtered.
-      coalesceGroups(snap).map {
-        case Seq(d) => readDir(spark, snap, d)
+      // Each dir's sidecars are read once, here.
+      val layouts = snap.dataDirs.map(d => d -> dirLayout(d)).toMap
+      coalesceGroups(snap, layouts).map {
+        case Seq(d) => readDir(spark, snap, d, layouts(d))
         case dirs =>
-          // same sidecar content => same physical (id, name, type)
-          // triples and same layout, so one mapping serves the group and
-          // multi-root partition discovery sees consistent structures
-          projectTo(spark.read.format(snap.format).load(dirs: _*),
-            snap.cols, dirColumnMapping(dirs.head, snap.cols))
+          // same typed sidecar => same physical (id, name, type)
+          // triples and same layout, so one schema and mapping serve
+          // the group
+          val l = layouts(dirs.head)
+          projectTo(load(spark, snap.format, l.dataSchema(snap.format), dirs),
+            snap.cols, l.mapping(snap.cols))
       }.reduce(_ unionByName _)
+    }
   }
 
   /** Partition [[Snapshot.dataDirs]] into maximal consecutive runs that
     * can share one multi-path scan; singleton groups read per-dir. A dir
     * is coalescible only when nothing dir-specific applies to it: no
     * partition mask, no scoped equality delete, a TYPED columns sidecar
-    * (legacy dirs' physical types are unknowable without footer reads),
-    * the snapshot tracks a schema to project to, and the dir is
-    * UNPARTITIONED — Spark's multi-root partition discovery rejects
-    * sibling partitioned roots (CONFLICTING_DIRECTORY_STRUCTURES), so
-    * partitioned dirs keep per-dir reads with independent pruning (their
-    * plan growth is bounded by `compact`, which folds the commit history
-    * into one dir).
+    * (every entry has a type: a legacy dir's physical types are
+    * unknowable without footer reads), the snapshot tracks a schema to
+    * project to, and the dir is UNPARTITIONED — Spark's multi-root
+    * partition discovery rejects sibling partitioned roots
+    * (CONFLICTING_DIRECTORY_STRUCTURES), so partitioned dirs keep
+    * per-dir reads with independent pruning (their plan growth is
+    * bounded by `compact`, which folds the commit history into one
+    * dir). Dirs group by their parsed typed sidecar in `layouts`.
     */
-  private def coalesceGroups(snap: Snapshot): Seq[Seq[String]] = {
-    def key(d: String): Option[String] =
+  private def coalesceGroups(snap: Snapshot, layouts: Map[String, DirLayout]): Seq[Seq[String]] = {
+    def key(d: String): Option[Seq[(Int, String, String)]] =
       if (snap.cols.isEmpty) None
       else if (snap.maskedDirs.get(d).exists(_.nonEmpty)) None
       else if (snap.deletes.exists(_.applies.contains(d))) None
-      else if (readPartitionSidecar(d).map(_._1).exists(_.nonEmpty)) None
-      else typedSidecarContent(d)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Option[String], scala.collection.mutable.ArrayBuffer[String])]
+      else if (!layouts(d).partCols.contains(Nil)) None
+      else layouts(d).typedCols
+    val out = scala.collection.mutable.ArrayBuffer.empty[
+      (Option[Seq[(Int, String, String)]], scala.collection.mutable.ArrayBuffer[String])]
     snap.dataDirs.foreach { d =>
       val k = key(d)
       if (k.isDefined && out.nonEmpty && out.last._1 == k) out.last._2 += d
@@ -274,8 +289,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
   /** One dir of `snap`, masked, projected to the snapshot schema, with
     * the dir-scoped positional and equality deletes applied.
     */
-  private def readDir(spark: SparkSession, snap: Snapshot, d: String): DataFrame =
-    readDirInternal(spark, snap, d, keepRowId = false)
+  private def readDir(
+      spark: SparkSession, snap: Snapshot, d: String, layout: DirLayout): DataFrame =
+    readDirInternal(spark, snap, d, layout, keepRowId = false)
 
   /** [[readDir]] plus the physical row-identity columns
     * ([[SnapshotTable.RowIdFileCol]] / [[SnapshotTable.RowIdPosCol]] from
@@ -283,11 +299,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * computed against. Deletes/masks apply as in a normal read, so a
     * probe never re-matches an already-deleted row.
     */
-  private def readDirWithRowId(spark: SparkSession, snap: Snapshot, d: String): DataFrame =
-    readDirInternal(spark, snap, d, keepRowId = true)
+  private def readDirWithRowId(
+      spark: SparkSession, snap: Snapshot, d: String, layout: DirLayout): DataFrame =
+    readDirInternal(spark, snap, d, layout, keepRowId = true)
 
   private def readDirInternal(
-      spark: SparkSession, snap: Snapshot, d: String, keepRowId: Boolean): DataFrame = {
+      spark: SparkSession, snap: Snapshot, d: String, layout: DirLayout,
+      keepRowId: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val dels = snap.deletes.filter(_.applies.contains(d))
     val (posDels, eqDels) = dels.partition(_.positional)
@@ -295,7 +313,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // in scope (or the caller probes for one): dirs without them pay
     // zero metadata-column cost
     val needRowId = keepRowId || posDels.nonEmpty
-    val base0 = spark.read.format(snap.format).load(d)
+    val base0 = load(spark, snap.format, layout.dataSchema(snap.format), Seq(d))
     val base =
       if (!needRowId) base0
       else base0.select(col("*"),
@@ -310,7 +328,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // renames alias. Same-type projections are cast-free, so pushdown
     // and partition pruning are unaffected; the mask filter above runs
     // on physical names (partition dirs never rename — enforced).
-    val projected = projectTo(masked, snap.cols, dirColumnMapping(d, snap.cols),
+    val projected = projectTo(masked, snap.cols, layout.mapping(snap.cols),
       extra =
         if (!needRowId) Nil
         else Seq(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol)))
@@ -318,7 +336,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // delete file scoped to this dir on (file_path, row_index) —
     // physical row identity, no key semantics
     val afterPos = posDels.foldLeft(projected) { (df, del) =>
-      df.join(broadcast(spark.read.format(del.format.getOrElse(snap.format)).load(del.dir)),
+      df.join(broadcast(readDeleteFile(spark, del, snap.format)),
         Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol), "left_anti")
     }
     val cleaned =
@@ -331,8 +349,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // Delete keys are delete-time column names; renaming an active
     // delete's key column is rejected, so they match current names.
     eqDels.foldLeft(cleaned) { (df, del) =>
-      df.join(broadcast(spark.read.format(del.format.getOrElse(snap.format)).load(del.dir)),
-        del.keys, "left_anti")
+      df.join(broadcast(readDeleteFile(spark, del, snap.format)), del.keys, "left_anti")
     }
   }
 
@@ -396,6 +413,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val delDir = freshDir("snap-del-")
     val keyRows = keys.select(keyCols.map(org.apache.spark.sql.functions.col): _*).distinct()
     keyRows.write.mode("overwrite").format(base.format).save(delDir)
+    // the key frame's types are not the table's (the caller's literals),
+    // so the delete file records them the way a data dir does: every
+    // read of it then knows its schema
+    val ids = base.cols.map(c => c.name -> c.id).toMap
+    writeColumnsSidecar(delDir, keyRows.schema.fields.toSeq.map(f =>
+      TableColumn(ids.getOrElse(f.name, 0), f.name, f.dataType.sql)))
+    val delFile = EqualityDelete(delDir, keyCols, Nil, Some(base.format))
 
     withCommitRetries(numRetries, written = Seq(delDir)) { attempt =>
       val audit = Map("operation" -> "equality_delete", "mode" -> WriteMode.MergeOnRead.name,
@@ -413,7 +437,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           // head's format — a conflict can move `cur` to a head whose
           // format differs (rival overwrite), but the file's bytes don't
           .join(org.apache.spark.sql.functions.broadcast(
-            spark.read.format(base.format).load(delDir)), keyCols, "left_semi")
+            readDeleteFile(spark, delFile, base.format)), keyCols, "left_semi")
           .count()
       val total = if (cur.rowCount < 0 || removed < 0) -1L else cur.rowCount - removed
       Right(Swap(Some(cur.id), audit) { (_, _, id) =>
@@ -421,8 +445,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         cur.copy(id = id, committedAtMs = SnapshotTable.clockMs(),
           operation = "delete", rowCount = total, staged = false,
           summary = SnapshotTable.carriedSummary(cur.summary),
-          deletes = cur.deletes :+
-            EqualityDelete(delDir, keyCols, cur.dataDirs, Some(base.format)),
+          deletes = cur.deletes :+ delFile.copy(applies = cur.dataDirs),
           parentId = Some(cur.id))
       })
     }
@@ -449,8 +472,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       val (pos, eq) = cur.deletes.partition(_.positional)
       if (pos.size < 2) Left(cur)
       else {
-        val union = pos.map(d =>
-            spark.read.format(d.format.getOrElse(cur.format)).load(d.dir))
+        val union = pos.map(readDeleteFile(spark, _, cur.format))
           .reduce(_ unionByName _).distinct()
         val delDir = freshDir("snap-posdel-")
         union.write.mode("overwrite").format(cur.format).save(delDir)
@@ -772,7 +794,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
       noInserts: => Boolean): Either[Snapshot, Swap] = {
     import org.apache.spark.sql.functions.lit
     val touched = Option.when(p.dirs.nonEmpty)(p.revise(p.dirs
-      .map(d => readDirWithRowId(spark, cur, d).withColumn(SnapshotTable.RowIdDirCol, lit(d)))
+      .map(d => readDirWithRowId(spark, cur, d, dirLayout(d))
+        .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
       .reduce(_ unionByName _)))
     val del = touched.flatMap { case (ids, _) => writePositions(spark, cur, ids) }
     if (del.isEmpty && noInserts) Left(cur)
@@ -805,7 +828,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       spark: SparkSession, cur: Snapshot, ids: DataFrame): Option[(String, Long, Seq[String])] = {
     val dir = freshDir("snap-posdel-")
     ids.write.mode("overwrite").format(cur.format).save(dir)
-    val hits = spark.read.format(cur.format).load(dir)
+    val hits = load(spark, cur.format, Some(SnapshotTable.PositionalDeleteSchema), Seq(dir))
       .groupBy(SnapshotTable.RowIdDirCol).count().collect()
     val removed = hits.map(_.getLong(1)).sum
     if (removed == 0L) { deleteRecursively(new File(dir)); None }
@@ -877,7 +900,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // — and the union below would throw on an empty reduce
     if (snap.dataDirs.isEmpty) return Nil
     val tagged = snap.dataDirs
-      .map(d => readDir(spark, snap, d).withColumn("__graft_dir", lit(d)))
+      .map(d => readDir(spark, snap, d, dirLayout(d)).withColumn("__graft_dir", lit(d)))
       .reduce(_ unionByName _)
     val dirs = shape(tagged).select("__graft_dir").distinct()
       .collect().map(_.getString(0)).toSet
@@ -890,7 +913,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     */
   private def readDirsView(
       spark: SparkSession, snap: Snapshot, dirs: Seq[String]): DataFrame =
-    dirs.map(readDir(spark, snap, _)).reduce(_ unionByName _)
+    dirs.map(d => readDir(spark, snap, d, dirLayout(d))).reduce(_ unionByName _)
 
   /** FILE-granular copy-on-write split — the Iceberg contract that a
     * row-level mutation touching a few rows of a huge dir must not
@@ -921,6 +944,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     import org.apache.spark.sql.functions.{col, input_file_name, lit}
     val dirCol = "__graft_probe_dir"
     val fileCol = "__graft_probe_file"
+    val layouts = affected.map(d => d -> dirLayout(d)).toMap
     val clean = affected.filter(d =>
       snap.maskedDirs.get(d).forall(_.isEmpty) &&
         !snap.deletes.exists(_.applies.contains(d)))
@@ -928,10 +952,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (clean.isEmpty) Map.empty
       else {
         val probe = clean.map { d =>
-          val base = spark.read.format(snap.format).load(d)
+          val base = load(spark, snap.format, layouts(d).dataSchema(snap.format), Seq(d))
             .withColumn(dirCol, lit(d))
             .withColumn(fileCol, input_file_name())
-          projectTo(base, snap.cols, dirColumnMapping(d, snap.cols),
+          projectTo(base, snap.cols, layouts(d).mapping(snap.cols),
             extra = Seq(col(dirCol), col(fileCol)))
         }.reduce(_ unionByName _)
         shape(probe).select(col(dirCol), col(fileCol)).distinct()
@@ -948,7 +972,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // the whole-dir rewrite — misclassifying an affected file as
       // carried would silently lose its mutation
       if (hits.isEmpty || !hits.subsetOf(all.toSet) || all.forall(hits.contains))
-        (readDir(spark, snap, d), None)
+        (readDir(spark, snap, d, layouts(d)), None)
       else {
         val carried = all.filterNot(hits.contains)
         val carryDir = Paths.get(root,
@@ -971,9 +995,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         val carriedSet = carried.toSet
         val origEntries = readFilesSidecar(d).getOrElse(Nil)
           .filter(e => carriedSet.contains(e._1))
-        val dirPartCols = readPartitionSidecar(d).map(_._1)
-          .find(_.nonEmpty).map(_.split("/").toSeq.map(_.split("=", 2)(0)))
-          .getOrElse(Nil)
+        val dirPartCols = layouts(d).partKeys.headOption.getOrElse(Nil)
         val rowsByPart: Map[String, Long] = origEntries.groupBy(_._2).map {
           case (p, es) => p -> (if (es.exists(_._4 < 0)) -1L else es.map(_._4).sum)
         }
@@ -996,9 +1018,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
         // the rewrite reads ONLY the affected files; basePath keeps the
         // hive partition columns resolving exactly as a dir read would
         val hit = all.filter(hits.contains)
-        val narrow = spark.read.format(snap.format)
-          .option("basePath", d).load(hit: _*)
-        (projectTo(narrow, snap.cols, dirColumnMapping(d, snap.cols)),
+        val narrow = load(spark, snap.format, layouts(d).dataSchema(snap.format), hit,
+          basePath = Some(d))
+        (projectTo(narrow, snap.cols, layouts(d).mapping(snap.cols)),
           Some(carryDir))
       }
     }
@@ -1065,21 +1087,22 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val from = snap(fromId).dataDirs.toSet
     val to = snap(toId)
     val delta = to.dataDirs.filterNot(from)
+    def read(d: String): DataFrame = {
+      val l = dirLayout(d)
+      projectTo(load(spark, to.format, l.dataSchema(to.format), Seq(d)), to.cols, l.mapping(to.cols))
+    }
     if (delta.isEmpty)
       // the steady-state "no new data" case must still carry the TABLE
       // schema — a schema-less empty frame would crash downstream
       // consumers (select on named columns) instead of processing 0 rows
       to.dataDirs.headOption match {
-        case Some(d) =>
-          projectTo(spark.read.format(to.format).load(d),
-            to.cols, dirColumnMapping(d, to.cols)).limit(0)
+        case Some(d) => read(d).limit(0)
         case None => emptyWithSchema(spark, to) // table has never held data
       }
     else
       // each delta dir projected to the TO snapshot's schema, so the
       // changelog consumer sees one stable shape across evolution
-      delta.map(d => projectTo(spark.read.format(to.format).load(d),
-        to.cols, dirColumnMapping(d, to.cols))).reduce(_ unionByName _)
+      delta.map(read).reduce(_ unionByName _)
   }
 
   /** Batch CHANGELOG read (the Iceberg `table_changes` / Delta CDF
@@ -1128,9 +1151,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
         val prevDirs = prev.dataDirs.toSet
         val curDirs = cur.dataDirs.toSet
         val inserts = cur.dataDirs.filterNot(prevDirs).map(d =>
-          stamp(readDir(spark, cur, d), cur, "insert", cur.id))
+          stamp(readDir(spark, cur, d, dirLayout(d)), cur, "insert", cur.id))
         val dirDeletes = prev.dataDirs.filterNot(curDirs).map(d =>
-          stamp(readDir(spark, prev, d), prev, "delete", cur.id))
+          stamp(readDir(spark, prev, d, dirLayout(d)), prev, "delete", cur.id))
         // a dynamic overwrite masks partitions of carried dirs instead
         // of dropping the dirs — the newly masked slices are deletes
         val maskDeletes = cur.maskedDirs.toSeq.sortBy(_._1).flatMap { case (d, curMask) =>
@@ -1140,7 +1163,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
               prev.maskedDirs.getOrElse(d, Seq.empty).toSet)
             if (newly.isEmpty) None
             else Some(stamp(
-              readDir(spark, prev, d).filter(not(maskFilter(newly))), prev, "delete", cur.id))
+              readDir(spark, prev, d, dirLayout(d)).filter(not(maskFilter(newly))),
+              prev, "delete", cur.id))
           }
         }
         // new equality deletes: the erased ROWS (keys semi-joined over
@@ -1157,12 +1181,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
             // as Iceberg's changelog contract: erased old versions as
             // 'delete', the commit's new dir as 'insert'.
             val read: String => DataFrame =
-              if (del.positional) readDirWithRowId(spark, prev, _)
-              else readDir(spark, prev, _)
+              if (del.positional) d => readDirWithRowId(spark, prev, d, dirLayout(d))
+              else d => readDir(spark, prev, d, dirLayout(d))
             applicable.map(read).reduceOption(_ unionByName _)
               .map { rows =>
-                val keys = spark.read
-                  .format(del.format.getOrElse(prev.format)).load(del.dir)
+                val keys = readDeleteFile(spark, del, prev.format)
                 val erased = rows.join(broadcast(keys), del.keys, "left_semi")
                 val cleaned =
                   if (del.positional)
@@ -1487,24 +1510,27 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // sources only), column ranges from one stats pass — so stats-skip
       // and $partitions/$files treat imported dirs like any other
       val (rowsByPart, partBounds) =
-        partitionJobStats(spark, dataDir, partCols, format)
+        partitionJobStats(spark, dataDir, partCols, format, dataSchema = None)
       val rowsByPart1 =
         if (partCols.nonEmpty) rowsByPart
         else Map("" -> newRows)
       writePartitionSidecar(dataDir, partCols, rowsByPart1, newRows, format, perFileRows)
+      // the imported files' schema is whatever their footers say: the
+      // one read here infers it, and the dir's columns sidecar (written
+      // at swap) records it for every later read
+      val inferred = load(spark, format, None, Seq(dataDir))
       try {
-        val df = spark.read.format(format).load(dataDir)
-        val fields = df.schema.fields.toSeq
+        val fields = inferred.schema.fields.toSeq
         val aggs = graft.plans.RangeStats.rangeAggs(fields)
-        val row = df.agg(aggs.head, aggs.tail: _*).collect().head
+        val row = inferred.agg(aggs.head, aggs.tail: _*).collect().head
         val metrics = row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
           n -> row.get(i)
         }.toMap[String, Any]
         graft.plans.RangeStats.writeEntries(dataDir, newRows,
           graft.plans.RangeStats.entriesFromMetrics(fields, metrics, partBounds))
       } catch { case scala.util.control.NonFatal(_) => () }
-      val written = WrittenDir(dataDir, newRows, spark.read.format(format).load(dataDir)
-        .schema.fields.toSeq.map(f => f.name -> f.dataType.sql))
+      val written = WrittenDir(dataDir, newRows,
+        inferred.schema.fields.toSeq.map(f => f.name -> f.dataType.sql))
       withCommitRetries(numRetries) { _ =>
         Right(commitSwap(written, currentSnapshot.map(_.id), "append", carryPrevious = true,
           format, Map("operation" -> "add_files", "source" -> srcCanon,
@@ -2593,6 +2619,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
       .save(dataDir)
     val metrics: Map[String, Any] =
       try obs.get catch { case scala.util.control.NonFatal(_) => Map.empty }
+    // what the write put in the files: every read-back below knows it
+    val written =
+      SnapshotTable.storedSchema(format, fields.filterNot(f => partitionCols.contains(f.name)))
+    def writtenDir = load(df.sparkSession, format, Some(written), Seq(dataDir))
     // row count of the NEW dir, recorded into snapshot metadata so
     // history listings never rescan data. Normally free (observed during
     // the write); the fallback footer count is O(files), not O(rows).
@@ -2602,7 +2632,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (!filesWritten) 0L
       else metrics.get("__rows") match {
         case Some(l: Long) => l
-        case _ => df.sparkSession.read.format(format).load(dataDir).count()
+        case _ => writtenDir.count()
       }
     // an EMPTY batch (zero rows — whether it wrote nothing at all or a
     // handful of 0-row part files, which some plans emit) commits
@@ -2635,7 +2665,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
         val (byPart, byFile) = microPartitionRows(dataDir)
         (byPart, Map.empty[String, graft.plans.RangeStats.ColRange], byFile)
       } else {
-        val (byPart, bounds) = partitionJobStats(df.sparkSession, dataDir, partitionCols, format)
+        val (byPart, bounds) =
+          partitionJobStats(df.sparkSession, dataDir, partitionCols, format, Some(written))
         (byPart, bounds, Map.empty[String, Long])
       }
     if (wroteFiles)
@@ -2660,7 +2691,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
             entries.filterNot(e => partitionCols.contains(e._1))
           else entries
         graft.plans.RangeStats.writeEntries(dataDir, newRows, sound)
-      } else graft.plans.RangeStats.writeSidecar(df.sparkSession, dataDir, format, newRows)
+      } else graft.plans.RangeStats.writeSidecar(writtenDir, dataDir, newRows)
     catch { case scala.util.control.NonFatal(_) => () }
     // partitions the batch REPLACES = the partitions it wrote (dynamic
     // overwrite semantics); read once from the just-written sidecar
@@ -2985,7 +3016,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           // read each — a one-time upgrade cost, under the table lock).
           val byName = derived.map(c => c.name -> c.id).toMap
           cur.dataDirs.filterNot(d => Files.exists(columnsSidecarPath(d))).foreach { d =>
-            val phys = spark.read.format(cur.format).load(d).schema.fields.toSeq
+            val phys = load(spark, cur.format, None, Seq(d)).schema.fields.toSeq
             writeColumnsSidecar(d, phys.flatMap(f =>
               byName.get(f.name).map(id => TableColumn(id, f.name, f.dataType.sql))))
           }
@@ -3021,31 +3052,90 @@ final class SnapshotTable(val root: String, val fullName: String) {
   private def columnsJson(cols: Seq[TableColumn]): JArr = JArr(cols.map(c =>
     obj("id" -> num(c.id.toLong), "name" -> JStr(c.name), "type" -> JStr(c.dataType))))
 
-  /** Field-id -> physical-column-name mapping recorded when `dataDir`
-    * was written; a dir predating the sidecar resolves every id by its
-    * CURRENT name (legacy by-name semantics). Sidecars written before
-    * the type field parse fine (type optional).
+  /** The columns sidecar of `dataDir` as (field id, physical name,
+    * physical DDL type) entries; None when the dir predates the sidecar.
+    * Sidecars written before the type field parse with no type.
     */
-  private def dirColumnMapping(dataDir: String, cols: Seq[TableColumn]): Map[Int, String] = {
-    if (cols.isEmpty) return Map.empty
+  private def readColumnsSidecar(dataDir: String): Option[Seq[(Int, String, Option[String])]] =
     MetadataJson.read(columnsSidecarPath(dataDir)).map(_.asArr.map { v =>
       val o = v.asObj
-      o("id").asLong.toInt -> o("name").asStr
-    }.toMap).getOrElse(cols.map(c => c.id -> c.name).toMap)
+      (o("id").asLong.toInt, o("name").asStr, o.get("type").map(_.asStr))
+    })
+
+  /** What one data dir's sidecars record about its files, read once per
+    * snapshot read: its columns sidecar and the distinct key lists of
+    * its partition sidecar's paths (one list, or none, unless a
+    * partition value holds '/' and splits its path ambiguously).
+    */
+  private case class DirLayout(
+      cols: Option[Seq[(Int, String, Option[String])]], partKeys: Seq[Seq[String]]) {
+
+    /** The dir's partition columns; None when its paths disagree. */
+    def partCols: Option[Seq[String]] =
+      if (partKeys.size <= 1) Some(partKeys.headOption.getOrElse(Nil)) else None
+
+    /** Every entry carries its physical type: the dir's files have a
+      * known schema, and equal `typedCols` mean equal physical files.
+      */
+    def typedCols: Option[Seq[(Int, String, String)]] =
+      cols.filter(cs => cs.nonEmpty && cs.forall(_._3.isDefined))
+        .map(_.map { case (id, n, t) => (id, n, t.get) })
+
+    /** Field id -> physical column name; a dir predating the sidecar
+      * resolves every id by its CURRENT name (legacy by-name semantics).
+      */
+    def mapping(snapCols: Seq[TableColumn]): Map[Int, String] =
+      if (snapCols.isEmpty) Map.empty
+      else cols.fold(snapCols.map(c => c.id -> c.name).toMap)(_.map(e => e._1 -> e._2).toMap)
+
+    /** The schema of the dir's files as `format` stores them: the typed
+      * columns minus the partition columns, whose types stay inferred
+      * from the paths (partition stats are recorded in that type space).
+      * None — infer it from a footer — for a dir without a typed
+      * sidecar, or whose partition columns are unknown or not all
+      * sidecar columns.
+      */
+    def dataSchema(format: String): Option[org.apache.spark.sql.types.StructType] =
+      for {
+        cs <- typedCols
+        ps <- partCols if ps.forall(p => cs.exists(_._2 == p))
+        schema <- scala.util.Try(SnapshotTable.storedSchema(format,
+          cs.filterNot(c => ps.contains(c._2)).map { case (_, n, t) =>
+            org.apache.spark.sql.types.StructField(n,
+              org.apache.spark.sql.types.DataType.fromDDL(t))
+          })).toOption
+      } yield schema
   }
 
-  /** Raw columns-sidecar content of a dir, used as the scan coalescer's
-    * schema-identity key: byte-identical TYPED sidecars imply the same
-    * physical (id, name, type) triples, so the dirs can share one
-    * multi-path scan. None = no sidecar, or a pre-type legacy sidecar
-    * (whose physical types are unknowable without a footer read) —
-    * such dirs always read per-dir.
+  private def dirLayout(dataDir: String): DirLayout =
+    DirLayout(readColumnsSidecar(dataDir),
+      readPartitionSidecar(dataDir).map(_._1).filter(_.nonEmpty)
+        .map(_.split("/").toSeq.map(_.split("=", 2)(0))).distinct)
+
+  /** The one reader of the dirs this table's metadata names — data
+    * dirs, delete files and freshly written dirs. `schema` is the
+    * files' schema as recorded in the metadata, so no footer is opened
+    * to infer it (a Spark job per call); None infers it, for files the
+    * engine did not write and dirs whose sidecars predate the types.
     */
-  private def typedSidecarContent(dataDir: String): Option[String] = {
-    val p = columnsSidecarPath(dataDir)
-    if (!Files.exists(p)) None
-    else Some(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-      .filter(_.contains("\"type\""))
+  private def load(
+      spark: SparkSession, format: String, schema: Option[org.apache.spark.sql.types.StructType],
+      paths: Seq[String], basePath: Option[String] = None): DataFrame = {
+    val r = spark.read.format(format)
+    schema.fold(r)(r.schema).options(basePath.map("basePath" -> _).toMap).load(paths: _*)
+  }
+
+  /** A delete file of `del`, read with its known schema: the fixed
+    * row-identity schema for a positional file, the columns sidecar
+    * beside the keys for an equality file (inferred for files written
+    * before that sidecar).
+    */
+  private def readDeleteFile(spark: SparkSession, del: EqualityDelete, snapFormat: String): DataFrame = {
+    val format = del.format.getOrElse(snapFormat)
+    load(spark, format,
+      if (del.positional) Some(SnapshotTable.PositionalDeleteSchema)
+      else DirLayout(readColumnsSidecar(del.dir), Nil).dataSchema(format),
+      Seq(del.dir))
   }
 
   private def sidecarPath(dataDir: String) =
@@ -3062,17 +3152,22 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * lexicographic and numeric min differ) and unsoundly prune. The job
     * reads no data columns: partition values come from paths and row
     * counts from file metadata. No-op for unpartitioned dirs — their
-    * stats all come from the write-time observation.
+    * stats all come from the write-time observation. `dataSchema` is
+    * the files' schema when the caller wrote them (None infers it, for
+    * imported files); the partition columns' types are inferred either
+    * way.
     */
   private def partitionJobStats(
       spark: SparkSession,
       dataDir: String,
       partitionCols: Seq[String],
-      format: String): (Map[String, Long], Map[String, graft.plans.RangeStats.ColRange]) =
+      format: String,
+      dataSchema: Option[org.apache.spark.sql.types.StructType])
+      : (Map[String, Long], Map[String, graft.plans.RangeStats.ColRange]) =
     if (partitionCols.isEmpty) (Map.empty, Map.empty)
     else {
       import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-      val df = spark.read.format(format).load(dataDir)
+      val df = load(spark, format, dataSchema, Seq(dataDir))
       val inferred = partitionCols.map(c => df.schema(c).dataType)
       val n = partitionCols.size
       // string-cast keys render partition values the way Spark renders
@@ -3402,6 +3497,33 @@ object SnapshotTable {
     * read path. Ignored by the read-side anti-join (keys are file+pos).
     */
   val RowIdDirCol = "__graft_pd_dir"
+
+  /** The fixed schema of a positional delete file: (data file path, row
+    * position, data dir), as the merge-on-read probe writes it.
+    */
+  val PositionalDeleteSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    new StructType().add(RowIdFileCol, StringType).add(RowIdPosCol, LongType)
+      .add(RowIdDirCol, StringType)
+  }
+
+  /** `fields` as `format` stores them, i.e. the schema a footer read
+    * infers: avro has no 8- or 16-bit integer, so those columns read
+    * back as int.
+    */
+  private def storedSchema(
+      format: String, fields: Seq[org.apache.spark.sql.types.StructField])
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    def stored(dt: DataType): DataType = dt match {
+      case ByteType | ShortType => IntegerType
+      case ArrayType(e, n) => ArrayType(stored(e), n)
+      case s: StructType => StructType(s.fields.map(f => f.copy(dataType = stored(f.dataType))))
+      case other => other
+    }
+    StructType(if (format != "avro") fields
+      else fields.map(f => f.copy(dataType = stored(f.dataType))))
+  }
 
   val SummaryQueryId = "streaming.query-id"
   val SummaryBatchId = "streaming.batch-id"

@@ -14,11 +14,19 @@ trait SparkSpec extends AnyFunSuite {
     * Listener delivery is async, so the count is polled until it
     * stabilizes.
     */
-  def jobsDuring(f: => Any): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+  def jobsDuring(f: => Any): Int = jobSitesDuring(f).size
+
+  /** The call site of every Spark job started while `f` runs, in start
+    * order: the name of the job's result stage, e.g. `count at
+    * SnapshotTable.scala:298`. A job-count pin that fails prints these,
+    * so the message names the reader that ran the extra job.
+    */
+  def jobSitesDuring(f: => Any): Seq[String] = {
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(): Unit
+        val site = js.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+        sites.add(js.jobId -> site): Unit
       }
     }
     spark.sparkContext.addSparkListener(l)
@@ -26,11 +34,12 @@ trait SparkSpec extends AnyFunSuite {
       f
       var prev = -1
       val deadline = System.currentTimeMillis() + 10000
-      while (System.currentTimeMillis() < deadline && n.get() != prev) {
-        prev = n.get(); Thread.sleep(250)
+      while (System.currentTimeMillis() < deadline && sites.size != prev) {
+        prev = sites.size; Thread.sleep(250)
       }
     } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
+    import scala.jdk.CollectionConverters._
+    sites.asScala.toSeq.sortBy(_._1).map(_._2)
   }
 }
 

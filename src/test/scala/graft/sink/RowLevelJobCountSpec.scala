@@ -6,11 +6,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions.{col, lit}
 
 /** Spark jobs per row-level statement on 200 rows in 2 dirs with one
-  * matched row, pinned at or below what the per-shape entry points that
-  * `delete`, `update` and `merge` replaced ran (their names label the
-  * cases). Merge-on-read DELETE and UPDATE are pinned one job lower: a
-  * single grouped job over the positions file yields both the removed
-  * count and the dirs it scopes to (they measure two lower: 6 and 7).
+  * matched row (the labels name the per-shape entry points that
+  * `delete`, `update` and `merge` replaced). The test names keep each
+  * statement's first ceiling; the pin is the count measured twice on a
+  * 4-core local[4] session with the same result, once every scan took
+  * its schema from the dirs' sidecars instead of a footer-reading
+  * inference job. A failing pin prints each job's call site.
   */
 class RowLevelJobCountSpec extends SparkSpec {
 
@@ -34,27 +35,29 @@ class RowLevelJobCountSpec extends SparkSpec {
     t.merge(Seq((2L, -1.0)).toDF("id", "v"), Seq("id" -> "id"),
       Seq(Merge.WhenMatched(Merge.UpdateAll)), Nil, mode = mode)
 
-  private val pins: Seq[(String, Int, SnapshotTable => Any)] = Seq(
-    ("deleteRows", 9, t => t.delete(spark, one)),
-    ("deletePositions", 7, t => t.delete(spark, one, WriteMode.MergeOnRead)),
-    ("deleteRowsMatching", 12, t => t.delete(spark, oneMatching)),
-    ("deletePositionsMatching", 7, t => t.delete(spark, oneMatching, WriteMode.MergeOnRead)),
-    ("updateWhere", 9, t => t.update(spark, one, sets)),
-    ("updatePositions", 8, t => t.update(spark, one, sets, WriteMode.MergeOnRead)),
-    ("updateRowsMatching", 10, t => t.update(spark, oneMatching, sets)),
-    ("updatePositionsMatching", 8, t => t.update(spark, oneMatching, sets, WriteMode.MergeOnRead)),
-    ("mergeClauses (matched only)", 15, t => updateMerge(t, WriteMode.CopyOnWrite)),
-    ("mergeClausesMor (matched only)", 16, t => updateMerge(t, WriteMode.MergeOnRead)),
-    ("mergeClauses (upsert)", 18, t => upsert(t, WriteMode.CopyOnWrite)),
-    ("mergeClausesMor (upsert)", 19, t => upsert(t, WriteMode.MergeOnRead)))
+  // (label, ceiling, pin, statement)
+  private val pins: Seq[(String, Int, Int, SnapshotTable => Any)] = Seq(
+    ("deleteRows", 9, 5, t => t.delete(spark, one)),
+    ("deletePositions", 7, 3, t => t.delete(spark, one, WriteMode.MergeOnRead)),
+    ("deleteRowsMatching", 12, 8, t => t.delete(spark, oneMatching)),
+    ("deletePositionsMatching", 7, 3, t => t.delete(spark, oneMatching, WriteMode.MergeOnRead)),
+    ("updateWhere", 9, 5, t => t.update(spark, one, sets)),
+    ("updatePositions", 8, 4, t => t.update(spark, one, sets, WriteMode.MergeOnRead)),
+    ("updateRowsMatching", 10, 6, t => t.update(spark, oneMatching, sets)),
+    ("updatePositionsMatching", 8, 4, t => t.update(spark, oneMatching, sets, WriteMode.MergeOnRead)),
+    ("mergeClauses (matched only)", 15, 11, t => updateMerge(t, WriteMode.CopyOnWrite)),
+    ("mergeClausesMor (matched only)", 16, 12, t => updateMerge(t, WriteMode.MergeOnRead)),
+    ("mergeClauses (upsert)", 18, 13, t => upsert(t, WriteMode.CopyOnWrite)),
+    ("mergeClausesMor (upsert)", 19, 14, t => upsert(t, WriteMode.MergeOnRead)))
 
-  pins.foreach { case (label, bound, op) =>
-    test(s"$label runs at most $bound jobs") {
+  pins.foreach { case (label, ceiling, bound, op) =>
+    test(s"$label runs at most $ceiling jobs") {
       val t = table()
-      val jobs = jobsDuring(op(t))
+      val sites = jobSitesDuring(op(t))
+      val jobs = sites.size
       info(s"$label: $jobs jobs")
       assert(t.currentSnapshot.get.operation != "append", "the statement must commit")
-      assert(jobs <= bound, s"$label ran $jobs jobs, pinned at $bound")
+      assert(jobs <= bound, s"$label ran $jobs jobs, pinned at $bound: ${sites.mkString("; ")}")
     }
   }
 }

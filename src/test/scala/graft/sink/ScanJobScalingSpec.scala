@@ -1,0 +1,106 @@
+package graft.sink
+
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import graft.SparkSpec
+
+/** A statement's Spark job count must not grow with the table's
+  * history: every scan takes its schema from the metadata, so adding
+  * live dirs adds no schema-inference job. Each statement runs on a
+  * table of 1 live dir and on one of 21 (one append per dir, 10 rows
+  * each), partitioned and unpartitioned, and must run the same number
+  * of jobs on both.
+  */
+class ScanJobScalingSpec extends SparkSpec {
+
+  import spark.implicits._
+
+  private lazy val wh = Files.createTempDirectory("graft_scan_jobs").toString
+
+  private def batch(i: Int) =
+    (i * 10 + 1 to i * 10 + 10).map(id => (id.toLong, id * 1.0, id % 2)).toDF("id", "v", "p")
+
+  /** A table of `dirs` live dirs, built once per shape. */
+  private def base(dirs: Int, partitioned: Boolean): SnapshotTable = {
+    val t = SnapshotTable(wh, "ns", s"base_${dirs}_$partitioned")
+    if (!t.exists) {
+      val parts = if (partitioned) Seq("p") else Nil
+      t.overwrite(batch(0), partitionCols = parts)
+      (1 until dirs).foreach(i => t.append(batch(i), partitionCols = parts))
+    }
+    t
+  }
+
+  private var forks = 0
+
+  /** A private copy of `from` for one statement to mutate: its metadata
+    * files under a fresh root, naming the same immutable data dirs.
+    */
+  private def fork(from: SnapshotTable): String = {
+    forks += 1
+    val name = s"f$forks"
+    val to = Paths.get(wh, s"ns.$name")
+    Files.createDirectories(to)
+    Seq("metadata.json", ".graft-properties.json").map(Paths.get(from.root, _))
+      .filter(Files.exists(_))
+      .foreach(p => Files.copy(p, to.resolve(p.getFileName), StandardCopyOption.REPLACE_EXISTING))
+    s"graft.ns.$name"
+  }
+
+  private def table(qualified: String): SnapshotTable =
+    SnapshotTable(wh, "ns", qualified.stripPrefix("graft.ns."))
+
+  private def sql(q: String): Unit = spark.sql(q).collect(): Unit
+
+  // (label, setup run before counting, counted statement) over table `t`
+  private val statements: Seq[(String, String => Unit, String => Unit)] = Seq(
+    ("DataFrame count", _ => (), t => table(t).read(spark).count(): Unit),
+    ("SQL SELECT count(*)", _ => (), t => sql(s"SELECT count(*) FROM $t")),
+    ("SQL UPDATE", _ => (), t => sql(s"UPDATE $t SET v = -1 WHERE id = 2")),
+    ("SQL DELETE", _ => (), t => sql(s"DELETE FROM $t WHERE id = 2")),
+    ("SELECT count(*) after DELETE", t => sql(s"DELETE FROM $t WHERE id = 2"),
+      t => sql(s"SELECT count(*) FROM $t")),
+    ("SQL MERGE", _ => (), t => sql(
+      s"MERGE INTO $t t USING scan_jobs_keys s ON t.id = s.k " +
+        "WHEN MATCHED THEN UPDATE SET v = s.kv")))
+
+  private def jobs(dirs: Int, partitioned: Boolean, mor: Boolean,
+      setup: String => Unit, stmt: String => Unit): (Int, Seq[String]) = {
+    spark.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
+    Seq((2L, -1.0)).toDF("k", "kv").createOrReplaceTempView("scan_jobs_keys")
+    val t = fork(base(dirs, partitioned))
+    if (mor) table(t).setProperties(Map(
+      "write.update.mode" -> WriteMode.MergeOnRead.name,
+      "write.delete.mode" -> WriteMode.MergeOnRead.name))
+    setup(t)
+    val sites = jobSitesDuring(stmt(t))
+    (sites.size, sites)
+  }
+
+  for (partitioned <- Seq(false, true); (label, setup, stmt) <- statements) {
+    val layout = if (partitioned) "partitioned" else "unpartitioned"
+    test(s"$label runs as many jobs at 21 live dirs as at 1 ($layout)") {
+      val (one, oneSites) = jobs(1, partitioned, mor = false, setup, stmt)
+      val (many, manySites) = jobs(21, partitioned, mor = false, setup, stmt)
+      info(s"$label, $layout: $one jobs at 1 dir, $many at 21")
+      assert(one == many, s"1 dir: ${oneSites.mkString("; ")} | 21 dirs: ${manySites.mkString("; ")}")
+    }
+  }
+
+  // merge-on-read UPDATE and DELETE (a non-key predicate, so DELETE
+  // writes positions rather than an equality delete)
+  private val morStatements: Seq[(String, String => Unit)] = Seq(
+    ("merge-on-read UPDATE", t => sql(s"UPDATE $t SET v = -1 WHERE id = 2")),
+    ("merge-on-read DELETE", t => sql(s"DELETE FROM $t WHERE id * 2 = 4")))
+
+  for (partitioned <- Seq(false, true); (label, stmt) <- morStatements) {
+    val layout = if (partitioned) "partitioned" else "unpartitioned"
+    test(s"$label runs as many jobs at 21 live dirs as at 1 ($layout)") {
+      val (one, oneSites) = jobs(1, partitioned, mor = true, _ => (), stmt)
+      val (many, manySites) = jobs(21, partitioned, mor = true, _ => (), stmt)
+      info(s"$label, $layout: $one jobs at 1 dir, $many at 21")
+      assert(one == many, s"1 dir: ${oneSites.mkString("; ")} | 21 dirs: ${manySites.mkString("; ")}")
+    }
+  }
+}
