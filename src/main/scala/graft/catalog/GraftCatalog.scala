@@ -862,7 +862,8 @@ final class GraftSparkTable(
 /** Atomic CTAS / RTAS (the Iceberg `StagedTable` role). The query's
   * result is fully written and committed as a STAGED snapshot —
   * invisible to every reader — and only [[commitStagedChanges]]
-  * publishes it, an O(1) metadata flip under the table's commit lock.
+  * publishes it, an O(1) metadata flip in one table transaction
+  * ([[SnapshotTable.commitCreateOrReplace]]).
   * A failed query aborts instead: CREATE leaves no table behind,
   * REPLACE leaves the live table byte-untouched; no reader ever
   * observes an intermediate state. REPLACE preserves snapshot history
@@ -899,12 +900,6 @@ final class GraftStagedTable(
   private val fmt = props.getOrElse("format", "parquet")
   private def userProps: Map[String, String] = props -- GraftCatalog.ReservedProperties
   @volatile private var stagedId: Option[Long] = None
-
-  private def createEmpty(): Unit = {
-    t.create(schema0.fields.toSeq.map(f => f.name -> f.dataType.sql), fmt)
-    if (spec.nonEmpty) GraftCatalog.writePartitionSpec(t.root, spec)
-    if (userProps.nonEmpty) t.setProperties(userProps)
-  }
 
   override def name(): String = t.fullName
   override def schema(): StructType = schema0
@@ -950,104 +945,11 @@ final class GraftStagedTable(
       }
     }
 
-  /** Replace the user TBLPROPERTIES wholesale and evolve the declared
-    * spec — ONLY called after the data flip succeeded (see ordering
-    * note in [[commitStagedChanges]]).
-    */
-  private def adoptNewDefinition(): Unit = {
-    graft.sink.DeclaredPartitionSpec.write(t.root, spec)
-    val stale = t.properties.keys.toSeq
-    if (stale.nonEmpty) t.unsetProperties(stale)
-    if (userProps.nonEmpty) t.setProperties(userProps)
-  }
-
-  /** A zero-partition empty frame with the DDL schema — writes no
-    * tasks, no files; its commit takes the metadata-only path.
-    */
-  private def emptyFrame(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema0)
-
   override def commitStagedChanges(): Unit =
-    SnapshotTable.commitLock(t.root).synchronized {
-      stagedId match {
-        case Some(id) =>
-          if (replace) {
-            // ORDER MATTERS: publish first (it CAS-checks the head and
-            // throws on conflict WITHOUT mutating anything), adopt the
-            // new spec/properties only after the data flip succeeded —
-            // the reverse order would leave a conflicted REPLACE's new
-            // metadata clobbering the untouched old table. Both steps
-            // run under the table lock, so no rival writer interleaves.
-            t.publish(id): Unit
-            adoptNewDefinition()
-          } else {
-            // CREATE: this flip is the table's birth — nothing was
-            // visible before it. A rival that PUBLISHED the same name
-            // while our query ran (plain CREATE, or a rival CTAS that
-            // committed first) owns the table; our CTAS fails whole,
-            // leaving the rival byte-untouched. Rival STAGED snapshots
-            // (a CTAS still in flight) don't block us — the loser's own
-            // commit will detect our published state here.
-            if (t.snapshots.exists(s => !s.staged && s.id != id)) {
-              t.discardStaged(id)
-              throw new IllegalStateException(
-                s"CREATE TABLE ${t.fullName} AS SELECT lost the create " +
-                  "race: the table was created concurrently while the " +
-                  "query ran; it remains untouched (retry as INSERT or " +
-                  "REPLACE TABLE)")
-            }
-            t.publish(id): Unit
-            if (spec.nonEmpty) GraftCatalog.writePartitionSpec(t.root, spec)
-            if (userProps.nonEmpty) t.setProperties(userProps)
-          }
-        case None =>
-          // no staged write: Spark routes plain (non-AS-SELECT)
-          // REPLACE TABLE / CREATE OR REPLACE TABLE DDL through the
-          // staging catalog too — materialize the new EMPTY definition
-          if (replace) {
-            // empty overwrite adopting the new schema (history kept,
-            // like RTAS), then the new spec/properties
-            t.overwrite(emptyFrame(SparkSession.active), format = fmt): Unit
-            adoptNewDefinition()
-          } else if (!t.existsVisible) createEmpty()
-      }
-    }
+    t.commitCreateOrReplace(stagedId, replace, schema0, fmt, spec, userProps)
 
   override def abortStagedChanges(): Unit =
-    // under the table's commit lock: the foreign-state check and any
-    // root removal must be atomic against a rival CTAS staging into the
-    // same (not-yet-visible) root concurrently
-    SnapshotTable.commitLock(t.root).synchronized {
-      // idempotent: a CTAS that lost the create race already discarded
-      // its stage inside commitStagedChanges — the abort Spark issues
-      // right after must be a no-op, not a NoSuchElementException that
-      // masks the race error
-      stagedId.filter(id => t.snapshots.exists(s => s.id == id && s.staged))
-        .foreach { id =>
-        if (replace)
-          // RTAS: drop the staged snapshot and its data; the published
-          // table was never touched
-          t.discardStaged(id)
-        else {
-          // CREATE: nothing was ever visible. If our staged snapshot is
-          // the ONLY state under the root, remove the root wholesale —
-          // no trace remains. Foreign snapshots (a rival in-flight CTAS's
-          // stage, or a published table that won the name) must survive:
-          // drop only ours.
-          val foreign = t.snapshots.exists(_.id != id)
-          if (foreign) t.discardStaged(id)
-          else {
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory)
-                Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(rm)
-              f.delete(): Unit
-            }
-            rm(new java.io.File(t.root))
-          }
-        }
-      }
-    }
+    stagedId.foreach(t.abortCreateOrReplace(_, replace))
 }
 
 /** Extension-less fallback relation: executes the (column-pruned)

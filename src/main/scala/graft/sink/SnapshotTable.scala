@@ -179,6 +179,8 @@ final case class PublishConflictException(table: String, snapshotId: Long)
 
 final class SnapshotTable(val root: String, val fullName: String) {
 
+  import SnapshotTable.Change
+
   private def metadataPath = Paths.get(root, "metadata.json")
 
   def exists: Boolean = Files.exists(metadataPath)
@@ -196,7 +198,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
   /** The table's published state: staged (write-audit-publish) snapshots
     * are invisible until published.
     */
-  def currentSnapshot: Option[Snapshot] = snapshots.filterNot(_.staged).lastOption
+  def currentSnapshot: Option[Snapshot] = metadata.head
 
   /** Read the table at its current snapshot. */
   def read(spark: SparkSession): DataFrame = readSnapshot(spark, requireCurrent.id)
@@ -223,9 +225,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * (written before the types were recorded) infers its schema.
     */
   def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val snap = snapshots.find(_.id == snapshotId).getOrElse(
-      throw new NoSuchElementException(
-        s"Table $fullName has no snapshot $snapshotId (available: ${snapshots.map(_.id).mkString(", ")})"))
+    val snap = metadata.snapshot(snapshotId)
     if (snap.dataDirs.isEmpty) emptyWithSchema(spark, snap)
     else {
       // Plan growth is bounded to O(schema/layout epochs), not
@@ -364,13 +364,16 @@ final class SnapshotTable(val root: String, val fullName: String) {
   /** Project `df` to the snapshot schema `cols`, resolving each field id
     * to its physical column via `mapping`. No-op for legacy snapshots
     * (empty cols). Same-type references skip the cast entirely so the
-    * projection never blocks filter pushdown or partition pruning.
+    * projection never blocks filter pushdown or partition pruning. Types
+    * that differ only in nullability are the same type: every scan reads
+    * nested fields nullable, and no cast adds a struct field's NOT NULL.
     */
   private def projectTo(
       df: DataFrame, cols: Seq[TableColumn], mapping: Map[Int, String],
       extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
     if (cols.isEmpty) df
     else {
+      import org.apache.spark.sql.catalyst.types.DataTypeUtils
       import org.apache.spark.sql.functions.{col, lit}
       val present = df.columns.toSet
       df.select(cols.map { c =>
@@ -378,7 +381,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
         mapping.get(c.id).filter(present.contains) match {
           case Some(phys) =>
             val base = col(phys)
-            (if (df.schema(phys).dataType == t) base else base.cast(t)).as(c.name)
+            val same = DataTypeUtils.equalsIgnoreNullability(df.schema(phys).dataType, t)
+            (if (same) base else base.cast(t)).as(c.name)
           case None => lit(null).cast(t).as(c.name)
         }
       } ++ extra: _*)
@@ -1079,13 +1083,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * an additive changelog does not carry.
     */
   def readIncremental(spark: SparkSession, fromId: Long, toId: Long): DataFrame = {
-    val all = snapshots
-    def snap(id: Long): Snapshot = all.find(_.id == id).getOrElse(
-      throw new NoSuchElementException(
-        s"Table $fullName has no snapshot $id (available: ${all.map(_.id).mkString(", ")})"))
+    val m = metadata
     require(fromId <= toId, s"fromId $fromId must be <= toId $toId")
-    val from = snap(fromId).dataDirs.toSet
-    val to = snap(toId)
+    val from = m.snapshot(fromId).dataDirs.toSet
+    val to = m.snapshot(toId)
     val delta = to.dataDirs.filterNot(from)
     def read(d: String): DataFrame = {
       val l = dirLayout(d)
@@ -1131,14 +1132,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
     */
   def readChangelog(spark: SparkSession, fromId: Long, toId: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, lit, not}
-    val all = snapshots
-    def snap(id: Long): Snapshot = all.find(_.id == id).getOrElse(
-      throw new NoSuchElementException(
-        s"Table $fullName has no snapshot $id (available: ${all.map(_.id).mkString(", ")})"))
+    val m = metadata
     require(fromId <= toId, s"fromId $fromId must be <= toId $toId")
-    snap(fromId): Unit
-    val to = snap(toId)
-    val chain = all.filterNot(_.staged)
+    m.snapshot(fromId): Unit
+    val to = m.snapshot(toId)
+    val chain = m.snapshots.filterNot(_.staged)
       .filter(s => s.id >= fromId && s.id <= toId).sortBy(_.id)
 
     def stamp(df: DataFrame, src: Snapshot, tpe: String, commitId: Long): DataFrame =
@@ -1267,12 +1265,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * TARGET snapshot schema, resolving renames by stable field id
     * (projectTo's contract, source side keyed by the from-snapshot's
     * names). Columns the target adds backfill null; dropped columns
-    * disappear.
+    * disappear; as there, nullability alone never casts.
     */
   private def alignToSchema(
       df: DataFrame, fromCols: Seq[TableColumn], toCols: Seq[TableColumn]): DataFrame =
     if (toCols.isEmpty) df
     else {
+      import org.apache.spark.sql.catalyst.types.DataTypeUtils
       import org.apache.spark.sql.functions.{col, lit}
       val present = df.columns.toSet
       df.select(toCols.map { tc =>
@@ -1282,7 +1281,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
         srcName match {
           case Some(n) =>
             val base = col(n)
-            (if (df.schema(n).dataType == t) base else base.cast(t)).as(tc.name)
+            val same = DataTypeUtils.equalsIgnoreNullability(df.schema(n).dataType, t)
+            (if (same) base else base.cast(t)).as(tc.name)
           case None => lit(null).cast(t).as(tc.name)
         }
       }: _*)
@@ -1552,55 +1552,120 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * [[PublishConflictException]] instead of silently dropping the
     * rival's rows.
     */
-  def publish(snapshotId: Long): Snapshot =
-    SnapshotTable.commitLock(root).synchronized {
-      val all = snapshots
-      val snap = all.find(_.id == snapshotId).getOrElse(
-        throw new NoSuchElementException(
-          s"Table $fullName has no snapshot $snapshotId (available: ${all.map(_.id).mkString(", ")})"))
-      require(snap.staged, s"snapshot $snapshotId of $fullName is already published")
-      val head = all.filterNot(_.staged).lastOption
-      // compare head IDS, not dirs: an equality delete or a rollback to a
-      // same-dirs state advances the head WITHOUT changing dataDirs, and
-      // flipping a snapshot staged before it would restate the stage-time
-      // deletes/rowCount — silently undoing the delete. Legacy staged
-      // metadata (no parent_id recorded) falls back to the dirs check.
-      val conflicted = snap.parentId match {
-        case Some(p) => head.map(_.id).getOrElse(0L) != p
-        case None    => snap.dataDirs.dropRight(1) != head.map(_.dataDirs).getOrElse(Nil)
-      }
-      if (conflicted)
-        throw PublishConflictException(fullName, snapshotId)
-      // publish is the moment the data BECOMES the table: stamp a fresh
-      // commit time (Iceberg's cherry-pick does the same), so timestamp
-      // time travel for instants between stage and publish is stable —
-      // readAsOf(t) answers from what was published at t, and a later
-      // publish can never retroactively change a past answer
-      val flipped = snap.copy(staged = false, committedAtMs = SnapshotTable.clockMs())
-      writeMetadata((all.filterNot(_.id == snapshotId) :+ flipped).sortBy(_.id))
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "publish", "snapshot_id" -> snapshotId.toString))
-      flipped
+  def publish(snapshotId: Long): Snapshot = transact { m =>
+    val snap = m.snapshot(snapshotId)
+    require(snap.staged, s"snapshot $snapshotId of $fullName is already published")
+    val head = m.head
+    // compare head IDS, not dirs: an equality delete or a rollback to a
+    // same-dirs state advances the head WITHOUT changing dataDirs, and
+    // flipping a snapshot staged before it would restate the stage-time
+    // deletes/rowCount — silently undoing the delete. Legacy staged
+    // metadata (no parent_id recorded) falls back to the dirs check.
+    val conflicted = snap.parentId match {
+      case Some(p) => head.map(_.id).getOrElse(0L) != p
+      case None    => snap.dataDirs.dropRight(1) != head.map(_.dataDirs).getOrElse(Nil)
     }
+    if (conflicted)
+      throw PublishConflictException(fullName, snapshotId)
+    // publish is the moment the data BECOMES the table: stamp a fresh
+    // commit time (Iceberg's cherry-pick does the same), so timestamp
+    // time travel for instants between stage and publish is stable —
+    // readAsOf(t) answers from what was published at t, and a later
+    // publish can never retroactively change a past answer
+    val flipped = snap.copy(staged = false, committedAtMs = SnapshotTable.clockMs())
+    Change(flipped,
+      snapshots = Some((m.snapshots.filterNot(_.id == snapshotId) :+ flipped).sortBy(_.id)),
+      audit = Seq(Map("operation" -> "publish", "snapshot_id" -> snapshotId.toString)))
+  }
 
   /** Write-audit-publish, failed-audit path: drop a staged snapshot and
     * physically delete the data no surviving snapshot references.
     */
-  def discardStaged(snapshotId: Long): Unit =
-    SnapshotTable.commitLock(root).synchronized {
-      val all = snapshots
-      val snap = all.find(_.id == snapshotId).getOrElse(
-        throw new NoSuchElementException(
-          s"Table $fullName has no snapshot $snapshotId (available: ${all.map(_.id).mkString(", ")})"))
+  def discardStaged(snapshotId: Long): Unit = {
+    val (snap, kept) = transact { m =>
+      val snap = m.snapshot(snapshotId)
       require(snap.staged,
         s"snapshot $snapshotId of $fullName is published; use expireSnapshots for history")
-      val kept = all.filterNot(_.id == snapshotId)
-      writeMetadata(kept)
-      val liveDirs = kept.flatMap(_.dataDirs).toSet
-      snap.dataDirs.filterNot(liveDirs.contains).foreach(d => deleteRecursively(new File(d)))
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "stage_discard", "snapshot_id" -> snapshotId.toString))
+      val kept = m.snapshots.filterNot(_.id == snapshotId)
+      Change((snap, kept), snapshots = Some(kept),
+        audit = Seq(Map("operation" -> "stage_discard", "snapshot_id" -> snapshotId.toString)))
     }
+    val liveDirs = kept.flatMap(_.dataDirs).toSet
+    snap.dataDirs.filterNot(liveDirs.contains).foreach(d => deleteRecursively(new File(d)))
+  }
+
+  /** Commit an atomic CREATE or REPLACE TABLE [AS SELECT] (a DSv2 staged
+    * table) as one transaction: make `staged` — the statement's staged
+    * snapshot; None for plain DDL without AS SELECT, which Spark routes
+    * through the staging catalog too — the table, then adopt the
+    * statement's partition `spec` and properties `props`.
+    *  - REPLACE publishes first (publish CAS-checks the head and throws
+    *    on conflict without mutating anything) and only then adopts the
+    *    new spec and replaces the properties wholesale, so a conflicted
+    *    REPLACE never clobbers the untouched old table. Without staged
+    *    data it commits an empty overwrite to `schema`, history kept.
+    *  - CREATE is the table's birth: nothing was visible before it. A
+    *    rival that PUBLISHED the name while the query ran (plain CREATE,
+    *    or a rival CTAS that committed first) owns the table; this CTAS
+    *    discards its stage and fails whole, leaving the rival
+    *    byte-untouched. Rival STAGED snapshots (a CTAS still in flight)
+    *    do not block it — the loser's own commit detects this one.
+    *    Without staged data it creates the empty table unless one is
+    *    visible.
+    */
+  def commitCreateOrReplace(
+      staged: Option[Long], replace: Boolean, schema: org.apache.spark.sql.types.StructType,
+      format: String, spec: Seq[graft.template.PartitionField],
+      props: Map[String, String]): Unit = transact { m =>
+    def adopt(): Unit = {
+      if (replace) {
+        DeclaredPartitionSpec.write(root, spec)
+        val stale = properties.keys.toSeq
+        if (stale.nonEmpty) unsetProperties(stale)
+      } else if (spec.nonEmpty) DeclaredPartitionSpec.write(root, spec)
+      if (props.nonEmpty) setProperties(props)
+    }
+    staged match {
+      case Some(id) =>
+        if (!replace && m.snapshots.exists(s => !s.staged && s.id != id)) {
+          discardStaged(id)
+          throw new IllegalStateException(
+            s"CREATE TABLE $fullName AS SELECT lost the create race: the table was " +
+              "created concurrently while the query ran; it remains untouched " +
+              "(retry as INSERT or REPLACE TABLE)")
+        }
+        publish(id): Unit
+        adopt()
+      case None if replace =>
+        val spark = SparkSession.active
+        overwrite(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), format = format): Unit
+        adopt()
+      case None =>
+        if (m.head.isEmpty) {
+          create(schema.fields.toSeq.map(f => f.name -> f.dataType.sql), format): Unit
+          adopt()
+        }
+    }
+    Change(())
+  }
+
+  /** Abort what [[commitCreateOrReplace]] would have committed: drop
+    * staged snapshot `staged` and its data; the published table was never
+    * touched. Idempotent — a CTAS that lost the create race already
+    * discarded its stage. A CREATE whose stage is the only state under
+    * the root removes the root wholesale, so no trace remains; foreign
+    * snapshots (a rival in-flight CTAS's stage, or a published table that
+    * won the name) survive. One transaction, so the check and the removal
+    * are atomic against a rival CTAS staging into the same root.
+    */
+  def abortCreateOrReplace(staged: Long, replace: Boolean): Unit = transact { m =>
+    if (m.snapshots.exists(s => s.id == staged && s.staged)) {
+      if (replace || m.snapshots.exists(_.id != staged)) discardStaged(staged)
+      else deleteRecursively(new File(root))
+    }
+    Change(())
+  }
 
   // ------------------------------------------------------------------
   // table properties (Iceberg table properties: free-form key/value
@@ -1618,24 +1683,20 @@ final class SnapshotTable(val root: String, val fullName: String) {
     MetadataJson.write(propertiesPath, strObj(props))
 
   /** Set (upsert) table properties — `ALTER TABLE ... SET TBLPROPERTIES`. */
-  def setProperties(kv: Map[String, String]): Unit =
-    SnapshotTable.commitLock(root).synchronized {
-      require(kv.keys.forall(_.nonEmpty), "property keys must be non-empty")
-      writeProperties(properties ++ kv)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "set_properties", "keys" -> kv.keys.toSeq.sorted.mkString(",")))
-    }
+  def setProperties(kv: Map[String, String]): Unit = transact { m =>
+    require(kv.keys.forall(_.nonEmpty), "property keys must be non-empty")
+    Change((), properties = Some(m.properties ++ kv), audit = Seq(Map(
+      "operation" -> "set_properties", "keys" -> kv.keys.toSeq.sorted.mkString(","))))
+  }
 
   /** Remove table properties — `ALTER TABLE ... UNSET TBLPROPERTIES`.
     * Unknown keys are ignored (SQL UNSET ... IF EXISTS semantics; Spark
     * passes plain UNSET through the same path).
     */
-  def unsetProperties(keys: Seq[String]): Unit =
-    SnapshotTable.commitLock(root).synchronized {
-      writeProperties(properties -- keys)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "unset_properties", "keys" -> keys.sorted.mkString(",")))
-    }
+  def unsetProperties(keys: Seq[String]): Unit = transact { m =>
+    Change((), properties = Some(m.properties -- keys), audit = Seq(Map(
+      "operation" -> "unset_properties", "keys" -> keys.sorted.mkString(","))))
+  }
 
   // ------------------------------------------------------------------
   // named refs: branches + tags (Iceberg table refs)
@@ -1666,39 +1727,23 @@ final class SnapshotTable(val root: String, val fullName: String) {
         r.maxSnapshotAgeMs.map(v => "max_snapshot_age_ms" -> num(v)): _*)
     }))
 
-  private def requireRef(name: String, kind: String): TableRef =
-    refs.find(r => r.name == name && r.kind == kind).getOrElse(
-      throw new NoSuchElementException(
-        s"Table $fullName has no $kind '$name' " +
-          s"(refs: ${refs.map(r => s"${r.name}[${r.kind}]").mkString(", ")})"))
-
   private def createRef(name: String, kind: String, at: Option[Long],
       maxRefAgeMs: Option[Long] = None,
       minSnapshotsToKeep: Option[Int] = None,
-      maxSnapshotAgeMs: Option[Long] = None): TableRef =
-    SnapshotTable.commitLock(root).synchronized {
-      require(name.nonEmpty && name != "main",
-        s"ref name '$name' is reserved ('main' is the published head)")
-      require(!refs.exists(_.name == name),
-        s"Table $fullName already has a ref named '$name'; refs are " +
-          "create-once — dropRef first to repoint")
-      val all = snapshots
-      val target = at match {
-        case Some(id) => all.find(_.id == id).getOrElse(
-          throw new NoSuchElementException(
-            s"Table $fullName has no snapshot $id (available: ${all.map(_.id).mkString(", ")})"))
-        case None => all.filterNot(_.staged).lastOption.getOrElse(
-          throw new IllegalStateException(
-            s"Table $fullName has no published snapshot to ref; write first"))
-      }
-      val r = TableRef(name, kind, target.id,
-        maxRefAgeMs, minSnapshotsToKeep, maxSnapshotAgeMs)
-      writeRefs(refs :+ r)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> s"create_$kind", "ref" -> name,
-        "snapshot_id" -> target.id.toString))
-      r
-    }
+      maxSnapshotAgeMs: Option[Long] = None): TableRef = transact { m =>
+    require(name.nonEmpty && name != "main",
+      s"ref name '$name' is reserved ('main' is the published head)")
+    require(!m.refs.exists(_.name == name),
+      s"Table $fullName already has a ref named '$name'; refs are " +
+        "create-once — dropRef first to repoint")
+    val target = at.map(m.snapshot).getOrElse(m.head.getOrElse(
+      throw new IllegalStateException(
+        s"Table $fullName has no published snapshot to ref; write first")))
+    val r = TableRef(name, kind, target.id,
+      maxRefAgeMs, minSnapshotsToKeep, maxSnapshotAgeMs)
+    Change(r, refs = Some(m.refs :+ r), audit = Seq(Map(
+      "operation" -> s"create_$kind", "ref" -> name, "snapshot_id" -> target.id.toString)))
+  }
 
   /** Create a branch at `at` (default: the published head). Branch
     * appends ([[appendToBranch]]) advance it without touching the
@@ -1724,14 +1769,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * metadata (staged, invisible) until retention expires them — same
     * lifecycle as an abandoned WAP stage.
     */
-  def dropRef(name: String): Unit =
-    SnapshotTable.commitLock(root).synchronized {
-      require(refs.exists(_.name == name),
-        s"Table $fullName has no ref '$name' " +
-          s"(refs: ${refs.map(_.name).mkString(", ")})")
-      writeRefs(refs.filterNot(_.name == name))
-      Audit.log("table_write", fullName, Map("operation" -> "drop_ref", "ref" -> name))
-    }
+  def dropRef(name: String): Unit = transact { m =>
+    require(m.refs.exists(_.name == name),
+      s"Table $fullName has no ref '$name' " +
+        s"(refs: ${m.refs.map(_.name).mkString(", ")})")
+    Change((), refs = Some(m.refs.filterNot(_.name == name)),
+      audit = Seq(Map("operation" -> "drop_ref", "ref" -> name)))
+  }
 
   /** Read the table as of a named ref (branch head or tag target) —
     * the `VERSION AS OF 'ref-name'` read path.
@@ -1761,18 +1805,15 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * divergence: fail, so the rival's rows are never silently dropped;
     * re-branch from the new head (or cherry-pick) to resolve.
     */
-  def fastForward(branch: String): Snapshot =
-    SnapshotTable.commitLock(root).synchronized {
-      val r = requireRef(branch, "branch")
-      val all = snapshots
-      val mainHeadId = all.filterNot(_.staged).lastOption.map(_.id).getOrElse(0L)
-      if (r.snapshotId == mainHeadId)
-        return all.find(_.id == mainHeadId).getOrElse(
-          throw new IllegalStateException(s"Table $fullName has no published snapshot"))
+  def fastForward(branch: String): Snapshot = transact { m =>
+    val r = m.ref(branch, "branch")
+    val mainHeadId = m.head.map(_.id).getOrElse(0L)
+    if (r.snapshotId == mainHeadId) Change(m.snapshot(mainHeadId))
+    else {
       var chain = List.empty[Snapshot]
       var curId = r.snapshotId
       while (curId != mainHeadId) {
-        val s = all.find(_.id == curId).getOrElse(
+        val s = m.snapshots.find(_.id == curId).getOrElse(
           throw new IllegalStateException(
             s"branch '$branch' of $fullName references missing snapshot $curId"))
         if (!s.staged)
@@ -1788,14 +1829,14 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // data BECOMES the table, so timestamp time travel stays stable
       val now = SnapshotTable.clockMs()
       val flipped = chain.map(_.id).toSet
-      writeMetadata(all.map(s =>
-        if (flipped(s.id)) s.copy(staged = false, committedAtMs = now) else s))
-      Audit.log("table_write", fullName, Map(
+      val next = m.snapshots.map(s =>
+        if (flipped(s.id)) s.copy(staged = false, committedAtMs = now) else s)
+      Change(next.find(_.id == r.snapshotId).get, snapshots = Some(next), audit = Seq(Map(
         "operation" -> "fast_forward", "ref" -> branch,
         "snapshot_id" -> r.snapshotId.toString,
-        "published_count" -> chain.size.toString))
-      snapshots.find(_.id == r.snapshotId).get
+        "published_count" -> chain.size.toString)))
     }
+  }
 
   /** Cherry-pick: apply ONE append-shaped snapshot's delta onto the
     * published head as a new commit (Iceberg's `cherrypick_snapshot`).
@@ -1808,56 +1849,50 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * overwrite) has semantics relative to its parent's state that do
     * not transplant.
     */
-  def cherryPick(snapshotId: Long): Snapshot =
-    SnapshotTable.commitLock(root).synchronized {
-      val all = snapshots
-      val snap = all.find(_.id == snapshotId).getOrElse(
-        throw new NoSuchElementException(
-          s"Table $fullName has no snapshot $snapshotId (available: ${all.map(_.id).mkString(", ")})"))
-      val parent = snap.parentId.flatMap(p => all.find(_.id == p)).getOrElse(
-        throw new IllegalStateException(
-          s"cherry-pick of $snapshotId: parent snapshot " +
-            s"${snap.parentId.getOrElse("<none>")} not found (expired?)"))
-      val parentDirs = parent.dataDirs.toSet
-      val deltaDirs = snap.dataDirs.filterNot(parentDirs)
-      require(parent.dataDirs.forall(snap.dataDirs.contains) &&
-        snap.deletes == parent.deletes && snap.maskedDirs == parent.maskedDirs,
-        s"cherry-pick of $snapshotId (${snap.operation}): only append-shaped " +
-          "snapshots transplant — the target must carry its parent's dirs, " +
-          "masks and deletes unchanged")
-      val head = all.filterNot(_.staged).lastOption.getOrElse(
-        throw new IllegalStateException(s"Table $fullName has no published snapshot"))
-      require(head.format == snap.format || deltaDirs.isEmpty,
-        s"cherry-pick of $snapshotId: delta format '${snap.format}' differs " +
-          s"from table format '${head.format}'")
-      val deltaRows =
-        if (snap.rowCount < 0 || parent.rowCount < 0) -1L
-        else snap.rowCount - parent.rowCount
-      val total =
-        if (head.rowCount < 0 || deltaRows < 0) -1L else head.rowCount + deltaRows
-      val id = all.map(_.id).max + 1
-      // the picked delta's durable watermarks merge into the new head
-      // (max per query — a watermark never regresses); the head's own
-      // display pair is stripped, as on every head-copying commit
-      val mergedWatermarks =
-        (SnapshotTable.watermarksOf(head).toSeq ++ SnapshotTable.watermarksOf(snap).toSeq)
-          .groupMapReduce(_._1)(_._2)(math.max)
-          .map { case (q, b) => s"${SnapshotTable.SummaryBatchPrefix}$q" -> b.toString }
-      val picked = head.copy(
-        id = id, committedAtMs = SnapshotTable.clockMs(),
-        operation = "cherry_pick",
-        dataDirs = head.dataDirs ++ deltaDirs,
-        rowCount = total,
-        staged = false,
-        summary = SnapshotTable.carriedSummary(head.summary) ++ mergedWatermarks,
-        parentId = Some(head.id))
-      writeMetadata(all :+ picked)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "cherry_pick", "snapshot_id" -> id.toString,
-        "source_snapshot_id" -> snapshotId.toString,
-        "delta_dirs" -> deltaDirs.size.toString))
-      picked
-    }
+  def cherryPick(snapshotId: Long): Snapshot = transact { m =>
+    val snap = m.snapshot(snapshotId)
+    val parent = snap.parentId.flatMap(p => m.snapshots.find(_.id == p)).getOrElse(
+      throw new IllegalStateException(
+        s"cherry-pick of $snapshotId: parent snapshot " +
+          s"${snap.parentId.getOrElse("<none>")} not found (expired?)"))
+    val parentDirs = parent.dataDirs.toSet
+    val deltaDirs = snap.dataDirs.filterNot(parentDirs)
+    require(parent.dataDirs.forall(snap.dataDirs.contains) &&
+      snap.deletes == parent.deletes && snap.maskedDirs == parent.maskedDirs,
+      s"cherry-pick of $snapshotId (${snap.operation}): only append-shaped " +
+        "snapshots transplant — the target must carry its parent's dirs, " +
+        "masks and deletes unchanged")
+    val head = m.head.getOrElse(
+      throw new IllegalStateException(s"Table $fullName has no published snapshot"))
+    require(head.format == snap.format || deltaDirs.isEmpty,
+      s"cherry-pick of $snapshotId: delta format '${snap.format}' differs " +
+        s"from table format '${head.format}'")
+    val deltaRows =
+      if (snap.rowCount < 0 || parent.rowCount < 0) -1L
+      else snap.rowCount - parent.rowCount
+    val total =
+      if (head.rowCount < 0 || deltaRows < 0) -1L else head.rowCount + deltaRows
+    val id = m.nextId
+    // the picked delta's durable watermarks merge into the new head
+    // (max per query — a watermark never regresses); the head's own
+    // display pair is stripped, as on every head-copying commit
+    val mergedWatermarks =
+      (SnapshotTable.watermarksOf(head).toSeq ++ SnapshotTable.watermarksOf(snap).toSeq)
+        .groupMapReduce(_._1)(_._2)(math.max)
+        .map { case (q, b) => s"${SnapshotTable.SummaryBatchPrefix}$q" -> b.toString }
+    val picked = head.copy(
+      id = id, committedAtMs = SnapshotTable.clockMs(),
+      operation = "cherry_pick",
+      dataDirs = head.dataDirs ++ deltaDirs,
+      rowCount = total,
+      staged = false,
+      summary = SnapshotTable.carriedSummary(head.summary) ++ mergedWatermarks,
+      parentId = Some(head.id))
+    Change(picked, snapshots = Some(m.snapshots :+ picked), audit = Seq(Map(
+      "operation" -> "cherry_pick", "snapshot_id" -> id.toString,
+      "source_snapshot_id" -> snapshotId.toString,
+      "delta_dirs" -> deltaDirs.size.toString)))
+  }
 
   /** Dynamic partition overwrite — Iceberg's `overwrite` with
     * partition-level replacement (Spark's
@@ -2200,31 +2235,29 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * earlier snapshots are dropped with the write. Returns
     * (data_dirs, data_files) consolidated.
     */
-  def rewriteManifests(): (Int, Int) =
-    SnapshotTable.commitLock(root).synchronized {
-      val snap = requireCurrent
-      val entries = snap.dataDirs.flatMap(dirFileEntries(snap, _))
-      // absolute on both sides: dirFileEntries returns absolute FILE
-      // paths, and relativize throws on mixed absolute/relative inputs
-      // (a relative warehouse root is legal)
-      val rootPath = Paths.get(root).toAbsolutePath
-      MetadataJson.write(manifestFilePath(snap.id), JArr(entries.map {
-        case (abs, d, part, bytes, rows) =>
-          val dirPath = Paths.get(d).toAbsolutePath
-          obj("dir" -> JStr(rootPath.relativize(dirPath).toString),
-            "file" -> JStr(dirPath.relativize(Paths.get(abs)).toString),
-            "partition" -> JStr(part), "bytes" -> num(bytes), "rows" -> num(rows))
-      }))
-      Option(new File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("manifest-") && f.getName.endsWith(".json") &&
-          f.getName != s"manifest-${snap.id}.json")
-        .foreach(f => f.delete(): Unit)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "rewrite_manifests",
-        "data_dirs" -> snap.dataDirs.size.toString,
-        "data_files" -> entries.size.toString))
-      (snap.dataDirs.size, entries.size)
-    }
+  def rewriteManifests(): (Int, Int) = transact { m =>
+    val snap = m.requireHead
+    val entries = snap.dataDirs.flatMap(dirFileEntries(snap, _))
+    // absolute on both sides: dirFileEntries returns absolute FILE
+    // paths, and relativize throws on mixed absolute/relative inputs
+    // (a relative warehouse root is legal)
+    val rootPath = Paths.get(root).toAbsolutePath
+    MetadataJson.write(manifestFilePath(snap.id), JArr(entries.map {
+      case (abs, d, part, bytes, rows) =>
+        val dirPath = Paths.get(d).toAbsolutePath
+        obj("dir" -> JStr(rootPath.relativize(dirPath).toString),
+          "file" -> JStr(dirPath.relativize(Paths.get(abs)).toString),
+          "partition" -> JStr(part), "bytes" -> num(bytes), "rows" -> num(rows))
+    }))
+    Option(new File(root).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.startsWith("manifest-") && f.getName.endsWith(".json") &&
+        f.getName != s"manifest-${snap.id}.json")
+      .foreach(f => f.delete(): Unit)
+    Change((snap.dataDirs.size, entries.size), audit = Seq(Map(
+      "operation" -> "rewrite_manifests",
+      "data_dirs" -> snap.dataDirs.size.toString,
+      "data_files" -> entries.size.toString)))
+  }
 
   /** Roll the table back to an earlier snapshot's state (Iceberg
     * `rollback_to_snapshot`) — the bad-load undo: a NEW snapshot is
@@ -2233,110 +2266,102 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * time-travelable, re-rollbackable) and costs zero data I/O. The bad
     * snapshots stay readable by id until expiry reclaims them.
     */
-  def rollback(snapshotId: Long): Snapshot =
-    SnapshotTable.commitLock(root).synchronized {
-      val all = snapshots
-      val target = all.find(_.id == snapshotId).getOrElse(
-        throw new NoSuchElementException(
-          s"Table $fullName has no snapshot $snapshotId (available: ${all.map(_.id).mkString(", ")})"))
-      require(!target.staged,
-        s"snapshot $snapshotId of $fullName is staged; publish or discard it instead")
-      val id = all.map(_.id).maxOption.getOrElse(0L) + 1
-      // parent = the rollback TARGET, not the abandoned head: the new
-      // snapshot's STATE derives from the target, and the $history
-      // parent chain (is_current_ancestor) must mark the bad lineage
-      // abandoned — exactly what Iceberg's rollback does by repointing
-      val snap = target.copy(
-        id = id, committedAtMs = SnapshotTable.clockMs(),
-        operation = "rollback",
-        summary = SnapshotTable.carriedSummary(target.summary),
-        parentId = Some(snapshotId))
-      writeMetadata(all :+ snap)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "rollback", "snapshot_id" -> id.toString,
-        "target_snapshot_id" -> snapshotId.toString))
-      snap
-    }
+  def rollback(snapshotId: Long): Snapshot = transact { m =>
+    val target = m.snapshot(snapshotId)
+    require(!target.staged,
+      s"snapshot $snapshotId of $fullName is staged; publish or discard it instead")
+    val id = m.nextId
+    // parent = the rollback TARGET, not the abandoned head: the new
+    // snapshot's STATE derives from the target, and the $history
+    // parent chain (is_current_ancestor) must mark the bad lineage
+    // abandoned — exactly what Iceberg's rollback does by repointing
+    val snap = target.copy(
+      id = id, committedAtMs = SnapshotTable.clockMs(),
+      operation = "rollback",
+      summary = SnapshotTable.carriedSummary(target.summary),
+      parentId = Some(snapshotId))
+    Change(snap, snapshots = Some(m.snapshots :+ snap), audit = Seq(Map(
+      "operation" -> "rollback", "snapshot_id" -> id.toString,
+      "target_snapshot_id" -> snapshotId.toString)))
+  }
 
   /** Drop snapshots older than `olderThanMs` (never the current one) and
     * delete data directories no surviving snapshot references.
     */
-  def expireSnapshots(olderThanMs: Long, retainLast: Int = 1): Seq[Long] =
-    // same lock as commit(): maintenance must not interleave with an
-    // in-flight append's read-modify-write of the metadata pointer
-    SnapshotTable.commitLock(root).synchronized { expireLocked(olderThanMs, retainLast) }
-
-  private def expireLocked(olderThanMs: Long, retainLast: Int = 1): Seq[Long] = {
-    val all = snapshots
-    if (all.isEmpty) return Nil
-    // never expire the published head; aged STAGED snapshots do expire
-    // (an audit abandoned past the retention window is dead weight) —
-    // UNLESS a named ref pins them: tag targets and branch heads (and
-    // their data) survive until the ref is dropped, Iceberg's
-    // ref-retention contract. Targets alone suffice: snapshots are
-    // self-contained, no ancestor chain is needed to read one.
-    val now = SnapshotTable.clockMs()
-    // per-ref retention, pass 1: a ref older than its own max-ref-age-ms
-    // expires WITH this maintenance run (Iceberg's max-ref-age-ms; age =
-    // now − committedAt of the ref's CURRENT target, so advancing a
-    // branch refreshes its age). Its target then competes for survival
-    // like any unprotected snapshot.
-    val (agedOut, liveRefs) = refs.partition(r =>
-      r.maxRefAgeMs.exists(maxAge =>
-        all.find(_.id == r.snapshotId).exists(s => now - s.committedAtMs > maxAge)))
-    if (agedOut.nonEmpty) {
-      writeRefs(liveRefs)
-      agedOut.foreach(r => Audit.log("table_write", fullName, Map(
-        "operation" -> "expire_ref", "ref" -> r.name, "kind" -> r.kind)))
-    }
-    val currentOpt = all.filterNot(_.staged).lastOption
-    // per-ref retention, pass 2: a branch with min-snapshots-to-keep /
-    // max-snapshot-age-ms protects that many (or that young) a prefix of
-    // its STAGED ancestor chain — the history only the branch can see,
-    // which the table-level arguments cannot reason about. Published
-    // ancestors stay governed by olderThanMs/retainLast (the walk stops
-    // at the first published snapshot), and the head itself is already
-    // protected as the ref target.
-    val chainProtected: Set[Long] = liveRefs
-      .filter(r => r.kind == "branch" &&
-        (r.minSnapshotsToKeep.isDefined || r.maxSnapshotAgeMs.isDefined))
-      .flatMap { r =>
-        val chain = scala.collection.mutable.ListBuffer.empty[Snapshot]
-        var curId: Option[Long] = Some(r.snapshotId)
-        var walking = true
-        while (walking && curId.isDefined) {
-          all.find(_.id == curId.get) match {
-            case Some(s) if s.staged || chain.isEmpty =>
-              chain += s; curId = s.parentId
-            case _ => walking = false
+  def expireSnapshots(olderThanMs: Long, retainLast: Int = 1): Seq[Long] = {
+    // a transaction like every commit: maintenance must not interleave
+    // with an in-flight append's read-modify-write of the metadata
+    val (expired, liveDirs) = transact { m =>
+      val all = m.snapshots
+      // never expire the published head; aged STAGED snapshots do expire
+      // (an audit abandoned past the retention window is dead weight) —
+      // UNLESS a named ref pins them: tag targets and branch heads (and
+      // their data) survive until the ref is dropped, Iceberg's
+      // ref-retention contract. Targets alone suffice: snapshots are
+      // self-contained, no ancestor chain is needed to read one.
+      val now = SnapshotTable.clockMs()
+      // per-ref retention, pass 1: a ref older than its own max-ref-age-ms
+      // expires WITH this maintenance run (Iceberg's max-ref-age-ms; age =
+      // now − committedAt of the ref's CURRENT target, so advancing a
+      // branch refreshes its age). Its target then competes for survival
+      // like any unprotected snapshot.
+      val (agedOut, liveRefs) = m.refs.partition(r =>
+        r.maxRefAgeMs.exists(maxAge =>
+          all.find(_.id == r.snapshotId).exists(s => now - s.committedAtMs > maxAge)))
+      val currentOpt = m.head
+      // per-ref retention, pass 2: a branch with min-snapshots-to-keep /
+      // max-snapshot-age-ms protects that many (or that young) a prefix of
+      // its STAGED ancestor chain — the history only the branch can see,
+      // which the table-level arguments cannot reason about. Published
+      // ancestors stay governed by olderThanMs/retainLast (the walk stops
+      // at the first published snapshot), and the head itself is already
+      // protected as the ref target.
+      val chainProtected: Set[Long] = liveRefs
+        .filter(r => r.kind == "branch" &&
+          (r.minSnapshotsToKeep.isDefined || r.maxSnapshotAgeMs.isDefined))
+        .flatMap { r =>
+          val chain = scala.collection.mutable.ListBuffer.empty[Snapshot]
+          var curId: Option[Long] = Some(r.snapshotId)
+          var walking = true
+          while (walking && curId.isDefined) {
+            all.find(_.id == curId.get) match {
+              case Some(s) if s.staged || chain.isEmpty =>
+                chain += s; curId = s.parentId
+              case _ => walking = false
+            }
           }
-        }
-        val minKeep = r.minSnapshotsToKeep.getOrElse(1)
-        chain.zipWithIndex.collect {
-          case (s, i) if i < minKeep ||
-            r.maxSnapshotAgeMs.exists(a => now - s.committedAtMs <= a) => s.id
-        }
-      }.toSet
-    val refIds = liveRefs.map(_.snapshotId).toSet ++ chainProtected
-    // retain_last (Iceberg expire_snapshots): the newest N PUBLISHED
-    // snapshots survive regardless of age — a rollback window is a
-    // count guarantee, not an age guarantee, under bursty commit rates
-    val retained = all.filterNot(_.staged).takeRight(math.max(1, retainLast))
-      .map(_.id).toSet
-    val (expired, kept0) =
-      all.filterNot(currentOpt.contains)
-        .partition(s => s.committedAtMs < olderThanMs && !refIds.contains(s.id) &&
-          !retained.contains(s.id))
-    val kept = (kept0 ++ currentOpt).sortBy(_.id)
-    val liveDirs = kept.flatMap(s => s.dataDirs ++ s.deletes.map(_.dir)).toSet
-    if (expired.nonEmpty) {
-      writeMetadata(kept)
-      expired.flatMap(s => s.dataDirs ++ s.deletes.map(_.dir))
-        .distinct.filterNot(liveDirs.contains).foreach { d =>
-          deleteRecursively(new File(d))
-        }
+          val minKeep = r.minSnapshotsToKeep.getOrElse(1)
+          chain.zipWithIndex.collect {
+            case (s, i) if i < minKeep ||
+              r.maxSnapshotAgeMs.exists(a => now - s.committedAtMs <= a) => s.id
+          }
+        }.toSet
+      val refIds = liveRefs.map(_.snapshotId).toSet ++ chainProtected
+      // retain_last (Iceberg expire_snapshots): the newest N PUBLISHED
+      // snapshots survive regardless of age — a rollback window is a
+      // count guarantee, not an age guarantee, under bursty commit rates
+      val retained = all.filterNot(_.staged).takeRight(math.max(1, retainLast))
+        .map(_.id).toSet
+      val (expired, kept0) =
+        all.filterNot(currentOpt.contains)
+          .partition(s => s.committedAtMs < olderThanMs && !refIds.contains(s.id) &&
+            !retained.contains(s.id))
+      val kept = (kept0 ++ currentOpt).sortBy(_.id)
+      // an empty table sweeps nothing
+      val live = Option.when(all.nonEmpty)(kept.flatMap(s => s.dataDirs ++ s.deletes.map(_.dir)).toSet)
+      Change((expired, live),
+        snapshots = Option.when(expired.nonEmpty)(kept),
+        refs = Option.when(agedOut.nonEmpty)(liveRefs),
+        audit = agedOut.map(r =>
+          Map("operation" -> "expire_ref", "ref" -> r.name, "kind" -> r.kind)))
     }
-    sweepOrphans(liveDirs, olderThanMs): Unit
+    // no snapshot names the dirs only expired snapshots referenced any
+    // more: they go, then aged orphans
+    liveDirs.foreach { live =>
+      expired.flatMap(s => s.dataDirs ++ s.deletes.map(_.dir))
+        .distinct.filterNot(live.contains).foreach(d => deleteRecursively(new File(d)))
+      sweepOrphans(live, olderThanMs): Unit
+    }
     expired.map(_.id)
   }
 
@@ -2378,14 +2403,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * dir paths. O(#dirs) filesystem metadata — no data is read.
     */
   def removeOrphanFiles(olderThanMs: Long = System.currentTimeMillis()): Seq[String] =
-    SnapshotTable.commitLock(root).synchronized {
-      val live = snapshots.flatMap(s => s.dataDirs ++ s.deletes.map(_.dir)).toSet
+    transact { m =>
+      val live = m.snapshots.flatMap(s => s.dataDirs ++ s.deletes.map(_.dir)).toSet
       val removed = sweepOrphans(live, olderThanMs)
-      if (removed.nonEmpty)
-        Audit.log("table_write", fullName, Map(
-          "operation" -> "remove_orphan_files",
-          "removed_dirs" -> removed.size.toString))
-      removed
+      Change(removed, audit = Option.when(removed.nonEmpty)(Map(
+        "operation" -> "remove_orphan_files", "removed_dirs" -> removed.size.toString)).toSeq)
     }
 
   /** A fresh unique dir path under the table root: the final snapshot id
@@ -2395,11 +2417,89 @@ final class SnapshotTable(val root: String, val fullName: String) {
   private def freshDir(prefix: String): String =
     Paths.get(root, s"$prefix${java.util.UUID.randomUUID().toString.take(8)}").toString
 
-  private def requireCurrent: Snapshot = currentSnapshot.getOrElse(
-    throw new RuntimeException(
-      s"Table $fullName is not registered in the warehouse. " +
-        "Create it first (Pipeline.ensureTable / DDL) before reading or writing - " +
-        "the equivalent of the reference's 'run terraform apply' remediation."))
+  private def requireCurrent: Snapshot = metadata.requireHead
+
+  /** The table's metadata: the snapshots of `metadata.json`, the refs of
+    * `refs.json` and the properties of `.graft-properties.json`. Each
+    * part is read from its file once, on first use, so a lock-free reader
+    * opens only the file it needs.
+    */
+  private final class TableMetadata(
+      readSnapshots: => Seq[Snapshot],
+      readRefs: => Seq[TableRef],
+      readProperties: => Map[String, String]) {
+    lazy val snapshots: Seq[Snapshot] = readSnapshots
+    lazy val refs: Seq[TableRef] = readRefs
+    lazy val properties: Map[String, String] = readProperties
+
+    /** The published head: staged snapshots are not the table. */
+    def head: Option[Snapshot] = snapshots.filterNot(_.staged).lastOption
+
+    def requireHead: Snapshot = head.getOrElse(
+      throw new RuntimeException(
+        s"Table $fullName is not registered in the warehouse. " +
+          "Create it first (Pipeline.ensureTable / DDL) before reading or writing - " +
+          "the equivalent of the reference's 'run terraform apply' remediation."))
+
+    /** The id the next snapshot takes. */
+    def nextId: Long = snapshots.map(_.id).maxOption.getOrElse(0L) + 1
+
+    def snapshot(id: Long): Snapshot = snapshots.find(_.id == id).getOrElse(
+      throw new NoSuchElementException(
+        s"Table $fullName has no snapshot $id (available: ${snapshots.map(_.id).mkString(", ")})"))
+
+    def ref(name: String, kind: String): TableRef =
+      refs.find(r => r.name == name && r.kind == kind).getOrElse(
+        throw new NoSuchElementException(
+          s"Table $fullName has no $kind '$name' " +
+            s"(refs: ${refs.map(r => s"${r.name}[${r.kind}]").mkString(", ")})"))
+
+    /** The snapshot branch `name` points at. */
+    def branchHead(name: String): Snapshot = {
+      val r = ref(name, "branch")
+      snapshots.find(_.id == r.snapshotId).getOrElse(
+        throw new IllegalStateException(
+          s"branch '$name' of $fullName references missing snapshot ${r.snapshotId}"))
+    }
+  }
+
+  private def metadata = new TableMetadata(snapshots, refs, properties)
+
+  /** The commit protocol: every change to the table's metadata is one
+    * transaction. Under the per-table lock `f` reads the
+    * [[TableMetadata]] and returns its [[SnapshotTable.Change]]; the file
+    * of each part it replaces is then written atomically
+    * ([[MetadataJson.write]]), its audit records are logged and its
+    * result returned. A change that throws writes none of its parts;
+    * readers take no lock and always see whole files.
+    *
+    * The lock serializes one JVM's writers (cross-PROCESS writers would
+    * need the compare-and-swap in a real catalog), so a writer that read
+    * the metadata outside a transaction checks inside one that it is
+    * still current ([[swap]]).
+    *
+    * No ref ever names a snapshot `metadata.json` lacks: a change that
+    * shrinks the snapshot list writes `refs.json` first, any other
+    * `metadata.json` first; properties go last.
+    *
+    * Transactions nest (the lock is reentrant): a change may run other
+    * operations of this table, so a compound statement commits with no
+    * rival writer between its steps; such an outer change replaces no
+    * part itself. Data a transaction unreferences is deleted after it,
+    * outside the lock: no snapshot names it, so no later change can.
+    */
+  private def transact[A](f: TableMetadata => Change[A]): A =
+    SnapshotTable.commitLock(root).synchronized {
+      val m = metadata
+      val c = f(m)
+      val refsFirst = c.snapshots.exists(_.size < m.snapshots.size)
+      val writes = c.snapshots.map(s => () => writeMetadata(s)).toSeq ++
+        c.refs.map(r => () => writeRefs(r))
+      (if (refsFirst) writes.reverse else writes).foreach(_())
+      c.properties.foreach(writeProperties)
+      c.audit.foreach(Audit.log("table_write", fullName, _))
+      c.result
+    }
 
   /** A metadata swap one commit attempt prepared for
     * [[withCommitRetries]]: `base` is the published head (or the
@@ -2407,7 +2507,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * what the attempt wrote (deleted when it does not land), `audit` the
     * operation's table_write fields besides the snapshot id, and `build`
     * makes the new snapshot from (all snapshots, the base snapshot, the
-    * allocated id) under the lock.
+    * allocated id) inside the [[transact]]ion.
     */
   private case class Swap(
       base: Option[Long],
@@ -2416,22 +2516,21 @@ final class SnapshotTable(val root: String, val fullName: String) {
       branch: Option[String] = None)(
       val build: (Seq[Snapshot], Option[Snapshot], Long) => Snapshot)
 
-  /** Optimistic commit protocol, mirroring Iceberg's (reference:
+  /** Optimistic commit retries, mirroring Iceberg's (reference:
     * per-table `commit_num_retries`, `table-templates/_schema.json:109-111`;
     * bounded exponential backoff as in the catalog-connect retry,
     * `dagster/lakehouse/resources/iceberg.py:46`). Every retrying write
     * of the table commits through here:
     *
-    *  1. `attemptOnce(attempt)` reads its base snapshot without the lock
-    *     and does the expensive work unserialized — probes, counts, data
-    *     and delete-file writes to unique immutable paths — so concurrent
-    *     writers overlap on the cluster instead of queueing. It returns
-    *     the [[Swap]] to make, or Left(snapshot) when there is nothing to
-    *     commit;
-    *  2. [[swap]] moves the metadata pointer under the per-table lock IF
-    *     the base is still current;
+    *  1. `attemptOnce(attempt)` reads its base snapshot outside any
+    *     transaction and does the expensive work unserialized — probes,
+    *     counts, data and delete-file writes to unique immutable paths —
+    *     so concurrent writers overlap on the cluster instead of
+    *     queueing. It returns the [[Swap]] to make, or Left(snapshot)
+    *     when there is nothing to commit;
+    *  2. [[swap]] commits it IF the base is still current;
     *  3. a concurrent commit in the window loses the swap: the attempt's
-    *     dirs are deleted and, after the [[SnapshotTable.backoffMs]]
+    *     dirs are deleted and, after a [[SnapshotTable.backoffSleepMs]]
     *     wait, the next attempt re-reads the base and redoes its work.
     *     Work done once before the loop (a [[commit]]'s data dir, an
     *     equality-delete file) is passed as `written` and reused, so
@@ -2440,10 +2539,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     *
     * Any failure — exhaustion, a swap-time reject, an error — deletes
     * `written` and the failed attempt's dirs: an aborted commit leaves
-    * no unreferenced `snap-*` dir behind. Readers always see a
-    * consistent table (the pointer swap is atomic). Cross-PROCESS
-    * writers would additionally need the compare-and-swap to live in a
-    * real catalog; parquet-mode scopes it to the JVM.
+    * no unreferenced `snap-*` dir behind.
     */
   private def withCommitRetries(numRetries: Int, written: Seq[String] = Nil)(
       attemptOnce: Int => Either[Snapshot, Swap]): Snapshot = {
@@ -2463,7 +2559,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
               inFlight = Nil
               if (attempt >= numRetries)
                 throw CommitFailedException(fullName, attempt + 1, conflict)
-              Thread.sleep(SnapshotTable.backoffMs(attempt))
+              Thread.sleep(SnapshotTable.backoffSleepMs(attempt))
               attempt += 1
           }
       }
@@ -2475,44 +2571,29 @@ final class SnapshotTable(val root: String, val fullName: String) {
     }
   }
 
-  /** The table's one compare-and-swap: under the per-table lock, check
-    * that `s.base` is still the published head (or the branch ref's
-    * target), allocate `max id + 1`, write the snapshot `s.build` makes,
-    * advance the branch ref and log the audit event. Left when a rival
-    * commit moved the base.
+  /** The compare-and-swap of a [[withCommitRetries]] attempt, one
+    * [[transact]]ion: check that `s.base` is still the published head
+    * (or the branch ref's target), then add the snapshot `s.build` makes
+    * under the next id and advance the branch ref in the same
+    * transaction. Left when a rival commit moved the base.
     */
-  private def swap(s: Swap): Either[CommitConflictException, Snapshot] =
-    SnapshotTable.commitLock(root).synchronized {
-      val prev = snapshots
-      // commits CAS against (and carry from) the PUBLISHED head: staged
-      // snapshots are invisible to the table and must not parent rivals.
-      // Branch appends CAS against (and carry from) the branch ref's
-      // target instead — concurrent branch writers conflict on the REF.
-      val head = s.branch match {
-        case Some(b) =>
-          val r = requireRef(b, "branch")
-          Some(prev.find(_.id == r.snapshotId).getOrElse(
-            throw new IllegalStateException(
-              s"branch '$b' of $fullName references missing snapshot ${r.snapshotId}")))
-        case None => prev.filterNot(_.staged).lastOption
-      }
-      if (head.map(_.id) != s.base)
-        Left(CommitConflictException(fullName, s.base, head.map(_.id)))
-      else {
-        val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
-        val snap = s.build(prev, head, id)
-        writeMetadata(prev :+ snap)
-        // advance the branch ref atomically with the metadata swap
-        // (same lock): readers of the ref see old-head-or-new-head,
-        // never a dangling intermediate
-        s.branch.foreach { b =>
-          writeRefs(refs.map(r =>
-            if (r.name == b && r.kind == "branch") r.copy(snapshotId = id) else r))
-        }
-        Audit.log("table_write", fullName, s.audit + ("snapshot_id" -> id.toString))
-        Right(snap)
-      }
+  private def swap(s: Swap): Either[CommitConflictException, Snapshot] = transact { m =>
+    // commits CAS against (and carry from) the PUBLISHED head: staged
+    // snapshots are invisible to the table and must not parent rivals.
+    // Branch appends CAS against (and carry from) the branch ref's
+    // target instead — concurrent branch writers conflict on the REF.
+    val head = s.branch.map(m.branchHead).orElse(m.head)
+    if (head.map(_.id) != s.base)
+      Change(Left(CommitConflictException(fullName, s.base, head.map(_.id))))
+    else {
+      val id = m.nextId
+      val snap = s.build(m.snapshots, head, id)
+      Change(Right(snap), snapshots = Some(m.snapshots :+ snap),
+        refs = s.branch.map(b => m.refs.map(r =>
+          if (r.name == b && r.kind == "branch") r.copy(snapshotId = id) else r)),
+        audit = Seq(s.audit + ("snapshot_id" -> id.toString)))
     }
+  }
 
   /** A batch [[writeDataDir]] wrote: its dir and row count, the written
     * schema (name -> DDL type, resolved to field ids at swap time —
@@ -2548,7 +2629,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // the commit BASE: the caller's CAS pin when given, else the branch
     // ref's target for branch appends, else the published head
     def currentBase = branch match {
-      case Some(b) => Some(requireRef(b, "branch").snapshotId)
+      case Some(b) => Some(metadata.ref(b, "branch").snapshotId)
       case None => currentSnapshot.map(_.id)
     }
     val base = expectedBase.getOrElse(currentBase)
@@ -2869,16 +2950,15 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * viable contract: re-partitioning a table eagerly would be a full
     * rewrite of everything.
     */
-  def updatePartitionSpec(spec: Seq[graft.template.PartitionField]): Unit =
-    SnapshotTable.commitLock(root).synchronized {
-      requireCurrent: Unit
-      val old = DeclaredPartitionSpec.read(root)
-      DeclaredPartitionSpec.evolve(root, spec)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "update_partition_spec",
-        "old_spec" -> old.map(p => s"${p.transform}(${p.column})").mkString(","),
-        "new_spec" -> spec.map(p => s"${p.transform}(${p.column})").mkString(",")))
-    }
+  def updatePartitionSpec(spec: Seq[graft.template.PartitionField]): Unit = transact { m =>
+    m.requireHead: Unit
+    val old = DeclaredPartitionSpec.read(root)
+    DeclaredPartitionSpec.evolve(root, spec)
+    Change((), audit = Seq(Map(
+      "operation" -> "update_partition_spec",
+      "old_spec" -> old.map(p => s"${p.transform}(${p.column})").mkString(","),
+      "new_spec" -> spec.map(p => s"${p.transform}(${p.column})").mkString(","))))
+  }
 
   // ------------------------------------------------------------------
   // schema evolution (Iceberg metadata-only add / rename / drop)
@@ -2900,21 +2980,18 @@ final class SnapshotTable(val root: String, val fullName: String) {
     colsDdl.foreach { case (_, t) =>
       org.apache.spark.sql.types.DataType.fromDDL(t): Unit // validate early
     }
-    SnapshotTable.commitLock(root).synchronized {
+    transact { m =>
       // staged-only metadata (crash debris of an aborted atomic CTAS, or
       // a rival CTAS still in flight) is not a visible table — CREATE
       // wins by publishing first; the in-flight rival's own commit then
       // detects the foreign published state and fails its CTAS
-      val prev = snapshots
-      require(prev.forall(_.staged), s"table $fullName already exists")
-      val id = prev.map(_.id).maxOption.getOrElse(0L) + 1
+      require(m.head.isEmpty, s"table $fullName already exists")
+      val id = m.nextId
       val cols = colsDdl.zipWithIndex.map { case ((n, t), i) => TableColumn(i + 1, n, t) }
       val snap = Snapshot(id, SnapshotTable.clockMs(), "create", Nil, format,
         rowCount = 0L, parentId = Some(0L), cols = cols, lastColumnId = cols.size)
-      writeMetadata(prev :+ snap)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "create", "snapshot_id" -> id.toString))
-      snap
+      Change(snap, snapshots = Some(m.snapshots :+ snap),
+        audit = Seq(Map("operation" -> "create", "snapshot_id" -> id.toString)))
     }
   }
 
@@ -2989,53 +3066,49 @@ final class SnapshotTable(val root: String, val fullName: String) {
       cols.filterNot(_.name == name)
     }
 
-  /** One metadata-only schema commit under the table lock: resolve the
+  /** One metadata-only schema commit, one [[transact]]ion: resolve the
     * head's columns (deriving ids once for a legacy table), apply `f`,
     * append an `operation = "schema"` snapshot carrying the head's data
     * unchanged. Zero data I/O.
     */
   private def schemaCommit(spark: SparkSession)(
-      f: (Seq[TableColumn], Int) => Seq[TableColumn]): Snapshot =
-    SnapshotTable.commitLock(root).synchronized {
-      val all = snapshots
-      val cur = all.filterNot(_.staged).lastOption.getOrElse(requireCurrent)
-      val base =
-        if (cur.cols.nonEmpty) cur.cols
-        else {
-          // legacy table: derive ids 1..n from the current merged schema
-          // (one driver-side footer read)
-          val derived = readSnapshot(spark, cur.id).schema.fields.zipWithIndex.map {
-            case (fld, i) => TableColumn(i + 1, fld.name, fld.dataType.sql)
-          }.toSeq
-          // pin the derived mapping onto every legacy dir AS A SIDECAR
-          // while the names are still pre-change: without it, a dir
-          // without a sidecar resolves ids by CURRENT name, so a later
-          // rename would silently stop matching the dir's physical
-          // column and read existing data back as null. Recorded per
-          // dir with the dir's own physical columns/types (one footer
-          // read each — a one-time upgrade cost, under the table lock).
-          val byName = derived.map(c => c.name -> c.id).toMap
-          cur.dataDirs.filterNot(d => Files.exists(columnsSidecarPath(d))).foreach { d =>
-            val phys = load(spark, cur.format, None, Seq(d)).schema.fields.toSeq
-            writeColumnsSidecar(d, phys.flatMap(f =>
-              byName.get(f.name).map(id => TableColumn(id, f.name, f.dataType.sql))))
-          }
-          derived
+      f: (Seq[TableColumn], Int) => Seq[TableColumn]): Snapshot = transact { m =>
+    val cur = m.requireHead
+    val base =
+      if (cur.cols.nonEmpty) cur.cols
+      else {
+        // legacy table: derive ids 1..n from the current merged schema
+        // (one driver-side footer read)
+        val derived = readSnapshot(spark, cur.id).schema.fields.zipWithIndex.map {
+          case (fld, i) => TableColumn(i + 1, fld.name, fld.dataType.sql)
+        }.toSeq
+        // pin the derived mapping onto every legacy dir AS A SIDECAR
+        // while the names are still pre-change: without it, a dir
+        // without a sidecar resolves ids by CURRENT name, so a later
+        // rename would silently stop matching the dir's physical
+        // column and read existing data back as null. Recorded per
+        // dir with the dir's own physical columns/types (one footer
+        // read each — a one-time upgrade cost, under the table lock).
+        val byName = derived.map(c => c.name -> c.id).toMap
+        cur.dataDirs.filterNot(d => Files.exists(columnsSidecarPath(d))).foreach { d =>
+          val phys = load(spark, cur.format, None, Seq(d)).schema.fields.toSeq
+          writeColumnsSidecar(d, phys.flatMap(f =>
+            byName.get(f.name).map(id => TableColumn(id, f.name, f.dataType.sql))))
         }
-      val watermark = (Seq(cur.lastColumnId) ++ base.map(_.id) ++
-        all.flatMap(_.cols.map(_.id))).max
-      val updated = f(base, watermark + 1)
-      val id = all.map(_.id).maxOption.getOrElse(0L) + 1
-      val snap = cur.copy(
-        id = id, committedAtMs = SnapshotTable.clockMs(), operation = "schema",
-        staged = false, parentId = Some(cur.id), cols = updated,
-        summary = SnapshotTable.carriedSummary(cur.summary),
-        lastColumnId = (watermark +: updated.map(_.id)).max)
-      writeMetadata(all :+ snap)
-      Audit.log("table_write", fullName, Map(
-        "operation" -> "schema", "snapshot_id" -> id.toString))
-      snap
-    }
+        derived
+      }
+    val watermark = (Seq(cur.lastColumnId) ++ base.map(_.id) ++
+      m.snapshots.flatMap(_.cols.map(_.id))).max
+    val updated = f(base, watermark + 1)
+    val id = m.nextId
+    val snap = cur.copy(
+      id = id, committedAtMs = SnapshotTable.clockMs(), operation = "schema",
+      staged = false, parentId = Some(cur.id), cols = updated,
+      summary = SnapshotTable.carriedSummary(cur.summary),
+      lastColumnId = (watermark +: updated.map(_.id)).max)
+    Change(snap, snapshots = Some(m.snapshots :+ snap),
+      audit = Seq(Map("operation" -> "schema", "snapshot_id" -> id.toString)))
+  }
 
   private def columnsSidecarPath(dataDir: String) =
     Paths.get(dataDir, ".graft-columns.json")
@@ -3718,6 +3791,15 @@ object SnapshotTable {
   private[sink] def backoffMs(attempt: Int): Long =
     math.min(backoffBaseMs << math.min(attempt, 4), backoffBaseMs * 10)
 
+  /** The sleep before swap attempt `attempt+1`: uniform in [d/2, d] for
+    * d = [[backoffMs]], so rival writers that conflicted together do not
+    * retry in lockstep. d bounds it, and a zero base never sleeps.
+    */
+  private[sink] def backoffSleepMs(attempt: Int): Long = {
+    val d = backoffMs(attempt)
+    java.util.concurrent.ThreadLocalRandom.current().nextLong(d / 2, d + 1)
+  }
+
   /** Minimum age an unreferenced snap-* dir must reach before the
     * orphan sweep may delete it, independent of the snapshot-expiry
     * cutoff (Iceberg's remove-orphan-files action defaults to 3 days
@@ -3731,10 +3813,23 @@ object SnapshotTable {
     */
   @volatile private[graft] var beforeSwapHook: (SnapshotTable, Int) => Unit = (_, _) => ()
 
+  /** What a metadata transaction changes: the parts it replaces (None
+    * leaves a part's file unwritten), the `table_write` audit records it
+    * logs, and the caller's result.
+    */
+  private final case class Change[+A](
+      result: A,
+      snapshots: Option[Seq[Snapshot]] = None,
+      refs: Option[Seq[TableRef]] = None,
+      properties: Option[Map[String, String]] = None,
+      audit: Seq[Map[String, String]] = Nil)
+
   private val commitLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
 
-  /** One lock object per table root (JVM-wide writer serialization). */
-  private[graft] def commitLock(root: String): Object =
+  /** One lock object per table root, held by [[SnapshotTable]]'s
+    * metadata transactions (JVM-wide writer serialization).
+    */
+  private def commitLock(root: String): Object =
     commitLocks.getOrElseUpdate(new java.io.File(root).getAbsolutePath, new Object)
 
   /** Warehouse layout: `<warehouse>/<namespace>.<name>/`. */

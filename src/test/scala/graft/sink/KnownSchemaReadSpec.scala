@@ -38,11 +38,13 @@ class KnownSchemaReadSpec extends SparkSpec {
         lit(java.sql.Timestamp.valueOf("2024-01-10 10:00:00")).as("ts"),
         (col("n") % 2 === 0).as("flag"),
         org.apache.spark.sql.functions.array(col("n"), col("n") + 1).as("arr"),
-        // nullable struct fields: a NOT NULL field cannot be read back
-        // at all (the reader's schema is nullable, the table type is not)
         org.apache.spark.sql.functions.struct(
           when(col("n") > 0, col("n")).as("x"), when(col("n") > 0, col("id").cast("string")).as("y"))
           .as("st"),
+        // NOT NULL struct fields: the table type keeps the NOT NULL, every
+        // scan reads the fields nullable
+        org.apache.spark.sql.functions.struct(col("n").as("x"), col("id").cast("string").as("y"))
+          .as("nn"),
         (col("n") % 2).cast("string").as("p"))
 
   /** Each scan relation of `t.read` against a footer read of its dirs:
@@ -91,6 +93,11 @@ class KnownSchemaReadSpec extends SparkSpec {
         .collect().sortBy(_._1).toSeq
       val gone = if (format == "parquet") Set(3L, 6L) else Set(3L)
       assert(rows == (1L to 12L).filterNot(gone).map(i => (i, i, i.toString, i.toInt)))
+      assert(t.read(spark).select("id", "nn.x", "nn.y").as[(Long, Int, String)]
+        .collect().sortBy(_._1).toSeq == (1L to 12L).filterNot(gone).map(i => (i, i.toInt, i.toString)))
+      val changes = t.readChangelog(spark, 1L, t.currentSnapshot.get.id)
+        .groupBy("_change_type").count().as[(String, Long)].collect().toMap
+      assert(changes == Map("insert" -> 8L, "delete" -> gone.size.toLong))
     }
   }
 
