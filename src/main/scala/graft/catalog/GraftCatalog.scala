@@ -585,8 +585,8 @@ final class GraftSparkTable(
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
   /** The table's native scan plan at the pinned state — exactly what
-    * the Scala API serves (coalesced multi-path scans, masks, deletes,
-    * schema projection). Metadata tables serve their listing instead:
+    * the Scala API serves (one relation per layout over the recorded
+    * files, masks, deletes, schema projection). Metadata tables serve their listing instead:
     * pure metadata reads (snapshot JSON + sidecars), zero data I/O —
     * the Iceberg `$snapshots`/`$partitions` contract.
     */

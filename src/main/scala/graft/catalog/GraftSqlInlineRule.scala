@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Analyzer rule (installed by [[graft.GraftExtensions]]) that INLINES
   * every resolved graft catalog relation into the table's native scan
-  * plan — the same coalesced, mask-pruned, schema-projected plan
+  * plan — the same metadata-planned, mask-pruned, schema-projected plan
   * `SnapshotTable.read` builds for the Scala API. After inlining, the
   * SQL query and the equivalent DataFrame program are THE SAME logical
   * plan: parquet filter pushdown, partition pruning and whole-stage

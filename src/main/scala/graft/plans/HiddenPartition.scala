@@ -162,7 +162,7 @@ object GraftHiddenPartitionRule extends Rule[LogicalPlan] {
   }
 
   /** Evaluate the transform over the literal, driver-side, producing a
-    * literal of the derived column's READ-BACK type. None when the
+    * literal of the derived column's scan type. None when the
     * pairing is unsupported or any evaluation fails — the original
     * predicate then simply stands alone (no pruning, full correctness).
     */
@@ -195,8 +195,8 @@ object GraftHiddenPartitionRule extends Rule[LogicalPlan] {
         if (v == null) None
         else if (e.dataType == derivedType) Some(Literal.create(v, e.dataType))
         else {
-          // partition values re-type on read-back via path inference;
-          // align the literal or refuse
+          // the derived column's recorded type can differ from the
+          // transform's result type; align the literal or refuse
           val cast = Cast(Literal.create(v, e.dataType), derivedType, tz).eval()
           if (cast == null) None else Some(Literal.create(cast, derivedType))
         }

@@ -1,16 +1,15 @@
 package graft.plans
 
-import java.io.File
 import java.nio.file.{Files, Paths}
 
-import graft.sink.MetadataJson
+import graft.sink.{MetadataJson, SnapshotFileIndex}
 import graft.sink.MetadataJson.{JArr, JStr, num, obj}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,11 +29,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * prefix would understate it) — exactly Iceberg's lower/upper-bound
   * truncation contract.
   *
+  * Every column's entry comes from the write's own `observe` metrics,
+  * in the type the column is written and read with — partition columns
+  * included, since a snapshot scan types partition values as recorded
+  * rather than inferring them from paths.
+  *
   * [[GraftStatsSkipRule]] (installed by [[graft.GraftExtensions]])
   * consumes the sidecars at OPTIMIZATION time: a filter sitting over a
-  * file scan whose root dirs' stats prove the predicate unsatisfiable
-  * drops those dirs from the scan — file skipping at planning, before
-  * a single byte is read. At 100 TB this is the difference between
+  * snapshot scan whose dirs' stats prove the predicate unsatisfiable
+  * drops those dirs' files from the scan's [[SnapshotFileIndex]] — file
+  * skipping at planning, before a single byte is read. At 100 TB this is the difference between
   * "scan every snapshot dir and let parquet row-group stats save you"
   * and "never schedule the task at all": a time-range query over a
   * year of hourly appends plans only the dirs whose ranges overlap.
@@ -100,39 +104,29 @@ object RangeStats {
 
   /** Decode [[rangeAggs]] metric values (external/collected types, as an
     * Observation or collected Row delivers them) back into per-column
-    * entries. `overrides` substitutes whole columns — used for partition
-    * columns, whose bounds must be encoded under the READ-BACK (inferred)
-    * type rather than the written DataFrame's type (see
-    * SnapshotTable.partitionJobStats).
+    * entries.
     */
-  def entriesFromMetrics(
-      fields: Seq[StructField],
-      m: Map[String, Any],
-      overrides: Map[String, ColRange] = Map.empty): Seq[(String, ColRange)] =
+  def entriesFromMetrics(fields: Seq[StructField], m: Map[String, Any]): Seq[(String, ColRange)] =
     fields.zipWithIndex.map { case (f, i) =>
-      overrides.get(f.name) match {
-        case Some(r) => f.name -> r
-        case None =>
-          val nulls = m.get(s"c${i}_nulls") match {
-            case Some(l: Long) => l
-            case _ => 0L
+      val nulls = m.get(s"c${i}_nulls") match {
+        case Some(l: Long) => l
+        case _ => 0L
+      }
+      f.dataType match {
+        case StringType =>
+          val mn = m.get(s"c${i}_min").collect { case s: String => s }
+          val mx = m.get(s"c${i}_max").collect { case s: String => s }
+          val maxLen = m.get(s"c${i}_len") match {
+            case Some(l: Int) => l
+            case _ => 0
           }
-          f.dataType match {
-            case StringType =>
-              val mn = m.get(s"c${i}_min").collect { case s: String => s }
-              val mx = m.get(s"c${i}_max").collect { case s: String => s }
-              val maxLen = m.get(s"c${i}_len") match {
-                case Some(l: Int) => l
-                case _ => 0
-              }
-              // a truncated upper bound would understate the max — drop it
-              f.name -> ColRange(nulls, mn, if (maxLen > StringBoundChars) None else mx)
-            case dt if boundSupported(dt) =>
-              f.name -> ColRange(nulls,
-                m.get(s"c${i}_min").flatMap(v => store(dt, v)),
-                m.get(s"c${i}_max").flatMap(v => store(dt, v)))
-            case _ => f.name -> ColRange(nulls, None, None)
-          }
+          // a truncated upper bound would understate the max — drop it
+          f.name -> ColRange(nulls, mn, if (maxLen > StringBoundChars) None else mx)
+        case dt if boundSupported(dt) =>
+          f.name -> ColRange(nulls,
+            m.get(s"c${i}_min").flatMap(v => store(dt, v)),
+            m.get(s"c${i}_max").flatMap(v => store(dt, v)))
+        case _ => f.name -> ColRange(nulls, None, None)
       }
     }
 
@@ -381,74 +375,53 @@ object RangeStats {
     } catch { case _: NumberFormatException => None }
 }
 
-/** Optimizer rule: prune file-scan root directories whose range
-  * sidecars prove the filter above them unsatisfiable — the Iceberg
-  * manifest-pruning step, applied at Catalyst optimization time.
+/** Optimizer rule: narrow a snapshot scan to the files the filter above
+  * it can match — the Iceberg manifest-pruning step, applied at Catalyst
+  * optimization time.
   *
-  * It matches `Filter(cond, LogicalRelation(HadoopFsRelation))` —
-  * exactly what predicate pushdown leaves over every scan the
-  * snapshot-table read plan builds (per-dir reads AND coalesced
-  * multi-path scans; the filter arrives rewritten to PHYSICAL column
-  * names by alias substitution, which is the name space the sidecars
-  * are keyed by). Three outcomes:
+  * It matches `Filter(cond, LogicalRelation(HadoopFsRelation))` over a
+  * [[SnapshotFileIndex]] — what predicate pushdown leaves over every
+  * scan the snapshot-table read plan builds (the filter arrives
+  * rewritten to PHYSICAL column names by alias substitution, which is
+  * the name space the sidecars are keyed by). Each conjunct of `cond`
+  * that references partition columns only is evaluated exactly on each
+  * file's partition values; the rest prove a dir empty through its
+  * range sidecar. Partition-column bounds are never consulted: the
+  * index types partition values exactly, so nothing is gained from
+  * them, and bounds recorded in another type space could prune
+  * unsoundly. Three outcomes:
   *
-  *  - every root dir proves empty  -> the subtree becomes an empty
-  *    LocalRelation (PropagateEmptyRelation then collapses the union
-  *    branch away entirely);
-  *  - some dirs prove empty (multi-path coalesced scan, always
-  *    unpartitioned by construction) -> the relation is rebuilt over
-  *    the surviving paths only;
-  *  - nothing provable -> untouched.
+  *  - no file can match -> the subtree becomes an empty LocalRelation
+  *    (PropagateEmptyRelation then collapses the union branch away);
+  *  - some files can match -> the index narrows to them, its roots to
+  *    the dirs still holding one;
+  *  - every file can match -> untouched.
   *
-  * Dirs without a sidecar (external parquet, pre-feature dirs, delete
-  * files) contribute "unknown" and are never skipped. The rule runs in
-  * the operator-optimization fixed point, so it sees the post-pushdown
-  * plan regardless of rule ordering, and its output is a fixed point
-  * itself (kept dirs re-evaluate to kept).
+  * Dirs without a sidecar (pre-feature dirs) are never skipped by
+  * their data; scans over other indexes (external data, delete files)
+  * are untouched. The rule runs in the operator-optimization fixed
+  * point, so it sees the post-pushdown plan regardless of rule
+  * ordering, and its output is a fixed point itself (kept files
+  * re-evaluate to kept).
   */
-object GraftStatsSkipRule extends Rule[LogicalPlan] {
+object GraftStatsSkipRule extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, l: LogicalRelation)
-        if !l.isStreaming && l.relation.isInstanceOf[HadoopFsRelation] =>
-      val fsRel = l.relation.asInstanceOf[HadoopFsRelation]
-      val roots = fsRel.location.rootPaths
-      if (roots.isEmpty) f
-      else {
-        val stats = roots.map(p => p -> RangeStats.read(localPath(p)))
-        if (stats.forall(_._2.isEmpty)) f
-        else {
-          val kept = stats.collect {
-            case (p, st) if !st.exists(RangeStats.provesEmpty(cond, _)) => p
-          }
-          if (kept.size == roots.size) f
-          else if (kept.isEmpty) LocalRelation(l.output, Nil)
-          else if (fsRel.partitionSchema.nonEmpty) f
-          // ^ not a coverage gap: a partitioned multi-root relation with
-          //   sidecar'd roots cannot exist. Spark's partition discovery
-          //   rejects sibling partitioned roots outright (CONFLICTING_
-          //   DIRECTORY_STRUCTURES — each leaf infers its own base, even
-          //   under an explicit basePath), so snapshot reads keep
-          //   partitioned dirs on PER-DIR relations — single-root scans
-          //   that the kept.isEmpty arm above already prunes whole. The
-          //   only multi-root partitioned shape Spark accepts (explicit
-          //   partition LEAF dirs + basePath) roots below the sidecar
-          //   level, where stats resolve to None and the rule no-ops.
-          else {
-            val spark = fsRel.sparkSession
-            val pruned = new InMemoryFileIndex(
-              spark, kept, Map.empty[String, String], Some(fsRel.dataSchema),
-              FileStatusCache.getOrCreate(spark), None, None)
-            Filter(cond, l.copy(relation =
-              fsRel.copy(location = pruned)(spark)))
-          }
-        }
-      }
-  }
-
-  private def localPath(p: org.apache.hadoop.fs.Path): String = {
-    val uri = p.toUri
-    if (uri.getScheme == null || uri.getScheme == "file") uri.getPath
-    else p.toString
+    case f @ Filter(cond, l @ LogicalRelation(
+        fsRel @ HadoopFsRelation(index: SnapshotFileIndex, _, _, _, _, _), _, _, false, _)) =>
+      val partCols = fsRel.partitionSchema.fieldNames.toSet
+      val (partConds, dataConds) = splitConjunctivePredicates(cond).partition(c =>
+        c.references.nonEmpty && c.references.forall(a => partCols.contains(a.name)) &&
+          c.deterministic && !SubqueryExpression.hasSubquery(c))
+      val dataCond = dataConds.reduceOption(And).getOrElse(Literal(true))
+      val emptyDirs = index.dirs.filter(d => RangeStats.read(d).exists(st =>
+        RangeStats.provesEmpty(dataCond, st.copy(cols = st.cols -- partCols)))).toSet
+      // a partition conjunct that cannot be evaluated here (a cast that
+      // fails on some value) keeps every file; the scan evaluates it
+      val matching = scala.util.Try(index.matching(partConds)).getOrElse(index.files)
+      val kept = matching.filterNot(file => emptyDirs.contains(file.dir))
+      if (kept.size == index.files.size) f
+      else if (kept.isEmpty) LocalRelation(l.output, Nil)
+      else Filter(cond, l.copy(relation = fsRel.copy(location = index.narrow(kept))(fsRel.sparkSession)))
   }
 }

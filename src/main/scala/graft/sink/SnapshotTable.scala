@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 import graft.governance.Audit
 import graft.sink.MetadataJson.{JArr, JBool, JStr, JValue, num, obj, strObj, strs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-mode snapshot table: the Iceberg-semantics subset the engine
   * needs when no Iceberg catalog is available (this image carries no
@@ -28,7 +29,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Metadata format: one JSON file listing snapshots; each snapshot lists
   * the data directories it is composed of. Directories are immutable once
-  * committed.
+  * committed, each with sidecars recording its files (path, partition,
+  * size, rows) and its typed columns.
+  *
+  * Reads plan from that recorded file list, as Iceberg plans a scan from
+  * its manifests: a [[SnapshotFileIndex]] over exactly the snapshot's live
+  * files, with the recorded data and partition types, so no read lists a
+  * directory or infers a partition type from a path.
   */
 final case class Snapshot(
     id: Long,
@@ -43,10 +50,9 @@ final case class Snapshot(
     rowCount: Long = -1L,
     // per-dir partition masks: partition rel-paths (e.g. "ts_day=2024-01-10")
     // a dynamic partition overwrite logically REMOVED from a carried dir.
-    // Reads filter them out via a partition-column predicate, which Spark
-    // prunes at planning — masked directories are never opened. Stored
-    // per snapshot (self-contained), so expiring the replacing snapshot
-    // can never resurrect replaced data.
+    // Reads leave their files out of the scan — masked directories are
+    // never opened. Stored per snapshot (self-contained), so expiring the
+    // replacing snapshot can never resurrect replaced data.
     maskedDirs: Map[String, Seq[String]] = Map.empty,
     // write-audit-publish: a staged snapshot is fully committed data that
     // is NOT yet the table — reads skip it until publish() flips the flag
@@ -217,118 +223,72 @@ final class SnapshotTable(val root: String, val fullName: String) {
     readSnapshot(spark, snap.id)
   }
 
-  /** Time travel: read the table as of a snapshot id. Every scan takes
-    * its files' schema from the metadata — each dir's typed columns
-    * sidecar minus its partition columns, whose types stay inferred from
-    * the paths — so planning the read opens no footer and runs no Spark
-    * job, however long the history. A dir without a typed sidecar
-    * (written before the types were recorded) infers its schema.
+  /** Time travel: read the table as of a snapshot id. The scan is
+    * planned from the files the snapshot's metadata records — each
+    * dir's files sidecar lists every file with its partition and size,
+    * its typed columns sidecar gives the data and partition types — so
+    * planning lists no directory, infers no partition type and runs no
+    * Spark job, however long the history. A dir without a typed sidecar
+    * (written before the types were recorded) infers its data schema.
     */
   def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame = {
     val snap = metadata.snapshot(snapshotId)
-    if (snap.dataDirs.isEmpty) emptyWithSchema(spark, snap)
-    else {
-      // Plan growth is bounded to O(schema/layout epochs), not
-      // O(#commits): consecutive dirs that are unmasked, delete-free
-      // and physically identical (equal TYPED column sidecars, same
-      // partition layout) collapse into ONE multi-path scan — at
-      // production commit cadence (hourly appends x a year ~ 9k dirs)
-      // a per-dir union would hold 9k relations and planning time /
-      // driver memory would grow per commit. Everything else (masked
-      // dirs, delete-scoped dirs, legacy dirs without typed sidecars,
-      // schema-epoch boundaries) keeps the per-dir read: each commit's
-      // partition layout stays independently prunable, and a dir with a
-      // partition mask gets a NOT-masked predicate on the partition
-      // columns, which partition pruning resolves at planning — the
-      // masked directories are skipped, not scanned-and-filtered.
-      // Each dir's sidecars are read once, here.
-      val layouts = snap.dataDirs.map(d => d -> dirLayout(d)).toMap
-      coalesceGroups(snap, layouts).map {
-        case Seq(d) => readDir(spark, snap, d, layouts(d))
-        case dirs =>
-          // same typed sidecar => same physical (id, name, type)
-          // triples and same layout, so one schema and mapping serve
-          // the group
-          val l = layouts(dirs.head)
-          projectTo(load(spark, snap.format, l.dataSchema(snap.format), dirs),
-            snap.cols, l.mapping(snap.cols))
-      }.reduce(_ unionByName _)
-    }
+    if (snap.dataDirs.isEmpty) emptyWithSchema(spark, snap) else readDirs(spark, snap, snap.dataDirs)
   }
 
-  /** Partition [[Snapshot.dataDirs]] into maximal consecutive runs that
-    * can share one multi-path scan; singleton groups read per-dir. A dir
-    * is coalescible only when nothing dir-specific applies to it: no
-    * partition mask, no scoped equality delete, a TYPED columns sidecar
-    * (every entry has a type: a legacy dir's physical types are
-    * unknowable without footer reads), the snapshot tracks a schema to
-    * project to, and the dir is UNPARTITIONED — Spark's multi-root
-    * partition discovery rejects sibling partitioned roots
-    * (CONFLICTING_DIRECTORY_STRUCTURES), so partitioned dirs keep
-    * per-dir reads with independent pruning (their plan growth is
-    * bounded by `compact`, which folds the commit history into one
-    * dir). Dirs group by their parsed typed sidecar in `layouts`.
+  /** `dirs` of `snap` at its visibility (masks, schema projection and
+    * deletes applied). Plan size is bounded by the table's layout
+    * epochs, not its commits: all dirs of one layout — equal typed
+    * columns and partition columns, so one data schema, partition
+    * schema and field mapping serve them — share ONE relation over
+    * their live files, a masked partition being files left out. Only a
+    * delete-scoped dir, or one without a typed sidecar, reads alone.
     */
-  private def coalesceGroups(snap: Snapshot, layouts: Map[String, DirLayout]): Seq[Seq[String]] = {
-    def key(d: String): Option[Seq[(Int, String, String)]] =
-      if (snap.cols.isEmpty) None
-      else if (snap.maskedDirs.get(d).exists(_.nonEmpty)) None
-      else if (snap.deletes.exists(_.applies.contains(d))) None
-      else if (!layouts(d).partCols.contains(Nil)) None
-      else layouts(d).typedCols
-    val out = scala.collection.mutable.ArrayBuffer.empty[
-      (Option[Seq[(Int, String, String)]], scala.collection.mutable.ArrayBuffer[String])]
-    snap.dataDirs.foreach { d =>
-      val k = key(d)
-      if (k.isDefined && out.nonEmpty && out.last._1 == k) out.last._2 += d
-      else out += ((k, scala.collection.mutable.ArrayBuffer(d)))
+  private def readDirs(spark: SparkSession, snap: Snapshot, dirs: Seq[String]): DataFrame = {
+    val keyed = dirs.map(dirLayout).map { l =>
+      l -> l.scanKey.filterNot(_ => snap.deletes.exists(_.applies.contains(l.dir)))
     }
-    out.map(_._2.toSeq).toSeq
+    val groups = keyed.collect { case (l, Some(k)) => k -> l }.groupMap(_._1)(_._2)
+    keyed.map { case (l, k) => k.toRight(l) }.distinct.map {
+      case Left(l) => readDir(spark, snap, l)
+      case Right(k) =>
+        val ls = groups(k)
+        projectTo(relation(spark, snap, ls, ls.flatMap(_.live(snap))), snap.cols,
+          ls.head.mapping(snap.cols))
+    }.reduce(_ unionByName _)
   }
 
-  /** One dir of `snap`, masked, projected to the snapshot schema, with
-    * the dir-scoped positional and equality deletes applied.
-    */
-  private def readDir(
-      spark: SparkSession, snap: Snapshot, d: String, layout: DirLayout): DataFrame =
-    readDirInternal(spark, snap, d, layout, keepRowId = false)
-
-  /** [[readDir]] plus the physical row-identity columns
+  /** One dir of `snap` at its visibility, projected to the snapshot
+    * schema, with the dir-scoped positional and equality deletes
+    * applied; `only` keeps the files of the partitions it accepts.
+    * `keepRowId` adds the physical row-identity columns
     * ([[SnapshotTable.RowIdFileCol]] / [[SnapshotTable.RowIdPosCol]] from
     * parquet `_metadata`) — the probe view positional deletes are
     * computed against. Deletes/masks apply as in a normal read, so a
     * probe never re-matches an already-deleted row.
     */
-  private def readDirWithRowId(
-      spark: SparkSession, snap: Snapshot, d: String, layout: DirLayout): DataFrame =
-    readDirInternal(spark, snap, d, layout, keepRowId = true)
-
-  private def readDirInternal(
-      spark: SparkSession, snap: Snapshot, d: String, layout: DirLayout,
-      keepRowId: Boolean): DataFrame = {
+  private def readDir(
+      spark: SparkSession, snap: Snapshot, layout: DirLayout,
+      only: String => Boolean = _ => true, keepRowId: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val dels = snap.deletes.filter(_.applies.contains(d))
+    val dels = snap.deletes.filter(_.applies.contains(layout.dir))
     val (posDels, eqDels) = dels.partition(_.positional)
     // physical row identity is needed only when a positional delete is
     // in scope (or the caller probes for one): dirs without them pay
     // zero metadata-column cost
     val needRowId = keepRowId || posDels.nonEmpty
-    val base0 = load(spark, snap.format, layout.dataSchema(snap.format), Seq(d))
+    val base0 = relation(spark, snap, Seq(layout), layout.live(snap, only))
     val base =
       if (!needRowId) base0
       else base0.select(col("*"),
         col("_metadata.file_path").as(SnapshotTable.RowIdFileCol),
         col("_metadata.row_index").as(SnapshotTable.RowIdPosCol))
-    val masked = snap.maskedDirs.get(d).filter(_.nonEmpty)
-      .map(mask => base.filter(maskFilter(mask)))
-      .getOrElse(base)
     // schema evolution: project the dir's PHYSICAL columns (resolved by
     // field id via the dir's schema sidecar) to the snapshot schema —
     // columns the dir predates backfill as null, dropped columns vanish,
     // renames alias. Same-type projections are cast-free, so pushdown
-    // and partition pruning are unaffected; the mask filter above runs
-    // on physical names (partition dirs never rename — enforced).
-    val projected = projectTo(masked, snap.cols, layout.mapping(snap.cols),
+    // and partition pruning are unaffected.
+    val projected = projectTo(base, snap.cols, layout.mapping(snap.cols),
       extra =
         if (!needRowId) Nil
         else Seq(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol)))
@@ -491,22 +451,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
         })
       }
     }
-
-  /** Predicate keeping rows OUTSIDE every masked partition rel-path.
-    * References only partition columns, so Catalyst evaluates it against
-    * the partition spec at planning (directory-level skip).
-    */
-  private def maskFilter(masked: Seq[String]): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, lit, not}
-    val hits = masked.map { path =>
-      path.split("/").toSeq.map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        if (v == "__HIVE_DEFAULT_PARTITION__") col(k).isNull
-        else col(k).cast("string") === lit(v)
-      }.reduce(_ && _)
-    }
-    not(hits.reduce(_ || _))
-  }
 
   // ------------------------------------------------------------------
   // row-level DELETE / UPDATE / MERGE: three verbs, one executor per
@@ -798,7 +742,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       noInserts: => Boolean): Either[Snapshot, Swap] = {
     import org.apache.spark.sql.functions.lit
     val touched = Option.when(p.dirs.nonEmpty)(p.revise(p.dirs
-      .map(d => readDirWithRowId(spark, cur, d, dirLayout(d))
+      .map(d => readDir(spark, cur, dirLayout(d), keepRowId = true)
         .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
       .reduce(_ unionByName _)))
     val del = touched.flatMap { case (ids, _) => writePositions(spark, cur, ids) }
@@ -904,20 +848,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // — and the union below would throw on an empty reduce
     if (snap.dataDirs.isEmpty) return Nil
     val tagged = snap.dataDirs
-      .map(d => readDir(spark, snap, d, dirLayout(d)).withColumn("__graft_dir", lit(d)))
+      .map(d => readDir(spark, snap, dirLayout(d)).withColumn("__graft_dir", lit(d)))
       .reduce(_ unionByName _)
     val dirs = shape(tagged).select("__graft_dir").distinct()
       .collect().map(_.getString(0)).toSet
     // keep snapshot order (stable dir layout in metadata)
     snap.dataDirs.filter(dirs.contains)
   }
-
-  /** Union of the LOGICAL per-dir views (masks, schema projection and
-    * equality deletes applied) for a subset of `snap`'s dirs.
-    */
-  private def readDirsView(
-      spark: SparkSession, snap: Snapshot, dirs: Seq[String]): DataFrame =
-    dirs.map(d => readDir(spark, snap, d, dirLayout(d))).reduce(_ unionByName _)
 
   /** FILE-granular copy-on-write split — the Iceberg contract that a
     * row-level mutation touching a few rows of a huge dir must not
@@ -956,11 +893,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (clean.isEmpty) Map.empty
       else {
         val probe = clean.map { d =>
-          val base = load(spark, snap.format, layouts(d).dataSchema(snap.format), Seq(d))
+          val l = layouts(d)
+          val base = relation(spark, snap, Seq(l), l.files.map(_._1))
             .withColumn(dirCol, lit(d))
             .withColumn(fileCol, input_file_name())
-          projectTo(base, snap.cols, layouts(d).mapping(snap.cols),
-            extra = Seq(col(dirCol), col(fileCol)))
+          projectTo(base, snap.cols, l.mapping(snap.cols), extra = Seq(col(dirCol), col(fileCol)))
         }.reduce(_ unionByName _)
         shape(probe).select(col(dirCol), col(fileCol)).distinct()
           .collect().map(r => (r.getString(0), r.getString(1)))
@@ -970,13 +907,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
       }
     val parts = affected.map { d =>
       val hits = fileHits.getOrElse(d, Set.empty)
-      val all = listDataFiles(new File(d)).map(_.getAbsolutePath)
-      // split ONLY when every probed hit resolves to a listed file and
-      // some file is untouched; any URI/walk disagreement falls back to
+      val all = layouts(d).files.map(_._1.path)
+      // split ONLY when every probed hit resolves to a recorded file and
+      // some file is untouched; any URI/path disagreement falls back to
       // the whole-dir rewrite — misclassifying an affected file as
       // carried would silently lose its mutation
       if (hits.isEmpty || !hits.subsetOf(all.toSet) || all.forall(hits.contains))
-        (readDir(spark, snap, d, layouts(d)), None)
+        (readDir(spark, snap, layouts(d)), None)
       else {
         val carried = all.filterNot(hits.contains)
         val carryDir = Paths.get(root,
@@ -999,7 +936,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         val carriedSet = carried.toSet
         val origEntries = readFilesSidecar(d).getOrElse(Nil)
           .filter(e => carriedSet.contains(e._1))
-        val dirPartCols = layouts(d).partKeys.headOption.getOrElse(Nil)
+        val dirPartCols = layouts(d).partCols
         val rowsByPart: Map[String, Long] = origEntries.groupBy(_._2).map {
           case (p, es) => p -> (if (es.exists(_._4 < 0)) -1L else es.map(_._4).sum)
         }
@@ -1019,13 +956,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
         if (Files.exists(ranges))
           Files.copy(ranges, Paths.get(carryDir, graft.plans.RangeStats.SidecarName),
             java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-        // the rewrite reads ONLY the affected files; basePath keeps the
-        // hive partition columns resolving exactly as a dir read would
-        val hit = all.filter(hits.contains)
-        val narrow = load(spark, snap.format, layouts(d).dataSchema(snap.format), hit,
-          basePath = Some(d))
-        (projectTo(narrow, snap.cols, layouts(d).mapping(snap.cols)),
-          Some(carryDir))
+        // the rewrite reads ONLY the affected files
+        val narrow = relation(spark, snap, Seq(layouts(d)),
+          layouts(d).files.map(_._1).filter(f => hits.contains(f.path)))
+        (projectTo(narrow, snap.cols, layouts(d).mapping(snap.cols)), Some(carryDir))
       }
     }
     (parts.map(_._1).reduce(_ unionByName _), parts.flatMap(_._2))
@@ -1088,22 +1022,22 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val from = m.snapshot(fromId).dataDirs.toSet
     val to = m.snapshot(toId)
     val delta = to.dataDirs.filterNot(from)
-    def read(d: String): DataFrame = {
-      val l = dirLayout(d)
-      projectTo(load(spark, to.format, l.dataSchema(to.format), Seq(d)), to.cols, l.mapping(to.cols))
-    }
+    // delta dirs read whole: no mask or delete of `to` applies to the
+    // rows a commit added, so each is read as `to` without them
+    def read(dirs: Seq[String]): DataFrame =
+      readDirs(spark, to.copy(maskedDirs = Map.empty, deletes = Nil), dirs)
     if (delta.isEmpty)
       // the steady-state "no new data" case must still carry the TABLE
       // schema — a schema-less empty frame would crash downstream
       // consumers (select on named columns) instead of processing 0 rows
       to.dataDirs.headOption match {
-        case Some(d) => read(d).limit(0)
+        case Some(d) => read(Seq(d)).limit(0)
         case None => emptyWithSchema(spark, to) // table has never held data
       }
     else
       // each delta dir projected to the TO snapshot's schema, so the
       // changelog consumer sees one stable shape across evolution
-      delta.map(read).reduce(_ unionByName _)
+      read(delta)
   }
 
   /** Batch CHANGELOG read (the Iceberg `table_changes` / Delta CDF
@@ -1131,7 +1065,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     *    the table (Iceberg's changelog skips REPLACE the same way).
     */
   def readChangelog(spark: SparkSession, fromId: Long, toId: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, lit, not}
+    import org.apache.spark.sql.functions.{broadcast, lit}
     val m = metadata
     require(fromId <= toId, s"fromId $fromId must be <= toId $toId")
     m.snapshot(fromId): Unit
@@ -1148,10 +1082,12 @@ final class SnapshotTable(val root: String, val fullName: String) {
       case Seq(prev, cur) if cur.operation != "replace" =>
         val prevDirs = prev.dataDirs.toSet
         val curDirs = cur.dataDirs.toSet
-        val inserts = cur.dataDirs.filterNot(prevDirs).map(d =>
-          stamp(readDir(spark, cur, d, dirLayout(d)), cur, "insert", cur.id))
-        val dirDeletes = prev.dataDirs.filterNot(curDirs).map(d =>
-          stamp(readDir(spark, prev, d, dirLayout(d)), prev, "delete", cur.id))
+        val added = cur.dataDirs.filterNot(prevDirs)
+        val dropped = prev.dataDirs.filterNot(curDirs)
+        val inserts = Option.when(added.nonEmpty)(
+          stamp(readDirs(spark, cur, added), cur, "insert", cur.id))
+        val dirDeletes = Option.when(dropped.nonEmpty)(
+          stamp(readDirs(spark, prev, dropped), prev, "delete", cur.id))
         // a dynamic overwrite masks partitions of carried dirs instead
         // of dropping the dirs — the newly masked slices are deletes
         val maskDeletes = cur.maskedDirs.toSeq.sortBy(_._1).flatMap { case (d, curMask) =>
@@ -1160,8 +1096,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
             val newly = curMask.filterNot(
               prev.maskedDirs.getOrElse(d, Seq.empty).toSet)
             if (newly.isEmpty) None
-            else Some(stamp(
-              readDir(spark, prev, d, dirLayout(d)).filter(not(maskFilter(newly))),
+            else Some(stamp(readDir(spark, prev, dirLayout(d), newly.toSet),
               prev, "delete", cur.id))
           }
         }
@@ -1179,8 +1114,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
             // as Iceberg's changelog contract: erased old versions as
             // 'delete', the commit's new dir as 'insert'.
             val read: String => DataFrame =
-              if (del.positional) d => readDirWithRowId(spark, prev, d, dirLayout(d))
-              else d => readDir(spark, prev, d, dirLayout(d))
+              d => readDir(spark, prev, dirLayout(d), keepRowId = del.positional)
             applicable.map(read).reduceOption(_ unionByName _)
               .map { rows =>
                 val keys = readDeleteFile(spark, del, prev.format)
@@ -1192,7 +1126,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
                 stamp(cleaned, prev, "delete", cur.id)
               }
           }
-        inserts ++ dirDeletes ++ maskDeletes ++ keyDeletes
+        inserts.toSeq ++ dirDeletes ++ maskDeletes ++ keyDeletes
       case _ => Nil
     }.toSeq
 
@@ -1505,16 +1439,14 @@ final class SnapshotTable(val root: String, val fullName: String) {
       val perFileRows: Map[String, Long] = relRows.map { case (rel, n) =>
         Paths.get(dataDir, rel).toFile.getAbsolutePath -> n
       }
-      // same stats sidecars a written commit gets: per-partition rows +
-      // partition-column bounds from ONE column-pruned job (partitioned
-      // sources only), column ranges from one stats pass — so stats-skip
-      // and $partitions/$files treat imported dirs like any other
-      val (rowsByPart, partBounds) =
-        partitionJobStats(spark, dataDir, partCols, format, dataSchema = None)
-      val rowsByPart1 =
-        if (partCols.nonEmpty) rowsByPart
+      // same stats sidecars a written commit gets: per-partition rows
+      // from ONE column-pruned job (partitioned sources only), column
+      // ranges from one stats pass — so stats-skip and
+      // $partitions/$files treat imported dirs like any other
+      val rowsByPart =
+        if (partCols.nonEmpty) partitionRowCounts(spark, dataDir, partCols, format, schema = None)
         else Map("" -> newRows)
-      writePartitionSidecar(dataDir, partCols, rowsByPart1, newRows, format, perFileRows)
+      writePartitionSidecar(dataDir, partCols, rowsByPart, newRows, format, perFileRows)
       // the imported files' schema is whatever their footers say: the
       // one read here infers it, and the dir's columns sidecar (written
       // at swap) records it for every later read
@@ -1527,7 +1459,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
           n -> row.get(i)
         }.toMap[String, Any]
         graft.plans.RangeStats.writeEntries(dataDir, newRows,
-          graft.plans.RangeStats.entriesFromMetrics(fields, metrics, partBounds))
+          graft.plans.RangeStats.entriesFromMetrics(fields, metrics))
       } catch { case scala.util.control.NonFatal(_) => () }
       val written = WrittenDir(dataDir, newRows,
         inferred.schema.fields.toSeq.map(f => f.name -> f.dataType.sql))
@@ -2015,7 +1947,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         .filter(cur.dataDirs.contains)
       if (affected.isEmpty) Left(cur) // no-op: nothing to pay down
       // the logical view of exactly those dirs (deletes + masks applied)
-      else Right(rewriteDirs(cur, affected, readDirsView(spark, cur, affected),
+      else Right(rewriteDirs(cur, affected, readDirs(spark, cur, affected),
         "rewrite_deletes", Map("operation" -> "rewrite_deletes",
           "mode" -> WriteMode.CopyOnWrite.name, "attempts" -> (attempt + 1).toString))(
         _ => cur.rowCount))
@@ -2727,29 +2659,18 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val wroteFiles = filesWritten && newRows > 0L
     // per-partition stats sidecar (the manifest-stats role): file counts
     // from a directory walk; for partitioned tables ONE column-pruned
-    // job yields both the per-partition row counts and the partition
-    // columns' bounds in read-back type space — O(delta) like the write
+    // job yields the per-partition row counts — O(delta) like the write
     // itself, never O(table), and reading no data columns.
     // A MICRO commit (streaming microbatch) must not pay a whole extra
     // Spark job for a delta of a few files: per-partition row counts
     // come from a driver-side footer walk of the just-written dir
-    // (O(files-in-batch) page-cached metadata reads, no job), and the
-    // partition columns' range bounds are skipped — partition pruning
-    // still governs those dirs by NAME, and the next compaction rewrites
-    // them with full stats. Exactly Iceberg's streaming profile: thin
-    // commit-time manifests, enriched by maintenance.
-    val (rowsByPart, partBounds, microFileRows) =
-      if (!wroteFiles)
-        (Map.empty[String, Long], Map.empty[String, graft.plans.RangeStats.ColRange],
-          Map.empty[String, Long])
-      else if (micro && format == "parquet" && partitionCols.nonEmpty) {
-        val (byPart, byFile) = microPartitionRows(dataDir)
-        (byPart, Map.empty[String, graft.plans.RangeStats.ColRange], byFile)
-      } else {
-        val (byPart, bounds) =
-          partitionJobStats(df.sparkSession, dataDir, partitionCols, format, Some(written))
-        (byPart, bounds, Map.empty[String, Long])
-      }
+    // (O(files-in-batch) page-cached metadata reads, no job).
+    val (rowsByPart, microFileRows) =
+      if (!wroteFiles) (Map.empty[String, Long], Map.empty[String, Long])
+      else if (micro && format == "parquet" && partitionCols.nonEmpty) microPartitionRows(dataDir)
+      else (partitionRowCounts(df.sparkSession, dataDir, partitionCols, format,
+        Some(StructType(written.fields ++ fields.filter(f => partitionCols.contains(f.name))))),
+        Map.empty[String, Long])
     if (wroteFiles)
       writePartitionSidecar(dataDir, partitionCols, rowsByPart, newRows, format,
         microFileRows)
@@ -2760,19 +2681,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // unskippable).
     try
       if (!wroteFiles) ()
-      else if (metrics.nonEmpty) {
-        val entries =
-          graft.plans.RangeStats.entriesFromMetrics(fields, metrics, partBounds)
-        // a micro commit collected no read-back-typed partition bounds;
-        // the observe metrics hold them in WRITTEN type space, which can
-        // disagree with the inferred read-back type and prune unsoundly
-        // — record NO entry (absent = unknown = never skipped) instead
-        val sound =
-          if (micro && partitionCols.nonEmpty)
-            entries.filterNot(e => partitionCols.contains(e._1))
-          else entries
-        graft.plans.RangeStats.writeEntries(dataDir, newRows, sound)
-      } else graft.plans.RangeStats.writeSidecar(writtenDir, dataDir, newRows)
+      else if (metrics.nonEmpty)
+        graft.plans.RangeStats.writeEntries(dataDir, newRows,
+          graft.plans.RangeStats.entriesFromMetrics(fields, metrics))
+      else graft.plans.RangeStats.writeSidecar(writtenDir, dataDir, newRows)
     catch { case scala.util.control.NonFatal(_) => () }
     // partitions the batch REPLACES = the partitions it wrote (dynamic
     // overwrite semantics); read once from the just-written sidecar
@@ -3116,8 +3028,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
   /** Record the field-id -> physical-(name, type) mapping of a freshly
     * written dir (the Iceberg name-mapping role), beside the immutable
     * data. The TYPE is the physically-written one — after a column
-    * promotion it can be narrower than the table type, and the scan
-    * coalescer must never merge dirs whose physical types differ.
+    * promotion it can be narrower than the table type, and reads never
+    * share one relation across dirs whose physical types differ.
     */
   private def writeColumnsSidecar(dataDir: String, cols: Seq[TableColumn]): Unit =
     MetadataJson.write(columnsSidecarPath(dataDir), columnsJson(cols))
@@ -3135,17 +3047,16 @@ final class SnapshotTable(val root: String, val fullName: String) {
       (o("id").asLong.toInt, o("name").asStr, o.get("type").map(_.asStr))
     })
 
-  /** What one data dir's sidecars record about its files, read once per
-    * snapshot read: its columns sidecar and the distinct key lists of
-    * its partition sidecar's paths (one list, or none, unless a
-    * partition value holds '/' and splits its path ambiguously).
+  /** What one data dir's sidecars record, read once per read: its
+    * columns sidecar, and every file (masks not applied) with its
+    * partition rel-path — from the files sidecar, or a walk for a dir
+    * written before it.
     */
   private case class DirLayout(
-      cols: Option[Seq[(Int, String, Option[String])]], partKeys: Seq[Seq[String]]) {
-
-    /** The dir's partition columns; None when its paths disagree. */
-    def partCols: Option[Seq[String]] =
-      if (partKeys.size <= 1) Some(partKeys.headOption.getOrElse(Nil)) else None
+      dir: String,
+      cols: Option[Seq[(Int, String, Option[String])]],
+      partCols: Seq[String],
+      files: Seq[(SnapshotFileIndex.DataFile, String)]) {
 
     /** Every entry carries its physical type: the dir's files have a
       * known schema, and equal `typedCols` mean equal physical files.
@@ -3154,6 +3065,12 @@ final class SnapshotTable(val root: String, val fullName: String) {
       cols.filter(cs => cs.nonEmpty && cs.forall(_._3.isDefined))
         .map(_.map { case (id, n, t) => (id, n, t.get) })
 
+    /** What dirs that share one relation have equal: None for a dir whose
+      * types are not all recorded, which reads alone.
+      */
+    def scanKey: Option[(Seq[(Int, String, String)], Seq[String])] =
+      typedCols.filter(cs => partCols.forall(p => cs.exists(_._2 == p))).map(_ -> partCols)
+
     /** Field id -> physical column name; a dir predating the sidecar
       * resolves every id by its CURRENT name (legacy by-name semantics).
       */
@@ -3161,41 +3078,99 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (snapCols.isEmpty) Map.empty
       else cols.fold(snapCols.map(c => c.id -> c.name).toMap)(_.map(e => e._1 -> e._2).toMap)
 
-    /** The schema of the dir's files as `format` stores them: the typed
-      * columns minus the partition columns, whose types stay inferred
-      * from the paths (partition stats are recorded in that type space).
-      * None — infer it from a footer — for a dir without a typed
-      * sidecar, or whose partition columns are unknown or not all
-      * sidecar columns.
+    /** The files live at `snap` (its masked partitions left out) of the
+      * partitions `only` accepts.
       */
-    def dataSchema(format: String): Option[org.apache.spark.sql.types.StructType] =
-      for {
-        cs <- typedCols
-        ps <- partCols if ps.forall(p => cs.exists(_._2 == p))
-        schema <- scala.util.Try(SnapshotTable.storedSchema(format,
-          cs.filterNot(c => ps.contains(c._2)).map { case (_, n, t) =>
-            org.apache.spark.sql.types.StructField(n,
-              org.apache.spark.sql.types.DataType.fromDDL(t))
-          })).toOption
-      } yield schema
+    def live(snap: Snapshot, only: String => Boolean = _ => true): Seq[SnapshotFileIndex.DataFile] = {
+      val masked = snap.maskedDirs.getOrElse(dir, Nil).toSet
+      files.collect { case (f, p) if only(p) && !masked(p) => f }
+    }
+
+    /** The dir's (data, partition) schemas as `format` stores them, as
+      * its typed sidecar records them; None for a dir without one.
+      */
+    def recordedSchemas(format: String): Option[(StructType, StructType)] =
+      scanKey.flatMap { case (cs, ps) =>
+        scala.util.Try {
+          val fields = cs.map { case (_, n, t) =>
+            org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.DataType.fromDDL(t))
+          }
+          (SnapshotTable.storedSchema(format, fields.filterNot(f => ps.contains(f.name))),
+            StructType(ps.map(p => fields.find(_.name == p).get)))
+        }.toOption
+      }
+
+    /** [[recordedSchemas]], or for a dir without a typed sidecar its data
+      * schema inferred from a footer, its partition columns typed by
+      * `snapCols` through the mapping (by the path when the snapshot does
+      * not know them).
+      */
+    def schemas(
+        spark: SparkSession, format: String, snapCols: Seq[TableColumn]): (StructType, StructType) = {
+      import org.apache.spark.sql.types.{DataType, StructField}
+      recordedSchemas(format).getOrElse {
+        val inferred = load(spark, format, None, Seq(dir)).schema
+        val known = mapping(snapCols).map { case (id, n) => n -> id }
+        (StructType(inferred.filterNot(f => partCols.contains(f.name))),
+          StructType(partCols.map { p =>
+            known.get(p).flatMap(id => snapCols.find(_.id == id))
+              .fold(inferred(p))(c => StructField(p, DataType.fromDDL(c.dataType)))
+          }))
+      }
+    }
   }
 
-  private def dirLayout(dataDir: String): DirLayout =
-    DirLayout(readColumnsSidecar(dataDir),
-      readPartitionSidecar(dataDir).map(_._1).filter(_.nonEmpty)
-        .map(_.split("/").toSeq.map(_.split("=", 2)(0))).distinct)
+  /** `dataDir`'s layout; its partition columns and each file's values
+    * are the `col=value` segments of the file's path.
+    */
+  private def dirLayout(dataDir: String): DirLayout = {
+    import scala.jdk.CollectionConverters._
+    val base = Paths.get(dataDir).toAbsolutePath
+    val entries = readFilesSidecar(dataDir).map(_.map(e => (e._1, e._2, e._3))).getOrElse(
+      listDataFiles(new File(dataDir)).map(f =>
+        (f.getAbsolutePath, unescapePath(base.relativize(f.toPath.toAbsolutePath.getParent).toString),
+          f.length())))
+    val files = entries.map { case (path, partition, bytes) =>
+      val kvs = base.relativize(Paths.get(path)).asScala.toSeq.init.map(_.toString.split("=", 2))
+      (kvs.map(kv => unescapePath(kv(0))), SnapshotFileIndex.DataFile(path, dataDir, bytes, kvs.map(_(1))),
+        partition)
+    }
+    DirLayout(dataDir, readColumnsSidecar(dataDir), files.headOption.fold(Seq.empty[String])(_._1),
+      files.map(f => f._2 -> f._3))
+  }
 
-  /** The one reader of the dirs this table's metadata names — data
-    * dirs, delete files and freshly written dirs. `schema` is the
-    * files' schema as recorded in the metadata, so no footer is opened
-    * to infer it (a Spark job per call); None infers it, for files the
-    * engine did not write and dirs whose sidecars predate the types.
+  /** ONE relation over `files` of the dirs of `layouts`, which share
+    * their typed columns and partition columns: a [[SnapshotFileIndex]]
+    * built from the metadata, so planning it lists and infers nothing.
+    * Physical column names; callers project to the snapshot schema.
+    */
+  private def relation(
+      spark: SparkSession, snap: Snapshot, layouts: Seq[DirLayout],
+      files: Seq[SnapshotFileIndex.DataFile]): DataFrame = {
+    // nullable, as a reader given a schema makes it: no scan type is
+    // NOT NULL, even where the table type of a struct field is
+    val (data, parts) = layouts.head.schemas(spark, snap.format, snap.cols) match {
+      case (d, p) => (d.toNullable, p.toNullable)
+    }
+    val index = SnapshotFileIndex(layouts.map(_.dir), files, parts,
+      spark.conf.get(org.apache.spark.sql.internal.SQLConf.SESSION_LOCAL_TIMEZONE.key))
+    spark.baseRelationToDataFrame(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(
+        index, parts, data, None, SnapshotTable.fileFormat(snap.format), Map.empty)(spark))
+  }
+
+  /** The reader of the files the engine writes before the metadata names
+    * them — fresh data dirs and delete files — and of foreign files.
+    * `schema` is the files' schema when the caller knows it, so no
+    * footer is opened to infer it (a Spark job per call); None infers it,
+    * for files the engine did not write and dirs whose sidecars predate
+    * the types.
     */
   private def load(
-      spark: SparkSession, format: String, schema: Option[org.apache.spark.sql.types.StructType],
-      paths: Seq[String], basePath: Option[String] = None): DataFrame = {
+      spark: SparkSession, format: String, schema: Option[StructType],
+      paths: Seq[String]): DataFrame = {
     val r = spark.read.format(format)
-    schema.fold(r)(r.schema).options(basePath.map("basePath" -> _).toMap).load(paths: _*)
+    schema.fold(r)(r.schema).load(paths: _*)
   }
 
   /** A delete file of `del`, read with its known schema: the fixed
@@ -3207,129 +3182,51 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val format = del.format.getOrElse(snapFormat)
     load(spark, format,
       if (del.positional) Some(SnapshotTable.PositionalDeleteSchema)
-      else DirLayout(readColumnsSidecar(del.dir), Nil).dataSchema(format),
+      else DirLayout(del.dir, readColumnsSidecar(del.dir), Nil, Nil).recordedSchemas(format).map(_._1),
       Seq(del.dir))
   }
 
   private def sidecarPath(dataDir: String) =
     Paths.get(dataDir, ".graft-partitions.json")
 
-  /** ONE column-pruned job over a freshly written PARTITIONED dir
-    * yielding both sidecar inputs at once: per-partition-directory row
-    * counts AND the partition columns' min/max/null stats. Bounds are
-    * collected in READ-BACK (inferred) type space: partition values are
-    * parsed back from directory names at scan time, so their scan
-    * attributes carry the INFERRED types — bounds recorded under the
-    * written DataFrame's types could disagree (e.g. a string column of
-    * numeric-looking values reads back as IntegerType, where
-    * lexicographic and numeric min differ) and unsoundly prune. The job
-    * reads no data columns: partition values come from paths and row
-    * counts from file metadata. No-op for unpartitioned dirs — their
-    * stats all come from the write-time observation. `dataSchema` is
-    * the files' schema when the caller wrote them (None infers it, for
-    * imported files); the partition columns' types are inferred either
-    * way.
+  /** ONE column-pruned job over a freshly written PARTITIONED dir: its
+    * per-partition-directory row counts. The partition columns read with
+    * `schema`'s types, the written ones, so each key renders the way the
+    * writer rendered the directory name — a Catalyst string cast ('007'
+    * stays '007'; JVM toString would diverge for e.g. timestamps) — and
+    * lines up with the walked (unescaped) paths. The job reads no data
+    * columns. `schema` is the written files' schema plus the partition
+    * columns; None infers both, for imported files. Past
+    * [[SnapshotTable.PartitionStatsCapKey]] groups the counts are unknown
+    * (empty): a 100k-partition backfill must not hold them all on the
+    * driver. Empty for unpartitioned dirs.
     */
-  private def partitionJobStats(
+  private def partitionRowCounts(
       spark: SparkSession,
       dataDir: String,
       partitionCols: Seq[String],
       format: String,
-      dataSchema: Option[org.apache.spark.sql.types.StructType])
-      : (Map[String, Long], Map[String, graft.plans.RangeStats.ColRange]) =
-    if (partitionCols.isEmpty) (Map.empty, Map.empty)
+      schema: Option[StructType]): Map[String, Long] =
+    if (partitionCols.isEmpty) Map.empty
     else {
-      import org.apache.spark.sql.functions.{col, count, lit, max, min, when}
-      val df = load(spark, format, dataSchema, Seq(dataDir))
-      val inferred = partitionCols.map(c => df.schema(c).dataType)
-      val n = partitionCols.size
-      // string-cast keys render partition values the way Spark renders
-      // the DIRECTORY names — a Catalyst string cast — so sidecar keys
-      // line up with the walked (unescaped) paths. JVM toString diverges
-      // for e.g. timestamps ('…00:00:00.0' vs the dir's '…00:00:00'),
-      // which would split entries into files-only/rows-only halves.
-      // Keys are aliased __k{i} so the raw columns stay resolvable
-      // inside the aggregates.
-      val keys = partitionCols.zipWithIndex.map { case (c, i) =>
-        col(c).cast("string").as(s"__k$i")
-      }
-      val aggs = count(lit(1)).as("__rows") +:
-        partitionCols.zipWithIndex.flatMap { case (c, i) =>
-          Seq(min(col(c)).as(s"p${i}_min"), max(col(c)).as(s"p${i}_max"),
-            count(when(col(c).isNull, lit(1))).as(s"p${i}_nulls"))
-        }
-      // the per-group collect is bounded: a backfill commit touching
-      // 100k+ partitions must not hold them all on the driver. Past the
-      // cap the per-partition row counts degrade to unknown (-1 in the
-      // sidecar — unknown stays unknown) and the dir-level column bounds
-      // come from ONE global aggregate row instead, so stats-skip keeps
-      // working at any partition cardinality.
+      import org.apache.spark.sql.functions.col
+      // keys are aliased __k{i}: a partition column may be named `count`
+      val keys = partitionCols.zipWithIndex.map { case (c, i) => col(c).cast("string").as(s"__k$i") }
       val cap = spark.conf.getOption(SnapshotTable.PartitionStatsCapKey)
         .flatMap(_.toIntOption).getOrElse(SnapshotTable.PartitionStatsCapDefault)
-      val grouped0 = df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+      val grouped = load(spark, format, schema, Seq(dataDir)).groupBy(keys: _*).count()
         .limit(cap + 1).collect()
-      if (grouped0.length > cap) {
-        val global = df.agg(aggs.tail.head, aggs.tail.tail: _*).collect().head
-        val bounds = partitionCols.zipWithIndex.map { case (c, i) =>
-          val mn = Option(global.get(i * 3))
-          val mx = Option(global.get(i * 3 + 1))
-          val nulls = global.getLong(i * 3 + 2)
-          val range = inferred(i) match {
-            case org.apache.spark.sql.types.StringType =>
-              graft.plans.RangeStats.ColRange(nulls,
-                mn.map(_.asInstanceOf[String]
-                  .take(graft.plans.RangeStats.StringBoundChars)),
-                mx.map(_.asInstanceOf[String])
-                  .filter(_.length <= graft.plans.RangeStats.StringBoundChars))
-            case dt =>
-              graft.plans.RangeStats.ColRange(nulls,
-                mn.flatMap(graft.plans.RangeStats.store(dt, _)),
-                mx.flatMap(graft.plans.RangeStats.store(dt, _)))
-          }
-          c -> range
-        }.toMap
-        return (Map.empty, bounds)
-      }
-      val grouped = grouped0
-      val rowsByPart = grouped.map { r =>
-        val path = partitionCols.indices.map { i =>
-          val v = if (r.isNullAt(i)) null else r.getString(i)
-          s"${partitionCols(i)}=${if (v == null) "__HIVE_DEFAULT_PARTITION__" else v}"
-        }.mkString("/")
-        path -> r.getLong(n)
+      if (grouped.length > cap) Map.empty
+      else grouped.map { r =>
+        partitionCols.indices.map { i =>
+          s"${partitionCols(i)}=${if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else r.getString(i)}"
+        }.mkString("/") -> r.getLong(partitionCols.size)
       }.toMap
-      // fold the per-group (per-partition-value) extrema into dir-level
-      // bounds driver-side — O(#partitions) external Comparables
-      def fold(vs: Seq[Any], takeMin: Boolean): Option[Any] =
-        vs.reduceLeftOption { (a, b) =>
-          val c = a.asInstanceOf[Comparable[Any]].compareTo(b)
-          if ((c <= 0) == takeMin) a else b
-        }
-      val bounds = partitionCols.zipWithIndex.map { case (c, i) =>
-        val mins = grouped.toSeq.flatMap(r => Option(r.get(n + 1 + i * 3)))
-        val maxs = grouped.toSeq.flatMap(r => Option(r.get(n + 2 + i * 3)))
-        val nulls = grouped.map(_.getLong(n + 3 + i * 3)).sum
-        val range = inferred(i) match {
-          case org.apache.spark.sql.types.StringType =>
-            // same truncation contract as data-column string bounds
-            graft.plans.RangeStats.ColRange(nulls,
-              fold(mins, takeMin = true).map(_.asInstanceOf[String]
-                .take(graft.plans.RangeStats.StringBoundChars)),
-              fold(maxs, takeMin = false).map(_.asInstanceOf[String])
-                .filter(_.length <= graft.plans.RangeStats.StringBoundChars))
-          case dt =>
-            graft.plans.RangeStats.ColRange(nulls,
-              fold(mins, takeMin = true).flatMap(graft.plans.RangeStats.store(dt, _)),
-              fold(maxs, takeMin = false).flatMap(graft.plans.RangeStats.store(dt, _)))
-        }
-        c -> range
-      }.toMap
-      (rowsByPart, bounds)
     }
 
   /** Per-partition and per-file row counts of a freshly written parquet
     * dir from its FOOTERS, driver-side — the micro-commit substitute for
-    * [[partitionJobStats]]'s Spark job. Cost is O(files in this delta)
+    * [[partitionRowCounts]]'s Spark job. Cost is O(files in this delta)
     * page-cached metadata reads; an unreadable footer degrades its
     * partition's count to unknown (-1), never to a wrong number.
     */
@@ -3597,6 +3494,16 @@ object SnapshotTable {
     StructType(if (format != "avro") fields
       else fields.map(f => f.copy(dataType = stored(f.dataType))))
   }
+
+  /** The file format a snapshot stored as `format` reads with. */
+  private def fileFormat(format: String): org.apache.spark.sql.execution.datasources.FileFormat =
+    format match {
+      case "parquet" => new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      case "orc" => new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
+      case "avro" => new graft.source.GraftAvroFileFormat
+      case other => throw new IllegalArgumentException(
+        s"unknown table format '$other' (supported: ${SupportedFormats.mkString(", ")})")
+    }
 
   val SummaryQueryId = "streaming.query-id"
   val SummaryBatchId = "streaming.batch-id"

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM, one session). */
@@ -15,6 +17,13 @@ trait SparkSpec extends AnyFunSuite {
     * stabilizes.
     */
   def jobsDuring(f: => Any): Int = jobSitesDuring(f).size
+
+  /** The file-source relations `plan` scans, in plan order. */
+  def fsRelations(plan: LogicalPlan): Seq[HadoopFsRelation] =
+    plan.collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation]
+    }
 
   /** The call site of every Spark job started while `f` runs, in start
     * order: the name of the job's result stage, e.g. `count at

@@ -6,7 +6,6 @@ import java.sql.{Date, Timestamp}
 import graft.SparkSpec
 import graft.sink.SnapshotTable
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Range-sidecar data skipping: commit-time min/max stats prune
@@ -23,10 +22,7 @@ class RangeStatsSpec extends SparkSpec {
 
   /** Total root dirs the optimized plan's file scans would read. */
   private def scannedDirs(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.size
-    }.sum
+    fsRelations(df.queryExecution.optimizedPlan).map(_.location.rootPaths.size).sum
 
   test("disjoint-range appends: a point filter scans exactly one dir") {
     val t = freshTable()
@@ -155,13 +151,10 @@ class RangeStatsSpec extends SparkSpec {
     // must still drop the non-overlapping dir entirely
     val q = t.read(spark).filter(col("id") <= 50L)
     assert(q.count() == 50L)
-    val relations = q.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] => l
-    }
     // only the first dir (plus, at most, the broadcast delete-keys file
     // — which carries no sidecar) may survive; the 101..200 dir is gone
-    val dataDirs = relations.flatMap(
-      _.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString))
+    val dataDirs = fsRelations(q.queryExecution.optimizedPlan)
+      .flatMap(_.location.rootPaths.map(_.toString))
     assert(!dataDirs.exists(_.contains(t.snapshots.last.dataDirs.last)))
     assert(t.read(spark).filter(col("id") === 150L).count() == 0L)
   }

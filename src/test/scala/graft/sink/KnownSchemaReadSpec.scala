@@ -4,16 +4,17 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Every scan of a dir the engine wrote takes its schema from the
   * metadata (the columns sidecar; the fixed row-identity schema for a
   * positional delete file) instead of inferring it from a footer. The
-  * schema handed to the reader must be exactly what inference would
-  * find, minus the partition columns, whose types stay inferred from the
-  * paths; a dir without a typed sidecar still reads through inference.
+  * data schema handed to the reader must be exactly what inference would
+  * find, minus the partition columns, which take the table's type rather
+  * than one inferred from the paths; a dir without a typed sidecar still
+  * infers its data schema.
   */
 class KnownSchemaReadSpec extends SparkSpec {
 
@@ -23,10 +24,7 @@ class KnownSchemaReadSpec extends SparkSpec {
     SnapshotTable(Files.createTempDirectory("graft_known_schema").toString, "ns", "t")
 
   private def relations(df: DataFrame): Seq[HadoopFsRelation] =
-    df.queryExecution.analyzed.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
-        l.relation.asInstanceOf[HadoopFsRelation]
-    }
+    fsRelations(df.queryExecution.analyzed)
 
   /** One batch of every type the three formats store, keyed by `ids`. */
   private def batch(ids: Seq[Long]): DataFrame =
@@ -48,7 +46,8 @@ class KnownSchemaReadSpec extends SparkSpec {
         (col("n") % 2).cast("string").as("p"))
 
   /** Each scan relation of `t.read` against a footer read of its dirs:
-    * equal data schema, equal (inferred) partition schema.
+    * equal data schema, and the inferred partition columns typed as the
+    * table types them.
     */
   private def assertSchemasKnown(t: SnapshotTable, format: String, scans: Int): Unit = {
     val rels = relations(t.read(spark))
@@ -60,7 +59,9 @@ class KnownSchemaReadSpec extends SparkSpec {
       assert(rel.dataSchema ==
         StructType(inferred.schema.filterNot(f => parts.fieldNames.contains(f.name))),
         s"data schema of ${roots.mkString(",")}")
-      assert(rel.partitionSchema == parts, s"partition schema of ${roots.mkString(",")}")
+      val tableTypes = t.schema.map(c => c.name -> DataType.fromDDL(c.dataType)).toMap
+      assert(rel.partitionSchema == StructType(parts.map(f => f.copy(dataType = tableTypes(f.name)))),
+        s"partition schema of ${roots.mkString(",")}")
     }
   }
 
@@ -141,18 +142,15 @@ class KnownSchemaReadSpec extends SparkSpec {
     t.append(Seq((3L, "10"), (4L, "11")).toDF("id", "code"), partitionCols = Seq("code"))
     val df = t.read(spark)
     assert(df.schema("code").dataType.sql == "STRING")
-    // '007' reads back as '7': the path value is inferred as an int and
-    // cast to the table's string type, losing its leading zeros. That is
-    // a defect of partition type inference, pinned here as it stands so
-    // that reading with a known data schema provably changes nothing
+    // the partition values read back as written, leading zeros kept
     assert(df.select("id", "code").as[(Long, String)].collect().sortBy(_._1).toSeq ==
-      Seq((1L, "7"), (2L, "10"), (3L, "10"), (4L, "11")))
-    // the partition column keeps its inferred (int) type in each scan
-    relations(df).foreach(r => assert(r.partitionSchema("code").dataType.sql == "INT"))
+      Seq((1L, "007"), (2L, "10"), (3L, "10"), (4L, "11")))
+    // the partition column has the table's (string) type in each scan
+    relations(df).foreach(r => assert(r.partitionSchema("code").dataType.sql == "STRING"))
     def ids(q: DataFrame) = q.select("id").as[Long].collect().sorted.toSeq
     assert(ids(df.filter(col("code") === "10")) == Seq(2L, 3L))
-    assert(ids(df.filter(col("code") === "7")) == Seq(1L))
-    assert(ids(df.filter(col("code") > "10")) == Seq(1L, 4L))
+    assert(ids(df.filter(col("code") === "007")) == Seq(1L))
+    assert(ids(df.filter(col("code") > "10")) == Seq(4L))
     assert(ids(df.filter(col("code") === "11")) == Seq(4L))
   }
 }

@@ -5,11 +5,14 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import graft.SparkSpec
 
 /** A statement's Spark job count must not grow with the table's
-  * history: every scan takes its schema from the metadata, so adding
-  * live dirs adds no schema-inference job. Each statement runs on a
-  * table of 1 live dir and on one of 21 (one append per dir, 10 rows
-  * each), partitioned and unpartitioned, and must run the same number
-  * of jobs on both.
+  * history: every scan takes its schema and its files from the
+  * metadata, so adding live dirs adds no schema-inference or listing
+  * job. Each statement runs on a table of 1 live dir and on ones of 21
+  * and 41 (one append per dir, 10 rows each), partitioned and
+  * unpartitioned, and must run the same number of jobs on each. 41 is
+  * past Spark's parallel-listing threshold
+  * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 paths),
+  * where a scan that lists its paths runs a listing job.
   */
 class ScanJobScalingSpec extends SparkSpec {
 
@@ -78,13 +81,13 @@ class ScanJobScalingSpec extends SparkSpec {
     (sites.size, sites)
   }
 
-  for (partitioned <- Seq(false, true); (label, setup, stmt) <- statements) {
+  for (dirs <- Seq(21, 41); partitioned <- Seq(false, true); (label, setup, stmt) <- statements) {
     val layout = if (partitioned) "partitioned" else "unpartitioned"
-    test(s"$label runs as many jobs at 21 live dirs as at 1 ($layout)") {
+    test(s"$label runs as many jobs at $dirs live dirs as at 1 ($layout)") {
       val (one, oneSites) = jobs(1, partitioned, mor = false, setup, stmt)
-      val (many, manySites) = jobs(21, partitioned, mor = false, setup, stmt)
-      info(s"$label, $layout: $one jobs at 1 dir, $many at 21")
-      assert(one == many, s"1 dir: ${oneSites.mkString("; ")} | 21 dirs: ${manySites.mkString("; ")}")
+      val (many, manySites) = jobs(dirs, partitioned, mor = false, setup, stmt)
+      info(s"$label, $layout: $one jobs at 1 dir, $many at $dirs")
+      assert(one == many, s"1 dir: ${oneSites.mkString("; ")} | $dirs dirs: ${manySites.mkString("; ")}")
     }
   }
 
@@ -94,13 +97,13 @@ class ScanJobScalingSpec extends SparkSpec {
     ("merge-on-read UPDATE", t => sql(s"UPDATE $t SET v = -1 WHERE id = 2")),
     ("merge-on-read DELETE", t => sql(s"DELETE FROM $t WHERE id * 2 = 4")))
 
-  for (partitioned <- Seq(false, true); (label, stmt) <- morStatements) {
+  for (dirs <- Seq(21, 41); partitioned <- Seq(false, true); (label, stmt) <- morStatements) {
     val layout = if (partitioned) "partitioned" else "unpartitioned"
-    test(s"$label runs as many jobs at 21 live dirs as at 1 ($layout)") {
+    test(s"$label runs as many jobs at $dirs live dirs as at 1 ($layout)") {
       val (one, oneSites) = jobs(1, partitioned, mor = true, _ => (), stmt)
-      val (many, manySites) = jobs(21, partitioned, mor = true, _ => (), stmt)
-      info(s"$label, $layout: $one jobs at 1 dir, $many at 21")
-      assert(one == many, s"1 dir: ${oneSites.mkString("; ")} | 21 dirs: ${manySites.mkString("; ")}")
+      val (many, manySites) = jobs(dirs, partitioned, mor = true, _ => (), stmt)
+      info(s"$label, $layout: $one jobs at 1 dir, $many at $dirs")
+      assert(one == many, s"1 dir: ${oneSites.mkString("; ")} | $dirs dirs: ${manySites.mkString("; ")}")
     }
   }
 }

@@ -830,14 +830,30 @@ class SnapshotTableSpec extends SparkSpec {
     val before = SnapshotTable.footerReadsOnThread
     assert(t.fileStats(spark).collect().map(_.getAs[Long]("record_count")).sum == 90L)
     assert(SnapshotTable.footerReadsOnThread == before)
-    // partition-column range bounds are ABSENT on the micro dir (written-
-    // type bounds could prune unsoundly); data-column bounds remain
-    val microDir = t.currentSnapshot.get.dataDirs.last
+    // the micro dir's partition-column bounds are the ones a full commit
+    // of the same batch records: both come from the write's observe
+    // metrics, in the one type space reads use; data-column bounds remain
+    val Seq(_, fullDir, microDir) = t.currentSnapshot.get.dataDirs
     val range = graft.plans.RangeStats.read(microDir).get
-    assert(!range.cols.contains("part"),
-      "micro commit must not record written-type partition bounds")
+    assert(range.cols.get("part").isDefined &&
+      range.cols.get("part") == graft.plans.RangeStats.read(fullDir).get.cols.get("part"),
+      "micro commit must record the partition bounds a full commit of the batch records")
     assert(range.cols.get("id").exists(c => c.min.isDefined && c.max.isDefined),
       "observe-collected data-column bounds must survive on the micro dir")
+  }
+
+  test("$partitions and $files: a string partition of numeric-looking values is one entry") {
+    val t = freshTable()
+    t.overwrite(Seq((1L, "007"), (2L, "10")).toDF("id", "code"), partitionCols = Seq("code"))
+    t.append(Seq((3L, "10"), (4L, "11")).toDF("id", "code"), partitionCols = Seq("code"))
+    // the row counts are keyed by the written value, as the files are
+    // grouped by their paths: one code=007 entry, not code=007 with the
+    // file and code=7 with the row
+    val parts = t.partitionStats(spark).as[(String, Long, Long)].collect().toSeq
+    assert(parts == Seq(("code=007", 1L, 1L), ("code=10", 2L, 2L), ("code=11", 1L, 1L)), parts)
+    val files = t.fileStats(spark).filter($"partition_path" === "code=007")
+      .select("record_count").as[Long].collect().toSeq
+    assert(files == Seq(1L), files)
   }
 
   test("per-partition stats collect is capped: rows degrade to unknown, bounds survive") {
