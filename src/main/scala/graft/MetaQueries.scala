@@ -842,7 +842,7 @@ object MetaQueries {
         require(snap.operation == "replace", snap.operation)
         val back = table.read(s)
         val ranges = back
-          .groupBy(input_file_name().as("f"))
+          .groupBy(col("_metadata.file_path").as("f"))
           .agg((max("user_id") - min("user_id")).as("ur"),
             (max("value") - min("value")).as("vr"))
           .agg(avg("ur").as("ur"), avg("vr").as("vr"), count(lit(1)).as("nf")).head()
@@ -2183,7 +2183,7 @@ object MetaQueries {
         // UPDATE ... WHERE k IN (SELECT ...) AND <residual>: lowered
         // onto the copy-on-write MERGE path — the subquery's distinct
         // keys become the merge source (broadcast semi-join for
-        // affected-dir detection, key-pruned scans), the residual
+        // touched-file detection, key-pruned scans), the residual
         // conjunct rides as the matched clause's condition. At 100 TB
         // the key set stays a distributed frame; nothing collects.
         val o = tbl(s, dir, "orders")

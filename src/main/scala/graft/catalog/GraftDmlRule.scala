@@ -911,7 +911,7 @@ final case class GraftNotInMultiCommand(
   * NOT IN / theta-EXISTS command runtimes: a source that can change
   * between evaluations must not be classified by one evaluation and
   * joined from another (the matcher seams apply it several times —
-  * detection, split, complement). The determinism probe descends into
+  * the touched-file probe, the complement). The determinism probe descends into
   * NESTED subquery plans (`SubqueryExpression.deterministic` does not
   * reflect its inner plan, and `plan.exists` does not traverse it), so
   * a rand() hiding inside a scalar subquery still pins. Lazy
@@ -967,8 +967,8 @@ private[catalog] object NotInMultiRuntime {
     // commit could stale-out. Narrow tuples (k<=4, at most 16 masks)
     // enumerate statically — an unpopulated mask is an empty piece, and
     // the probe is NOT free: it is a distinct+collect scan of the
-    // target that the matcher pays 2-3 times per statement
-    // (affected-dir detection, rewrite split, kept-rows complement).
+    // target that the matcher pays 1-2 times per statement (the
+    // touched-file probe, the kept-rows complement).
     // Wider tuples scan the live probe inside the closure (derived from
     // `df`, so retry-safe for free): real data populates FEW masks, and
     // enumerating 2^k pieces each carrying up to |srcMasks| anti-joins
@@ -1032,8 +1032,8 @@ final case class GraftThetaExistsDeleteCommand(
     RowWrite.authorize(spark, table)
     import org.apache.spark.sql.functions.col
     // one-evaluation discipline (as NotInMultiRuntime): the matcher is
-    // applied several times (affected-dir detection, the rewrite split,
-    // the kept-rows complement) — a nondeterministic source must see
+    // applied several times (the touched-file probe, the kept-rows
+    // complement) — a nondeterministic source must see
     // the SAME rows in each, or the COW rewrite corrupts
     val src = SourcePin.pin(spark, srcPlan).alias("__s")
     val rest = cond.map(DeferredScalarSubquery.materialize(spark, _))

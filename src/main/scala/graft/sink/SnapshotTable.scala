@@ -115,11 +115,12 @@ final case class TableColumn(id: Int, name: String, dataType: String)
 final case class EqualityDelete(
     dir: String, keys: Seq[String], applies: Seq[String], format: Option[String] = None,
     // Iceberg v2's SECOND delete-file flavor: a POSITIONAL delete. The
-    // file holds (file_path, row_position) pairs instead of key tuples;
-    // reads anti-join on physical row identity (parquet `_metadata.
-    // file_path` / `row_index`), so an arbitrary-predicate point delete
-    // costs O(matched rows) — no key semantics needed, no data file
-    // rewritten. `keys` is then the two position column names.
+    // file holds (file_path, row_position) pairs instead of key tuples,
+    // as Iceberg's position delete files do; reads anti-join on physical
+    // row identity (parquet `_metadata.file_path` / `row_index`), so an
+    // arbitrary-predicate point delete costs O(matched rows) — no key
+    // semantics needed, no data file rewritten. `keys` is then the two
+    // position column names, and `applies` the dirs of the named files.
     positional: Boolean = false)
 
 /** A named reference into the snapshot history (Iceberg table refs,
@@ -233,84 +234,61 @@ final class SnapshotTable(val root: String, val fullName: String) {
     */
   def readSnapshot(spark: SparkSession, snapshotId: Long): DataFrame = {
     val snap = metadata.snapshot(snapshotId)
-    if (snap.dataDirs.isEmpty) emptyWithSchema(spark, snap) else readDirs(spark, snap, snap.dataDirs)
+    if (snap.dataDirs.isEmpty) emptyWithSchema(spark, snap)
+    else readDirs(spark, snap, snap.dataDirs.map(dirLayout))
   }
 
-  /** `dirs` of `snap` at its visibility (masks, schema projection and
-    * deletes applied). Plan size is bounded by the table's layout
-    * epochs, not its commits: all dirs of one layout — equal typed
-    * columns and partition columns, so one data schema, partition
-    * schema and field mapping serve them — share ONE relation over
-    * their live files, a masked partition being files left out. Only a
-    * delete-scoped dir, or one without a typed sidecar, reads alone.
+  /** The dirs of `layouts` at `snap`'s visibility (masks, schema
+    * projection and deletes applied) — the one multi-dir view reads,
+    * probes and rewrites go through. Plan size is bounded by the
+    * table's layout epochs, not its commits: all dirs of one layout —
+    * equal typed columns and partition columns, so one data schema,
+    * partition schema and field mapping serve them — share ONE relation
+    * over their live files, a masked partition being files left out.
+    * Only a delete-scoped dir, or one without a typed sidecar, reads
+    * alone. `rowId` adds the named `_metadata` fields as row-identity
+    * columns ([[SnapshotTable.FileId]], [[SnapshotTable.RowId]]), so a
+    * probe's hits name their files; deletes apply as in a normal read,
+    * so a probe never re-matches an already-deleted row. `keep` leaves
+    * out the files it rejects.
     */
-  private def readDirs(spark: SparkSession, snap: Snapshot, dirs: Seq[String]): DataFrame = {
-    val keyed = dirs.map(dirLayout).map { l =>
-      l -> l.scanKey.filterNot(_ => snap.deletes.exists(_.applies.contains(l.dir)))
-    }
-    val groups = keyed.collect { case (l, Some(k)) => k -> l }.groupMap(_._1)(_._2)
-    keyed.map { case (l, k) => k.toRight(l) }.distinct.map {
-      case Left(l) => readDir(spark, snap, l)
-      case Right(k) =>
-        val ls = groups(k)
-        projectTo(relation(spark, snap, ls, ls.flatMap(_.live(snap))), snap.cols,
-          ls.head.mapping(snap.cols))
-    }.reduce(_ unionByName _)
-  }
-
-  /** One dir of `snap` at its visibility, projected to the snapshot
-    * schema, with the dir-scoped positional and equality deletes
-    * applied; `only` keeps the files of the partitions it accepts.
-    * `keepRowId` adds the physical row-identity columns
-    * ([[SnapshotTable.RowIdFileCol]] / [[SnapshotTable.RowIdPosCol]] from
-    * parquet `_metadata`) — the probe view positional deletes are
-    * computed against. Deletes/masks apply as in a normal read, so a
-    * probe never re-matches an already-deleted row.
-    */
-  private def readDir(
-      spark: SparkSession, snap: Snapshot, layout: DirLayout,
-      only: String => Boolean = _ => true, keepRowId: Boolean = false): DataFrame = {
+  private def readDirs(
+      spark: SparkSession, snap: Snapshot, layouts: Seq[DirLayout],
+      rowId: Seq[(String, String)] = Nil,
+      keep: SnapshotFileIndex.DataFile => Boolean = _ => true): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val dels = snap.deletes.filter(_.applies.contains(layout.dir))
-    val (posDels, eqDels) = dels.partition(_.positional)
-    // physical row identity is needed only when a positional delete is
-    // in scope (or the caller probes for one): dirs without them pay
-    // zero metadata-column cost
-    val needRowId = keepRowId || posDels.nonEmpty
-    val base0 = relation(spark, snap, Seq(layout), layout.live(snap, only))
-    val base =
-      if (!needRowId) base0
-      else base0.select(col("*"),
-        col("_metadata.file_path").as(SnapshotTable.RowIdFileCol),
-        col("_metadata.row_index").as(SnapshotTable.RowIdPosCol))
-    // schema evolution: project the dir's PHYSICAL columns (resolved by
-    // field id via the dir's schema sidecar) to the snapshot schema —
-    // columns the dir predates backfill as null, dropped columns vanish,
-    // renames alias. Same-type projections are cast-free, so pushdown
-    // and partition pruning are unaffected.
-    val projected = projectTo(base, snap.cols, layout.mapping(snap.cols),
-      extra =
-        if (!needRowId) Nil
-        else Seq(col(SnapshotTable.RowIdFileCol), col(SnapshotTable.RowIdPosCol)))
-    // merge-on-read, positional flavor first: anti-join each positional
-    // delete file scoped to this dir on (file_path, row_index) —
-    // physical row identity, no key semantics
-    val afterPos = posDels.foldLeft(projected) { (df, del) =>
-      df.join(broadcast(readDeleteFile(spark, del, snap.format)),
-        Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol), "left_anti")
-    }
-    val cleaned =
-      if (needRowId && !keepRowId)
-        afterPos.drop(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol)
-      else afterPos
-    // merge-on-read: anti-join each equality-delete file scoped to
-    // this dir (delete files are key tuples — tiny, broadcast); data
-    // appended after the delete is out of scope by construction.
-    // Delete keys are delete-time column names; renaming an active
-    // delete's key column is rejected, so they match current names.
-    eqDels.foldLeft(cleaned) { (df, del) =>
-      df.join(broadcast(readDeleteFile(spark, del, snap.format)), del.keys, "left_anti")
-    }
+    def dels(l: DirLayout) = snap.deletes.filter(_.applies.contains(l.dir))
+    val keyed = layouts.map(l => l.scanKey.filter(_ => dels(l).isEmpty).toRight(l.dir) -> l)
+    val groups = keyed.groupMap(_._1)(_._2)
+    keyed.map(_._1).distinct.map { k =>
+      val ls = groups(k)
+      val (posDels, eqDels) = dels(ls.head).partition(_.positional)
+      // a positional delete anti-joins on (file, position): physical row
+      // identity is read only where one is in scope or the caller asks
+      val ids = if (posDels.nonEmpty) SnapshotTable.RowId else rowId
+      val base = relation(spark, snap, ls, ls.flatMap(_.live(snap)).filter(keep))
+      // schema evolution: project the dirs' PHYSICAL columns (resolved by
+      // field id via the schema sidecar) to the snapshot schema — columns
+      // a dir predates backfill as null, dropped columns vanish, renames
+      // alias. Same-type projections are cast-free, so pushdown and
+      // partition pruning are unaffected.
+      val projected = projectTo(
+        if (ids.isEmpty) base
+        else base.select(col("*") +: ids.map { case (f, a) => col(s"_metadata.$f").as(a) }: _*),
+        snap.cols, ls.head.mapping(snap.cols), extra = ids.map(i => col(i._2)))
+      val afterPos = posDels.foldLeft(projected) { (df, del) =>
+        df.join(broadcast(readDeleteFile(spark, del, snap.format)),
+          SnapshotTable.RowId.map(_._2), "left_anti")
+      }
+      // equality deletes are key tuples (tiny, broadcast); data appended
+      // after the delete is out of scope by construction. Delete keys
+      // are delete-time column names; renaming an active delete's key
+      // column is rejected, so they match current names.
+      val unasked = ids.diff(rowId).map(_._2)
+      eqDels.foldLeft(if (unasked.isEmpty) afterPos else afterPos.drop(unasked: _*)) { (df, del) =>
+        df.join(broadcast(readDeleteFile(spark, del, snap.format)), del.keys, "left_anti")
+      }
+    }.reduce(_ unionByName _)
   }
 
   private def emptyWithSchema(spark: SparkSession, snap: Snapshot): DataFrame =
@@ -322,7 +300,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
           c.name, org.apache.spark.sql.types.DataType.fromDDL(c.dataType)))))
 
   /** Project `df` to the snapshot schema `cols`, resolving each field id
-    * to its physical column via `mapping`. No-op for legacy snapshots
+    * to its column of `df` via `mapping` (a dir's physical column, or a
+    * changelog frame's name at its own snapshot). No-op for legacy snapshots
     * (empty cols). Same-type references skip the cast entirely so the
     * projection never blocks filter pushdown or partition pruning. Types
     * that differ only in nullability are the same type: every scan reads
@@ -468,8 +447,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
       mode: WriteMode = WriteMode.CopyOnWrite,
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    rowLevel(spark, "delete", mode, numRetries) { cur =>
-      RowLevel(probeDirs(spark, cur, mode, rows), rows,
+    rowLevel(spark, "delete", mode, numRetries) { _ =>
+      RowLevel(Some(rows),
         rewrite = rows match {
           // a condition's closed-form complement; otherwise the exact
           // multiset complement — null- and NaN-safe, duplicate-exact
@@ -504,7 +483,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         sets.get(n).map(v => hit.fold(v.cast(t))(when(_, v.cast(t)).otherwise(col(n))).as(n))
           .getOrElse(col(n))
       }
-      RowLevel(probeDirs(spark, cur, mode, rows), rows,
+      RowLevel(Some(rows),
         rewrite = rows match {
           case Rows.Where(cond) => _.select(assigned(Some(cond)): _*)
           case _ => v =>
@@ -526,12 +505,12 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * `WHEN NOT MATCHED [AND cond]` / `WHEN NOT MATCHED BY SOURCE [AND
     * cond]` clauses apply, each list first-true-wins per row (SQL
     * semantics). The SQL cardinality rule is enforced before any write.
-    * Dir detection is a key-pruned broadcast join — a semi-join for
-    * matched clauses, an anti-join plus the clauses' target-only
-    * conditions for BY SOURCE ones — and conservative under clause
-    * conditions: copy-on-write rewrites a detected dir whose rows all
+    * Copy-on-write finds the touched files with one key-pruned broadcast
+    * join — a semi-join for matched clauses, an anti-join plus the
+    * clauses' target-only conditions for BY SOURCE ones — conservative
+    * under clause conditions: it rewrites a detected file whose rows all
     * fail every condition byte-identical rather than run the full source
-    * join per dir up front. Cost is O(affected dirs + source).
+    * join up front. Cost is O(affected files + source).
     */
   def merge(
       sourceIn: DataFrame,
@@ -585,7 +564,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
         Option.when(matched.nonEmpty)((v: DataFrame) => v.join(srcKeys, keyNames, "left_semi")).toSeq ++
           bySourceCond.map(c => (v: DataFrame) =>
             v.join(srcKeys, keyNames, "left_anti").alias("__t").filter(c))
-      val affected = shapes.flatMap(affectedDirs(spark, cur, _)).toSet
 
       val src = source.withColumn("__s_present", lit(true)).alias("__s")
       val joinCond = keys.map { case (tk, sk) => col(s"__t.$tk") === col(s"__s.$sk") }.reduce(_ && _)
@@ -629,8 +607,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
             }))).get.otherwise(lit(null).cast(t)).as(n)
           }: _*)
       }
-      RowLevel(cur.dataDirs.filter(affected),
-        Rows.Matching(v => shapes.map(_(v)).reduce(_ unionByName _)),
+      RowLevel(Option.when(shapes.nonEmpty)(Rows.Matching(v => shapes.map(_(v)).reduce(_ unionByName _))),
         rewrite = joined(_).filter(!deleted).select(revised: _*),
         revise = v => {
           val hit = joined(v).filter(clauses.map(_._1).reduce(_ || _))
@@ -657,19 +634,19 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries = numRetries)
 
   /** One attempt's row-level statement against its base snapshot, in the
-    * terms both executors of [[rowLevel]] share: `dirs` may hold touched
-    * rows and `touched` selects those rows from a frame of table rows.
-    * Copy-on-write replaces every row of the touched files by `rewrite`
-    * (untouched rows verbatim, deleted rows dropped); merge-on-read maps
-    * a row-id probe of `dirs` by `revise` to the touched rows' ids and
-    * their surviving new versions. `inserts` are new rows. Unless the
-    * statement `keepsRowCount` (UPDATE), copy-on-write counts the rows it
-    * replaces by an Observation on the rewrite write when `rewrite` reads
-    * its frame once (`observable`), else by one count job.
+    * terms both executors of [[rowLevel]] share: `touched` selects the
+    * touched rows from a frame of table rows (None: the statement touches
+    * none, an insert-only MERGE). Copy-on-write replaces every row of
+    * the touched files by `rewrite` (untouched rows verbatim, deleted
+    * rows dropped); merge-on-read maps a row-id probe of the table by
+    * `revise` to the touched rows' ids and their surviving new versions.
+    * `inserts` are new rows. Unless the statement `keepsRowCount`
+    * (UPDATE), copy-on-write counts the rows it replaces by an
+    * Observation on the rewrite write when `rewrite` reads its frame once
+    * (`observable`), else by one count job.
     */
   private case class RowLevel(
-      dirs: Seq[String],
-      touched: Rows,
+      touched: Option[Rows],
       rewrite: DataFrame => DataFrame,
       revise: DataFrame => (DataFrame, Option[DataFrame]),
       inserts: Option[DataFrame] = None,
@@ -680,8 +657,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * [[withCommitRetries]] compiles the statement against the current
     * head (so a retry re-probes; positions denote rows of exactly that
     * snapshot's files, and a rival's rewrite must be re-observed, never
-    * re-scoped) and runs the `mode`'s executor. Each commit logs its
-    * operation, mode and attempt count.
+    * re-scoped) and runs the `mode`'s executor over the head's dirs. A
+    * statement that touches no row and inserts none is a NO-OP:
+    * committing would bloat history (the insert check is one limit-1
+    * job). Each commit logs its operation, mode and attempt count.
     */
   private def rowLevel(
       spark: SparkSession, op: String, mode: WriteMode, numRetries: Int,
@@ -693,59 +672,88 @@ final class SnapshotTable(val root: String, val fullName: String) {
           s"$fullName is ${cur.format} — use WriteMode.CopyOnWrite")
       val p = compile(cur)
       val audit = Map("operation" -> op, "mode" -> mode.name, "attempts" -> (attempt + 1).toString)
-      // a statement that touches no dir and inserts no row is a NO-OP —
-      // committing would bloat history (the probe is one limit-1 job)
       lazy val noInserts = p.inserts.forall(_.isEmpty)
-      if (p.dirs.isEmpty && noInserts) Left(cur)
-      else if (mode == WriteMode.CopyOnWrite) Right(copyOnWrite(spark, cur, op, p, audit))
-      else mergeOnRead(spark, cur, op, p, audit, summary, noInserts)
+      val layouts = cur.dataDirs.map(dirLayout)
+      // the table-wide probe view, with each row's identity
+      def probe(rowId: Seq[(String, String)]): Option[DataFrame] =
+        p.touched.filter(_ => layouts.nonEmpty).map(_ => readDirs(spark, cur, layouts, rowId))
+      if (mode == WriteMode.CopyOnWrite)
+        copyOnWrite(spark, cur, op, p, audit, layouts, probe(SnapshotTable.FileId), noInserts)
+      else mergeOnRead(spark, cur, op, p, audit, summary, layouts, probe(SnapshotTable.RowId), noInserts)
     }
 
-  /** Copy-on-write: split the touched dirs file by file, write the
-    * touched files' rows (rewritten) plus the inserts as one new dir, and
-    * swap them for the touched files.
+  /** Copy-on-write: ONE probe of the table finds the touched files, and
+    * their dirs are the touched dirs. A touched dir that is CLEAN (no
+    * partition mask, no delete scoped to it: a mask or delete carried at
+    * file granularity would resurrect its rows) splits file by file —
+    * its untouched files [[carry]] and only the touched files' rows are
+    * rewritten, so a mutation of a few rows of a huge dir costs
+    * O(touched files), never O(dir). A hit no recorded file resolves
+    * leaves its dir unknown: every dir is then touched and none splits,
+    * as misclassifying a touched file as carried would silently lose its
+    * mutation. The rewritten rows plus the inserts are one new dir,
+    * swapped for the touched dirs.
     */
   private def copyOnWrite(
       spark: SparkSession, cur: Snapshot, op: String, p: RowLevel,
-      audit: Map[String, String]): Swap = {
+      audit: Map[String, String], layouts: Seq[DirLayout], probe: Option[DataFrame],
+      noInserts: => Boolean): Either[Snapshot, Swap] = {
     import org.apache.spark.sql.functions.{count, lit}
-    val (view, carryDirs) =
-      if (p.dirs.isEmpty) (None, Nil)
-      else {
-        val (v, cds) = splitForRewrite(spark, cur, p.dirs, p.touched(_))
-        (Some(v), cds)
-      }
-    // the replaced-row count rides the rewrite write, never a separate
-    // pass over the touched dirs; a lost metric reads -1
-    val obs = Option.when(!p.keepsRowCount && p.observable && cur.rowCount >= 0)(
-      org.apache.spark.sql.Observation(s"graft-affected-${java.util.UUID.randomUUID().toString.take(8)}"))
-    val rewritten = view.map(v => p.rewrite(obs.fold(v)(v.observe(_, count(lit(1)).as("__affected")))))
-    def replaced: Long = view.fold(0L)(v => obs.fold(v.count())(_.get.get("__affected") match {
-      case Some(l: Long) => l
-      case _ => -1L
-    }))
-    rewriteDirs(cur, p.dirs, (rewritten.toSeq ++ p.inserts).reduce(_ unionByName _), op, audit,
-      carryDirs) { written =>
-      if (p.keepsRowCount) cur.rowCount
-      else if (cur.rowCount < 0) -1L
-      else { val r = replaced; if (r < 0) -1L else cur.rowCount - r + written }
+    val hits = probe.fold(Set.empty[String])(v => p.touched.get(v)
+      .select(SnapshotTable.RowIdFileCol).distinct().collect()
+      .map(r => SnapshotTable.fileUriToPath(r.getString(0))).toSet)
+    val resolved = holding(layouts, hits)
+    val touched = resolved.getOrElse(layouts)
+    if (touched.isEmpty && noInserts) Left(cur)
+    else {
+      val carried = touched.filter(l => resolved.isDefined &&
+        cur.maskedDirs.get(l.dir).forall(_.isEmpty) && !cur.deletes.exists(_.applies.contains(l.dir)))
+        .map(l => l -> l.files.map(_._1.path).filterNot(hits)).filter(_._2.nonEmpty)
+      val carryDirs = carried.map { case (l, fs) => carry(cur, l, fs) }
+      val carriedFiles = carried.flatMap(_._2).toSet
+      // the rewrite reads ONLY the touched files
+      val view = Option.when(touched.nonEmpty)(
+        readDirs(spark, cur, touched, keep = f => !carriedFiles(f.path)))
+      // the replaced-row count rides the rewrite write, never a separate
+      // pass over the touched dirs; a lost metric reads -1
+      val obs = Option.when(!p.keepsRowCount && p.observable && cur.rowCount >= 0)(
+        org.apache.spark.sql.Observation(s"graft-affected-${java.util.UUID.randomUUID().toString.take(8)}"))
+      val rewritten = view.map(v => p.rewrite(obs.fold(v)(v.observe(_, count(lit(1)).as("__affected")))))
+      def replaced: Long = view.fold(0L)(v => obs.fold(v.count())(_.get.get("__affected") match {
+        case Some(l: Long) => l
+        case _ => -1L
+      }))
+      Right(rewriteDirs(cur, touched.map(_.dir), (rewritten.toSeq ++ p.inserts).reduce(_ unionByName _),
+        op, audit, carryDirs) { written =>
+        if (p.keepsRowCount) cur.rowCount
+        else if (cur.rowCount < 0) -1L
+        else { val r = replaced; if (r < 0) -1L else cur.rowCount - r + written }
+      })
     }
   }
 
-  /** Merge-on-read: probe `p.dirs` with row identity, write the touched
-    * rows' positions as one delete file, and append their surviving new
-    * versions plus the inserts in the same commit.
+  /** The dirs of `layouts` holding the probe-hit `files` (local paths);
+    * None when some hit names no file the layouts record.
+    */
+  private def holding(layouts: Seq[DirLayout], files: Set[String]): Option[Seq[DirLayout]] = {
+    val dirOf = layouts.flatMap(_.files.map { case (f, _) => f.path -> f.dir }).toMap
+    Option.when(files.forall(dirOf.contains)) {
+      val dirs = files.map(dirOf)
+      layouts.filter(l => dirs(l.dir))
+    }
+  }
+
+  /** Merge-on-read: map the row-id `probe` of the table to the touched
+    * rows, write their positions as one delete file, and append their
+    * surviving new versions plus the inserts in the same commit.
     */
   private def mergeOnRead(
       spark: SparkSession, cur: Snapshot, op: String, p: RowLevel,
       audit: Map[String, String], summary: Map[String, String],
+      layouts: Seq[DirLayout], probe: Option[DataFrame],
       noInserts: => Boolean): Either[Snapshot, Swap] = {
-    import org.apache.spark.sql.functions.lit
-    val touched = Option.when(p.dirs.nonEmpty)(p.revise(p.dirs
-      .map(d => readDir(spark, cur, dirLayout(d), keepRowId = true)
-        .withColumn(SnapshotTable.RowIdDirCol, lit(d)))
-      .reduce(_ unionByName _)))
-    val del = touched.flatMap { case (ids, _) => writePositions(spark, cur, ids) }
+    val touched = probe.map(p.revise)
+    val del = touched.flatMap { case (ids, _) => writePositions(spark, cur, layouts, ids) }
     if (del.isEmpty && noInserts) Left(cur)
     else (touched.flatMap(_._2).toSeq ++ p.inserts).reduceOption(_ unionByName _) match {
       case None =>
@@ -767,39 +775,36 @@ final class SnapshotTable(val root: String, val fullName: String) {
     }
   }
 
-  /** Write touched rows' (file, position, dir) ids as one positional
-    * delete file. One job over that small file yields both the removed
-    * count and the dirs it scopes to, so the table-sized probe never runs
-    * again just to count. None, with the file removed, if nothing matched.
+  /** Write touched rows' (file, position) ids as one positional delete
+    * file. One job over that small file, grouped by file, yields both
+    * the removed count and the files, whose dirs of `layouts` the delete
+    * scopes to — so the table-sized probe never runs again just to count,
+    * and a one-row delete scopes to one dir. A file no layout records
+    * scopes it to every probed dir, never to fewer. None, with the file
+    * removed, if nothing matched.
     */
   private def writePositions(
-      spark: SparkSession, cur: Snapshot, ids: DataFrame): Option[(String, Long, Seq[String])] = {
+      spark: SparkSession, cur: Snapshot, layouts: Seq[DirLayout],
+      ids: DataFrame): Option[(String, Long, Seq[String])] = {
     val dir = freshDir("snap-posdel-")
     ids.write.mode("overwrite").format(cur.format).save(dir)
     val hits = load(spark, cur.format, Some(SnapshotTable.PositionalDeleteSchema), Seq(dir))
-      .groupBy(SnapshotTable.RowIdDirCol).count().collect()
+      .groupBy(SnapshotTable.RowIdFileCol).count().collect()
     val removed = hits.map(_.getLong(1)).sum
     if (removed == 0L) { deleteRecursively(new File(dir)); None }
-    else Some((dir, removed, cur.dataDirs.filter(hits.map(_.getString(0)).toSet.contains)))
+    else Some((dir, removed, holding(layouts, hits.map(h => SnapshotTable.fileUriToPath(h.getString(0))).toSet)
+      .getOrElse(layouts).map(_.dir)))
   }
 
   /** The positional delete entry for delete file `dir`, scoped to `applies`. */
   private def positionalDelete(dir: String, applies: Seq[String], format: String) =
-    EqualityDelete(dir, Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol),
-      applies, Some(format), positional = true)
+    EqualityDelete(dir, SnapshotTable.RowId.map(_._2), applies, Some(format), positional = true)
 
   /** The row ids of a frame derived from a row-id probe; `q` qualifies
     * them inside a join.
     */
   private def rowIds(df: DataFrame, q: String = ""): DataFrame =
-    df.select(Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol, SnapshotTable.RowIdDirCol)
-      .map(c => org.apache.spark.sql.functions.col(q + c).as(c)): _*)
-
-  /** The dirs a DELETE/UPDATE considers: every dir for the merge-on-read
-    * probe (one scan finds the rows), the detected ones for copy-on-write.
-    */
-  private def probeDirs(spark: SparkSession, cur: Snapshot, mode: WriteMode, rows: Rows): Seq[String] =
-    if (mode == WriteMode.MergeOnRead) cur.dataDirs else affectedDirs(spark, cur, rows(_))
+    df.select(SnapshotTable.RowId.map { case (_, c) => org.apache.spark.sql.functions.col(q + c).as(c) }: _*)
 
   /** First-true-wins clause predicates: pred_i = base && !c_0 && ... &&
     * !c_{i-1} && c_i, with a NULL condition treated as
@@ -833,136 +838,56 @@ final class SnapshotTable(val root: String, val fullName: String) {
       snap.cols.map(c => c.name -> org.apache.spark.sql.types.DataType.fromDDL(c.dataType))
     else readSnapshot(spark, snap.id).schema.fields.toSeq.map(f => f.name -> f.dataType)
 
-  /** Data dirs of `snap` that LOGICALLY hold rows surviving `shape` —
-    * ONE job over the union of per-dir views, each tagged with its dir
-    * path as a literal (input_file_name cannot be used: the equality-
-    * delete anti-join makes the plan multi-source). Each union branch
-    * keeps its own pushed-down filter, so the range-stats rule dir-skips
-    * non-overlapping branches before the job runs.
+  /** Carry `files` of the clean dir of `layout` byte-identical into a
+    * fresh `snap-*-carry` dir as HARD links — same inode, zero data I/O,
+    * and safe against the original dir's later expiry (a symlink would
+    * dangle; an object-store port makes this a manifest reference /
+    * server-side copy) — and return it. The carry dir inherits the
+    * original's columns sidecar (same physical files), an exact rebuilt
+    * partition sidecar (from the original's per-file entries), and the
+    * original's range-stats sidecar (bounds over a superset —
+    * conservative, stats are never a correctness input). Cost:
+    * O(carried files) metadata.
     */
-  private def affectedDirs(
-      spark: SparkSession, snap: Snapshot,
-      shape: DataFrame => DataFrame): Seq[String] = {
-    import org.apache.spark.sql.functions.lit
-    // an empty table (TRUNCATE, empty overwrite) holds no affected dir
-    // — and the union below would throw on an empty reduce
-    if (snap.dataDirs.isEmpty) return Nil
-    val tagged = snap.dataDirs
-      .map(d => readDir(spark, snap, dirLayout(d)).withColumn("__graft_dir", lit(d)))
-      .reduce(_ unionByName _)
-    val dirs = shape(tagged).select("__graft_dir").distinct()
-      .collect().map(_.getString(0)).toSet
-    // keep snapshot order (stable dir layout in metadata)
-    snap.dataDirs.filter(dirs.contains)
-  }
-
-  /** FILE-granular copy-on-write split — the Iceberg contract that a
-    * row-level mutation touching a few rows of a huge dir must not
-    * rewrite the whole dir. For each affected dir that is CLEAN (no
-    * partition mask, no equality delete scoped to it — a mask/delete
-    * carried at file granularity would resurrect its rows), ONE extra
-    * column-pruned probe job (`input_file_name`, all clean dirs
-    * unioned) finds which FILES physically hold rows `shape` touches.
-    * Dirs where that is a strict subset split: only the affected
-    * files' rows enter the returned rewrite view; sibling files CARRY
-    * byte-identical into a fresh `snap-*-carry` dir as HARD links —
-    * same inode, zero data I/O, and safe against the original dir's
-    * later expiry (a symlink would dangle; an object-store port makes
-    * this a manifest reference / server-side copy). The carry dir
-    * inherits the original's columns sidecar (same physical files),
-    * an exact rebuilt partition sidecar (from the original's per-file
-    * entries), and the original's range-stats sidecar (bounds over a
-    * superset — conservative, stats are never a correctness input).
-    *
-    * Returns (rewrite view over exactly the rows that must be
-    * rewritten, carry dirs to add to the snapshot alongside the
-    * rewrite). Cost: O(affected files) rewrite + O(carried files)
-    * metadata, never O(dir).
-    */
-  private def splitForRewrite(
-      spark: SparkSession, snap: Snapshot, affected: Seq[String],
-      shape: DataFrame => DataFrame): (DataFrame, Seq[String]) = {
-    import org.apache.spark.sql.functions.{col, input_file_name, lit}
-    val dirCol = "__graft_probe_dir"
-    val fileCol = "__graft_probe_file"
-    val layouts = affected.map(d => d -> dirLayout(d)).toMap
-    val clean = affected.filter(d =>
-      snap.maskedDirs.get(d).forall(_.isEmpty) &&
-        !snap.deletes.exists(_.applies.contains(d)))
-    val fileHits: Map[String, Set[String]] =
-      if (clean.isEmpty) Map.empty
-      else {
-        val probe = clean.map { d =>
-          val l = layouts(d)
-          val base = relation(spark, snap, Seq(l), l.files.map(_._1))
-            .withColumn(dirCol, lit(d))
-            .withColumn(fileCol, input_file_name())
-          projectTo(base, snap.cols, l.mapping(snap.cols), extra = Seq(col(dirCol), col(fileCol)))
-        }.reduce(_ unionByName _)
-        shape(probe).select(col(dirCol), col(fileCol)).distinct()
-          .collect().map(r => (r.getString(0), r.getString(1)))
-          .groupBy(_._1).map { case (d, fs) =>
-            d -> fs.map(x => SnapshotTable.fileUriToPath(x._2)).toSet
-          }
-      }
-    val parts = affected.map { d =>
-      val hits = fileHits.getOrElse(d, Set.empty)
-      val all = layouts(d).files.map(_._1.path)
-      // split ONLY when every probed hit resolves to a recorded file and
-      // some file is untouched; any URI/path disagreement falls back to
-      // the whole-dir rewrite — misclassifying an affected file as
-      // carried would silently lose its mutation
-      if (hits.isEmpty || !hits.subsetOf(all.toSet) || all.forall(hits.contains))
-        (readDir(spark, snap, layouts(d)), None)
-      else {
-        val carried = all.filterNot(hits.contains)
-        val carryDir = Paths.get(root,
-          s"snap-${java.util.UUID.randomUUID().toString.take(8)}-carry").toString
-        val dBase = new File(d).toPath
-        carried.foreach { f =>
-          val src = Paths.get(f)
-          val target = Paths.get(carryDir, dBase.relativize(src).toString)
-          Files.createDirectories(target.getParent)
-          try Files.createLink(target, src): Unit
-          catch { case _: java.io.IOException => Files.copy(src, target): Unit }
-        }
-        // columns sidecar: identical physical files, identical mapping
-        if (Files.exists(columnsSidecarPath(d)))
-          Files.copy(columnsSidecarPath(d), columnsSidecarPath(carryDir),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-        // partition sidecar rebuilt EXACTLY from the original's
-        // per-file entries (rows stay known; a legacy dir without them
-        // degrades to unknown, never to a wrong number)
-        val carriedSet = carried.toSet
-        val origEntries = readFilesSidecar(d).getOrElse(Nil)
-          .filter(e => carriedSet.contains(e._1))
-        val dirPartCols = layouts(d).partCols
-        val rowsByPart: Map[String, Long] = origEntries.groupBy(_._2).map {
-          case (p, es) => p -> (if (es.exists(_._4 < 0)) -1L else es.map(_._4).sum)
-        }
-        val carriedRows =
-          if (origEntries.size == carried.size && origEntries.forall(_._4 >= 0))
-            origEntries.map(_._4).sum
-          else -1L
-        val knownFileRows = origEntries.collect {
-          case (path, _, _, rows) if rows >= 0 =>
-            Paths.get(carryDir, dBase.relativize(Paths.get(path)).toString)
-              .toFile.getAbsolutePath -> rows
-        }.toMap
-        writePartitionSidecar(carryDir, dirPartCols,
-          if (dirPartCols.isEmpty) Map("" -> carriedRows) else rowsByPart,
-          carriedRows, snap.format, knownFileRows)
-        val ranges = Paths.get(d, graft.plans.RangeStats.SidecarName)
-        if (Files.exists(ranges))
-          Files.copy(ranges, Paths.get(carryDir, graft.plans.RangeStats.SidecarName),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-        // the rewrite reads ONLY the affected files
-        val narrow = relation(spark, snap, Seq(layouts(d)),
-          layouts(d).files.map(_._1).filter(f => hits.contains(f.path)))
-        (projectTo(narrow, snap.cols, layouts(d).mapping(snap.cols)), Some(carryDir))
-      }
+  private def carry(snap: Snapshot, layout: DirLayout, files: Seq[String]): String = {
+    val d = layout.dir
+    val carryDir = Paths.get(root,
+      s"snap-${java.util.UUID.randomUUID().toString.take(8)}-carry").toString
+    val dBase = new File(d).toPath
+    files.foreach { f =>
+      val src = Paths.get(f)
+      val target = Paths.get(carryDir, dBase.relativize(src).toString)
+      Files.createDirectories(target.getParent)
+      try Files.createLink(target, src): Unit
+      catch { case _: java.io.IOException => Files.copy(src, target): Unit }
     }
-    (parts.map(_._1).reduce(_ unionByName _), parts.flatMap(_._2))
+    // columns sidecar: identical physical files, identical mapping
+    if (Files.exists(columnsSidecarPath(d)))
+      Files.copy(columnsSidecarPath(d), columnsSidecarPath(carryDir),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    // partition sidecar rebuilt EXACTLY from the original's per-file
+    // entries (rows stay known; a legacy dir without them degrades to
+    // unknown, never to a wrong number)
+    val carriedSet = files.toSet
+    val origEntries = readFilesSidecar(d).getOrElse(Nil).filter(e => carriedSet.contains(e._1))
+    val rowsByPart: Map[String, Long] = origEntries.groupBy(_._2).map {
+      case (p, es) => p -> (if (es.exists(_._4 < 0)) -1L else es.map(_._4).sum)
+    }
+    val carriedRows =
+      if (origEntries.size == files.size && origEntries.forall(_._4 >= 0)) origEntries.map(_._4).sum
+      else -1L
+    val knownFileRows = origEntries.collect {
+      case (path, _, _, rows) if rows >= 0 =>
+        Paths.get(carryDir, dBase.relativize(Paths.get(path)).toString).toFile.getAbsolutePath -> rows
+    }.toMap
+    writePartitionSidecar(carryDir, layout.partCols,
+      if (layout.partCols.isEmpty) Map("" -> carriedRows) else rowsByPart,
+      carriedRows, snap.format, knownFileRows)
+    val ranges = Paths.get(d, graft.plans.RangeStats.SidecarName)
+    if (Files.exists(ranges))
+      Files.copy(ranges, Paths.get(carryDir, graft.plans.RangeStats.SidecarName),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    carryDir
   }
 
   /** One copy-on-write commit attempt: write `replacement` as a new dir
@@ -1025,7 +950,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // delta dirs read whole: no mask or delete of `to` applies to the
     // rows a commit added, so each is read as `to` without them
     def read(dirs: Seq[String]): DataFrame =
-      readDirs(spark, to.copy(maskedDirs = Map.empty, deletes = Nil), dirs)
+      readDirs(spark, to.copy(maskedDirs = Map.empty, deletes = Nil), dirs.map(dirLayout))
     if (delta.isEmpty)
       // the steady-state "no new data" case must still carry the TABLE
       // schema — a schema-less empty frame would crash downstream
@@ -1073,8 +998,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val chain = m.snapshots.filterNot(_.staged)
       .filter(s => s.id >= fromId && s.id <= toId).sortBy(_.id)
 
+    // `df` is at `src`'s schema: its columns resolve to `to`'s by field
+    // id, by name only for a legacy `src` that tracks no schema
     def stamp(df: DataFrame, src: Snapshot, tpe: String, commitId: Long): DataFrame =
-      alignToSchema(df, src.cols, to.cols)
+      projectTo(df, to.cols, (if (src.cols.nonEmpty) src.cols else to.cols).map(c => c.id -> c.name).toMap)
         .withColumn("_change_type", lit(tpe))
         .withColumn("_commit_snapshot_id", lit(commitId))
 
@@ -1085,9 +1012,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
         val added = cur.dataDirs.filterNot(prevDirs)
         val dropped = prev.dataDirs.filterNot(curDirs)
         val inserts = Option.when(added.nonEmpty)(
-          stamp(readDirs(spark, cur, added), cur, "insert", cur.id))
+          stamp(readDirs(spark, cur, added.map(dirLayout)), cur, "insert", cur.id))
         val dirDeletes = Option.when(dropped.nonEmpty)(
-          stamp(readDirs(spark, prev, dropped), prev, "delete", cur.id))
+          stamp(readDirs(spark, prev, dropped.map(dirLayout)), prev, "delete", cur.id))
         // a dynamic overwrite masks partitions of carried dirs instead
         // of dropping the dirs — the newly masked slices are deletes
         val maskDeletes = cur.maskedDirs.toSeq.sortBy(_._1).flatMap { case (d, curMask) =>
@@ -1096,8 +1023,11 @@ final class SnapshotTable(val root: String, val fullName: String) {
             val newly = curMask.filterNot(
               prev.maskedDirs.getOrElse(d, Seq.empty).toSet)
             if (newly.isEmpty) None
-            else Some(stamp(readDir(spark, prev, dirLayout(d), newly.toSet),
-              prev, "delete", cur.id))
+            else {
+              val l = dirLayout(d)
+              val files = l.files.collect { case (f, p) if newly.contains(p) => f.path }.toSet
+              Some(stamp(readDirs(spark, prev, Seq(l), keep = f => files(f.path)), prev, "delete", cur.id))
+            }
           }
         }
         // new equality deletes: the erased ROWS (keys semi-joined over
@@ -1113,18 +1043,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
             // makes a merge-on-read UPDATE/MERGE commit surface exactly
             // as Iceberg's changelog contract: erased old versions as
             // 'delete', the commit's new dir as 'insert'.
-            val read: String => DataFrame =
-              d => readDir(spark, prev, dirLayout(d), keepRowId = del.positional)
-            applicable.map(read).reduceOption(_ unionByName _)
-              .map { rows =>
-                val keys = readDeleteFile(spark, del, prev.format)
-                val erased = rows.join(broadcast(keys), del.keys, "left_semi")
-                val cleaned =
-                  if (del.positional)
-                    erased.drop(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol)
-                  else erased
-                stamp(cleaned, prev, "delete", cur.id)
-              }
+            Option.when(applicable.nonEmpty) {
+              val rowId = if (del.positional) SnapshotTable.RowId else Nil
+              val erased = readDirs(spark, prev, applicable.map(dirLayout), rowId)
+                .join(broadcast(readDeleteFile(spark, del, prev.format)), del.keys, "left_semi")
+              stamp(if (rowId.isEmpty) erased else erased.drop(rowId.map(_._2): _*),
+                prev, "delete", cur.id)
+            }
           }
         inserts.toSeq ++ dirDeletes ++ maskDeletes ++ keyDeletes
       case _ => Nil
@@ -1172,9 +1097,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
   }
 
   /** MERGE evaluates its source several times — the cardinality check,
-    * the broadcast dir probes, and the rewrite/append itself. A source
-    * that is more than a simple deterministic scan is materialized ONCE
-    * via a lazy local checkpoint (Delta's merge source materialization,
+    * the broadcast touched-file probe, and the rewrite/append itself. A
+    * source that is more than a simple deterministic scan is materialized
+    * ONCE via a lazy local checkpoint (Delta's merge source materialization,
     * for the same two reasons): an expensive lineage would re-execute
     * per consumer, and a NON-DETERMINISTIC source could yield a delete
     * computed from one evaluation paired with an append from another —
@@ -1194,33 +1119,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
     if (simple(source.queryExecution.analyzed)) source
     else source.localCheckpoint(eager = false)
   }
-
-  /** Align a frame already projected to `fromCols`' names onto the
-    * TARGET snapshot schema, resolving renames by stable field id
-    * (projectTo's contract, source side keyed by the from-snapshot's
-    * names). Columns the target adds backfill null; dropped columns
-    * disappear; as there, nullability alone never casts.
-    */
-  private def alignToSchema(
-      df: DataFrame, fromCols: Seq[TableColumn], toCols: Seq[TableColumn]): DataFrame =
-    if (toCols.isEmpty) df
-    else {
-      import org.apache.spark.sql.catalyst.types.DataTypeUtils
-      import org.apache.spark.sql.functions.{col, lit}
-      val present = df.columns.toSet
-      df.select(toCols.map { tc =>
-        val t = org.apache.spark.sql.types.DataType.fromDDL(tc.dataType)
-        val srcName = fromCols.find(_.id == tc.id).map(_.name).filter(present.contains)
-          .orElse(Some(tc.name).filter(present.contains)) // legacy: no tracked schema
-        srcName match {
-          case Some(n) =>
-            val base = col(n)
-            val same = DataTypeUtils.equalsIgnoreNullability(df.schema(n).dataType, t)
-            (if (same) base else base.cast(t)).as(tc.name)
-          case None => lit(null).cast(t).as(tc.name)
-        }
-      }: _*)
-    }
 
   /** Full-refresh overwrite: write `df` as a brand-new snapshot. */
   def overwrite(df: DataFrame, partitionCols: Seq[String] = Nil, sortCols: Seq[org.apache.spark.sql.Column] = Nil, format: String = "parquet", numRetries: Int = SnapshotTable.DefaultCommitRetries): Snapshot =
@@ -1947,7 +1845,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
         .filter(cur.dataDirs.contains)
       if (affected.isEmpty) Left(cur) // no-op: nothing to pay down
       // the logical view of exactly those dirs (deletes + masks applied)
-      else Right(rewriteDirs(cur, affected, readDirs(spark, cur, affected),
+      else Right(rewriteDirs(cur, affected, readDirs(spark, cur, affected.map(dirLayout)),
         "rewrite_deletes", Map("operation" -> "rewrite_deletes",
           "mode" -> WriteMode.CopyOnWrite.name, "attempts" -> (attempt + 1).toString))(
         _ => cur.rowCount))
@@ -3078,12 +2976,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
       if (snapCols.isEmpty) Map.empty
       else cols.fold(snapCols.map(c => c.id -> c.name).toMap)(_.map(e => e._1 -> e._2).toMap)
 
-    /** The files live at `snap` (its masked partitions left out) of the
-      * partitions `only` accepts.
-      */
-    def live(snap: Snapshot, only: String => Boolean = _ => true): Seq[SnapshotFileIndex.DataFile] = {
+    /** The files live at `snap`: its masked partitions left out. */
+    def live(snap: Snapshot): Seq[SnapshotFileIndex.DataFile] = {
       val masked = snap.maskedDirs.getOrElse(dir, Nil).toSet
-      files.collect { case (f, p) if only(p) && !masked(p) => f }
+      files.collect { case (f, p) if !masked(p) => f }
     }
 
     /** The dir's (data, partition) schemas as `format` stores them, as
@@ -3452,29 +3348,30 @@ object SnapshotTable {
     * exactly-once guarantee. The query-id/batch-id pair is display
     * metadata describing which batch THIS commit was.
     */
-  /** Column names carrying the parquet physical row identity through a
-    * positional-delete probe or read (`_metadata.file_path` /
+  /** Column names carrying a row's physical identity through a probe or
+    * a positional-delete read (`_metadata.file_path` /
     * `_metadata.row_index`, re-aliased so they survive the snapshot-
     * schema projection and cannot collide with user columns).
     */
   val RowIdFileCol = "__graft_pd_file"
   val RowIdPosCol = "__graft_pd_pos"
 
-  /** Third column of a positional delete file: the data DIR containing
-    * the matched file, written so the delete's `applies` scope can be
-    * derived from the (tiny) delete file itself — a single-row delete
-    * then scopes to ONE dir, and every other dir keeps the zero-cost
-    * read path. Ignored by the read-side anti-join (keys are file+pos).
+  /** The row-identity columns a probe reads, as (`_metadata` field,
+    * column): `FileId` names each row's data file, on every format —
+    * the copy-on-write probe's; `RowId` adds its position in the file,
+    * parquet only — merge-on-read's, and a positional delete's keys.
     */
-  val RowIdDirCol = "__graft_pd_dir"
+  private[sink] val FileId: Seq[(String, String)] = Seq("file_path" -> RowIdFileCol)
+  private[sink] val RowId: Seq[(String, String)] = FileId :+ ("row_index" -> RowIdPosCol)
 
   /** The fixed schema of a positional delete file: (data file path, row
-    * position, data dir), as the merge-on-read probe writes it.
+    * position), as Iceberg's position delete files hold them. Files
+    * written with a third column (the data dir) read unchanged: a read
+    * with this schema ignores it.
     */
   val PositionalDeleteSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types.{LongType, StringType, StructType}
     new StructType().add(RowIdFileCol, StringType).add(RowIdPosCol, LongType)
-      .add(RowIdDirCol, StringType)
   }
 
   /** `fields` as `format` stores them, i.e. the schema a footer read
@@ -3645,10 +3542,10 @@ object SnapshotTable {
     */
   private[graft] val driverFooterReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** `input_file_name()` returns the scan's file URI (`file:///…`,
+  /** `_metadata.file_path` is the scanned file's URI (`file:/…`,
     * possibly URL-encoded); normalize to a local filesystem path for
-    * comparison against walked [[java.io.File]] paths. Non-URI strings
-    * pass through unchanged.
+    * comparison against the paths the files sidecars record. Non-URI
+    * strings pass through unchanged.
     */
   private[sink] def fileUriToPath(u: String): String =
     if (u.startsWith("file:"))

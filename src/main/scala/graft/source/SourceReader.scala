@@ -115,11 +115,11 @@ object SourceReader {
       // single input file — fine for preamble'd exports, which are
       // single-file by nature; a multi-file directory would need
       // per-file indexing.
-      import org.apache.spark.sql.functions.{col => c, from_csv, input_file_name, monotonically_increasing_id}
+      import org.apache.spark.sql.functions.{col => c, from_csv, monotonically_increasing_id}
       val raw = spark.read.text(path)
       // enforce the single-file assumption instead of silently letting
       // other files' preamble lines through as corrupt rows
-      val nFiles = raw.select(input_file_name()).distinct().count()
+      val nFiles = raw.select(c("_metadata.file_path")).distinct().count()
       if (nFiles > 1)
         throw new IllegalArgumentException(
           s"skip_rows=$skipRows is only line-accurate for a single input file; " +

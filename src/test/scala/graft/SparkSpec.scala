@@ -26,16 +26,33 @@ trait SparkSpec extends AnyFunSuite {
     }
 
   /** The call site of every Spark job started while `f` runs, in start
-    * order: the name of the job's result stage, e.g. `count at
-    * SnapshotTable.scala:298`. A job-count pin that fails prints these,
-    * so the message names the reader that ran the extra job.
+    * order: the first `graft.` frame of the call site of the SQL
+    * execution that ran the job (e.g. `graft.sink.SnapshotTable.
+    * copyOnWrite(SnapshotTable.scala:705)`), or, for a job outside any
+    * SQL execution, the name of its result stage (`count at
+    * SnapshotTable.scala:298`). The stage name alone would not do: AQE
+    * submits a query's later jobs from a pool thread, whose stages are
+    * named after a `CompletableFuture` frame. A job-count pin that fails
+    * prints these, so the message names the engine code that ran the
+    * extra job.
     */
   def jobSitesDuring(f: => Any): Seq[String] = {
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Option[Long], String)]()
+    val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val site = js.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
-        sites.add(js.jobId -> site): Unit
+        val stage = js.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+        val execution = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+        jobs.add((js.jobId, execution, stage)): Unit
+      }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          s.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+            .foreach(executions.put(s.executionId, _))
+        case _ => ()
       }
     }
     spark.sparkContext.addSparkListener(l)
@@ -43,12 +60,14 @@ trait SparkSpec extends AnyFunSuite {
       f
       var prev = -1
       val deadline = System.currentTimeMillis() + 10000
-      while (System.currentTimeMillis() < deadline && sites.size != prev) {
-        prev = sites.size; Thread.sleep(250)
+      while (System.currentTimeMillis() < deadline && jobs.size != prev) {
+        prev = jobs.size; Thread.sleep(250)
       }
     } finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
-    sites.asScala.toSeq.sortBy(_._1).map(_._2)
+    jobs.asScala.toSeq.sortBy(_._1).map { case (_, execution, stage) =>
+      execution.flatMap(id => Option(executions.get(id))).getOrElse(stage)
+    }
   }
 }
 

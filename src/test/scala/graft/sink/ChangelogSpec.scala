@@ -46,6 +46,21 @@ class ChangelogSpec extends SparkSpec {
     assert(changes(t, 2, 3) == Seq((2L, "insert", 3L)))
   }
 
+  test("a dropped column re-added under its name reads null in the changelog, not its old values") {
+    val t = freshTable()
+    t.overwrite(Seq((1L, "old1"), (2L, "old2")).toDF("id", "b"))
+    t.delete(spark, Rows.Where(col("id") === 1L))
+    t.dropColumn(spark, "b")
+    t.addColumn(spark, "b", "STRING")
+    assert(t.read(spark).as[(Long, Option[String])].collect().toSeq == Seq((2L, None)))
+    // the re-added `b` is a new field id: no earlier snapshot holds a
+    // value of it, whatever its name
+    val got = t.readChangelog(spark, 1, 4)
+      .select("id", "b", "_change_type").as[(Long, Option[String], String)].collect().sorted.toSeq
+    assert(got == Seq((1L, None, "delete"), (2L, None, "delete"), (2L, None, "insert")),
+      s"old values of the dropped column came back: $got")
+  }
+
   test("copy-on-write UPDATE surfaces as rewritten-dir delete + insert") {
     val t = freshTable()
     t.overwrite(Seq((1L, "x"), (2L, "x")).toDF("id", "v"))

@@ -229,6 +229,38 @@ class PositionalDeleteSpec extends SparkSpec {
     assert(pairs.forall(p => p._1.nonEmpty && p._2 >= 0L))
   }
 
+  test("a delete file of the old (file, pos, dir) shape masks, lists and consolidates") {
+    val wh = Files.createTempDirectory("graft_pd_old").toString
+    val t = SnapshotTable(wh, "ns", "old3")
+    t.overwrite((1L to 30L).toDF("id"))
+    val dataDir = t.currentSnapshot.get.dataDirs.head
+    t.delete(spark, Rows.Where(col("id") <= 2L), WriteMode.MergeOnRead)
+    val del = t.currentSnapshot.get.deletes.find(_.positional).get
+    assert(spark.read.parquet(del.dir).columns.toSeq ==
+      Seq(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol))
+    // the same pairs in the shape earlier writers gave a positional
+    // delete file: a third column naming each pair's data dir
+    val pairs = spark.read.schema(SnapshotTable.PositionalDeleteSchema).parquet(del.dir)
+      .as[(String, Long)].collect().toSeq
+    pairs.map { case (f, pos) => (f, pos, dataDir) }
+      .toDF(SnapshotTable.RowIdFileCol, SnapshotTable.RowIdPosCol, "__graft_pd_dir")
+      .write.mode("overwrite").parquet(del.dir)
+    assert(spark.read.parquet(del.dir).columns.length == 3)
+    assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq == (3L to 30L))
+    spark.conf.set("spark.sql.catalog.graft", "graft.catalog.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft.warehouse", wh)
+    def listed = spark.sql("SELECT file_path, pos FROM graft.ns.old3.position_deletes")
+      .as[(String, Long)].collect().toSeq
+    assert(listed.sorted == pairs.sorted)
+    // a new two-column file beside it; consolidation folds both into one
+    t.delete(spark, Rows.Where(col("id") === 3L), WriteMode.MergeOnRead)
+    val snap = t.consolidatePositionalDeletes(spark)
+    assert(snap.operation == "replace" && snap.deletes.count(_.positional) == 1)
+    assert(spark.read.parquet(snap.deletes.head.dir).columns.length == 2)
+    assert(listed.size == 3)
+    assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq == (4L to 30L))
+  }
+
   test("the $deletes metadata table lists active delete files by kind") {
     val wh = Files.createTempDirectory("graft_pd_meta").toString
     val t = SnapshotTable(wh, "ns", "mdel")

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions.{col, lit}
   * statement's first ceiling; the pin is the count measured twice on a
   * 4-core local[4] session with the same result, once every scan took
   * its schema from the dirs' sidecars instead of a footer-reading
-  * inference job. A failing pin prints each job's call site.
+  * inference job and every statement found its touched files with one
+  * probe of the table (`_metadata.file_path`), not a dir probe plus a
+  * file probe. A failing pin prints each job's call site.
   */
 class RowLevelJobCountSpec extends SparkSpec {
 
@@ -37,18 +39,18 @@ class RowLevelJobCountSpec extends SparkSpec {
 
   // (label, ceiling, pin, statement)
   private val pins: Seq[(String, Int, Int, SnapshotTable => Any)] = Seq(
-    ("deleteRows", 9, 5, t => t.delete(spark, one)),
+    ("deleteRows", 9, 3, t => t.delete(spark, one)),
     ("deletePositions", 7, 3, t => t.delete(spark, one, WriteMode.MergeOnRead)),
-    ("deleteRowsMatching", 12, 8, t => t.delete(spark, oneMatching)),
+    ("deleteRowsMatching", 12, 6, t => t.delete(spark, oneMatching)),
     ("deletePositionsMatching", 7, 3, t => t.delete(spark, oneMatching, WriteMode.MergeOnRead)),
-    ("updateWhere", 9, 5, t => t.update(spark, one, sets)),
+    ("updateWhere", 9, 3, t => t.update(spark, one, sets)),
     ("updatePositions", 8, 4, t => t.update(spark, one, sets, WriteMode.MergeOnRead)),
-    ("updateRowsMatching", 10, 6, t => t.update(spark, oneMatching, sets)),
+    ("updateRowsMatching", 10, 4, t => t.update(spark, oneMatching, sets)),
     ("updatePositionsMatching", 8, 4, t => t.update(spark, oneMatching, sets, WriteMode.MergeOnRead)),
-    ("mergeClauses (matched only)", 15, 11, t => updateMerge(t, WriteMode.CopyOnWrite)),
-    ("mergeClausesMor (matched only)", 16, 12, t => updateMerge(t, WriteMode.MergeOnRead)),
-    ("mergeClauses (upsert)", 18, 13, t => upsert(t, WriteMode.CopyOnWrite)),
-    ("mergeClausesMor (upsert)", 19, 14, t => upsert(t, WriteMode.MergeOnRead)))
+    ("mergeClauses (matched only)", 15, 8, t => updateMerge(t, WriteMode.CopyOnWrite)),
+    ("mergeClausesMor (matched only)", 16, 9, t => updateMerge(t, WriteMode.MergeOnRead)),
+    ("mergeClauses (upsert)", 18, 10, t => upsert(t, WriteMode.CopyOnWrite)),
+    ("mergeClausesMor (upsert)", 19, 11, t => upsert(t, WriteMode.MergeOnRead)))
 
   pins.foreach { case (label, ceiling, bound, op) =>
     test(s"$label runs at most $ceiling jobs") {

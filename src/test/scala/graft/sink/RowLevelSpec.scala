@@ -370,6 +370,32 @@ class RowLevelSpec extends SparkSpec {
     assert(t2.read(spark).filter(col("v") === "y").count() == 1L)
   }
 
+  // the probe finds each row's file through `_metadata.file_path`,
+  // which every file format serves, not only parquet
+  for (format <- Seq("orc", "avro"))
+    test(s"file-granular COW on $format: update and delete split the touched dir by file") {
+      def dataFiles(dir: String) =
+        new java.io.File(dir).listFiles().map(_.getName).filter(_.endsWith(s".$format")).toSeq
+      val t = freshTable()
+      t.overwrite((1L to 100L).toDF("id").withColumn("v", lit("a"))
+        .repartitionByRange(4, col("id")), format = format)
+      val origDir = t.currentSnapshot.get.dataDirs.head
+      assert(dataFiles(origDir).size == 4, s"fixture needs 4 files, got ${dataFiles(origDir)}")
+      val up = t.update(spark, Rows.Where(col("id") === 5L), Map("v" -> lit("b")))
+      val carry = up.dataDirs.filter(_.endsWith("-carry"))
+      assert(carry.size == 1 && !up.dataDirs.contains(origDir), s"dirs: ${up.dataDirs}")
+      assert(dataFiles(carry.head).size == 3, "3 of 4 files untouched")
+      assert(t.read(spark).filter(col("v") === "b").select("id").as[Long].collect().toSeq == Seq(5L))
+      assert(t.read(spark).count() == 100L)
+      val del = t.delete(spark, Rows.Where(col("id") === 60L))
+      assert(del.rowCount == 99L)
+      val carry2 = del.dataDirs.filter(d => d.endsWith("-carry") && !up.dataDirs.contains(d))
+      assert(carry2.size == 1 && !del.dataDirs.contains(carry.head), s"dirs: ${del.dataDirs}")
+      assert(dataFiles(carry2.head).size == 2, "2 of the carried 3 files untouched")
+      assert(t.read(spark).select("id").as[Long].collect().sorted.toSeq == (1L to 100L).filterNot(_ == 60L))
+      assert(t.read(spark).filter(col("v") === "b").count() == 1L)
+    }
+
   test("UPDATE/DELETE WHERE k IN (SELECT ...) lower onto the engine paths") {
     val wh = Files.createTempDirectory("graft_rl_sub").toString
     val t = SnapshotTable(wh, "ns", "subt")
