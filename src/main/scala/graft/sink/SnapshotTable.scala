@@ -266,7 +266,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       // a positional delete anti-joins on (file, position): physical row
       // identity is read only where one is in scope or the caller asks
       val ids = if (posDels.nonEmpty) SnapshotTable.RowId else rowId
-      val base = relation(spark, snap, ls, ls.flatMap(_.live(snap)).filter(keep))
+      val base = relation(spark, snap, ls, ls.flatMap(_.live(snap)).map(_.file).filter(keep))
       // schema evolution: project the dirs' PHYSICAL columns (resolved by
       // field id via the schema sidecar) to the snapshot schema — columns
       // a dir predates backfill as null, dropped columns vanish, renames
@@ -708,9 +708,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
     else {
       val carried = touched.filter(l => resolved.isDefined &&
         cur.maskedDirs.get(l.dir).forall(_.isEmpty) && !cur.deletes.exists(_.applies.contains(l.dir)))
-        .map(l => l -> l.files.map(_._1.path).filterNot(hits)).filter(_._2.nonEmpty)
-      val carryDirs = carried.map { case (l, fs) => carry(cur, l, fs) }
-      val carriedFiles = carried.flatMap(_._2).toSet
+        .map(l => l.dir -> l.files.filterNot(f => hits(f.file.path))).filter(_._2.nonEmpty)
+      val carryDirs = carried.map { case (d, fs) => carry(d, fs, cur.format) }
+      val carriedFiles = carried.flatMap(_._2.map(_.file.path)).toSet
       // the rewrite reads ONLY the touched files
       val view = Option.when(touched.nonEmpty)(
         readDirs(spark, cur, touched, keep = f => !carriedFiles(f.path)))
@@ -736,7 +736,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * None when some hit names no file the layouts record.
     */
   private def holding(layouts: Seq[DirLayout], files: Set[String]): Option[Seq[DirLayout]] = {
-    val dirOf = layouts.flatMap(_.files.map { case (f, _) => f.path -> f.dir }).toMap
+    val dirOf = layouts.flatMap(_.files.map(f => f.file.path -> f.file.dir)).toMap
     Option.when(files.forall(dirOf.contains)) {
       val dirs = files.map(dirOf)
       layouts.filter(l => dirs(l.dir))
@@ -838,51 +838,34 @@ final class SnapshotTable(val root: String, val fullName: String) {
       snap.cols.map(c => c.name -> org.apache.spark.sql.types.DataType.fromDDL(c.dataType))
     else readSnapshot(spark, snap.id).schema.fields.toSeq.map(f => f.name -> f.dataType)
 
-  /** Carry `files` of the clean dir of `layout` byte-identical into a
-    * fresh `snap-*-carry` dir as HARD links — same inode, zero data I/O,
-    * and safe against the original dir's later expiry (a symlink would
+  /** Carry `files` of the clean dir `d` byte-identical into a fresh
+    * `snap-*-carry` dir as HARD links — same inode, zero data I/O, and
+    * safe against the original dir's later expiry (a symlink would
     * dangle; an object-store port makes this a manifest reference /
     * server-side copy) — and return it. The carry dir inherits the
-    * original's columns sidecar (same physical files), an exact rebuilt
-    * partition sidecar (from the original's per-file entries), and the
-    * original's range-stats sidecar (bounds over a superset —
-    * conservative, stats are never a correctness input). Cost:
-    * O(carried files) metadata.
+    * original's columns sidecar (same physical files), its files' recorded
+    * rows (so its partition rows stay known; a legacy dir's stay
+    * unknown, never wrong), and the original's range-stats sidecar
+    * (bounds over a superset — conservative, stats are never a
+    * correctness input). Cost: O(carried files) metadata.
     */
-  private def carry(snap: Snapshot, layout: DirLayout, files: Seq[String]): String = {
-    val d = layout.dir
+  private def carry(d: String, files: Seq[DirFile], format: String): String = {
     val carryDir = Paths.get(root,
       s"snap-${java.util.UUID.randomUUID().toString.take(8)}-carry").toString
-    val dBase = new File(d).toPath
-    files.foreach { f =>
-      val src = Paths.get(f)
+    val dBase = Paths.get(d).toAbsolutePath
+    val carried = files.map { f =>
+      val src = Paths.get(f.file.path)
       val target = Paths.get(carryDir, dBase.relativize(src).toString)
       Files.createDirectories(target.getParent)
       try Files.createLink(target, src): Unit
       catch { case _: java.io.IOException => Files.copy(src, target): Unit }
+      f.copy(file = f.file.copy(path = target.toAbsolutePath.toString, dir = carryDir))
     }
     // columns sidecar: identical physical files, identical mapping
     if (Files.exists(columnsSidecarPath(d)))
       Files.copy(columnsSidecarPath(d), columnsSidecarPath(carryDir),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    // partition sidecar rebuilt EXACTLY from the original's per-file
-    // entries (rows stay known; a legacy dir without them degrades to
-    // unknown, never to a wrong number)
-    val carriedSet = files.toSet
-    val origEntries = readFilesSidecar(d).getOrElse(Nil).filter(e => carriedSet.contains(e._1))
-    val rowsByPart: Map[String, Long] = origEntries.groupBy(_._2).map {
-      case (p, es) => p -> (if (es.exists(_._4 < 0)) -1L else es.map(_._4).sum)
-    }
-    val carriedRows =
-      if (origEntries.size == files.size && origEntries.forall(_._4 >= 0)) origEntries.map(_._4).sum
-      else -1L
-    val knownFileRows = origEntries.collect {
-      case (path, _, _, rows) if rows >= 0 =>
-        Paths.get(carryDir, dBase.relativize(Paths.get(path)).toString).toFile.getAbsolutePath -> rows
-    }.toMap
-    writePartitionSidecar(carryDir, layout.partCols,
-      if (layout.partCols.isEmpty) Map("" -> carriedRows) else rowsByPart,
-      carriedRows, snap.format, knownFileRows)
+    writeDirSidecars(carryDir, carried, format)
     val ranges = Paths.get(d, graft.plans.RangeStats.SidecarName)
     if (Files.exists(ranges))
       Files.copy(ranges, Paths.get(carryDir, graft.plans.RangeStats.SidecarName),
@@ -1025,7 +1008,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
             if (newly.isEmpty) None
             else {
               val l = dirLayout(d)
-              val files = l.files.collect { case (f, p) if newly.contains(p) => f.path }.toSet
+              val files = l.files.collect { case f if newly.contains(f.partition) => f.file.path }.toSet
               Some(stamp(readDirs(spark, prev, Seq(l), keep = f => files(f.path)), prev, "delete", cur.id))
             }
           }
@@ -1139,11 +1122,12 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries = 0, expectedBase = Some(expectedHead))
 
   /** Append: new snapshot = previous data dirs + newly written dir.
-    * `micro = true` declares a streaming-microbatch-sized delta: the
-    * commit trades the per-partition stats JOB for a driver footer walk
-    * and skips partition-column range bounds (see [[commit]]'s micro
-    * note) — per-trigger commit cost must stay O(small), or the sink
-    * throughput is capped by commit machinery rather than data volume.
+    * `micro = true` declares a streaming-microbatch-sized delta: a
+    * partitioned parquet commit trades the per-partition stats JOB for
+    * a driver-side read of each new file's footer (see
+    * [[writeDataDir]]) — per-trigger commit cost must stay O(small), or
+    * the sink throughput is capped by commit machinery rather than data
+    * volume.
     */
   def append(df: DataFrame, partitionCols: Seq[String] = Nil, sortCols: Seq[org.apache.spark.sql.Column] = Nil, format: String = "parquet", numRetries: Int = SnapshotTable.DefaultCommitRetries, micro: Boolean = false, summary: Map[String, String] = Map.empty): Snapshot =
     commit(df, "append", carryPrevious = true, partitionCols, sortCols, format, numRetries, micro = micro, summary = summary)
@@ -1246,9 +1230,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * the source files are never owned and never touched by
     * `expireSnapshots` / `removeOrphanFiles` / `discardStaged`.
     *
-    * Import-time costs are the same class as Iceberg's: one footer
-    * walk for record counts (O(files), driver-side, page-cached) and
-    * one column-pruned stats job for partitioned layouts. Schema
+    * Import-time costs are the same class as Iceberg's: one distributed
+    * footer walk for record counts (O(files), page-cached), which also
+    * sums to the partition rows, one schema inference and one
+    * range-stats pass. Schema
     * conformance is the normal append contract enforced at swap time
     * (same-name columns must match or promote losslessly; new columns
     * evolve in). Hive-style `col=value` path segments in the source
@@ -1280,12 +1265,15 @@ final class SnapshotTable(val root: String, val fullName: String) {
       s"add_files to $fullName: $sourcePath contains no data files")
     // partition layout carried by the source's own hive-style paths;
     // mixed layouts inside one import are a corrupt source, not a merge
-    val layouts = files.map(_._2.split("/").dropRight(1)
-      .filter(_.contains("=")).map(_.split("=", 2)(0)).toSeq).distinct
+    val segments = files.map(_._2.split("/").dropRight(1).toSeq)
+    segments.flatten.find(!_.contains("=")).foreach { s =>
+      throw new IllegalArgumentException(
+        s"add_files to $fullName: source subdirectory '$s' is not a col=value partition")
+    }
+    val layouts = segments.map(_.map(_.split("=", 2)(0))).distinct
     require(layouts.size == 1,
       s"add_files to $fullName: source mixes partition layouts " +
         s"(${layouts.map(_.mkString("/")).mkString(" vs ")}); import each layout separately")
-    val partCols = layouts.head
     // record counts from footers (no data rows read) via ONE
     // distributed job over the source file list — Iceberg's add_files
     // distributes manifest building the same way, so a million-file
@@ -1334,17 +1322,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
         Files.createDirectories(target.getParent)
         Files.createSymbolicLink(target, f.toPath.toAbsolutePath): Unit
       }
-      val perFileRows: Map[String, Long] = relRows.map { case (rel, n) =>
-        Paths.get(dataDir, rel).toFile.getAbsolutePath -> n
-      }
-      // same stats sidecars a written commit gets: per-partition rows
-      // from ONE column-pruned job (partitioned sources only), column
+      // same stats sidecars a written commit gets, every file's rows
+      // known from its footer (so partition rows need no job), column
       // ranges from one stats pass — so stats-skip and
       // $partitions/$files treat imported dirs like any other
-      val rowsByPart =
-        if (partCols.nonEmpty) partitionRowCounts(spark, dataDir, partCols, format, schema = None)
-        else Map("" -> newRows)
-      writePartitionSidecar(dataDir, partCols, rowsByPart, newRows, format, perFileRows)
+      writeDirSidecars(dataDir, files.map { case (f, rel) =>
+        dirFile(dataDir, Paths.get(dataDir, rel).toAbsolutePath.toString, f.length(), relRows(rel))
+      }, format)
       // the imported files' schema is whatever their footers say: the
       // one read here infers it, and the dir's columns sidecar (written
       // at swap) records it for every later read
@@ -1852,7 +1836,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     }
 
   /** Partition columns of the current snapshot's physical layout,
-    * UNIONED across every referenced dir's stats sidecar (pure metadata
+    * UNIONED across every referenced dir's recorded files (pure metadata
     * — sidecars are tiny JSON). The union, not just the newest dir,
     * matters: an append written without re-declaring partitionCols
     * produces one flat dir, and deriving the layout from it alone would
@@ -1861,30 +1845,20 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * key by the name. Nil for unpartitioned tables.
     */
   def partitionColumns: Seq[String] =
-    currentSnapshot.toSeq.flatMap(_.dataDirs)
-      .flatMap(d => readPartitionSidecar(d).map(_._1).find(_.nonEmpty))
-      .flatMap(_.split("/").toSeq.map(_.split("=", 2)(0)))
-      .distinct
+    currentSnapshot.toSeq.flatMap(_.dataDirs).flatMap(dirLayout(_).partCols).distinct
 
-  /** Data files referenced by the current snapshot (hidden/marker files
-    * excluded) — the signal compaction exists to shrink.
+  /** Live data files of the current snapshot, as `$files` lists them —
+    * the signal compaction exists to shrink.
     */
-  def dataFileCount: Long =
-    currentSnapshot.map(_.dataDirs.map(d => listDataFiles(new File(d)).size.toLong).sum)
-      .getOrElse(0L)
+  def dataFileCount: Long = liveFiles.size.toLong
 
-  /** Total bytes of data files referenced by the current snapshot (pure
-    * filesystem metadata — no data read).
+  /** Total bytes of the current snapshot's live data files, as `$files`
+    * records them (pure metadata — no data read).
     */
-  def dataBytes: Long =
-    currentSnapshot.map(_.dataDirs.map(d => listDataFiles(new File(d)).map(_.length).sum).sum)
-      .getOrElse(0L)
+  def dataBytes: Long = liveFiles.map(_.file.bytes).sum
 
-  private def listDataFiles(dir: File): Seq[File] = {
-    val children = Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq
-    children.filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
-      .flatMap(f => if (f.isDirectory) listDataFiles(f) else Seq(f))
-  }
+  private def liveFiles: Seq[DirFile] =
+    currentSnapshot.toSeq.flatMap(s => s.dataDirs.flatMap(dirLayout(_).live(s)))
 
   /** Per-partition stats of the CURRENT snapshot — the Iceberg
     * `$partitions` metadata table (file count + row count per partition,
@@ -2006,31 +1980,17 @@ final class SnapshotTable(val root: String, val fullName: String) {
       "partition_path", "size_bytes", "record_count")
   }
 
-  /** One dir's $files entries (sidecar-served; legacy dirs fall back to
-    * a walk + footer read), masked partitions excluded.
+  /** One dir's $files entries, masked partitions excluded. A parquet
+    * file of unknown rows (a dir written before the files sidecar) reads
+    * its footer.
     */
   private def dirFileEntries(
-      snap: Snapshot, d: String): Seq[(String, String, String, Long, Long)] = {
-    val masked = snap.maskedDirs.getOrElse(d, Nil).toSet
-    readFilesSidecar(d) match {
-      case Some(entries) =>
-        entries.filterNot(e => masked.contains(e._2))
-          .map { case (path, p, bytes, rows) => (path, d, p, bytes, rows) }
-      case None =>
-        val base = new File(d)
-        listDataFiles(base)
-          .map { f =>
-            val partition = unescapePath(base.toPath.relativize(f.toPath.getParent).toString)
-            (f, partition)
-          }
-          .filterNot { case (_, p) => masked.contains(p) }
-          .map { case (f, partition) =>
-            val records =
-              if (snap.format == "parquet") SnapshotTable.parquetRecordCount(f) else -1L
-            (f.getAbsolutePath, d, partition, f.length(), records)
-          }
+      snap: Snapshot, d: String): Seq[(String, String, String, Long, Long)] =
+    dirLayout(d).live(snap).map { case DirFile(f, partition, rows) =>
+      (f.path, d, partition, f.bytes,
+        if (rows < 0 && snap.format == "parquet") SnapshotTable.parquetRecordCount(new File(f.path))
+        else rows)
     }
-  }
 
   private def manifestFilePath(snapshotId: Long) =
     Paths.get(root, s"manifest-$snapshotId.json")
@@ -2534,13 +2494,14 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val written =
       SnapshotTable.storedSchema(format, fields.filterNot(f => partitionCols.contains(f.name)))
     def writtenDir = load(df.sparkSession, format, Some(written), Seq(dataDir))
+    // the dir's files, listed once: the dir is immutable across swap
+    // retries, and its sidecars and replaced partitions come from this
+    val listed = walk(dataDir)
     // row count of the NEW dir, recorded into snapshot metadata so
     // history listings never rescan data. Normally free (observed during
     // the write); the fallback footer count is O(files), not O(rows).
-    // Computed once: the dir is immutable across swap retries.
-    val filesWritten = listDataFiles(new File(dataDir)).nonEmpty
     val newRows =
-      if (!filesWritten) 0L
+      if (listed.isEmpty) 0L
       else metrics.get("__rows") match {
         case Some(l: Long) => l
         case _ => writtenDir.count()
@@ -2554,24 +2515,25 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // non-empty append (the streaming exactly-once watermark must move
     // on empty microbatches too, or a replay after one would
     // double-deliver). TRUNCATE TABLE rides this same path.
-    val wroteFiles = filesWritten && newRows > 0L
-    // per-partition stats sidecar (the manifest-stats role): file counts
-    // from a directory walk; for partitioned tables ONE column-pruned
-    // job yields the per-partition row counts — O(delta) like the write
-    // itself, never O(table), and reading no data columns.
+    val wroteFiles = listed.nonEmpty && newRows > 0L
+    // stats sidecars: an unpartitioned dir's rows are the observed count;
+    // a partitioned dir's come from ONE column-pruned job — O(delta) like
+    // the write itself, never O(table), and reading no data columns.
     // A MICRO commit (streaming microbatch) must not pay a whole extra
-    // Spark job for a delta of a few files: per-partition row counts
-    // come from a driver-side footer walk of the just-written dir
-    // (O(files-in-batch) page-cached metadata reads, no job).
-    val (rowsByPart, microFileRows) =
-      if (!wroteFiles) (Map.empty[String, Long], Map.empty[String, Long])
-      else if (micro && format == "parquet" && partitionCols.nonEmpty) microPartitionRows(dataDir)
-      else (partitionRowCounts(df.sparkSession, dataDir, partitionCols, format,
-        Some(StructType(written.fields ++ fields.filter(f => partitionCols.contains(f.name))))),
-        Map.empty[String, Long])
-    if (wroteFiles)
-      writePartitionSidecar(dataDir, partitionCols, rowsByPart, newRows, format,
-        microFileRows)
+    // Spark job for a delta of a few files: its parquet files' rows come
+    // from a driver-side footer read of each (O(files-in-batch)
+    // page-cached metadata reads, no job), and sum to its partitions'.
+    if (wroteFiles) {
+      val footers = micro && format == "parquet" && partitionCols.nonEmpty
+      writeDirSidecars(dataDir,
+        if (footers) listed.map(f => f.copy(rows = SnapshotTable.parquetRecordCount(new File(f.file.path))))
+        else listed,
+        format,
+        if (partitionCols.isEmpty) Map("" -> newRows)
+        else if (footers) Map.empty
+        else partitionRowCounts(df.sparkSession, dataDir, partitionCols, format,
+          StructType(written.fields ++ fields.filter(f => partitionCols.contains(f.name)))))
+    }
     // column range sidecar (the Iceberg manifest min/max role), consumed
     // by the stats-skip optimizer rule to drop non-overlapping dirs at
     // planning. Stats are an optimization, never a correctness input — a
@@ -2585,10 +2547,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
       else graft.plans.RangeStats.writeSidecar(writtenDir, dataDir, newRows)
     catch { case scala.util.control.NonFatal(_) => () }
     // partitions the batch REPLACES = the partitions it wrote (dynamic
-    // overwrite semantics); read once from the just-written sidecar
+    // overwrite semantics)
     val replaced: Seq[String] =
-      if (dynamicReplace && wroteFiles)
-        readPartitionSidecar(dataDir).map(_._1).filter(_.nonEmpty)
+      if (dynamicReplace && wroteFiles) listed.map(_.partition).filter(_.nonEmpty).distinct.sorted
       else Nil
     // the file-less dir of an empty batch is never referenced — remove
     // it now rather than leaving _SUCCESS litter
@@ -2945,16 +2906,19 @@ final class SnapshotTable(val root: String, val fullName: String) {
       (o("id").asLong.toInt, o("name").asStr, o.get("type").map(_.asStr))
     })
 
-  /** What one data dir's sidecars record, read once per read: its
-    * columns sidecar, and every file (masks not applied) with its
-    * partition rel-path — from the files sidecar, or a walk for a dir
-    * written before it.
+  /** One file a data dir records: its scan entry, its partition rel-path
+    * (unescaped; "" unpartitioned) and its record count (-1 unknown).
     */
-  private case class DirLayout(
-      dir: String,
-      cols: Option[Seq[(Int, String, Option[String])]],
-      partCols: Seq[String],
-      files: Seq[(SnapshotFileIndex.DataFile, String)]) {
+  private case class DirFile(file: SnapshotFileIndex.DataFile, partition: String, rows: Long)
+
+  /** What one data dir records, read once per read: its partition
+    * columns and every file (masks not applied) — from the files
+    * sidecar, or a walk for a dir written before it — and, when asked,
+    * its columns sidecar. The one reader of a dir's file listing.
+    */
+  private case class DirLayout(dir: String, partCols: Seq[String], files: Seq[DirFile]) {
+
+    lazy val cols: Option[Seq[(Int, String, Option[String])]] = readColumnsSidecar(dir)
 
     /** Every entry carries its physical type: the dir's files have a
       * known schema, and equal `typedCols` mean equal physical files.
@@ -2977,9 +2941,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
       else cols.fold(snapCols.map(c => c.id -> c.name).toMap)(_.map(e => e._1 -> e._2).toMap)
 
     /** The files live at `snap`: its masked partitions left out. */
-    def live(snap: Snapshot): Seq[SnapshotFileIndex.DataFile] = {
+    def live(snap: Snapshot): Seq[DirFile] = {
       val masked = snap.maskedDirs.getOrElse(dir, Nil).toSet
-      files.collect { case (f, p) if !masked(p) => f }
+      files.filterNot(f => masked(f.partition))
     }
 
     /** The dir's (data, partition) schemas as `format` stores them, as
@@ -3016,23 +2980,41 @@ final class SnapshotTable(val root: String, val fullName: String) {
     }
   }
 
-  /** `dataDir`'s layout; its partition columns and each file's values
-    * are the `col=value` segments of the file's path.
+  /** `dataDir`'s layout; its partition columns are the `col=value`
+    * segments of its files' paths.
     */
   private def dirLayout(dataDir: String): DirLayout = {
+    val files = readFilesSidecar(dataDir).getOrElse(walk(dataDir))
+    DirLayout(dataDir, files.headOption.fold(Seq.empty[String])(f =>
+      partitionSegments(dataDir, f.file.path).map(s => unescapePath(s.split("=", 2)(0)))), files)
+  }
+
+  /** The files under `dataDir` as a walk finds them, rows unknown: a
+    * fresh dir before its sidecars are written, or a dir written before
+    * them.
+    */
+  private def walk(dataDir: String): Seq[DirFile] =
+    listDataFiles(new File(dataDir)).map(f => dirFile(dataDir, f.getAbsolutePath, f.length(), -1L))
+
+  private def listDataFiles(dir: File): Seq[File] = {
+    val children = Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq
+    children.filter(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .flatMap(f => if (f.isDirectory) listDataFiles(f) else Seq(f))
+  }
+
+  /** The file at absolute `path` under `dataDir`: its partition values
+    * are the `col=value` segments of its path.
+    */
+  private def dirFile(dataDir: String, path: String, bytes: Long, rows: Long): DirFile = {
+    val segs = partitionSegments(dataDir, path)
+    DirFile(SnapshotFileIndex.DataFile(path, dataDir, bytes, segs.map(_.split("=", 2)(1))),
+      unescapePath(segs.mkString("/")), rows)
+  }
+
+  /** The dir segments of absolute `path` below `dataDir`, still escaped. */
+  private def partitionSegments(dataDir: String, path: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val base = Paths.get(dataDir).toAbsolutePath
-    val entries = readFilesSidecar(dataDir).map(_.map(e => (e._1, e._2, e._3))).getOrElse(
-      listDataFiles(new File(dataDir)).map(f =>
-        (f.getAbsolutePath, unescapePath(base.relativize(f.toPath.toAbsolutePath.getParent).toString),
-          f.length())))
-    val files = entries.map { case (path, partition, bytes) =>
-      val kvs = base.relativize(Paths.get(path)).asScala.toSeq.init.map(_.toString.split("=", 2))
-      (kvs.map(kv => unescapePath(kv(0))), SnapshotFileIndex.DataFile(path, dataDir, bytes, kvs.map(_(1))),
-        partition)
-    }
-    DirLayout(dataDir, readColumnsSidecar(dataDir), files.headOption.fold(Seq.empty[String])(_._1),
-      files.map(f => f._2 -> f._3))
+    Paths.get(dataDir).toAbsolutePath.relativize(Paths.get(path)).asScala.toSeq.init.map(_.toString)
   }
 
   /** ONE relation over `files` of the dirs of `layouts`, which share
@@ -3078,7 +3060,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val format = del.format.getOrElse(snapFormat)
     load(spark, format,
       if (del.positional) Some(SnapshotTable.PositionalDeleteSchema)
-      else DirLayout(del.dir, readColumnsSidecar(del.dir), Nil, Nil).recordedSchemas(format).map(_._1),
+      else DirLayout(del.dir, Nil, Nil).recordedSchemas(format).map(_._1),
       Seq(del.dir))
   }
 
@@ -3092,128 +3074,90 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * stays '007'; JVM toString would diverge for e.g. timestamps) — and
     * lines up with the walked (unescaped) paths. The job reads no data
     * columns. `schema` is the written files' schema plus the partition
-    * columns; None infers both, for imported files. Past
-    * [[SnapshotTable.PartitionStatsCapKey]] groups the counts are unknown
-    * (empty): a 100k-partition backfill must not hold them all on the
-    * driver. Empty for unpartitioned dirs.
+    * columns. Past [[SnapshotTable.PartitionStatsCapKey]] groups the
+    * counts are unknown (empty): a 100k-partition backfill must not hold
+    * them all on the driver.
     */
   private def partitionRowCounts(
       spark: SparkSession,
       dataDir: String,
       partitionCols: Seq[String],
       format: String,
-      schema: Option[StructType]): Map[String, Long] =
-    if (partitionCols.isEmpty) Map.empty
-    else {
-      import org.apache.spark.sql.functions.col
-      // keys are aliased __k{i}: a partition column may be named `count`
-      val keys = partitionCols.zipWithIndex.map { case (c, i) => col(c).cast("string").as(s"__k$i") }
-      val cap = spark.conf.getOption(SnapshotTable.PartitionStatsCapKey)
-        .flatMap(_.toIntOption).getOrElse(SnapshotTable.PartitionStatsCapDefault)
-      val grouped = load(spark, format, schema, Seq(dataDir)).groupBy(keys: _*).count()
-        .limit(cap + 1).collect()
-      if (grouped.length > cap) Map.empty
-      else grouped.map { r =>
-        partitionCols.indices.map { i =>
-          s"${partitionCols(i)}=${if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else r.getString(i)}"
-        }.mkString("/") -> r.getLong(partitionCols.size)
-      }.toMap
-    }
-
-  /** Per-partition and per-file row counts of a freshly written parquet
-    * dir from its FOOTERS, driver-side — the micro-commit substitute for
-    * [[partitionRowCounts]]'s Spark job. Cost is O(files in this delta)
-    * page-cached metadata reads; an unreadable footer degrades its
-    * partition's count to unknown (-1), never to a wrong number.
-    */
-  private def microPartitionRows(dataDir: String): (Map[String, Long], Map[String, Long]) = {
-    val base = new File(dataDir)
-    val perFile = listDataFiles(base).map { f =>
-      val part = unescapePath(base.toPath.relativize(f.toPath.getParent).toString)
-      (f.getAbsolutePath, part, SnapshotTable.parquetRecordCount(f))
-    }
-    val byPart = perFile.groupBy(_._2).map { case (p, fs) =>
-      p -> (if (fs.exists(_._3 < 0)) -1L else fs.map(_._3).sum)
-    }
-    (byPart, perFile.map(e => e._1 -> e._3).toMap)
+      schema: StructType): Map[String, Long] = {
+    import org.apache.spark.sql.functions.col
+    // keys are aliased __k{i}: a partition column may be named `count`
+    val keys = partitionCols.zipWithIndex.map { case (c, i) => col(c).cast("string").as(s"__k$i") }
+    val cap = spark.conf.getOption(SnapshotTable.PartitionStatsCapKey)
+      .flatMap(_.toIntOption).getOrElse(SnapshotTable.PartitionStatsCapDefault)
+    val grouped = load(spark, format, Some(schema), Seq(dataDir)).groupBy(keys: _*).count()
+      .limit(cap + 1).collect()
+    if (grouped.length > cap) Map.empty
+    else grouped.map { r =>
+      partitionCols.indices.map { i =>
+        s"${partitionCols(i)}=${if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else r.getString(i)}"
+      }.mkString("/") -> r.getLong(partitionCols.size)
+    }.toMap
   }
 
-  private def writePartitionSidecar(
-      dataDir: String,
-      partitionCols: Seq[String],
-      rowsByPart: Map[String, Long],
-      totalRows: Long,
-      format: String = "parquet",
-      knownFileRows: Map[String, Long] = Map.empty): Unit = {
-    val base = new File(dataDir)
-    val grouped: Map[String, Seq[File]] = listDataFiles(base).groupBy { f =>
-      unescapePath(base.toPath.relativize(f.toPath.getParent).toString)
+  /** Record `files` of `dataDir` in its partitions and files sidecars
+    * (the manifest-stats and manifest-entry roles), so `$partitions`,
+    * `$files` and every read plan from metadata, with zero data or
+    * footer I/O at query time. One rule sets a partition's rows: the sum
+    * of its files' rows when every one is known, else `counted`'s count
+    * for it, else unknown (-1). A file of unknown rows takes its
+    * partition's rows when it is the partition's only file, else its
+    * parquet footer's count — O(files in this delta), the same class as
+    * Iceberg writing its manifest.
+    */
+  private def writeDirSidecars(
+      dataDir: String, files: Seq[DirFile], format: String,
+      counted: Map[String, Long] = Map.empty): Unit = {
+    val parts = files.groupBy(_.partition).toSeq.sortBy(_._1).map { case (p, fs) =>
+      (p, fs.sortBy(f => Paths.get(f.file.path).getFileName.toString),
+        if (fs.forall(_.rows >= 0)) fs.map(_.rows).sum else counted.getOrElse(p, -1L))
     }
-    val filesByPart: Map[String, Long] =
-      grouped.map { case (k, v) => k -> v.size.toLong }
-    val stats: Seq[(String, Long, Long)] =
-      if (partitionCols.isEmpty)
-        Seq(("", filesByPart.getOrElse("", 0L), totalRows))
-      else
-        (filesByPart.keySet ++ rowsByPart.keySet).toSeq.sorted.map { p =>
-          (p, filesByPart.getOrElse(p, 0L), rowsByPart.getOrElse(p, -1L))
-        }
-    MetadataJson.write(sidecarPath(dataDir), JArr(stats.map { case (p, f, r) =>
-      obj("partition" -> JStr(p), "files" -> num(f), "rows" -> num(r))
+    MetadataJson.write(sidecarPath(dataDir), JArr(parts.map { case (p, fs, r) =>
+      obj("partition" -> JStr(p), "files" -> num(fs.size.toLong), "rows" -> num(r))
     }))
-    // per-FILE sidecar (the Iceberg manifest-entry role): path, size and
-    // record count recorded AT COMMIT TIME for the just-written dir, so
-    // the `$files` metadata table is a pure sidecar merge — zero data or
-    // footer I/O at query time. Commit-time cost is O(files in this
-    // delta), the same class as Iceberg writing its manifest; a
-    // single-file partition reuses the already-known partition row count
-    // and skips even the (page-cached) footer read.
-    val knownRows = stats.map { case (p, _, r) => p -> r }.toMap
-    val fileEntries = stats.flatMap { case (p, _, _) =>
-      val fs = grouped.getOrElse(p, Nil).sortBy(_.getName)
-      fs.map { f =>
-        val rows = knownFileRows.getOrElse(f.getAbsolutePath,
-          if (fs.size == 1 && knownRows.getOrElse(p, -1L) >= 0) knownRows(p)
-          else if (format == "parquet") SnapshotTable.parquetRecordCount(f)
-          else -1L)
-        obj("file" -> JStr(base.toPath.relativize(f.toPath).toString),
-          "partition" -> JStr(p), "bytes" -> num(f.length()), "rows" -> num(rows))
+    val base = Paths.get(dataDir).toAbsolutePath
+    MetadataJson.write(filesSidecarPath(dataDir), JArr(parts.flatMap { case (p, fs, r) =>
+      fs.map { case DirFile(f, _, known) =>
+        val rows =
+          if (known >= 0) known
+          else if (fs.size == 1 && r >= 0) r
+          else if (format == "parquet") SnapshotTable.parquetRecordCount(new File(f.path))
+          else -1L
+        obj("file" -> JStr(base.relativize(Paths.get(f.path)).toString),
+          "partition" -> JStr(p), "bytes" -> num(f.bytes), "rows" -> num(rows))
       }
-    }
-    MetadataJson.write(filesSidecarPath(dataDir), JArr(fileEntries))
+    }))
   }
 
   private def filesSidecarPath(dataDir: String) =
     Paths.get(dataDir, ".graft-files.json")
 
-  /** Per-file sidecar entries of one dir: (absolute path, partition,
-    * bytes, rows). None when the dir predates the file sidecar — the
-    * caller falls back to the legacy walk-and-footer path for that dir
-    * only.
+  /** The files one dir's files sidecar records. None when the dir
+    * predates the file sidecar — [[dirLayout]] then walks it.
     */
-  private def readFilesSidecar(dataDir: String): Option[Seq[(String, String, Long, Long)]] =
+  private def readFilesSidecar(dataDir: String): Option[Seq[DirFile]] =
     MetadataJson.read(filesSidecarPath(dataDir)).map { json =>
       SnapshotTable.sidecarReads.inc(root)
       json.asArr.map { v =>
         val o = v.asObj
-        (new File(dataDir, o("file").asStr).getAbsolutePath,
-          o("partition").asStr, o("bytes").asLong, o("rows").asLong)
+        dirFile(dataDir, new File(dataDir, o("file").asStr).getAbsolutePath, o("bytes").asLong,
+          o("rows").asLong)
       }
     }
 
   /** Sidecar entries for one data dir; a dir written before the sidecar
-    * existed falls back to walked file counts with unknown (-1) rows.
+    * existed falls back to its recorded file counts with unknown (-1) rows.
     */
   private def readPartitionSidecar(dataDir: String): Seq[(String, Long, Long)] =
     MetadataJson.read(sidecarPath(dataDir)).map(_.asArr.map { v =>
       val o = v.asObj
       (o("partition").asStr, o("files").asLong, o("rows").asLong)
-    }).getOrElse {
-      val base = new File(dataDir)
-      listDataFiles(base).groupBy { f =>
-        unescapePath(base.toPath.relativize(f.toPath.getParent).toString)
-      }.map { case (k, v) => (k, v.size.toLong, -1L) }.toSeq
-    }
+    }).getOrElse(dirLayout(dataDir).files.groupBy(_.partition)
+      .map { case (p, fs) => (p, fs.size.toLong, -1L) }.toSeq)
 
   /** Reverse Hive-style %XX partition-dir escaping (dates, months, hours
     * and buckets never need it; string partition values with spaces or

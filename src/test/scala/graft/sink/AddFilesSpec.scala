@@ -97,6 +97,30 @@ class AddFilesSpec extends SparkSpec {
       s"per-partition sidecar rows must be exact, got $parts")
   }
 
+  test("a partitioned import runs 4 jobs: footers, one schema inference, the range stats") {
+    val src = stageSource("jobs") { d =>
+      Seq((1, "us"), (2, "us"), (3, "eu")).toDF("id", "region")
+        .write.partitionBy("region").parquet(s"$d/part")
+    }
+    val t = freshTable()
+    // partition rows are summed from the footer counts, so no count job
+    // runs and the dir's schema is inferred once
+    val sites = jobSitesDuring(t.addFiles(spark, s"$src/part"))
+    assert(sites.size == 4, s"jobs: ${sites.mkString("; ")}")
+    assert(t.partitionStats(spark).as[(String, Long, Long)].collect()
+      .map(p => p._1 -> p._3).toSeq == Seq("region=eu" -> 1L, "region=us" -> 2L))
+  }
+
+  test("a source subdirectory that is not a col=value partition is rejected") {
+    val src = stageSource("nested") { d =>
+      Seq(1, 2).toDF("v").coalesce(1).write.parquet(s"$d/n/batch1")
+    }
+    val t = freshTable()
+    val e = intercept[IllegalArgumentException](t.addFiles(spark, s"$src/n"))
+    assert(e.getMessage.contains("'batch1' is not a col=value partition"), s"got: ${e.getMessage}")
+    assert(t.currentSnapshot.isEmpty)
+  }
+
   test("schema conformance is the normal append contract") {
     val src = stageSource("bad") { d =>
       Seq(("x", "y")).toDF("id", "name").coalesce(1).write.parquet(s"$d/bad")
