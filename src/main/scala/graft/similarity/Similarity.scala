@@ -24,7 +24,13 @@ import org.apache.spark.sql.functions._
   * everything inside WholeStageCodegen and scales out by partitioning on
   * the id/bucket keys. Norms are computed once per vector, never per
   * pair. At 100 TB the same shape becomes IVF with stored norm + bucket
-  * columns.
+  * columns. The exception is the query side of a PQ / IVF-PQ search:
+  * its LUT, probes and norms are at most |Q|·m·codes rows, so they are
+  * computed on the driver from the collected batch and the model tables
+  * and join the distributed corpus side as broadcast local relations
+  * (no aggregation or shuffle; each broadcast is one small job over its
+  * rows) — a persisted IVF-PQ search of 8 local queries runs 9 jobs
+  * (spec-pinned).
   *
   * Candidate-pair scoring (LSH/IVF) uses the NATIVE dot-product
   * expression (graft.functions.VectorMath): a codegen'd sequential fold,
@@ -529,12 +535,15 @@ object Similarity {
     *     vectors, through the shuffle.
     *  3. SEARCH (ADC — asymmetric distance computation): per query,
     *     a lookup table of partial dots against every (sub, code)
-    *     centroid — |Q|·m·codes rows, broadcast — then each corpus
-    *     vector's approximate dot is the sum of its m table entries:
-    *     the scoring join moves only code rows, no vector math per
-    *     pair. Scores are normalized by the EXACT stored norms (one
-    *     scan, kept once per vector in production) and ranked like
-    *     every other similarity operator.
+    *     centroid — |Q|·m·codes rows, computed on the driver with the
+    *     query norms (the collected codebook is m·codes·dims/m doubles)
+    *     and broadcast as a local relation — then each corpus vector's
+    *     approximate dot is the sum of its m table entries: the scoring
+    *     join moves only code rows, no vector math per pair. Scores are
+    *     normalized by the EXACT stored norms (one scan, kept once per
+    *     vector in production) and ranked like every other similarity
+    *     operator. Collecting the codebook runs its training when the
+    *     search is built, not at the first action (cached, so once).
     *
     * Partial dots and their sums are rounded (6 dp) before the final
     * 4 dp cosine so the DuckDB oracle — which replicates the per-
@@ -586,30 +595,141 @@ object Similarity {
   }
 
   /** ADC search against PQ artifacts (built inline or loaded from a
-    * persisted index): query LUT against the codebooks, approximate
-    * dots by summing each code row's LUT entry, exact-norm cosine, rank.
+    * persisted index): the driver-built [[querySide]] (LUT, query
+    * norms), then the corpus side — approximate dots by summing each
+    * code row's LUT entry, exact-norm cosine, rank.
     */
   private def pqSearch(
       queries: DataFrame, corpusCodes: DataFrame, codebook: DataFrame,
       cnorms: DataFrame, k: Int, subDim: Int): DataFrame = {
-    val qe = exploded(queries, "vec_id", "query_id")
-    val qsub = qe
-      .withColumn("sub", (col("pos") / lit(subDim)).cast("int"))
-      .withColumn("spos", col("pos") % lit(subDim))
-    val lut = qsub.join(broadcast(codebook), Seq("sub", "spos"))
-      .groupBy(col("query_id"), col("sub"), col("code"))
-      .agg(round(sum(col("x") * col("c")), 6).as("pdot"))
-    val adots = corpusCodes.join(broadcast(lut), Seq("sub", "code"))
+    val qs = querySide(queries, codebook, None, 0, subDim)
+    val adots = corpusCodes.join(broadcast(qs.lut), Seq("sub", "code"))
       .filter(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(round(sum(col("pdot")), 6).as("adot"))
-    val scored = adots
-      .join(broadcast(norms(qe, "query_id").select(col("query_id"), col("nrm").as("qnrm"))),
-        "query_id")
+    rankWindow(cosines(adots, qs.qnorms, cnorms), k)
+  }
+
+  /** Exact-norm cosine of approximate dots (query_id, vec_id, adot). */
+  private def cosines(adots: DataFrame, qnorms: DataFrame, cnorms: DataFrame): DataFrame =
+    adots.join(broadcast(qnorms), "query_id")
       .join(cnorms, "vec_id")
       .select(col("query_id"), col("vec_id"),
         (round(col("adot") / (col("qnrm") * col("cnrm")), 4) + lit(0.0)).as("cos"))
-    rankWindow(scored, k)
+
+  /** The query side of an ADC search, as local relations (no aggregation
+    * or shuffle builds them; broadcasting one is a small job over its rows):
+    *  - `lut` (query_id, sub, code, pdot): each query's rounded partial
+    *    dot against every codebook entry of its subspace,
+    *  - `qnorms` (query_id, qnrm): each query's exact norm,
+    *  - `probes` (query_id, cell, cdot), IVF-PQ only: the `nprobe`
+    *    coarse cells nearest each query by rounded squared L2 distance
+    *    (ties to the lower cell, the [[assignCells]] metric), with the
+    *    rounded query-cell dot.
+    *
+    * Built on the driver from one collect of the query batch and one of
+    * the model tables (the coarse centroids as `sub` -1 beside the
+    * codebook). Every sum folds in posexplode order, as the streamed
+    * side of a broadcast join feeds a hash aggregate, except a
+    * centroid's squared norm, which folds in `pos` order; `round` is
+    * Spark's (HALF_UP on the double's decimal form). The rows come from
+    * the exploded (query_id, pos, x) view, not one row per query, so
+    * two rows under one id, a null embedding or element and a short
+    * vector give the rows the aggregations gave; a null query id meets
+    * nothing and is dropped.
+    *
+    * Driver cost: the model is bounded by the index settings
+    * (nCells·dims + codes·dims doubles), and the |Q|·m·codes LUT rows,
+    * probes and norms are broadcast whole to every executor anyway, so
+    * holding them and the batch on the driver adds no new size bound.
+    */
+  private final case class QuerySide(lut: DataFrame, qnorms: DataFrame, probes: DataFrame)
+
+  private def querySide(
+      queries: DataFrame, codebook: DataFrame, coarse: Option[DataFrame],
+      nprobe: Int, subDim: Int): QuerySide = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+    import scala.collection.mutable
+    import scala.jdk.CollectionConverters._
+    type D = java.lang.Double // a SQL double: null when absent
+
+    /** Spark's `sum` of products: null until a non-null term arrives. */
+    final class Sum {
+      private var seen = false
+      private var v = 0.0
+      def add(a: D, b: D): Unit = if (a != null && b != null) { v += a * b; seen = true }
+      def value: D = if (seen) v else null
+    }
+    def round6(x: D): D =
+      if (x == null || x.isNaN || x.isInfinite) x
+      else java.math.BigDecimal.valueOf(x).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    def dbl(r: Row, i: Int): D = if (r.isNullAt(i)) null else r.getDouble(i)
+    // ascending, nulls first, NaN above every number (Spark's sort order)
+    def before(a: D, b: D): Int =
+      if (a == null) (if (b == null) 0 else -1)
+      else if (b == null) 1
+      else if (a.doubleValue == b.doubleValue) 0
+      else java.lang.Double.compare(a, b)
+
+    val byQuery = mutable.LinkedHashMap.empty[Any, mutable.ArrayBuffer[(Int, D)]]
+    queries.select(col("vec_id"), asDouble(col("embedding"))).collect()
+      .filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+      .foreach { r =>
+        val rows = byQuery.getOrElseUpdate(r.get(0), mutable.ArrayBuffer.empty)
+        r.getSeq[D](1).iterator.zipWithIndex.foreach { case (x, pos) => rows += (pos -> x) }
+      }
+    val model = coarse.fold(codebook)(c =>
+      c.select(lit(-1).as("sub"), col("cell").as("code"), col("pos").as("spos"), col("c"))
+        .unionByName(codebook.select("sub", "code", "spos", "c")))
+      .select("sub", "code", "spos", "c").collect()
+    val (cents, book) = model.partition(_.getInt(0) < 0)
+    val bookAt = book.groupBy(r => (r.getInt(0), r.getInt(2)))
+      .view.mapValues(_.map(r => (r.getLong(1), dbl(r, 3)))).toMap
+    val centAt = cents.groupBy(_.getInt(2)).view.mapValues(_.map(r => (r.getLong(1), dbl(r, 3)))).toMap
+    val cn2 = cents.groupBy(_.getLong(1)).view.mapValues { rs =>
+      val s = new Sum
+      rs.sortBy(_.getInt(2)).foreach(r => s.add(dbl(r, 3), dbl(r, 3)))
+      s.value
+    }.toMap
+
+    val lut, qnorms, probes = mutable.ArrayBuffer.empty[Row]
+    byQuery.foreach { case (q, rows) =>
+      val vn2 = new Sum
+      rows.foreach { case (_, x) => vn2.add(x, x) }
+      qnorms += Row(q, vn2.value match { case null => null; case v => math.sqrt(v) })
+      val pdots = mutable.LinkedHashMap.empty[(Int, Long), Sum]
+      rows.foreach { case (pos, x) =>
+        bookAt.getOrElse((pos / subDim, pos % subDim), Array.empty[(Long, D)]).foreach {
+          case (code, c) => pdots.getOrElseUpdate((pos / subDim, code), new Sum).add(x, c)
+        }
+      }
+      pdots.foreach { case ((sub, code), pdot) => lut += Row(q, sub, code, round6(pdot.value)) }
+      if (coarse.isDefined) {
+        val vcs = mutable.LinkedHashMap.empty[Long, Sum]
+        rows.foreach { case (pos, x) =>
+          centAt.getOrElse(pos, Array.empty[(Long, D)]).foreach {
+            case (cell, c) => vcs.getOrElseUpdate(cell, new Sum).add(x, c)
+          }
+        }
+        vcs.toSeq.map { case (cell, vc) =>
+          val (v, d, n) = (vn2.value, vc.value, cn2(cell))
+          val d2: D = if (v == null || d == null || n == null) null else round6(v - 2.0 * d + n)
+          (d2, cell, vc.value)
+        }.sortWith { case ((da, ca, _), (db, cb, _)) =>
+          val o = before(da, db)
+          if (o != 0) o < 0 else ca < cb
+        }.take(nprobe).foreach { case (_, cell, vc) => probes += Row(q, cell, round6(vc)) }
+      }
+    }
+    val qid = queries.schema("vec_id").copy(name = "query_id")
+    def local(rows: Seq[Row], fields: StructField*) =
+      queries.sparkSession.createDataFrame(rows.asJava, StructType(qid +: fields))
+    QuerySide(
+      local(lut.toSeq, StructField("sub", IntegerType), StructField("code", LongType),
+        StructField("pdot", DoubleType)),
+      local(qnorms.toSeq, StructField("qnrm", DoubleType)),
+      local(probes.toSeq, StructField("cell", LongType), StructField("cdot", DoubleType)))
   }
 
   /** `similarity_ivfpq`: IVF-PQ — the IVFADC structure of Jégou 2011 §IV
@@ -627,10 +747,17 @@ object Similarity {
     * — the coarse term comes free from the probing pass's cell dot, and
     * the LUT is the raw query against the residual codebooks (no
     * per-probed-cell query residuals needed for inner-product ADC).
-    * Scoring joins move (candidate, sub) code rows + a broadcast LUT;
-    * norms are the exact stored ones, so scores are comparable across
-    * cells. All trainings (coarse + m subspace codebooks) go through the
-    * cached [[kmeansAssign]] path — train once, serve many.
+    * The query side — LUT, the `nprobe` probes with their cell dots, the
+    * query norms — is computed on the driver from the collected batch and
+    * one collect of the coarse centroids and residual codebooks
+    * (nCells·dims + codes·dims doubles), and broadcast as local
+    * relations, which every executor holds whole anyway, so the driver
+    * adds no new size bound. Scoring joins move (candidate, sub)
+    * code rows + the broadcast LUT; norms are the exact stored ones, so
+    * scores are comparable across cells. All trainings (coarse + m
+    * subspace codebooks) go through the cached [[kmeansAssign]] path —
+    * train once, serve many; the inline search runs them when it is
+    * built (the model collect), not at the first action.
     *
     * Build cost note: the one-off residual materialization uses an
     * interpreted `zip_with` per vector (build path, one pass, O(N·dims))
@@ -668,38 +795,26 @@ object Similarity {
   }
 
   /** ADC search against IVF-PQ artifacts (built inline or loaded from a
-    * persisted index).
+    * persisted index): the driver-built [[querySide]] (LUT, probes,
+    * query norms) meets the corpus side — the probed cells' assignment
+    * rows, their residual codes and the stored norms — in one plan.
     */
   private def ivfPqSearch(
       queries: DataFrame, coarseCents: DataFrame, coarseAssign: DataFrame,
       residCodes: DataFrame, residCodebook: DataFrame, cnorms: DataFrame,
       k: Int, nprobe: Int, subDim: Int): DataFrame = {
     require(nprobe > 0, "nprobe must be positive")
-    val qe = exploded(queries, "vec_id", "query_id")
-    val qsub = qe
-      .withColumn("sub", (col("pos") / lit(subDim)).cast("int"))
-      .withColumn("spos", col("pos") % lit(subDim))
-    val lut = qsub.join(broadcast(residCodebook), Seq("sub", "spos"))
-      .groupBy(col("query_id"), col("sub"), col("code"))
-      .agg(round(sum(col("x") * col("c")), 6).as("pdot"))
-
-    val probes = probeCells(qe, coarseCents, nprobe)
+    val qs = querySide(queries, residCodebook, Some(coarseCents), nprobe, subDim)
     // a corpus vector lives in exactly ONE cell, so (query, vec) pairs are
     // unique here: candidate volume ~nprobe·N/cells, nested in nprobe
-    val cand = coarseAssign.join(broadcast(probes), "cell")
+    val cand = coarseAssign.join(broadcast(qs.probes), "cell")
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"), col("cdot"))
     val adots = cand.join(residCodes, "vec_id")
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
+      .join(broadcast(qs.lut), Seq("query_id", "sub", "code"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(round(first(col("cdot")) + sum(col("pdot")), 6).as("adot"))
-    val scored = adots
-      .join(broadcast(norms(qe, "query_id").select(col("query_id"), col("nrm").as("qnrm"))),
-        "query_id")
-      .join(cnorms, "vec_id")
-      .select(col("query_id"), col("vec_id"),
-        (round(col("adot") / (col("qnrm") * col("cnrm")), 4) + lit(0.0)).as("cos"))
-    rankWindow(scored, k)
+    rankWindow(cosines(adots, qs.qnorms, cnorms), k)
   }
 
   /** Names of the five snapshot tables a persisted IVF-PQ index occupies
@@ -808,24 +923,6 @@ object Similarity {
       IvfPqTables.map(t => SnapshotTable(warehouse, "ann", t).read(spark))
     ivfPqSearch(queries, coarseCents, coarseAssign, residCodes, residCodebook,
       cnorms, k, nprobe, dims / m)
-  }
-
-  /** `nprobe` nearest coarse cells per query (same rounded-d2 metric and
-    * tie-break as [[assignCells]]), keeping the query-cell dot — search
-    * reuses it as the coarse term of the ADC decomposition.
-    */
-  private def probeCells(qe: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
-    val cnorm2 = cents.groupBy(col("cell")).agg(sum(col("c") * col("c")).as("cn2"))
-    val vnorm2 = qe.groupBy(col("query_id")).agg(sum(col("x") * col("x")).as("vn2"))
-    val dots = qe.join(broadcast(cents), Seq("pos"))
-      .groupBy(col("query_id"), col("cell"))
-      .agg(sum(col("x") * col("c")).as("vc"))
-    dots.join(broadcast(cnorm2), "cell").join(vnorm2, "query_id")
-      .withColumn("d2", round(col("vn2") - lit(2.0) * col("vc") + col("cn2"), 6))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("cell").asc)))
-      .filter(col("_rn") <= nprobe)
-      .select(col("query_id"), col("cell"), round(col("vc"), 6).as("cdot"))
   }
 
   /** (vec_id, embedding) residuals: each vector minus its coarse-cell

@@ -312,15 +312,20 @@ class PlanSpec extends SparkSpec {
       graft.dedup.Dedup.clearCaches() // also clears the quantizer cache
       val plan = Queries.all("similarity_pq").fn(spark, dir).queryExecution.executedPlan
       val builds = plan.collect {
-        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b.toString
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b.child
       }
       // the hinted broadcasts are the ADC lookup table and query norms -
-      // both derive from the query side and carry its vec_id < 5 bound;
-      // corpus codes must stream (an unbounded-side broadcast OOMs at
-      // the 10^11-vector target)
+      // both built on the driver from the vec_id < 5 query batch as local
+      // relations, so the table holds at most 5 queries x 4 subspaces x
+      // 8 codes rows; corpus codes must stream (an unbounded-side
+      // broadcast OOMs at the 10^11-vector target)
       assert(builds.nonEmpty, "PQ should broadcast its lookup table")
-      assert(builds.exists(_.contains(" < 5")),
-        s"no broadcast carries the bounded query predicate:\n${builds.map(_.take(300)).mkString("\n")}")
+      val luts = builds.collect {
+        case l: org.apache.spark.sql.execution.LocalTableScanExec
+            if l.output.exists(_.name == "pdot") => l.rows.size
+      }
+      assert(luts.size == 1 && luts.head <= 5 * 4 * 8,
+        s"no broadcast is the query batch's lookup table:\n${builds.map(_.toString.take(300)).mkString("\n")}")
     } finally {
       conf.set("spark.sql.adaptive.enabled", prevAqe)
       graft.dedup.Dedup.clearCaches()

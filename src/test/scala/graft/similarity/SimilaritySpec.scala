@@ -311,6 +311,38 @@ class SimilaritySpec extends SparkSpec {
       s"query 0's near-duplicate (appended vec 36) must surface in its top-10, got ${q0.toSeq}")
   }
 
+  test("a persisted search of a local query batch runs 9 jobs (IVF-PQ) and 7 (PQ)") {
+    // the query side (LUT, probes, query norms) is built on the driver
+    // from the batch and one collect of the model tables; the rest is
+    // the index side. Each count was measured twice on a local[4]
+    // session with the same result (17 and 9 when the query side was
+    // Spark aggregations); a failing pin prints every job's call site
+    val rnd = new scala.util.Random(13)
+    val axes = Seq(
+      Seq(1.0, 0.4, 0.0, 0.0), Seq(0.4, 1.0, 0.0, 0.0), Seq(0.2, 0.6, 0.8, 0.2))
+    val rows = (0 until 36).map { i =>
+      val a = axes(i % 3)
+      (i.toLong, a.map(x => (x + rnd.nextGaussian() * 0.8).toFloat))
+    }
+    val corpus36 = rows.toDF("vec_id", "embedding")
+    val queries = rows.take(8).map { case (id, v) => (id + 100L, v) }.toDF("vec_id", "embedding")
+    val ivfWh = java.nio.file.Files.createTempDirectory("graft_ivfpq_jobs").toString
+    val pqWh = java.nio.file.Files.createTempDirectory("graft_pq_jobs").toString
+    Similarity.ivfPqIndexPersist(corpus36, ivfWh, nCells = 3, m = 2, codes = 8, iters = 2, dims = 4)
+    Similarity.pqIndexPersist(corpus36, pqWh, m = 2, codes = 4, iters = 2, dims = 4)
+    val searches = Seq(
+      ("ivfPqTopKPersisted", 9, () => Similarity.ivfPqTopKPersisted(queries, ivfWh,
+        k = 5, nprobe = 2, m = 2, dims = 4).collect()),
+      ("pqTopKPersisted", 7, () => Similarity.pqTopKPersisted(queries, pqWh,
+        k = 5, m = 2, dims = 4).collect()))
+    for ((name, pin, search) <- searches; round <- 1 to 2) {
+      val sites = jobSitesDuring(search())
+      info(s"$name, search $round: ${sites.size} jobs")
+      assert(sites.size <= pin,
+        s"$name search $round ran ${sites.size} jobs, pinned at $pin: ${sites.mkString("; ")}")
+    }
+  }
+
   test("PQ codebooks train once per subspace and are cache-served after") {
     Similarity.clearCaches()
     val before = Similarity.lloydRuns.get()
