@@ -26,31 +26,38 @@ trait SparkSpec extends AnyFunSuite {
     }
 
   /** The call site of every Spark job started while `f` runs, in start
-    * order: the first `graft.` frame of the call site of the SQL
-    * execution that ran the job (e.g. `graft.sink.SnapshotTable.
-    * copyOnWrite(SnapshotTable.scala:705)`), or, for a job outside any
-    * SQL execution, the name of its result stage (`count at
-    * SnapshotTable.scala:298`). The stage name alone would not do: AQE
-    * submits a query's later jobs from a pool thread, whose stages are
-    * named after a `CompletableFuture` frame. A job-count pin that fails
-    * prints these, so the message names the engine code that ran the
-    * extra job.
+    * order: the first engine frame (a `graft.` frame outside a
+    * `*Spec.scala` file) of the call site of the SQL execution that ran
+    * the job (e.g. `graft.sink.SnapshotTable.copyOnWrite(SnapshotTable.
+    * scala:705)`), or, for a job outside any SQL execution, the name of
+    * its result stage (`count at SnapshotTable.scala:298`). A job with
+    * no engine frame, such as an action a spec calls itself, is named by
+    * the operator scopes of its result stage's RDDs (`scopes: Exchange,
+    * LocalTableScan`). The stage name alone would not do: AQE submits a
+    * query's later jobs from a pool thread, whose stages are named after
+    * a `CompletableFuture` frame. A job-count pin that fails prints
+    * these, so the message names the code that ran the extra job.
     */
   def jobSitesDuring(f: => Any): Seq[String] = {
     import org.apache.spark.sql.execution.SQLExecution
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Option[Long], String)]()
     val executions = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    def inSpec(site: String) = site.contains("Spec.scala:")
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val stage = js.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
+        val result = js.stageInfos.maxByOption(_.stageId)
         val execution = Option(js.properties)
           .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+        // a SQL job's fallback and a spec-named stage's name: its scopes
+        val scopes = result.toSeq.flatMap(_.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)))
+        val stage = result.map(_.name).filter(n => execution.isEmpty && !inSpec(n))
+          .getOrElse(s"scopes: ${scopes.distinct.mkString(", ")}")
         jobs.add((js.jobId, execution, stage)): Unit
       }
       override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
-          s.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+          s.details.linesIterator.map(_.trim).find(line => line.startsWith("graft.") && !inSpec(line))
             .foreach(executions.put(s.executionId, _))
         case _ => ()
       }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
 
 /** Byte pin of every engine-written metadata file of one fixed table:
   * metadata.json, refs.json, .graft-properties.json, one manifest, the
-  * four per-dir sidecars and the add_files import manifest. Partition
+  * three per-dir sidecars and the add_files import manifest. Partition
   * values, column names, property keys/values and ref names carry the
   * characters the escape must handle (quote, backslash, brackets,
   * braces, control characters, non-ASCII), so any change to the string
@@ -34,8 +34,10 @@ class MetadataBytesSpec extends SparkSpec {
   private def read(p: Path): String =
     new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
 
-  /** Build the fixed table; returns normalized file name -> content. */
-  private def build(): Map[String, String] = {
+  /** Build the fixed table; returns normalized file name -> content, and
+    * every data and delete dir the table wrote.
+    */
+  private def build(): (Map[String, String], Seq[String]) = {
     val src = Files.createTempDirectory("graft_bytes_src").toString
     val t = SnapshotTable(Files.createTempDirectory("graft_bytes").toString, "ns", "t")
     val root = t.root
@@ -80,11 +82,10 @@ class MetadataBytesSpec extends SparkSpec {
       ".graft-properties.json" -> Paths.get(root, ".graft-properties.json"),
       "manifest.json" -> Paths.get(root, s"manifest-${head.id}.json"),
       ".graft-columns.json" -> Paths.get(written, ".graft-columns.json"),
-      ".graft-partitions.json" -> Paths.get(written, ".graft-partitions.json"),
       ".graft-files.json" -> Paths.get(written, ".graft-files.json"),
       RangeStats.SidecarName -> Paths.get(written, RangeStats.SidecarName),
       SnapshotTable.ImportManifestName -> Paths.get(imported, SnapshotTable.ImportManifestName)
-    ).map { case (k, p) => k -> normalize(read(p)) }.toMap
+    ).map { case (k, p) => k -> normalize(read(p)) }.toMap -> dirs
   }
 
   // JSON's unicode escapes are written with a doubled backslash below:
@@ -144,9 +145,6 @@ class MetadataBytesSpec extends SparkSpec {
     ".graft-columns.json" -> (
       """[{"id":1,"name":"id","type":"BIGINT"},{"id":2,"name":"na\"me é","type":"STRING"},""" +
       """{"id":3,"name":"p","type":"STRING"}]"""),
-    ".graft-partitions.json" -> (
-      """[{"partition":"p=a","files":1,"rows":2},""" +
-      """{"partition":"p=q\"b\\s\\u005b1\\u005d\\u007b2\\u007d\\u0001","files":1,"rows":1}]"""),
     ".graft-files.json" -> (
       """[{"file":"p=a/<part>","partition":"p=a","bytes":<n>,"rows":2},""" +
       """{"file":"p=q%22b%5Cs%5B1%5D%7B2\\u007d%01/<part>",""" +
@@ -160,9 +158,12 @@ class MetadataBytesSpec extends SparkSpec {
     .map { case (k, v) => k -> v.replace("\\\\u", "\\u") }
 
   test("every engine-written metadata file keeps its exact bytes") {
-    val got = build()
+    val (got, dirs) = build()
     expected.foreach { case (name, bytes) =>
       assert(got(name) == bytes, s"$name changed")
     }
+    // partition rows are the sums of the files sidecar's rows: no dir
+    // carries a partitions sidecar
+    assert(!dirs.exists(d => Files.exists(Paths.get(d, ".graft-partitions.json"))))
   }
 }

@@ -380,8 +380,11 @@ class SnapshotTableSpec extends SparkSpec {
   test("partitionStats falls back to unknown rows for dirs predating the sidecar") {
     val t = freshTable()
     t.overwrite(Seq(1, 2).toDF("v"))
-    val side = java.nio.file.Paths.get(t.currentSnapshot.get.dataDirs.head, ".graft-partitions.json")
-    java.nio.file.Files.delete(side)
+    // a dir predating both sidecars: its files are walked, rows unknown
+    Seq(".graft-partitions.json", ".graft-files.json").foreach { name =>
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(t.currentSnapshot.get.dataDirs.head, name)): Unit
+    }
     val stats = t.partitionStats(spark).as[(String, Long, Long)].collect().toSeq
     assert(stats.map(_._3) == Seq(-1L)) // unknown stays unknown
     assert(stats.map(_._2).forall(_ >= 1)) // file counts still walkable
@@ -812,34 +815,85 @@ class SnapshotTableSpec extends SparkSpec {
       "the legacy path is the footer path")
   }
 
-  test("micro append: no stats job, exact sidecar rows, sound (absent) partition bounds") {
-    val t = freshTable()
-    t.overwrite((1 to 50).map(i => (i.toLong, s"d${i % 2}")).toDF("id", "part"),
-      partitionCols = Seq("part"))
-    val batch = (51 to 70).map(i => (i.toLong, s"d${i % 2}")).toDF("id", "part")
-    val fullJobs = jobsDuring(t.append(batch, partitionCols = Seq("part")))
-    val microJobs = jobsDuring(
-      t.append(batch, partitionCols = Seq("part"), micro = true))
-    assert(microJobs < fullJobs,
-      s"micro commit must drop the per-partition stats job ($microJobs vs $fullJobs)")
-    // the micro dir's sidecars are still EXACT: partition rows from
-    // footers, per-file rows served with zero query-time footer reads
-    val stats = t.partitionStats(spark).collect()
-      .map(r => r.getAs[String]("partition_path") -> r.getAs[Long]("row_count")).toMap
-    assert(stats == Map("part=d0" -> 45L, "part=d1" -> 45L), s"got $stats")
+  /** 40 rows (`id` from `from`, `part` d0/d1) as a 4-slice local frame:
+    * a write of it without clustering leaves one file per slice.
+    */
+  private def fourSlices(from: Int) =
+    (from until from + 40).map(i => (i.toLong, s"d${i % 2}")).toDF("id", "part")
+
+  /** Each partition's true rows and every file's recorded rows of `t`'s
+    * head, with no footer read while listing them.
+    */
+  private def assertExactRows(t: SnapshotTable, expected: Map[String, Long]): Unit = {
     val before = SnapshotTable.footerReadsOnThread
-    assert(t.fileStats(spark).collect().map(_.getAs[Long]("record_count")).sum == 90L)
-    assert(SnapshotTable.footerReadsOnThread == before)
-    // the micro dir's partition-column bounds are the ones a full commit
-    // of the same batch records: both come from the write's observe
-    // metrics, in the one type space reads use; data-column bounds remain
-    val Seq(_, fullDir, microDir) = t.currentSnapshot.get.dataDirs
-    val range = graft.plans.RangeStats.read(microDir).get
-    assert(range.cols.get("part").isDefined &&
-      range.cols.get("part") == graft.plans.RangeStats.read(fullDir).get.cols.get("part"),
-      "micro commit must record the partition bounds a full commit of the batch records")
-    assert(range.cols.get("id").exists(c => c.min.isDefined && c.max.isDefined),
-      "observe-collected data-column bounds must survive on the micro dir")
+    val parts = t.partitionStats(spark).collect()
+      .map(r => r.getAs[String]("partition_path") -> r.getAs[Long]("row_count")).toMap
+    val files = t.fileStats(spark).collect()
+    assert(SnapshotTable.footerReadsOnThread == before, "listing rows must read no footer")
+    assert(parts == expected, s"$$partitions rows: $parts")
+    assert(files.forall(_.getAs[Long]("record_count") >= 0) &&
+      files.map(_.getAs[Long]("record_count")).sum == expected.values.sum,
+      s"$$files rows: ${files.map(_.getAs[Long]("record_count")).toSeq}")
+  }
+
+  // one append's jobs per format and layout: the write's own (2 for the
+  // hash-clustered partitioned write, 1 for the plain write) and no
+  // stats job, every file's rows recorded from the write's metrics or
+  // the file itself
+  for (format <- Seq("parquet", "orc", "avro"); partitioned <- Seq(true, false)) {
+    val layout = if (partitioned) "partitioned" else "unpartitioned"
+    test(s"$format $layout append: write jobs only, exact rows") {
+      val t = freshTable()
+      val parts = if (partitioned) Seq("part") else Nil
+      t.overwrite(fourSlices(0), partitionCols = parts, format = format)
+      val sites = jobSitesDuring(t.append(fourSlices(40), partitionCols = parts, format = format))
+      val pinned = if (partitioned) 2 else 1
+      assert(sites.size == pinned, s"ran ${sites.size} jobs, pinned at $pinned: ${sites.mkString("; ")}")
+      assert(t.currentSnapshot.get.dataDirs.forall(d => t.fileStats(spark)
+        .filter($"data_dir" === d).count() > 1), "every dir is multi-file")
+      assertExactRows(t,
+        if (partitioned) Map("part=d0" -> 40L, "part=d1" -> 40L) else Map("" -> 80L))
+    }
+  }
+
+  test("orc and avro multi-file partitions record exact rows") {
+    for (format <- Seq("orc", "avro")) {
+      val t = freshTable()
+      Files.createDirectories(java.nio.file.Paths.get(t.root))
+      t.setProperties(Map(WriteDistribution.Key -> "none"))
+      t.overwrite(fourSlices(0), partitionCols = Seq("part"), format = format)
+      t.append(fourSlices(40), format = format, partitionCols = Seq("part"))
+      // every task writes into both partitions: 4 files each per dir
+      assert(t.fileStats(spark).count() == 16, format)
+      assertExactRows(t, Map("part=d0" -> 40L, "part=d1" -> 40L))
+      val u = freshTable()
+      u.overwrite(fourSlices(0), format = format)
+      assert(u.fileStats(spark).count() == 4, format)
+      assertExactRows(u, Map("" -> 40L))
+    }
+  }
+
+  test("a legacy orc dir keeps its partitions sidecar rows") {
+    // the layout older commits left: a files sidecar of unknown (-1)
+    // rows beside a partitions sidecar of per-partition rows
+    val t = freshTable()
+    Files.createDirectories(java.nio.file.Paths.get(t.root))
+    t.setProperties(Map(WriteDistribution.Key -> "none"))
+    t.overwrite(fourSlices(0), partitionCols = Seq("part"), format = "orc")
+    val dir = t.currentSnapshot.get.dataDirs.head
+    val filesSidecar = java.nio.file.Paths.get(dir, ".graft-files.json")
+    Files.writeString(filesSidecar,
+      Files.readString(filesSidecar).replaceAll("\"rows\":\\d+", "\"rows\":-1"))
+    Files.writeString(java.nio.file.Paths.get(dir, ".graft-partitions.json"),
+      """[{"partition":"part=d0","files":4,"rows":20},{"partition":"part=d1","files":4,"rows":20}]""")
+    val parts = t.partitionStats(spark).as[(String, Long, Long)].collect().toSeq
+    assert(parts == Seq(("part=d0", 4L, 20L), ("part=d1", 4L, 20L)), parts)
+    // restating part=d0 masks its 20 rows: 40 - 20 + 3
+    val snap = t.overwritePartitions(
+      Seq((100L, "d0"), (101L, "d0"), (102L, "d0")).toDF("id", "part"),
+      partitionCols = Seq("part"), format = "orc")
+    assert(snap.rowCount == 23L)
+    assert(t.read(spark).count() == 23L)
   }
 
   test("$partitions and $files: a string partition of numeric-looking values is one entry") {
@@ -856,26 +910,22 @@ class SnapshotTableSpec extends SparkSpec {
     assert(files == Seq(1L), files)
   }
 
-  test("per-partition stats collect is capped: rows degrade to unknown, bounds survive") {
+  test("per-partition rows are exact at 8 partitions; bounds survive") {
     val t = freshTable()
-    spark.conf.set(SnapshotTable.PartitionStatsCapKey, "3")
-    try {
-      // 8 partitions > cap 3: a 100k-partition backfill must not hold
-      // every group on the driver — rows go unknown (never wrong), the
-      // dir-level column bounds still come from one global aggregate row
-      val df = (1 to 40).map(i => (i.toLong, s"p${i % 8}")).toDF("id", "part")
-      t.overwrite(df, partitionCols = Seq("part"))
-      val stats = t.partitionStats(spark).collect()
-      assert(stats.length == 8)
-      assert(stats.forall(_.getAs[Long]("file_count") >= 1L))
-      assert(stats.forall(_.getAs[Long]("row_count") == -1L),
-        "past the cap, per-partition rows are unknown — unknown stays unknown")
-      val dir = t.currentSnapshot.get.dataDirs.head
-      val range = graft.plans.RangeStats.read(dir)
-      assert(range.exists(_.cols.get("part").exists(c =>
-        c.min.contains("p0") && c.max.contains("p7"))),
-        s"global-aggregate bounds must still be recorded, got $range")
-    } finally spark.conf.unset(SnapshotTable.PartitionStatsCapKey)
+    // every partition's rows come from its files' recorded rows; the
+    // dir-level column bounds still come from one global aggregate row
+    val df = (1 to 40).map(i => (i.toLong, s"p${i % 8}")).toDF("id", "part")
+    t.overwrite(df, partitionCols = Seq("part"))
+    val stats = t.partitionStats(spark).collect()
+    assert(stats.length == 8)
+    assert(stats.forall(_.getAs[Long]("file_count") >= 1L))
+    assert(stats.forall(_.getAs[Long]("row_count") == 5L),
+      stats.map(r => r.getAs[String]("partition_path") -> r.getAs[Long]("row_count")).toSeq)
+    val dir = t.currentSnapshot.get.dataDirs.head
+    val range = graft.plans.RangeStats.read(dir)
+    assert(range.exists(_.cols.get("part").exists(c =>
+      c.min.contains("p0") && c.max.contains("p7"))),
+      s"global-aggregate bounds must still be recorded, got $range")
   }
 
   test("head-copying commits keep the watermark but drop the display pair") {
