@@ -844,10 +844,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * dangle; an object-store port makes this a manifest reference /
     * server-side copy) — and return it. The carry dir inherits the
     * original's columns sidecar (same physical files), its files' recorded
-    * rows (so its partition rows stay known; a legacy dir's stay
-    * unknown, never wrong), and the original's range-stats sidecar
-    * (bounds over a superset — conservative, stats are never a
-    * correctness input). Cost: O(carried files) metadata.
+    * rows (a legacy dir's unknown ones counted from the files), and the
+    * original's range-stats sidecar (bounds over a superset —
+    * conservative, stats are never a correctness input). Cost:
+    * O(carried files) metadata.
     */
   private def carry(d: String, files: Seq[DirFile], format: String): String = {
     val carryDir = Paths.get(root,
@@ -865,7 +865,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     if (Files.exists(columnsSidecarPath(d)))
       Files.copy(columnsSidecarPath(d), columnsSidecarPath(carryDir),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    writeDirSidecars(carryDir, carried, format)
+    writeFilesSidecar(carryDir, carried, format)
     val ranges = Paths.get(d, graft.plans.RangeStats.SidecarName)
     if (Files.exists(ranges))
       Files.copy(ranges, Paths.get(carryDir, graft.plans.RangeStats.SidecarName),
@@ -1122,15 +1122,12 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries = 0, expectedBase = Some(expectedHead))
 
   /** Append: new snapshot = previous data dirs + newly written dir.
-    * `micro = true` declares a streaming-microbatch-sized delta: a
-    * partitioned parquet commit trades the per-partition stats JOB for
-    * a driver-side read of each new file's footer (see
-    * [[writeDataDir]]) — per-trigger commit cost must stay O(small), or
-    * the sink throughput is capped by commit machinery rather than data
-    * volume.
+    * One rule serves every delta, a streaming microbatch or a backfill:
+    * the write's jobs and no stats job (see [[writeDataDir]]), so the
+    * per-trigger commit cost stays O(delta).
     */
-  def append(df: DataFrame, partitionCols: Seq[String] = Nil, sortCols: Seq[org.apache.spark.sql.Column] = Nil, format: String = "parquet", numRetries: Int = SnapshotTable.DefaultCommitRetries, micro: Boolean = false, summary: Map[String, String] = Map.empty): Snapshot =
-    commit(df, "append", carryPrevious = true, partitionCols, sortCols, format, numRetries, micro = micro, summary = summary)
+  def append(df: DataFrame, partitionCols: Seq[String] = Nil, sortCols: Seq[org.apache.spark.sql.Column] = Nil, format: String = "parquet", numRetries: Int = SnapshotTable.DefaultCommitRetries, summary: Map[String, String] = Map.empty): Snapshot =
+    commit(df, "append", carryPrevious = true, partitionCols, sortCols, format, numRetries, summary = summary)
 
   /** Idempotent streaming append — the Iceberg exactly-once foreachBatch
     * contract: the (queryId, batchId) watermark rides in the snapshot
@@ -1152,7 +1149,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       numRetries: Int = SnapshotTable.DefaultCommitRetries): Option[Snapshot] =
     if (lastCommittedBatch(queryId).exists(_ >= batchId)) None
     else Some(commit(df, "append", carryPrevious = true, partitionCols, sortCols,
-      format, numRetries, micro = true, summary = Map(
+      format, numRetries, summary = Map(
         SnapshotTable.SummaryQueryId -> queryId,
         SnapshotTable.SummaryBatchId -> batchId.toString,
         // the durable per-query watermark — carried forward by every
@@ -1288,7 +1285,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val relRows: Map[String, Long] =
       spark.sparkContext.parallelize(srcList, slices)
         .map { case (abs, rel) =>
-          rel -> SnapshotTable.parquetRecordCount(new File(abs))
+          rel -> SnapshotTable.recordCount("parquet", new File(abs))
         }.collect().toMap
     relRows.find(_._2 < 0).foreach { case (rel, _) =>
       throw new IllegalArgumentException(
@@ -1323,10 +1320,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
         Files.createSymbolicLink(target, f.toPath.toAbsolutePath): Unit
       }
       // same stats sidecars a written commit gets, every file's rows
-      // known from its footer (so partition rows need no job), column
-      // ranges from one stats pass — so stats-skip and
-      // $partitions/$files treat imported dirs like any other
-      writeDirSidecars(dataDir, files.map { case (f, rel) =>
+      // known from its footer, column ranges from one stats pass — so
+      // stats-skip and $partitions/$files treat imported dirs like any
+      // other
+      writeFilesSidecar(dataDir, files.map { case (f, rel) =>
         dirFile(dataDir, Paths.get(dataDir, rel).toAbsolutePath.toString, f.length(), relRows(rel))
       }, format)
       // the imported files' schema is whatever their footers say: the
@@ -1864,21 +1861,20 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * `$partitions` metadata table (file count + row count per partition,
     * reference surfaces the same via Athena metadata queries,
     * `aws/modules/athena/main.tf:56-67`). A PURE metadata read: each
-    * commit wrote a stats sidecar beside its (immutable) data dir, so the
-    * listing merges O(dirs × partitions) tiny JSON files and never opens
-    * a data file — the result is a driver-local frame, same bound as
-    * Iceberg materializing $partitions from manifests. `row_count` is -1
-    * when any contributing dir predates the sidecar (unknown stays
-    * unknown rather than inventing a number).
+    * dir's files sidecar records every file's rows, so the listing sums
+    * O(dirs) tiny JSON files and never opens a data file — the result
+    * is a driver-local frame, same bound as Iceberg deriving $partitions
+    * from manifest entries. `row_count` is -1 when any contributing
+    * file's rows are unknown (unknown stays unknown rather than
+    * inventing a number).
     */
   def partitionStats(spark: SparkSession): DataFrame = {
     val snap = requireCurrent
     val merged = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
     snap.dataDirs.foreach { d =>
-      val masked = snap.maskedDirs.getOrElse(d, Nil).toSet
       // a dynamic overwrite's masked partitions are logically absent
       // from this dir — their stats must not count
-      readPartitionSidecar(d).filterNot(e => masked.contains(e._1)).foreach {
+      partitionRows(d, dirLayout(d).live(snap)).foreach {
         case (p, f, r) =>
           val (f0, r0) = merged.getOrElse(p, (0L, 0L))
           merged(p) = (f0 + f, if (r0 < 0 || r < 0) -1L else r0 + r)
@@ -1911,6 +1907,15 @@ final class SnapshotTable(val root: String, val fullName: String) {
     rows.toDF("file_path", "data_dir", "partition_path", "size_bytes", "record_count")
   }
 
+  /** dir -> the PUBLISHED snapshot that first listed it (dirs are
+    * immutable, so first appearance IS the add) — the lineage rule
+    * `$manifests` and `$entries` share.
+    */
+  private def dirAddedSnapshotIds: Map[String, Long] =
+    snapshots.filterNot(_.staged)
+      .flatMap(s => s.dataDirs.map(_ -> s.id))
+      .groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).min }
+
   /** Manifest listing of the current snapshot (the Iceberg `$manifests`
     * metadata-table role). The engine's manifest analog is the per-dir
     * files sidecar (one immutable JSON beside each immutable data dir),
@@ -1922,15 +1927,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * excluded). Pure metadata: snapshot JSON + tiny sidecars, zero data
     * or footer I/O — same bound as `$files`/`$partitions`.
     */
-  /** dir -> the PUBLISHED snapshot that first listed it (dirs are
-    * immutable, so first appearance IS the add) — the lineage rule
-    * `$manifests` and `$entries` share.
-    */
-  private def dirAddedSnapshotIds: Map[String, Long] =
-    snapshots.filterNot(_.staged)
-      .flatMap(s => s.dataDirs.map(_ -> s.id))
-      .groupBy(_._1).map { case (d, xs) => d -> xs.map(_._2).min }
-
   def manifestStats(spark: SparkSession): DataFrame = {
     val snap = requireCurrent
     val firstSeen = dirAddedSnapshotIds
@@ -1980,16 +1976,15 @@ final class SnapshotTable(val root: String, val fullName: String) {
       "partition_path", "size_bytes", "record_count")
   }
 
-  /** One dir's $files entries, masked partitions excluded. A parquet
-    * file of unknown rows (a dir written before the files sidecar) reads
-    * its footer.
+  /** One dir's $files entries, masked partitions excluded. A file of
+    * unknown rows (a dir written before its files' rows were recorded)
+    * is counted from its own metadata.
     */
   private def dirFileEntries(
       snap: Snapshot, d: String): Seq[(String, String, String, Long, Long)] =
     dirLayout(d).live(snap).map { case DirFile(f, partition, rows) =>
       (f.path, d, partition, f.bytes,
-        if (rows < 0 && snap.format == "parquet") SnapshotTable.parquetRecordCount(new File(f.path))
-        else rows)
+        if (rows < 0) SnapshotTable.recordCount(snap.format, new File(f.path)) else rows)
     }
 
   private def manifestFilePath(snapshotId: Long) =
@@ -2411,7 +2406,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
       stageOnly: Boolean = false,
       branch: Option[String] = None,
       summary: Map[String, String] = Map.empty,
-      micro: Boolean = false,
       // Some(head) pins the commit base for CAS semantics (overwriteIf):
       // the caller computed its payload FROM that head, so pair it with
       // numRetries = 0 — a conflict must surface, not blind-retry
@@ -2423,7 +2417,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       case None => currentSnapshot.map(_.id)
     }
     val base = expectedBase.getOrElse(currentBase)
-    val w = writeDataDir(df, partitionCols, sortCols, format, micro, dynamicReplace)
+    val w = writeDataDir(df, partitionCols, sortCols, format, dynamicReplace)
     withCommitRetries(numRetries, written = Seq(w.dir)) { attempt =>
       Right(commitSwap(w, if (attempt == 0) base else currentBase, op, carryPrevious,
         format, Map("operation" -> op, "attempts" -> (attempt + 1).toString),
@@ -2439,7 +2433,6 @@ final class SnapshotTable(val root: String, val fullName: String) {
       partitionCols: Seq[String],
       sortCols: Seq[org.apache.spark.sql.Column],
       format: String,
-      micro: Boolean = false,
       dynamicReplace: Boolean = false): WrittenDir = {
     // dispatch per the template vocabulary (parquet|orc|avro,
     // `table-templates/_schema.json:100-103`). avro is served by
@@ -2516,24 +2509,14 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // on empty microbatches too, or a replay after one would
     // double-deliver). TRUNCATE TABLE rides this same path.
     val wroteFiles = listed.nonEmpty && newRows > 0L
-    // stats sidecars: an unpartitioned dir's rows are the observed count;
-    // a partitioned dir's come from ONE column-pruned job — O(delta) like
-    // the write itself, never O(table), and reading no data columns.
-    // A MICRO commit (streaming microbatch) must not pay a whole extra
-    // Spark job for a delta of a few files: its parquet files' rows come
-    // from a driver-side footer read of each (O(files-in-batch)
-    // page-cached metadata reads, no job), and sum to its partitions'.
-    if (wroteFiles) {
-      val footers = micro && format == "parquet" && partitionCols.nonEmpty
-      writeDirSidecars(dataDir,
-        if (footers) listed.map(f => f.copy(rows = SnapshotTable.parquetRecordCount(new File(f.file.path))))
-        else listed,
-        format,
-        if (partitionCols.isEmpty) Map("" -> newRows)
-        else if (footers) Map.empty
-        else partitionRowCounts(df.sparkSession, dataDir, partitionCols, format,
-          StructType(written.fields ++ fields.filter(f => partitionCols.contains(f.name)))))
-    }
+    // every file's rows (Iceberg's manifest-entry record_count), which
+    // `$partitions` and the dynamic-overwrite restatement sum: a dir of
+    // one file takes the observed count, every other file its own,
+    // read on the driver from the file's metadata — O(files in this
+    // delta), no Spark job
+    if (wroteFiles)
+      writeFilesSidecar(dataDir, if (listed.size == 1) listed.map(_.copy(rows = newRows)) else listed,
+        format)
     // column range sidecar (the Iceberg manifest min/max role), consumed
     // by the stats-skip optimizer rule to drop non-overlapping dirs at
     // planning. Stats are an optimization, never a correctness input — a
@@ -2616,15 +2599,15 @@ final class SnapshotTable(val root: String, val fullName: String) {
             val already = prevMasks.getOrElse(d, Nil).toSet
             val newMask = w.replaced.filterNot(already)
             if (newMask.isEmpty) 0L
-            // sidecar counts are commit-time PHYSICAL counts; rows an
+            // recorded rows are commit-time PHYSICAL counts; rows an
             // equality delete later removed are still in them, and the
             // carried total was already restated after the delete —
-            // subtracting the raw sidecar count would double-count
+            // subtracting the raw recorded count would double-count
             // those rows. Unknown beats understated (the $snapshots
             // listing and volume sensor consume this number).
             else if (carriedDeletes0.exists(_.applies.contains(d))) -1L
             else {
-              val byPart = readPartitionSidecar(d).map(e => e._1 -> e._3).toMap
+              val byPart = partitionRows(d, dirLayout(d).files).map(e => e._1 -> e._3).toMap
               val rows = newMask.map(p => byPart.getOrElse(p, 0L))
               if (rows.exists(_ < 0)) -1L else rows.sum
             }
@@ -3064,73 +3047,22 @@ final class SnapshotTable(val root: String, val fullName: String) {
       Seq(del.dir))
   }
 
-  private def sidecarPath(dataDir: String) =
-    Paths.get(dataDir, ".graft-partitions.json")
-
-  /** ONE column-pruned job over a freshly written PARTITIONED dir: its
-    * per-partition-directory row counts. The partition columns read with
-    * `schema`'s types, the written ones, so each key renders the way the
-    * writer rendered the directory name — a Catalyst string cast ('007'
-    * stays '007'; JVM toString would diverge for e.g. timestamps) — and
-    * lines up with the walked (unescaped) paths. The job reads no data
-    * columns. `schema` is the written files' schema plus the partition
-    * columns. Past [[SnapshotTable.PartitionStatsCapKey]] groups the
-    * counts are unknown (empty): a 100k-partition backfill must not hold
-    * them all on the driver.
+  /** Record `files` of `dataDir` in its files sidecar (the
+    * manifest-entry role), so `$files`, `$partitions` and every read
+    * plan come from metadata, with zero data or footer I/O at query
+    * time. A file of unknown rows is counted from its own metadata
+    * ([[SnapshotTable.recordCount]]) — O(files in this delta), the same
+    * class as Iceberg writing its manifest.
     */
-  private def partitionRowCounts(
-      spark: SparkSession,
-      dataDir: String,
-      partitionCols: Seq[String],
-      format: String,
-      schema: StructType): Map[String, Long] = {
-    import org.apache.spark.sql.functions.col
-    // keys are aliased __k{i}: a partition column may be named `count`
-    val keys = partitionCols.zipWithIndex.map { case (c, i) => col(c).cast("string").as(s"__k$i") }
-    val cap = spark.conf.getOption(SnapshotTable.PartitionStatsCapKey)
-      .flatMap(_.toIntOption).getOrElse(SnapshotTable.PartitionStatsCapDefault)
-    val grouped = load(spark, format, Some(schema), Seq(dataDir)).groupBy(keys: _*).count()
-      .limit(cap + 1).collect()
-    if (grouped.length > cap) Map.empty
-    else grouped.map { r =>
-      partitionCols.indices.map { i =>
-        s"${partitionCols(i)}=${if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__" else r.getString(i)}"
-      }.mkString("/") -> r.getLong(partitionCols.size)
-    }.toMap
-  }
-
-  /** Record `files` of `dataDir` in its partitions and files sidecars
-    * (the manifest-stats and manifest-entry roles), so `$partitions`,
-    * `$files` and every read plan from metadata, with zero data or
-    * footer I/O at query time. One rule sets a partition's rows: the sum
-    * of its files' rows when every one is known, else `counted`'s count
-    * for it, else unknown (-1). A file of unknown rows takes its
-    * partition's rows when it is the partition's only file, else its
-    * parquet footer's count — O(files in this delta), the same class as
-    * Iceberg writing its manifest.
-    */
-  private def writeDirSidecars(
-      dataDir: String, files: Seq[DirFile], format: String,
-      counted: Map[String, Long] = Map.empty): Unit = {
-    val parts = files.groupBy(_.partition).toSeq.sortBy(_._1).map { case (p, fs) =>
-      (p, fs.sortBy(f => Paths.get(f.file.path).getFileName.toString),
-        if (fs.forall(_.rows >= 0)) fs.map(_.rows).sum else counted.getOrElse(p, -1L))
-    }
-    MetadataJson.write(sidecarPath(dataDir), JArr(parts.map { case (p, fs, r) =>
-      obj("partition" -> JStr(p), "files" -> num(fs.size.toLong), "rows" -> num(r))
-    }))
+  private def writeFilesSidecar(dataDir: String, files: Seq[DirFile], format: String): Unit = {
     val base = Paths.get(dataDir).toAbsolutePath
-    MetadataJson.write(filesSidecarPath(dataDir), JArr(parts.flatMap { case (p, fs, r) =>
-      fs.map { case DirFile(f, _, known) =>
-        val rows =
-          if (known >= 0) known
-          else if (fs.size == 1 && r >= 0) r
-          else if (format == "parquet") SnapshotTable.parquetRecordCount(new File(f.path))
-          else -1L
-        obj("file" -> JStr(base.relativize(Paths.get(f.path)).toString),
-          "partition" -> JStr(p), "bytes" -> num(f.bytes), "rows" -> num(rows))
-      }
-    }))
+    MetadataJson.write(filesSidecarPath(dataDir), JArr(
+      files.sortBy(f => (f.partition, Paths.get(f.file.path).getFileName.toString)).map {
+        case DirFile(f, p, known) =>
+          obj("file" -> JStr(base.relativize(Paths.get(f.path)).toString),
+            "partition" -> JStr(p), "bytes" -> num(f.bytes),
+            "rows" -> num(if (known >= 0) known else SnapshotTable.recordCount(format, new File(f.path))))
+      }))
   }
 
   private def filesSidecarPath(dataDir: String) =
@@ -3149,15 +3081,21 @@ final class SnapshotTable(val root: String, val fullName: String) {
       }
     }
 
-  /** Sidecar entries for one data dir; a dir written before the sidecar
-    * existed falls back to its recorded file counts with unknown (-1) rows.
+  /** (partition, files, rows) of `files` of `dataDir`: a partition's
+    * rows are the sum of its files' recorded rows. A dir written before
+    * every file's rows were recorded (an orc or avro partition of
+    * several files) takes them from the partitions sidecar it was
+    * written with — read only then, and never written any more — else
+    * they are unknown (-1).
     */
-  private def readPartitionSidecar(dataDir: String): Seq[(String, Long, Long)] =
-    MetadataJson.read(sidecarPath(dataDir)).map(_.asArr.map { v =>
-      val o = v.asObj
-      (o("partition").asStr, o("files").asLong, o("rows").asLong)
-    }).getOrElse(dirLayout(dataDir).files.groupBy(_.partition)
-      .map { case (p, fs) => (p, fs.size.toLong, -1L) }.toSeq)
+  private def partitionRows(dataDir: String, files: Seq[DirFile]): Seq[(String, Long, Long)] = {
+    lazy val legacy: Map[String, Long] =
+      MetadataJson.read(Paths.get(dataDir, ".graft-partitions.json")).fold(Map.empty[String, Long])(
+        _.asArr.map { v => val o = v.asObj; o("partition").asStr -> o("rows").asLong }.toMap)
+    files.groupBy(_.partition).toSeq.map { case (p, fs) =>
+      (p, fs.size.toLong, if (fs.forall(_.rows >= 0)) fs.map(_.rows).sum else legacy.getOrElse(p, -1L))
+    }
+  }
 
   /** Reverse Hive-style %XX partition-dir escaping (dates, months, hours
     * and buckets never need it; string partition values with spaces or
@@ -3350,14 +3288,6 @@ object SnapshotTable {
   val SummaryBatchId = "streaming.batch-id"
   val SummaryBatchPrefix = "streaming.batch-id."
 
-  /** Session conf capping how many per-partition stat groups one commit
-    * may collect onto the driver; past it the commit degrades its
-    * per-partition row counts to unknown instead of OOMing the driver
-    * on a 100k-partition backfill.
-    */
-  val PartitionStatsCapKey = "graft.partition-stats.max-entries"
-  val PartitionStatsCapDefault = 100000
-
   /** The per-query watermarks a snapshot carries: durable prefix keys
     * plus the legacy display-pair form (pre-prefix metadata).
     */
@@ -3514,19 +3444,27 @@ object SnapshotTable {
     */
   private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
 
-  /** A parquet file's record count from its FOOTER — metadata pages
-    * only, no data I/O (-1 when unreadable).
+  /** A `format` data file's record count from its own metadata — a
+    * parquet or orc FOOTER, an avro container's block counts — with no
+    * record decoded (-1 when unreadable).
     */
-  private[sink] def parquetRecordCount(f: File): Long =
+  private[sink] def recordCount(format: String, f: File): Long =
     try {
       footerReads.incrementAndGet(): Unit
       footerReadsLocal.set(footerReadsLocal.get() + 1L)
       if (!Thread.currentThread().getName.startsWith("Executor task launch"))
         driverFooterReads.incrementAndGet(): Unit
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getAbsolutePath), footerConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
+      val path = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
+      format match {
+        case "parquet" =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, footerConf))
+          try r.getRecordCount finally r.close()
+        case "orc" =>
+          val r = org.apache.orc.OrcFile.createReader(path, org.apache.orc.OrcFile.readerOptions(footerConf))
+          try r.getNumberOfRows finally r.close()
+        case "avro" => graft.source.GraftAvroFileFormat.recordCount(path, footerConf)
+      }
     } catch { case scala.util.control.NonFatal(_) => -1L }
 
   /** Wait before swap attempt `attempt+1` — tenacity

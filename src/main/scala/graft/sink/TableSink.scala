@@ -102,16 +102,16 @@ object TableSink {
   }
 
   /** `event_append`: append-only commit (never updates existing rows).
-    * `micro = true` for streaming microbatch deliveries — the commit
-    * uses the slim stats path (no per-partition stats job).
+    * `micro` is read by nothing: every append takes the one commit path
+    * ([[SnapshotTable.append]]). It is kept only so callers written
+    * when it chose a stats path, the benchmark among them, still build.
     */
   def append(df: DataFrame, template: TableTemplate, table: SnapshotTable,
       micro: Boolean = false, summary: Map[String, String] = Map.empty): Snapshot = {
     checkSchema(df, template.schema, table.fullName)
     val (withParts, partCols) = withPartitionColumns(df, template)
     val snap = table.append(withParts, partCols, template.sortOrder.map(sortColumn),
-      template.writeFormat, template.commitNumRetries, micro = micro,
-      summary = summary)
+      template.writeFormat, template.commitNumRetries, summary = summary)
     declareSpec(template, table)
     snap
   }

@@ -5,7 +5,7 @@ import java.nio.ByteBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.{LogicalTypes, Schema => AvroSchema}
-import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
+import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
@@ -147,6 +147,19 @@ final class GraftAvroFileFormat extends FileFormat with DataSourceRegister with 
 }
 
 object GraftAvroFileFormat {
+
+  /** The records of the avro container file at `path`, summed from its
+    * blocks' counts: each block is read whole and no record is decoded.
+    */
+  def recordCount(path: Path, conf: Configuration): Long = {
+    val in = path.getFileSystem(conf).open(path)
+    try {
+      val blocks = new DataFileStream(in, new GenericDatumReader[GenericRecord]())
+      var n = 0L
+      while (blocks.hasNext) { n += blocks.getBlockCount; blocks.nextBlock(): Unit }
+      n
+    } finally in.close()
+  }
 
   /** Serializable carrier rebuilding a Hadoop Configuration lazily on
     * the executor — once per deserialized task closure, not per file.

@@ -102,7 +102,7 @@ object Streaming {
       checkpoint: String) =
     stream.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.sink.TableSink.append(batch.toDF(), template, table, micro = true)
+        graft.sink.TableSink.append(batch.toDF(), template, table)
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -319,13 +319,10 @@ object Streaming {
         // the window and every downstream _h-keyed stage reuse this
         // one exchange, and each commit writes gateParts files instead
         // of shuffle.partitions near-empty ones (§6).
-        val targetBytes = spark.conf
-          .getOption("spark.graft.stream.gate.targetPartitionBytes")
-          .map(_.toLong).getOrElse(32L << 20)
         val gateParts = math.max(1, math.min(
           spark.sessionState.conf.numShufflePartitions,
           ((batch.queryExecution.optimizedPlan.stats.sizeInBytes +
-            (targetBytes - 1)) / targetBytes).toInt))
+            (GateTargetPartitionBytes - 1)) / GateTargetPartitionBytes).toInt))
         val withHash = batch.toDF()
           .withColumn("_h", contentKey(col(textCol)))
           .repartition(gateParts, col("_h"))
@@ -617,10 +614,10 @@ object Streaming {
         val df = batch.toDF()
         try {
           graft.quality.Quality.gate(df, table.fullName, checks): Unit
-          graft.sink.TableSink.append(df, template, table, micro = true): Unit
+          graft.sink.TableSink.append(df, template, table): Unit
         } catch {
           case _: graft.quality.Quality.QualityFailure =>
-            graft.sink.TableSink.append(df, template, quarantine, micro = true): Unit
+            graft.sink.TableSink.append(df, template, quarantine): Unit
         }
         ()
       }
@@ -731,6 +728,12 @@ object Streaming {
     * watermark already landed with the append) rather than loop forever.
     */
   private val DrainCasAttempts = 8
+
+  /** Bytes of batch per partition of the dedup gate's shuffle (see
+    * [[startDedupIngest]]): a batch's estimated size over this, clamped
+    * to the session's shuffle partitions, sets the gate's width.
+    */
+  private val GateTargetPartitionBytes = 32L << 20
 
   final case class Event(user_id: Long, event_type: String, value: Double)
   final case class UserStats(user_id: Long, events: Long, purchases: Long, total_value: Double)
