@@ -178,6 +178,46 @@ class RangeStatsSpec extends SparkSpec {
     assert(p.count() == 100L)
   }
 
+  test("a copy-on-write carry keeps its dir's null counts exact") {
+    val t = freshTable()
+    // one file holds every null of c, the other as many non-null rows
+    t.overwrite(spark.range(1L, 7L, 1L, 2).toDF("id")
+      .withColumn("c", when(col("id") > 3L, col("id") * 10L)))
+    assert(t.fileStats(spark).count() == 2L)
+    // rewrites the null file and carries the other: the carry's null
+    // count (3) is relative to its source dir's 6 rows, not to the 3 it
+    // carries, so it must not prove the carry all null
+    t.update(spark, graft.sink.Rows.Where(col("id") === 1L), Map("id" -> lit(10L)))
+    assert(t.currentSnapshot.get.dataDirs.exists(_.endsWith("-carry")))
+    val read = t.read(spark)
+    assert(read.filter(col("c").isNotNull).count() == 3L)
+    assert(read.filter(col("c").isNull).count() == 3L)
+  }
+
+  test("the pruning rules plan from the scan alone: no table file is read") {
+    val t = freshTable()
+    def batch(lo: Long, day: String) = (lo until lo + 10).toDF("id")
+      .withColumn("ts", concat(lit(s"$day 0"), (col("id") % 10).cast("string"), lit(":00:00"))
+        .cast("timestamp"))
+      .withColumn("ts_day", to_date(col("ts")))
+    t.overwrite(batch(0, "2024-02-01"), partitionCols = Seq("ts_day"))
+    t.append(batch(10, "2024-02-02"), partitionCols = Seq("ts_day"))
+    t.append(batch(20, "2024-02-03"), partitionCols = Seq("ts_day"))
+    graft.sink.DeclaredPartitionSpec.write(t.root, Seq(graft.template.PartitionField("ts", "day")))
+    val q = t.read(spark).filter(col("ts") >= lit("2024-02-03 00:00:00").cast("timestamp"))
+    // every sidecar and spec file goes before the optimizer runs
+    val graftFiles = Files.walk(java.nio.file.Paths.get(t.root)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.getFileName.toString.startsWith(".graft-"))
+    assert(graftFiles.exists(_.getFileName.toString == graft.sink.DeclaredPartitionSpec.FileName))
+    graftFiles.foreach(Files.delete)
+    val plan = q.queryExecution.optimizedPlan
+    assert(fsRelations(plan).map(_.location.rootPaths.size).sum == 1)
+    val conds = plan.collect { case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
+    assert(conds.exists(_.references.exists(_.name == "ts_day")),
+      s"expected a derived ts_day conjunct in:\n$plan")
+    assert(q.count() == 10L)
+  }
+
   test("external (sidecar-less) parquet is never touched by the rule") {
     val dir = Files.createTempDirectory("graft_ext").toString
     (1L to 10L).toDF("id").write.mode("overwrite").parquet(dir)

@@ -869,6 +869,16 @@ class SnapshotTableSpec extends SparkSpec {
     }
   }
 
+  test("properties set before the first commit persist through it") {
+    val t = freshTable()
+    assert(!Files.exists(java.nio.file.Paths.get(t.root)))
+    t.setProperties(Map("owner" -> "team"))
+    assert(t.properties == Map("owner" -> "team"))
+    t.overwrite(Seq(1, 2).toDF("v"))
+    assert(t.properties == Map("owner" -> "team"))
+    assert(t.read(spark).count() == 2L)
+  }
+
   test("a legacy orc dir keeps its partitions sidecar rows") {
     // the layout older commits left: a files sidecar of unknown (-1)
     // rows beside a partitions sidecar of per-partition rows
