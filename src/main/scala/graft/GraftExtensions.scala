@@ -62,14 +62,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     ext.injectOptimizerRule(_ => NativeVectorMathRule)
     // Iceberg-manifest-style data skipping: prune snapshot data dirs
-    // whose commit-time range sidecars prove a pushed filter
-    // unsatisfiable (see plans/RangeStats.scala) — engaged identically
-    // on the Scala-API and SQL read paths
+    // whose commit-time column ranges (recorded in each dir's files
+    // sidecar, carried on the scan's SnapshotFileIndex) prove a pushed
+    // filter unsatisfiable (see plans/RangeStats.scala) — engaged
+    // identically on the Scala-API and SQL read paths
     ext.injectOptimizerRule(_ => graft.plans.GraftStatsSkipRule)
     // Hidden partitioning, read side: augment filters on a transform's
     // SOURCE column (ts >= X) with the implied predicate on the derived
     // directory column (ts_day >= date(X)) so partition pruning fires
-    // without naming the dir column (see plans/HiddenPartition.scala)
+    // without naming the dir column; the declared spec is on the scan's
+    // SnapshotFileIndex (see plans/HiddenPartition.scala)
     ext.injectOptimizerRule(_ => graft.plans.GraftHiddenPartitionRule)
     // SQL front door: inline resolved graft-catalog relations into the
     // native SnapshotTable scan plan (see GraftSqlInlineRule) so

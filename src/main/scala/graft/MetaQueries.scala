@@ -862,12 +862,13 @@ object MetaQueries {
     "stats_skip_scan" -> QueryDef(
       (s, dir) => {
         // Iceberg-manifest-style DATA SKIPPING: each commit records
-        // per-column min/max range sidecars; a filter over the table
-        // prunes non-overlapping dirs at OPTIMIZATION time (the require
-        // below pins it — of three disjoint-range appends, a point-range
-        // predicate plans exactly ONE scanned dir; at 100 TB this is a
-        // year of hourly appends reduced to the dirs a time-range query
-        // actually overlaps, before a single task is scheduled).
+        // per-column min/max ranges in its dir's files sidecar; a filter
+        // over the table prunes non-overlapping dirs at OPTIMIZATION time
+        // (the require below pins it — of three disjoint-range appends, a
+        // point-range predicate plans exactly ONE scanned dir; at 100 TB
+        // this is a year of hourly appends reduced to the dirs a
+        // time-range query actually overlaps, before a single task is
+        // scheduled).
         val wh = freshWarehouse("stats_skip_scan")
         val table = SnapshotTable(wh, "testdata", "orders_ranged")
         val o = tbl(s, dir, "orders")
@@ -894,8 +895,8 @@ object MetaQueries {
       Some("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
              |WHERE o_orderkey >= (SELECT max(o_orderkey) * 2 // 5 FROM orders)
              |  AND o_orderkey <  (SELECT max(o_orderkey) // 2 FROM orders)""".stripMargin),
-      doc = "Iceberg manifest-pruning parity: commit-time min/max range sidecars " +
-        "skip non-overlapping snapshot dirs at planning (pinned to 1 of 3 dirs)"),
+      doc = "Iceberg manifest-pruning parity: commit-time min/max ranges in each dir's " +
+        "files sidecar skip non-overlapping snapshot dirs at planning (pinned to 1 of 3 dirs)"),
 
     "table_partitions" -> QueryDef(
       (s, dir) => {
@@ -3377,7 +3378,7 @@ object MetaQueries {
         // here as the write.sort.order table property): every catalog
         // write — plain INSERT INTO included — lands its files
         // internally sorted by the declaration without the statement
-        // saying so. Sorted files keep the range-stats sidecars tight
+        // saying so. Sorted files keep the recorded column ranges tight
         // (narrower min/max per dir => more skipping) at the cost of one
         // shuffle-free sortWithinPartitions per write. The in-query pin
         // proves PHYSICAL file order; the oracle proves the data.

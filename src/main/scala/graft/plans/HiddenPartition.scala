@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.sink.DeclaredPartitionSpec
+import graft.sink.SnapshotFileIndex
 import graft.template.PartitionField
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
@@ -38,23 +38,23 @@ import org.apache.spark.sql.types._
   * the session time zone — the same zone the write derived dirs under
   * (single-engine contract, as with every timestamp rendering here).
   *
-  * The declared spec is found beside the table metadata (the scanned
-  * snapshot dirs' parent — see [[DeclaredPartitionSpec]]); scans with
-  * no spec (external data, flat layouts) pass through untouched. The
-  * rule runs in the operator-optimization fixed point: added conjuncts
-  * are deduplicated semantically, so the second pass is a no-op and the
-  * fixed point converges.
+  * The declared spec — current and superseded, so a mixed-epoch table
+  * prunes every epoch with its own transform — is on the scan's
+  * [[SnapshotFileIndex]] (`specs`), put there when the table built the
+  * scan, so the rule reads no file. Each transform applies only where
+  * the relation carries its derived column. Other scans (external data)
+  * and scans with no spec pass through untouched. The rule runs in the
+  * operator-optimization fixed point: added conjuncts are deduplicated
+  * semantically, so the second pass is a no-op and the fixed point
+  * converges.
   */
 object GraftHiddenPartitionRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, l: LogicalRelation)
-        if !l.isStreaming && l.relation.isInstanceOf[HadoopFsRelation] &&
-          l.relation.asInstanceOf[HadoopFsRelation].partitionSchema.nonEmpty =>
-      val fsRel = l.relation.asInstanceOf[HadoopFsRelation]
+    case f @ Filter(cond, l @ LogicalRelation(
+        fsRel @ HadoopFsRelation(index: SnapshotFileIndex, _, _, _, _, _), _, _, false, _)) =>
       val partCols = fsRel.partitionSchema.fieldNames.toSet
-      val spec = specFor(fsRel).filter(p =>
-        p.transform != "identity" && partCols.contains(DeclaredPartitionSpec.derivedName(p)))
+      val spec = index.specs.filter(p => p.transform != "identity" && partCols.contains(p.derivedName))
       if (spec.isEmpty) f
       else {
         val conjuncts = splitAnd(cond)
@@ -75,32 +75,11 @@ object GraftHiddenPartitionRule extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  /** The declared spec of the ONE table whose snapshot dirs this scan
-    * reads: all roots must share a local parent dir carrying the spec
-    * sidecar.
-    */
-  private def specFor(fsRel: HadoopFsRelation): Seq[PartitionField] = {
-    val parents = fsRel.location.rootPaths.flatMap { p =>
-      val parent = p.getParent
-      val scheme = p.toUri.getScheme
-      if (parent == null || (scheme != null && scheme != "file")) None
-      else Some(parent.toUri.getPath)
-    }.distinct
-    parents match {
-      // current spec + superseded specs (partition evolution): the
-      // per-relation applicability check above scopes each transform to
-      // the dirs whose layout actually carries its derived column, so a
-      // mixed-epoch table prunes every epoch with its own transform
-      case Seq(one) => DeclaredPartitionSpec.readAll(one)
-      case _ => Nil
-    }
-  }
-
   /** One implied conjunct of `c` on `p`'s derived directory column. */
   private def derive(
       c: Expression, p: PartitionField, l: LogicalRelation): Option[Expression] = {
     val dAttr = l.output.collectFirst {
-      case a: AttributeReference if a.name == DeclaredPartitionSpec.derivedName(p) => a
+      case a: AttributeReference if a.name == p.derivedName => a
     }.getOrElse(return None)
     def srcAttr(e: Expression): Option[AttributeReference] = e match {
       case a: AttributeReference if a.name == p.column => Some(a)

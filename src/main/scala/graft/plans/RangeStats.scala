@@ -1,9 +1,9 @@
 package graft.plans
 
-import java.nio.file.{Files, Paths}
+import scala.collection.immutable.VectorMap
 
-import graft.sink.{MetadataJson, SnapshotFileIndex}
-import graft.sink.MetadataJson.{JArr, JStr, num, obj}
+import graft.sink.SnapshotFileIndex
+import graft.sink.MetadataJson.{JArr, JStr, JValue, num, obj}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
@@ -18,16 +18,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * stat skipping as the metadata layer's scan-planning payoff; Athena
   * consumes the same bounds when it plans a snapshot scan).
   *
-  * Every snapshot commit writes one `.graft-ranges.json` beside its
-  * immutable data dir: row count plus, per top-level column, the null
-  * count and (for orderable atomic types) min/max bounds — collected
-  * with ONE aggregation pass over the freshly written dir, O(delta)
-  * like the write itself. String bounds are prefix-truncated at
-  * [[RangeStats.StringBoundChars]] chars: the truncated MIN is still a
-  * valid lower bound (a prefix sorts <= its string), while an upper
-  * bound is recorded only when no value was truncated (a truncated
-  * prefix would understate it) — exactly Iceberg's lower/upper-bound
-  * truncation contract.
+  * Every snapshot commit records one ranges object in the files
+  * sidecar of its immutable data dir (its `ranges` value, beside the
+  * file entries — one Iceberg manifest entry's worth of planning
+  * record): row count plus, per top-level column, the null count and
+  * (for orderable atomic types) min/max bounds — collected with ONE
+  * aggregation pass over the freshly written dir, O(delta) like the
+  * write itself. The row count is the one the null counts are relative
+  * to: a carried dir keeps its source dir's object, rows included.
+  * String bounds are prefix-truncated at [[RangeStats.StringBoundChars]]
+  * chars: the truncated MIN is still a valid lower bound (a prefix
+  * sorts <= its string), while an upper bound is recorded only when no
+  * value was truncated (a truncated prefix would understate it) —
+  * exactly Iceberg's lower/upper-bound truncation contract.
   *
   * Every column's entry comes from the write's own `observe` metrics,
   * in the type the column is written and read with — partition columns
@@ -35,10 +38,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * rather than inferring them from paths.
   *
   * [[GraftStatsSkipRule]] (installed by [[graft.GraftExtensions]])
-  * consumes the sidecars at OPTIMIZATION time: a filter sitting over a
-  * snapshot scan whose dirs' stats prove the predicate unsatisfiable
-  * drops those dirs' files from the scan's [[SnapshotFileIndex]] — file
-  * skipping at planning, before a single byte is read. At 100 TB this is the difference between
+  * consumes them at OPTIMIZATION time from the scan's
+  * [[SnapshotFileIndex]], which the table put them on when it built the
+  * scan: a filter sitting over a snapshot scan whose dirs' stats prove
+  * the predicate unsatisfiable drops those dirs' files from the index —
+  * file skipping at planning, before a single byte is read, and with no
+  * file read by the rule. At 100 TB this is the difference between
   * "scan every snapshot dir and let parquet row-group stats save you"
   * and "never schedule the task at all": a time-range query over a
   * year of hourly appends plans only the dirs whose ranges overlap.
@@ -50,17 +55,15 @@ object RangeStats {
     */
   val StringBoundChars = 64
 
-  val SidecarName = ".graft-ranges.json"
-
   /** One column's stats: null count and optional string-encoded bounds
     * (interpreted against the column's type at prune time).
     */
   final case class ColRange(nulls: Long, min: Option[String], max: Option[String])
 
-  /** One data dir's stats: row count + per-column ranges. */
+  /** One data dir's stats: row count + per-column ranges, in the order
+    * they are recorded.
+    */
   final case class DirStats(rows: Long, cols: Map[String, ColRange])
-
-  private def sidecarPath(dataDir: String) = Paths.get(dataDir, SidecarName)
 
   /** Types whose min/max are collected and compared. TIMESTAMP_NTZ is
     * deliberately absent: its string form is session-independent but
@@ -75,14 +78,14 @@ object RangeStats {
   }
 
   // ------------------------------------------------------------------
-  // write side (called by SnapshotTable.commit, once per new data dir)
+  // write side (called by SnapshotTable, once per new data dir)
   // ------------------------------------------------------------------
 
   /** Named aggregate Columns collecting this schema's range stats in ONE
     * pass. Attachable either to the WRITE itself via `Dataset.observe`
     * (zero re-read — the stats ride along with the write job) or to a
     * read-back `agg`. Names are positional (`c{i}_min/max/len/nulls`) so
-    * [[entriesFromMetrics]] can rebuild per-column entries without any
+    * [[fromMetrics]] can rebuild per-column entries without any
     * column-name escaping concerns in metric keys.
     */
   def rangeAggs(fields: Seq[StructField]): Seq[org.apache.spark.sql.Column] = {
@@ -102,12 +105,12 @@ object RangeStats {
     }
   }
 
-  /** Decode [[rangeAggs]] metric values (external/collected types, as an
-    * Observation or collected Row delivers them) back into per-column
-    * entries.
+  /** A dir of `rows` rows: its stats from [[rangeAggs]] metric values
+    * (external/collected types, as an Observation or collected Row
+    * delivers them).
     */
-  def entriesFromMetrics(fields: Seq[StructField], m: Map[String, Any]): Seq[(String, ColRange)] =
-    fields.zipWithIndex.map { case (f, i) =>
+  def fromMetrics(fields: Seq[StructField], rows: Long, m: Map[String, Any]): DirStats =
+    DirStats(rows, VectorMap.from(fields.zipWithIndex.map { case (f, i) =>
       val nulls = m.get(s"c${i}_nulls") match {
         case Some(l: Long) => l
         case _ => 0L
@@ -128,33 +131,50 @@ object RangeStats {
             m.get(s"c${i}_max").flatMap(v => store(dt, v)))
         case _ => f.name -> ColRange(nulls, None, None)
       }
-    }
+    }))
 
-  /** Persist a dir's range sidecar from already-collected entries. */
-  def writeEntries(dataDir: String, rows: Long, entries: Seq[(String, ColRange)]): Unit =
-    MetadataJson.write(sidecarPath(dataDir), obj("rows" -> num(rows), "cols" -> JArr(entries.map {
-      case (n, c) =>
-        obj(Seq("name" -> JStr(n), "nulls" -> num(c.nulls)) ++
-          c.min.map("min" -> JStr(_)) ++ c.max.map("max" -> JStr(_)): _*)
-    })))
-
-  /** Collect and persist the range sidecar for an existing dir with one
-    * read-back aggregation job over `df`, the dir as read by its table.
+  /** The stats of an existing dir of `rows` rows, `df` as read by its
+    * table, with one read-back aggregation job (none for an empty dir).
     * The fallback path — the commit hot path collects the same stats
     * during the write via [[rangeAggs]] + `observe` and never re-reads.
+    * None when the job fails: stats are an optimization, never a
+    * correctness input, so a failed collection must not fail the commit
+    * (the dir simply stays unskippable).
     */
-  def writeSidecar(df: DataFrame, dataDir: String, rows: Long): Unit = {
-    val fields = df.schema.fields.toSeq
-    val entries: Seq[(String, ColRange)] =
-      if (fields.isEmpty || rows == 0L) fields.map(f => f.name -> ColRange(0L, None, None))
-      else {
-        val aggs = rangeAggs(fields)
-        val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-        val m: Map[String, Any] = row.schema.fieldNames.zip(row.toSeq).toMap
-        entriesFromMetrics(fields, m)
-      }
-    writeEntries(dataDir, rows, entries)
-  }
+  def aggregate(df: DataFrame, rows: Long): Option[DirStats] =
+    try {
+      val fields = df.schema.fields.toSeq
+      val aggs = rangeAggs(fields)
+      Some(fromMetrics(fields, rows,
+        if (aggs.isEmpty || rows == 0L) Map.empty
+        else {
+          val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+          row.getValuesMap[Any](row.schema.fieldNames)
+        }))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The JSON a dir's files sidecar records `stats` as. */
+  def render(stats: DirStats): JValue =
+    obj("rows" -> num(stats.rows), "cols" -> JArr(stats.cols.toSeq.map { case (n, c) =>
+      obj(Seq("name" -> JStr(n), "nulls" -> num(c.nulls)) ++
+        c.min.map("min" -> JStr(_)) ++ c.max.map("max" -> JStr(_)): _*)
+    }))
+
+  /** The stats [[render]] wrote. Stats are an optimization, never a
+    * correctness input: malformed content degrades to None — "no stats,
+    * dir unskippable" — rather than failing the read (unlike table
+    * METADATA, where corruption must fail loudly).
+    */
+  def parse(json: JValue): Option[DirStats] =
+    try {
+      val o = json.asObj
+      Some(DirStats(o.get("rows").fold(-1L)(_.asLong),
+        VectorMap.from(o.get("cols").fold(Seq.empty[JValue])(_.asArr).map { cv =>
+          val c = cv.asObj
+          c("name").asStr -> ColRange(c("nulls").asLong,
+            c.get("min").map(_.asStr), c.get("max").map(_.asStr))
+        })))
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** External (collected) agg value -> storage string, in a rendering
     * that round-trips exactly: integral/date/timestamp as decimal
@@ -189,38 +209,6 @@ object RangeStats {
   // ------------------------------------------------------------------
   // read side (consumed by GraftStatsSkipRule at optimization time)
   // ------------------------------------------------------------------
-
-  /** Parsed sidecars, cached per dir path: data dirs are immutable and
-    * the sidecar is written before the commit swap, so an entry can
-    * never go stale. Existence is re-checked per call (cheap) so a
-    * NON-graft path (no sidecar today, none tomorrow) stays a miss
-    * without negative caching a path that later becomes a graft dir.
-    */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, DirStats]()
-
-  def read(dataDir: String): Option[DirStats] = {
-    val p = sidecarPath(dataDir)
-    if (!Files.exists(p)) None
-    else Option(cache.computeIfAbsent(dataDir, _ =>
-      // stats are an optimization, never a correctness input: malformed
-      // sidecar content degrades to "no stats, dir unskippable" rather
-      // than failing the read (unlike table METADATA, where corruption
-      // must fail loudly — see SnapshotTable.parse); a sidecar gone
-      // since the check is a miss (null: nothing cached)
-      try MetadataJson.read(p).map { json =>
-        val o = json.asObj
-        val rows = o.get("rows").map(_.asLong).getOrElse(-1L)
-        val cols = o.get("cols").map(_.asArr.map { cv =>
-          val c = cv.asObj
-          c("name").asStr -> ColRange(c("nulls").asLong,
-            c.get("min").map(_.asStr), c.get("max").map(_.asStr))
-        }.toMap).getOrElse(Map.empty[String, ColRange])
-        DirStats(rows, cols)
-      }.orNull
-      catch {
-        case _: MetadataJson.ParseException => DirStats(-1L, Map.empty)
-      }))
-  }
 
   /** True when `stats` PROVE no row of the dir can satisfy `cond`:
     * some conjunct is false for every row. Unknown stays unknown —
@@ -383,10 +371,11 @@ object RangeStats {
   * [[SnapshotFileIndex]] — what predicate pushdown leaves over every
   * scan the snapshot-table read plan builds (the filter arrives
   * rewritten to PHYSICAL column names by alias substitution, which is
-  * the name space the sidecars are keyed by). Each conjunct of `cond`
+  * the name space the stats are keyed by). Each conjunct of `cond`
   * that references partition columns only is evaluated exactly on each
-  * file's partition values; the rest prove a dir empty through its
-  * range sidecar. Partition-column bounds are never consulted: the
+  * file's partition values; the rest prove a dir empty through the
+  * dir's stats on the index (`stats`). The rule reads no file: the
+  * index carries everything it plans from. Partition-column bounds are never consulted: the
   * index types partition values exactly, so nothing is gained from
   * them, and bounds recorded in another type space could prune
   * unsoundly. Three outcomes:
@@ -397,8 +386,8 @@ object RangeStats {
   *    the dirs still holding one;
   *  - every file can match -> untouched.
   *
-  * Dirs without a sidecar (pre-feature dirs) are never skipped by
-  * their data; scans over other indexes (external data, delete files)
+  * Dirs without stats (pre-feature dirs, or a failed collection) are
+  * never skipped by their data; scans over other indexes (external data, delete files)
   * are untouched. The rule runs in the operator-optimization fixed
   * point, so it sees the post-pushdown plan regardless of rule
   * ordering, and its output is a fixed point itself (kept files
@@ -414,7 +403,7 @@ object GraftStatsSkipRule extends Rule[LogicalPlan] with PredicateHelper {
         c.references.nonEmpty && c.references.forall(a => partCols.contains(a.name)) &&
           c.deterministic && !SubqueryExpression.hasSubquery(c))
       val dataCond = dataConds.reduceOption(And).getOrElse(Literal(true))
-      val emptyDirs = index.dirs.filter(d => RangeStats.read(d).exists(st =>
+      val emptyDirs = index.dirs.filter(d => index.stats.get(d).exists(st =>
         RangeStats.provesEmpty(dataCond, st.copy(cols = st.cols -- partCols)))).toSet
       // a partition conjunct that cannot be evaluated here (a cast that
       // fails on some value) keeps every file; the scan evaluates it

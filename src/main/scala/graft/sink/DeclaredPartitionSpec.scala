@@ -18,7 +18,9 @@ import graft.template.PartitionField
   *    on the SOURCE column (`ts >= X`) into predicates on the derived
   *    directory column (`ts_day >= date(X)`) so partition pruning fires
   *    without the user ever naming the directory column — Iceberg's
-  *    hidden-partitioning read contract.
+  *    hidden-partitioning read contract. [[SnapshotTable]] reads the
+  *    spec ([[readAll]]) when it builds a partitioned scan and puts it
+  *    on the scan's [[SnapshotFileIndex]]; the rule reads it from there.
   */
 object DeclaredPartitionSpec {
 
@@ -31,20 +33,6 @@ object DeclaredPartitionSpec {
     */
   val HistoryFileName = ".graft-partition-spec-history.json"
 
-  /** The derived directory-column name of one transform — must match
-    * [[TableSink.transformColumn]]'s naming exactly.
-    */
-  def derivedName(p: PartitionField): String = p.transform match {
-    case "identity" => p.column
-    case "year"     => s"${p.column}_year"
-    case "month"    => s"${p.column}_month"
-    case "day"      => s"${p.column}_day"
-    case "hour"     => s"${p.column}_hour"
-    case "bucket"   => s"${p.column}_bucket"
-    case "truncate" => s"${p.column}_trunc"
-    case other      => throw new IllegalArgumentException(s"Unknown partition transform: $other")
-  }
-
   /** Declare the table's spec. Idempotent for the common case (template
     * writes re-declare the same spec every commit); a CHANGED
     * declaration is evolution — the superseded spec is archived so the
@@ -53,7 +41,7 @@ object DeclaredPartitionSpec {
   def write(tableRoot: String, spec: Seq[PartitionField]): Unit = {
     val path = Paths.get(tableRoot, FileName)
     if (!Files.exists(path)) {
-      spec.foreach(p => derivedName(p): Unit) // validate transforms early
+      spec.foreach(_.derivedName: Unit) // validate transforms early
       Files.createDirectories(path.getParent)
       MetadataJson.write(path, specJson(spec))
     } else evolve(tableRoot, spec)
@@ -74,7 +62,7 @@ object DeclaredPartitionSpec {
   def evolve(tableRoot: String, newSpec: Seq[PartitionField]): Unit = {
     val current = read(tableRoot)
     if (current == newSpec) return
-    newSpec.foreach(p => derivedName(p): Unit) // validate transforms early
+    newSpec.foreach(_.derivedName: Unit) // validate transforms early
     val history = (parseFile(tableRoot, HistoryFileName) ++ current).distinct
     Files.createDirectories(Paths.get(tableRoot))
     MetadataJson.write(Paths.get(tableRoot, HistoryFileName), specJson(history))

@@ -2,6 +2,8 @@ package graft.sink
 
 import java.io.File
 
+import graft.plans.RangeStats.DirStats
+import graft.template.PartitionField
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -20,14 +22,20 @@ import org.apache.spark.sql.types.StructType
   *
   * A case class: two reads of the same snapshot build equal indexes, so
   * the CacheManager matches them. `dirs` are the scanned data dirs
-  * (`rootPaths`, which the range-stats and hidden-partition rules read);
-  * a masked partition's files are simply absent from `files`.
+  * (`rootPaths`); a masked partition's files are simply absent from
+  * `files`. The index also carries what the optimizer rules plan from,
+  * so neither reads a file: `stats`, each dir's column ranges as its
+  * files sidecar records them (the range-stats rule), and `specs`, the
+  * table's declared partition transforms, current and superseded (the
+  * hidden-partition rule; empty for an unpartitioned scan).
   */
 final case class SnapshotFileIndex(
     dirs: Seq[String],
     files: Seq[SnapshotFileIndex.DataFile],
     partitionSchema: StructType,
-    timeZone: String) extends FileIndex {
+    timeZone: String,
+    stats: Map[String, DirStats],
+    specs: Seq[PartitionField]) extends FileIndex {
 
   import SnapshotFileIndex.qualified
 

@@ -708,8 +708,8 @@ final class SnapshotTable(val root: String, val fullName: String) {
     else {
       val carried = touched.filter(l => resolved.isDefined &&
         cur.maskedDirs.get(l.dir).forall(_.isEmpty) && !cur.deletes.exists(_.applies.contains(l.dir)))
-        .map(l => l.dir -> l.files.filterNot(f => hits(f.file.path))).filter(_._2.nonEmpty)
-      val carryDirs = carried.map { case (d, fs) => carry(d, fs, cur.format) }
+        .map(l => l -> l.files.filterNot(f => hits(f.file.path))).filter(_._2.nonEmpty)
+      val carryDirs = carried.map { case (l, fs) => carry(l, fs, cur.format) }
       val carriedFiles = carried.flatMap(_._2.map(_.file.path)).toSet
       // the rewrite reads ONLY the touched files
       val view = Option.when(touched.nonEmpty)(
@@ -845,11 +845,13 @@ final class SnapshotTable(val root: String, val fullName: String) {
     * server-side copy) — and return it. The carry dir inherits the
     * original's columns sidecar (same physical files), its files' recorded
     * rows (a legacy dir's unknown ones counted from the files), and the
-    * original's range-stats sidecar (bounds over a superset —
-    * conservative, stats are never a correctness input). Cost:
-    * O(carried files) metadata.
+    * original's column ranges as recorded, rows included: bounds over a
+    * superset are conservative, and the null counts stay relative to the
+    * rows they were counted over, so none proves the carry all null.
+    * Cost: O(carried files) metadata.
     */
-  private def carry(d: String, files: Seq[DirFile], format: String): String = {
+  private def carry(l: DirLayout, files: Seq[DirFile], format: String): String = {
+    val d = l.dir
     val carryDir = Paths.get(root,
       s"snap-${java.util.UUID.randomUUID().toString.take(8)}-carry").toString
     val dBase = Paths.get(d).toAbsolutePath
@@ -865,11 +867,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
     if (Files.exists(columnsSidecarPath(d)))
       Files.copy(columnsSidecarPath(d), columnsSidecarPath(carryDir),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-    writeFilesSidecar(carryDir, carried, format)
-    val ranges = Paths.get(d, graft.plans.RangeStats.SidecarName)
-    if (Files.exists(ranges))
-      Files.copy(ranges, Paths.get(carryDir, graft.plans.RangeStats.SidecarName),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+    writeFilesSidecar(carryDir, carried, format, l.ranges)
     carryDir
   }
 
@@ -1319,27 +1317,17 @@ final class SnapshotTable(val root: String, val fullName: String) {
         Files.createDirectories(target.getParent)
         Files.createSymbolicLink(target, f.toPath.toAbsolutePath): Unit
       }
-      // same stats sidecars a written commit gets, every file's rows
+      // the imported files' schema is whatever their footers say: the
+      // one read here infers it, and the dir's columns sidecar (written
+      // at swap) records it for every later read
+      val inferred = load(spark, format, None, Seq(dataDir))
+      // the same files sidecar a written commit gets, every file's rows
       // known from its footer, column ranges from one stats pass — so
       // stats-skip and $partitions/$files treat imported dirs like any
       // other
       writeFilesSidecar(dataDir, files.map { case (f, rel) =>
         dirFile(dataDir, Paths.get(dataDir, rel).toAbsolutePath.toString, f.length(), relRows(rel))
-      }, format)
-      // the imported files' schema is whatever their footers say: the
-      // one read here infers it, and the dir's columns sidecar (written
-      // at swap) records it for every later read
-      val inferred = load(spark, format, None, Seq(dataDir))
-      try {
-        val fields = inferred.schema.fields.toSeq
-        val aggs = graft.plans.RangeStats.rangeAggs(fields)
-        val row = inferred.agg(aggs.head, aggs.tail: _*).collect().head
-        val metrics = row.schema.fieldNames.zipWithIndex.map { case (n, i) =>
-          n -> row.get(i)
-        }.toMap[String, Any]
-        graft.plans.RangeStats.writeEntries(dataDir, newRows,
-          graft.plans.RangeStats.entriesFromMetrics(fields, metrics))
-      } catch { case scala.util.control.NonFatal(_) => () }
+      }, format, graft.plans.RangeStats.aggregate(inferred, newRows))
       val written = WrittenDir(dataDir, newRows,
         inferred.schema.fields.toSeq.map(f => f.name -> f.dataType.sql))
       withCommitRetries(numRetries) { _ =>
@@ -1490,8 +1478,10 @@ final class SnapshotTable(val root: String, val fullName: String) {
     MetadataJson.read(propertiesPath)
       .map(_.asObj.map { case (k, v) => k -> v.asStr }).getOrElse(Map.empty)
 
-  private def writeProperties(props: Map[String, String]): Unit =
+  private def writeProperties(props: Map[String, String]): Unit = {
+    Files.createDirectories(Paths.get(root))
     MetadataJson.write(propertiesPath, strObj(props))
+  }
 
   /** Set (upsert) table properties — `ALTER TABLE ... SET TBLPROPERTIES`. */
   def setProperties(kv: Map[String, String]): Unit = transact { m =>
@@ -1774,7 +1764,7 @@ final class SnapshotTable(val root: String, val fullName: String) {
       val declared = DeclaredPartitionSpec.read(root)
       val pCols =
         if (partitionCols.nonEmpty) partitionCols
-        else if (declared.nonEmpty) declared.map(DeclaredPartitionSpec.derivedName)
+        else if (declared.nonEmpty) declared.map(_.derivedName)
         else partitionColumns
       val nOut = math.max(1L, (dataBytes + targetFileBytes - 1) / targetFileBytes).toInt
       val df0 = readSnapshot(spark, snap.id)
@@ -2513,22 +2503,14 @@ final class SnapshotTable(val root: String, val fullName: String) {
     // `$partitions` and the dynamic-overwrite restatement sum: a dir of
     // one file takes the observed count, every other file its own,
     // read on the driver from the file's metadata — O(files in this
-    // delta), no Spark job
+    // delta), no Spark job. Beside them, the dir's column ranges (the
+    // Iceberg manifest min/max role), from the observed metrics or, when
+    // those were lost, one read-back aggregate.
     if (wroteFiles)
       writeFilesSidecar(dataDir, if (listed.size == 1) listed.map(_.copy(rows = newRows)) else listed,
-        format)
-    // column range sidecar (the Iceberg manifest min/max role), consumed
-    // by the stats-skip optimizer rule to drop non-overlapping dirs at
-    // planning. Stats are an optimization, never a correctness input — a
-    // collection failure must not fail the commit (the dir simply stays
-    // unskippable).
-    try
-      if (!wroteFiles) ()
-      else if (metrics.nonEmpty)
-        graft.plans.RangeStats.writeEntries(dataDir, newRows,
-          graft.plans.RangeStats.entriesFromMetrics(fields, metrics))
-      else graft.plans.RangeStats.writeSidecar(writtenDir, dataDir, newRows)
-    catch { case scala.util.control.NonFatal(_) => () }
+        format,
+        if (metrics.nonEmpty) Some(graft.plans.RangeStats.fromMetrics(fields, newRows, metrics))
+        else graft.plans.RangeStats.aggregate(writtenDir, newRows))
     // partitions the batch REPLACES = the partitions it wrote (dynamic
     // overwrite semantics)
     val replaced: Seq[String] =
@@ -2895,11 +2877,14 @@ final class SnapshotTable(val root: String, val fullName: String) {
   private case class DirFile(file: SnapshotFileIndex.DataFile, partition: String, rows: Long)
 
   /** What one data dir records, read once per read: its partition
-    * columns and every file (masks not applied) — from the files
-    * sidecar, or a walk for a dir written before it — and, when asked,
-    * its columns sidecar. The one reader of a dir's file listing.
+    * columns, every file (masks not applied) and its column ranges —
+    * from the files sidecar, or a walk for a dir written before it — and,
+    * when asked, its columns sidecar. The one reader of a dir's file
+    * listing.
     */
-  private case class DirLayout(dir: String, partCols: Seq[String], files: Seq[DirFile]) {
+  private case class DirLayout(
+      dir: String, partCols: Seq[String], files: Seq[DirFile],
+      ranges: Option[graft.plans.RangeStats.DirStats]) {
 
     lazy val cols: Option[Seq[(Int, String, Option[String])]] = readColumnsSidecar(dir)
 
@@ -2964,12 +2949,26 @@ final class SnapshotTable(val root: String, val fullName: String) {
   }
 
   /** `dataDir`'s layout; its partition columns are the `col=value`
-    * segments of its files' paths.
+    * segments of its files' paths. A dir whose files sidecar predates
+    * the recorded ranges (a bare array of files), or which has none,
+    * keeps its ranges in `.graft-ranges.json` — read only then, and
+    * never written any more; a malformed one means no stats.
     */
   private def dirLayout(dataDir: String): DirLayout = {
-    val files = readFilesSidecar(dataDir).getOrElse(walk(dataDir))
+    val (listed, ranges) = MetadataJson.read(filesSidecarPath(dataDir)) match {
+      case Some(MetadataJson.JObj(o)) => (Some(o("files").asArr), o.get("ranges"))
+      case legacy => (legacy.map(_.asArr),
+        scala.util.Try(MetadataJson.read(Paths.get(dataDir, ".graft-ranges.json"))).toOption.flatten)
+    }
+    if (listed.isDefined) SnapshotTable.sidecarReads.inc(root)
+    val files = listed.fold(walk(dataDir))(_.map { v =>
+      val o = v.asObj
+      dirFile(dataDir, new File(dataDir, o("file").asStr).getAbsolutePath, o("bytes").asLong,
+        o("rows").asLong)
+    })
     DirLayout(dataDir, files.headOption.fold(Seq.empty[String])(f =>
-      partitionSegments(dataDir, f.file.path).map(s => unescapePath(s.split("=", 2)(0)))), files)
+      partitionSegments(dataDir, f.file.path).map(s => unescapePath(s.split("=", 2)(0)))), files,
+      ranges.flatMap(graft.plans.RangeStats.parse))
   }
 
   /** The files under `dataDir` as a walk finds them, rows unknown: a
@@ -3014,7 +3013,9 @@ final class SnapshotTable(val root: String, val fullName: String) {
       case (d, p) => (d.toNullable, p.toNullable)
     }
     val index = SnapshotFileIndex(layouts.map(_.dir), files, parts,
-      spark.conf.get(org.apache.spark.sql.internal.SQLConf.SESSION_LOCAL_TIMEZONE.key))
+      spark.conf.get(org.apache.spark.sql.internal.SQLConf.SESSION_LOCAL_TIMEZONE.key),
+      layouts.flatMap(l => l.ranges.map(l.dir -> _)).toMap,
+      if (parts.isEmpty) Nil else DeclaredPartitionSpec.readAll(root))
     spark.baseRelationToDataFrame(
       org.apache.spark.sql.execution.datasources.HadoopFsRelation(
         index, parts, data, None, SnapshotTable.fileFormat(snap.format), Map.empty)(spark))
@@ -3043,43 +3044,34 @@ final class SnapshotTable(val root: String, val fullName: String) {
     val format = del.format.getOrElse(snapFormat)
     load(spark, format,
       if (del.positional) Some(SnapshotTable.PositionalDeleteSchema)
-      else DirLayout(del.dir, Nil, Nil).recordedSchemas(format).map(_._1),
+      else DirLayout(del.dir, Nil, Nil, None).recordedSchemas(format).map(_._1),
       Seq(del.dir))
   }
 
-  /** Record `files` of `dataDir` in its files sidecar (the
-    * manifest-entry role), so `$files`, `$partitions` and every read
-    * plan come from metadata, with zero data or footer I/O at query
-    * time. A file of unknown rows is counted from its own metadata
+  /** Record `files` of `dataDir` and the dir's column `ranges` in its
+    * files sidecar (the manifest-entry role) — the one per-dir record a
+    * scan plans from, so `$files`, `$partitions`, every read plan and
+    * its pruning come from metadata, with zero data or footer I/O at
+    * query time. A file of unknown rows is counted from its own metadata
     * ([[SnapshotTable.recordCount]]) — O(files in this delta), the same
-    * class as Iceberg writing its manifest.
+    * class as Iceberg writing its manifest. No `ranges` (a failed
+    * collection) leaves the dir unskippable.
     */
-  private def writeFilesSidecar(dataDir: String, files: Seq[DirFile], format: String): Unit = {
+  private def writeFilesSidecar(
+      dataDir: String, files: Seq[DirFile], format: String,
+      ranges: Option[graft.plans.RangeStats.DirStats]): Unit = {
     val base = Paths.get(dataDir).toAbsolutePath
-    MetadataJson.write(filesSidecarPath(dataDir), JArr(
+    MetadataJson.write(filesSidecarPath(dataDir), obj(Seq("files" -> JArr(
       files.sortBy(f => (f.partition, Paths.get(f.file.path).getFileName.toString)).map {
         case DirFile(f, p, known) =>
           obj("file" -> JStr(base.relativize(Paths.get(f.path)).toString),
             "partition" -> JStr(p), "bytes" -> num(f.bytes),
             "rows" -> num(if (known >= 0) known else SnapshotTable.recordCount(format, new File(f.path))))
-      }))
+      })) ++ ranges.map("ranges" -> graft.plans.RangeStats.render(_)): _*))
   }
 
   private def filesSidecarPath(dataDir: String) =
     Paths.get(dataDir, ".graft-files.json")
-
-  /** The files one dir's files sidecar records. None when the dir
-    * predates the file sidecar — [[dirLayout]] then walks it.
-    */
-  private def readFilesSidecar(dataDir: String): Option[Seq[DirFile]] =
-    MetadataJson.read(filesSidecarPath(dataDir)).map { json =>
-      SnapshotTable.sidecarReads.inc(root)
-      json.asArr.map { v =>
-        val o = v.asObj
-        dirFile(dataDir, new File(dataDir, o("file").asStr).getAbsolutePath, o("bytes").asLong,
-          o("rows").asLong)
-      }
-    }
 
   /** (partition, files, rows) of `files` of `dataDir`: a partition's
     * rows are the sum of its files' recorded rows. A dir written before

@@ -10,7 +10,7 @@ import org.apache.spark.sql.Column
   * land files internally sorted without the statement saying so.
   * Template-driven writes already sort via the template's `sort_order`;
   * this is the same contract for tables whose lifecycle is pure SQL
-  * DDL/DML. Sorted files make range-stats sidecars tight (narrow
+  * DDL/DML. Sorted files make the recorded column ranges tight (narrow
   * min/max per file ⇒ more dirs provably skippable) and keep
   * sort-sensitive consumers (merge scans, top-k) cheap — at 100 TB
   * the sort costs one `sortWithinPartitions` per write, no shuffle.

@@ -35,7 +35,22 @@ final case class ColumnDef(
   }
 }
 
-final case class PartitionField(column: String, transform: String, n: Int = 0)
+final case class PartitionField(column: String, transform: String, n: Int = 0) {
+
+  /** The derived directory-column name of this transform — must match
+    * `TableSink.transformColumn`'s naming exactly.
+    */
+  def derivedName: String = transform match {
+    case "identity" => column
+    case "year"     => s"${column}_year"
+    case "month"    => s"${column}_month"
+    case "day"      => s"${column}_day"
+    case "hour"     => s"${column}_hour"
+    case "bucket"   => s"${column}_bucket"
+    case "truncate" => s"${column}_trunc"
+    case other      => throw new IllegalArgumentException(s"Unknown partition transform: $other")
+  }
+}
 
 final case class SortField(
     column: String,

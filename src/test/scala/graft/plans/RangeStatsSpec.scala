@@ -218,6 +218,32 @@ class RangeStatsSpec extends SparkSpec {
     assert(q.count() == 10L)
   }
 
+  test("a legacy range sidecar still prunes; its carry records the ranges in the files sidecar") {
+    import graft.sink.MetadataJson
+    import java.nio.file.Paths
+    val t = freshTable()
+    t.overwrite(spark.range(1L, 101L, 1L, 2).toDF("id"))
+    t.append((201L to 300L).toDF("id"))
+    // the earlier layout: a bare array of file entries, the ranges in a
+    // sidecar of their own
+    val dir = t.currentSnapshot.get.dataDirs.head
+    val sidecar = Paths.get(dir, ".graft-files.json")
+    val recorded = MetadataJson.read(sidecar).get.asObj
+    MetadataJson.write(sidecar, recorded("files"))
+    MetadataJson.write(Paths.get(dir, ".graft-ranges.json"), recorded("ranges"))
+    val q = t.read(spark).filter(col("id") === 250L)
+    assert(scannedDirs(q) == 1)
+    assert(q.count() == 1L)
+    // a copy-on-write split carries the untouched file of the legacy dir
+    t.delete(spark, graft.sink.Rows.Where(col("id") === 1L))
+    val carryDir = t.currentSnapshot.get.dataDirs.find(_.endsWith("-carry")).get
+    val carried = MetadataJson.read(Paths.get(carryDir, ".graft-files.json")).get.asObj
+    assert(carried("ranges") == recorded("ranges"))
+    assert(!Files.exists(Paths.get(carryDir, ".graft-ranges.json")))
+    assert(scannedDirs(t.read(spark).filter(col("id") === 250L)) == 1)
+    assert(t.read(spark).count() == 199L)
+  }
+
   test("external (sidecar-less) parquet is never touched by the rule") {
     val dir = Files.createTempDirectory("graft_ext").toString
     (1L to 10L).toDF("id").write.mode("overwrite").parquet(dir)

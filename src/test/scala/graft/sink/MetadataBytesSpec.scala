@@ -5,12 +5,11 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
 import graft.SparkSpec
-import graft.plans.RangeStats
 import org.apache.spark.sql.functions.col
 
 /** Byte pin of every engine-written metadata file of one fixed table:
   * metadata.json, refs.json, .graft-properties.json, one manifest, the
-  * three per-dir sidecars and the add_files import manifest. Partition
+  * two per-dir sidecars and the add_files import manifest. Partition
   * values, column names, property keys/values and ref names carry the
   * characters the escape must handle (quote, backslash, brackets,
   * braces, control characters, non-ASCII), so any change to the string
@@ -83,7 +82,6 @@ class MetadataBytesSpec extends SparkSpec {
       "manifest.json" -> Paths.get(root, s"manifest-${head.id}.json"),
       ".graft-columns.json" -> Paths.get(written, ".graft-columns.json"),
       ".graft-files.json" -> Paths.get(written, ".graft-files.json"),
-      RangeStats.SidecarName -> Paths.get(written, RangeStats.SidecarName),
       SnapshotTable.ImportManifestName -> Paths.get(imported, SnapshotTable.ImportManifestName)
     ).map { case (k, p) => k -> normalize(read(p)) }.toMap -> dirs
   }
@@ -146,13 +144,12 @@ class MetadataBytesSpec extends SparkSpec {
       """[{"id":1,"name":"id","type":"BIGINT"},{"id":2,"name":"na\"me é","type":"STRING"},""" +
       """{"id":3,"name":"p","type":"STRING"}]"""),
     ".graft-files.json" -> (
-      """[{"file":"p=a/<part>","partition":"p=a","bytes":<n>,"rows":2},""" +
+      """{"files":[{"file":"p=a/<part>","partition":"p=a","bytes":<n>,"rows":2},""" +
       """{"file":"p=q%22b%5Cs%5B1%5D%7B2\\u007d%01/<part>",""" +
-      """"partition":"p=q\"b\\s\\u005b1\\u005d\\u007b2\\u007d\\u0001","bytes":<n>,"rows":1}]"""),
-    RangeStats.SidecarName -> (
-      """{"rows":3,"cols":[{"name":"id","nulls":0,"min":"1","max":"3"},{"name":"na\"me é",""" +
-      """"nulls":0,"min":"","max":"x y"},{"name":"p","nulls":0,"min":"a",""" +
-      """"max":"q\"b\\s\\u005b1\\u005d\\u007b2\\u007d\\u0001"}]}"""),
+      """"partition":"p=q\"b\\s\\u005b1\\u005d\\u007b2\\u007d\\u0001","bytes":<n>,"rows":1}],""" +
+      """"ranges":{"rows":3,"cols":[{"name":"id","nulls":0,"min":"1","max":"3"},""" +
+      """{"name":"na\"me é","nulls":0,"min":"","max":"x y"},{"name":"p","nulls":0,"min":"a",""" +
+      """"max":"q\"b\\s\\u005b1\\u005d\\u007b2\\u007d\\u0001"}]}}"""),
     SnapshotTable.ImportManifestName -> (
       """[{"path":"<src>/ext/p=b/<part>","rel":"p=b/<part>","rows":1}]"""))
     .map { case (k, v) => k -> v.replace("\\\\u", "\\u") }
@@ -162,8 +159,10 @@ class MetadataBytesSpec extends SparkSpec {
     expected.foreach { case (name, bytes) =>
       assert(got(name) == bytes, s"$name changed")
     }
-    // partition rows are the sums of the files sidecar's rows: no dir
-    // carries a partitions sidecar
-    assert(!dirs.exists(d => Files.exists(Paths.get(d, ".graft-partitions.json"))))
+    // partition rows are the sums of the files sidecar's rows, and the
+    // column ranges sit beside them: no dir carries a partitions or a
+    // range sidecar
+    assert(!dirs.exists(d => Seq(".graft-partitions.json", ".graft-ranges.json")
+      .exists(n => Files.exists(Paths.get(d, n)))))
   }
 }

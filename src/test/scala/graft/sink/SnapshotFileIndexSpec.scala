@@ -38,14 +38,16 @@ class SnapshotFileIndexSpec extends SparkSpec {
     // inferred (int) type: '007' recorded as min/max "7", which as a
     // string bound excludes '007'
     val dir = t.currentSnapshot.get.dataDirs.head
-    val ranges = Paths.get(dir, graft.plans.RangeStats.SidecarName)
-    val forged = MetadataJson.read(ranges).get.asObj
-    MetadataJson.write(ranges, MetadataJson.obj("rows" -> forged("rows"),
-      "cols" -> MetadataJson.JArr(forged("cols").asArr.map { c =>
-        if (c.asObj("name").asStr != "code") c
-        else MetadataJson.obj("name" -> MetadataJson.JStr("code"), "nulls" -> MetadataJson.num(0L),
-          "min" -> MetadataJson.JStr("7"), "max" -> MetadataJson.JStr("7"))
-      })))
+    val sidecar = Paths.get(dir, ".graft-files.json")
+    val recorded = MetadataJson.read(sidecar).get.asObj
+    val ranges = recorded("ranges").asObj
+    MetadataJson.write(sidecar, MetadataJson.obj("files" -> recorded("files"),
+      "ranges" -> MetadataJson.obj("rows" -> ranges("rows"),
+        "cols" -> MetadataJson.JArr(ranges("cols").asArr.map { c =>
+          if (c.asObj("name").asStr != "code") c
+          else MetadataJson.obj("name" -> MetadataJson.JStr("code"), "nulls" -> MetadataJson.num(0L),
+            "min" -> MetadataJson.JStr("7"), "max" -> MetadataJson.JStr("7"))
+        }))))
     assert(t.read(spark).filter(col("code") === "007").select("id").as[Long].collect().toSeq ==
       Seq(1L))
   }
